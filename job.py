@@ -229,8 +229,10 @@ def main(argv: list[str] | None = None) -> int:
             spark, args.output, target_mb=args.compact_target_mb
         )
 
+    # the span table as written, read once for every consumer below
+    written = catalog.read_ref(spark, args.output)
     n_turns = df.count()
-    n_spans = catalog.count_ref(spark, args.output)
+    n_spans = written.count()
     # populated by the n_turns count action above (the extraction
     # write may bypass the observed node under checkpointed runs, but
     # df.count() always executes it)
@@ -253,7 +255,7 @@ def main(argv: list[str] | None = None) -> int:
         )
     if args.stats:
         catalog.write_ref(
-            pipeline.conversation_stats(catalog.read_ref(spark, args.output)),
+            pipeline.conversation_stats(written),
             args.stats,
         )
     if args.windows:
@@ -270,8 +272,7 @@ def main(argv: list[str] | None = None) -> int:
         # one JSON object per span; text sink keeps the export a pure
         # map over the written parquet (no shuffle)
         (
-            catalog.read_ref(spark, args.output)
-            .select(F.to_json(F.struct("*")).alias("value"))
+            written.select(F.to_json(F.struct("*")).alias("value"))
             .write.mode("overwrite")
             .text(args.export_jsonl)
         )
@@ -283,13 +284,11 @@ def main(argv: list[str] | None = None) -> int:
             if args.assembled_mode == "sparse"
             else assemble.merge_continuations
         )
-        catalog.write_ref(
-            asm_fn(catalog.read_ref(spark, args.output)), args.assembled
-        )
+        catalog.write_ref(asm_fn(written), args.assembled)
     if args.dup_pairs or args.dup_clusters:
         from xtract import fingerprint
 
-        pairs = fingerprint.dup_spans(catalog.read_ref(spark, args.output))
+        pairs = fingerprint.dup_spans(written)
         if args.dup_pairs:
             catalog.write_ref(pairs, args.dup_pairs, bucket_col=None)
             # reuse the written bytes — the fingerprint kernel and pair
@@ -321,8 +320,7 @@ def main(argv: list[str] | None = None) -> int:
         # audit the WRITTEN spans (the actual output bytes), not a
         # re-extraction — read_ref of the sink vs the executor-side
         # pure-Python oracle over the same (hash-sampled) turns
-        pt = df
-        ps = catalog.read_ref(spark, args.output)
+        pt, ps = df, written
         if args.parity_sample > 1:
             cond = (
                 F.pmod(F.xxhash64("conv_id"), F.lit(args.parity_sample)) == 0

@@ -47,7 +47,6 @@ def test_parquet_fallback_roundtrip(spark, tmp_path):
     catalog.write_ref(df, path)
     back = catalog.read_ref(spark, path)
     assert back.count() == 10
-    assert catalog.count_ref(spark, path) == 10
     assert {r.v for r in back.collect()} == {2 * i for i in range(10)}
 
 

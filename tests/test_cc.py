@@ -30,6 +30,11 @@ def _edges_df(spark, pairs):
     )
 
 
+# already converged: every child points at its component minimum, in
+# either orientation and with a duplicate
+STAR_FOREST = [(1, 0), (0, 2), (3, 0), (3, 0), (11, 10), (10, 12), (21, 20)]
+
+
 @pytest.mark.parametrize(
     "pairs",
     [
@@ -39,13 +44,32 @@ def _edges_df(spark, pairs):
         [(5, 4), (4, 5), (4, 3), (3, 5), (5, 5)],
         # chain of 64 — diameter 63, the propagation worst case
         [(i, i + 1) for i in range(64)],
+        STAR_FOREST,
+        # a child with two parents: not a star forest
+        [(5, 1), (5, 2)],
+        # both orientations + duplicates + self-loops (7 is isolated)
+        [(1, 2), (2, 1), (1, 2), (3, 3), (2, 3), (3, 2), (7, 7),
+         (8, 9), (9, 8), (8, 9)],
     ],
 )
 def test_cc_matches_union_find(spark, pairs):
     labels, _ = cc.connected_components(_edges_df(spark, pairs))
-    got = {r["node"]: r["rep"] for r in labels.collect()}
+    rows = labels.collect()
+    got = {r["node"]: r["rep"] for r in rows}
+    assert len(rows) == len(got)  # one label per node
     want = _union_find([(a, b) for a, b in pairs if a != b])
     assert got == want
+
+
+def test_cc_star_forest_takes_no_round(spark, count_jobs):
+    """A converged input is recognized from its shape, with no round
+    run to confirm it: generation 0 (dedup shuffle + checkpoint) and
+    one star-forest check (grouped + global aggregation)."""
+    (_, rounds), jobs = count_jobs(
+        lambda: cc.connected_components(_edges_df(spark, STAR_FOREST))
+    )
+    assert rounds == 0
+    assert jobs <= 5, jobs
 
 
 def test_cc_chain_round_count_logarithmic(spark):

@@ -1,11 +1,14 @@
 """Checkpoint/lineage semantics: full run, idempotent no-op rerun, and
 resume after simulated partial failure reproduce identical output."""
 import shutil
+from collections import Counter
 
+import pyarrow.dataset as pads
 import pyspark.sql.functions as F
 import pytest
+from py4j.protocol import Py4JJavaError
 
-from xtract import ckpt, gen
+from xtract import catalog, ckpt, gen, schema
 
 N_BUCKETS = 8
 
@@ -70,3 +73,89 @@ def test_checkpoint_resume_recomputes_only_missing(spark, dirs):
     orig = {r.partition_key: r.checksum for r in kept_rows if r.rows_out > 0}
     for k, v in orig.items():
         assert sums[k] == v
+
+
+def test_lineage_matches_independent_computation(spark, dirs):
+    """Every bucket's lineage row against counts taken without ckpt's
+    code: pyarrow over the hive-partitioned span files, a separate count
+    of the input, and a checksum query over each pk= directory."""
+    out, ck = dirs
+    n_buckets = 16
+    tr = gen.transcripts(spark, 6).cache()
+    ckpt.run_with_checkpoint(spark, tr, out, ck, n_buckets=n_buckets)
+
+    lin = spark.read.parquet(ck)
+    assert [(f.name, f.dataType) for f in lin.schema] == [
+        (f.name, f.dataType) for f in schema.LINEAGE
+    ]
+    rows = lin.collect()
+    by_key = {int(r.partition_key): r for r in rows}
+    assert len(rows) == n_buckets and set(by_key) == set(range(n_buckets))
+
+    rows_in = {
+        r.pk: r["count"]
+        for r in tr.groupBy(
+            F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).alias("pk")
+        )
+        .count()
+        .collect()
+    }
+    written = (
+        pads.dataset(out, format="parquet", partitioning="hive")
+        .to_table(columns=["pk", "split_from_merged", "has_image"])
+        .to_pylist()
+    )
+    rows_out = Counter(r["pk"] for r in written)
+    splits = Counter(r["pk"] for r in written if r["split_from_merged"])
+    merges = Counter(r["pk"] for r in written if r["has_image"])
+    assert len(rows_out) < n_buckets  # some bucket is empty
+
+    for b, r in by_key.items():
+        assert (r.run_id, r.status) == ("run0", "done")
+        assert r.rows_in == rows_in.get(b, 0), b
+        assert (r.rows_out, r.splits, r.merges) == (
+            rows_out[b], splits[b], merges[b]
+        ), b
+        want = "0"
+        if rows_out[b]:
+            want = (
+                spark.read.parquet(f"{out}/pk={b}")
+                .agg(
+                    F.conv(
+                        F.bit_xor(
+                            F.xxhash64("conv_id", "turn_idx", "seq", "span_text")
+                        ).cast("string"),
+                        10,
+                        16,
+                    )
+                )
+                .first()[0]
+            )
+        assert r.checksum == want, b
+
+
+def test_completed_buckets_missing_vs_unreadable_sidecar(spark, tmp_path):
+    """Only a sidecar that is not there yet means "nothing done"; an
+    unreadable one raises instead of silently redoing every bucket."""
+    assert ckpt.completed_buckets(spark, str(tmp_path / "absent"), "r") == []
+    ck = tmp_path / "ckpt"
+    ck.mkdir()
+    (ck / "notes.txt").write_text("not parquet")
+    with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
+        ckpt.completed_buckets(spark, str(ck), "r")
+
+
+def test_read_of_bucketed_output_runs_one_job(spark, dirs, count_jobs):
+    """Reading the 64-bucket span table lists its pk= directories on the
+    driver: one schema job, no partition-listing job."""
+    out, ck = dirs
+    ckpt.run_with_checkpoint(spark, gen.transcripts(spark, 300), out, ck)
+    n_dirs = len(
+        pads.dataset(out, format="parquet", partitioning="hive")
+        .to_table(columns=["pk"])
+        .column("pk")
+        .unique()
+    )
+    assert n_dirs > 32  # above Spark's default parallel-listing threshold
+    _, jobs = count_jobs(lambda: catalog.read_ref(spark, out))
+    assert jobs == 1

@@ -4,7 +4,7 @@ quarantine-ordering fix), and --checkpoint must reject BOTH managed
 table ref forms — table: (Iceberg) and btable: (Spark bucketed) —
 because the resume path writes parquet with dynamic partition
 overwrite and would otherwise treat the ref as a literal directory
-name, then crash at the final count_ref readback after doing all the
+name, then crash at the final span-count readback after doing all the
 work (review finding)."""
 import os
 

@@ -148,10 +148,6 @@ def write_ref(
     w.createOrReplace()
 
 
-def count_ref(spark: SparkSession, ref: str) -> int:
-    return read_ref(spark, ref).count()
-
-
 def compact_parquet(
     spark: SparkSession, path: str, target_mb: int = 256
 ) -> dict:

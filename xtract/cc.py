@@ -19,9 +19,12 @@ wrong at scale):
   soon as the next round is materialized, so executor storage holds at
   most two generations at any time (asserted in tests/test_cc.py via
   ``getPersistentRDDs``);
-- convergence is detected with one tiny agg per round (count +
-  order-insensitive hash-sum) on the already-materialized result — no
-  re-execution of the round's plan.
+- convergence is TESTED, not confirmed: the algorithm's fixpoint is
+  exactly a forest of stars whose centers are their components'
+  minima, so before each round one grouped aggregation over the
+  materialized edges checks that shape directly (every child has one
+  out-edge, no parent is also a child). A converged edge set stops
+  there, without paying a further round to see that nothing changed.
 
 Semantics: input is an undirected edge list (any orientation, dups
 fine); output maps every non-isolated node to its component minimum.
@@ -77,18 +80,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return nbr.union(center).where(F.col("a") != F.col("b")).distinct()
 
 
-def _checksum(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count("*").alias("n"),
-        # modular hash-sum: order-insensitive, ANSI-overflow-safe
-        # (count * 1e9 stays far under 2^63)
-        F.coalesce(
-            F.sum(F.pmod(F.xxhash64("a", "b"), F.lit(1_000_000_007))), F.lit(0)
-        ).alias("h"),
-    ).first()
-    return int(row["n"]), int(row["h"])
-
-
 def _persistent_ids(sc) -> set[int]:
     jmap = sc._jsc.getPersistentRDDs()  # noqa: SLF001 — storage audit
     ids: set[int] = set()
@@ -107,74 +98,67 @@ def _unpersist_ids(sc, ids: set[int]) -> None:
             e.getValue().unpersist()
 
 
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True iff the oriented (a > b), duplicate-free edge set is a forest
+    of stars: every a has exactly one out-edge and no b is also an a.
+    Each b is then the minimum of its star, i.e. of its component —
+    the large/small-star fixpoint. One grouped aggregation over the
+    union of child and parent roles."""
+    roles = edges.select(F.col("a").alias("n"), F.lit(1).alias("child")).union(
+        edges.select(F.col("b").alias("n"), F.lit(0).alias("child"))
+    )
+    per_node = roles.groupBy("n").agg(
+        F.sum("child").alias("outs"), F.count("*").alias("deg")
+    )
+    # a child whose degree exceeds 1 has a second parent or children
+    bad = (F.col("outs") > 0) & (F.col("deg") > 1)
+    return per_node.agg(F.count_if(bad).alias("bad")).first()["bad"] == 0
+
+
 def connected_components(
-    edges: DataFrame, max_rounds: int = 50, steps_per_checkpoint: int = 1
+    edges: DataFrame, max_rounds: int = 50
 ) -> tuple[DataFrame, int]:
     """Undirected edge list (a, b) → ((node, rep), rounds) where rep is
     the component minimum. Isolated nodes (no edges) don't appear —
     callers treat absence as a singleton.
 
-    ``steps_per_checkpoint`` fuses that many star rounds into each
-    materialization (checkpoint + checksum paid once per group;
-    convergence detection is unaffected — a converged star forest is a
-    fixpoint of the large/small-star pair, so the checksum still
-    stabilizes exactly at convergence). MEASURED at sf0.1/local[32]
-    (171k edges, 4 rounds to converge): spc=1 → 7.0 s, spc=2 → 8.8 s,
-    spc=3 → 40 s. Fusing is a net LOSS: the deeper unmaterialized plan
-    (4-6 joins + distincts) defeats AQE's per-stage statistics and the
-    detection granularity overshoots by up to spc-1 extra star rounds,
-    which costs more than the ~2 s/round scheduling barrier it saves.
-    Default stays 1; the knob remains for genuinely scheduler-bound
-    deployments (thousands of tiny rounds on a busy cluster)."""
-    if steps_per_checkpoint < 1:
-        raise ValueError("steps_per_checkpoint must be >= 1")
+    ``rounds`` counts the star rounds that changed the edge set: an
+    input that is already a star forest (each pair points at its
+    component minimum) takes 0. Every generation is checked for the
+    star-forest shape on its materialized edges before the next round
+    is planned, so no round is run only to confirm convergence."""
     sc = edges.sparkSession.sparkContext
-    before0 = _persistent_ids(sc)
+    before = _persistent_ids(sc)
+    # generation 0: oriented larger → smaller and deduplicated, the
+    # shape every later generation has (_large_star symmetrizes anyway)
     cur = (
-        _sym(edges)
-        .select(F.col("u").alias("a"), F.col("v").alias("b"))
+        edges.select(F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b"))
+        .where(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint(eager=True)
     )
     # generation 0 participates in the rotation like every other
-    # generation — otherwise the (largest) symmetric edge set stays
-    # pinned in executor storage for the life of the application
-    prev_added: set[int] = _persistent_ids(sc) - before0
-    prev_sig = _checksum(cur)
+    # generation — otherwise it stays pinned in executor storage for
+    # the life of the application
+    held = _persistent_ids(sc) - before
     rounds = 0
-    converged = False
-    while rounds < max_rounds:
+    while not _is_star_forest(cur):
+        if rounds == max_rounds:
+            raise RuntimeError(f"star CC did not converge in {max_rounds} rounds")
         before = _persistent_ids(sc)
-        nxt = cur
-        steps = min(steps_per_checkpoint, max_rounds - rounds)
-        for _ in range(steps):
-            nxt = _small_star(_large_star(nxt))
-        nxt = nxt.localCheckpoint(eager=True)
-        rounds += steps
-        added = _persistent_ids(sc) - before
-        sig = _checksum(nxt)
-        # release generation n-1 now that n+1 is materialized
-        _unpersist_ids(sc, prev_added)
-        prev_added = added
-        cur = nxt
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
-    if not converged:
-        raise RuntimeError(f"star CC did not converge in {max_rounds} rounds")
+        cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
+        rounds += 1
+        # release generation n-1 now that n is materialized
+        _unpersist_ids(sc, held)
+        held = _persistent_ids(sc) - before
 
-    # fixpoint edge set is a forest of stars: (member → root). The
-    # root itself carries no outgoing edge, so add it back from the
-    # child side.
+    # a star forest maps each child to its root; the roots carry no
+    # out-edge, so add them back from the parent side. Children are
+    # unique and never roots, so the union holds no duplicates. The
+    # last generation stays persisted for the caller's lazy reads.
     labels = cur.select(F.col("a").alias("node"), F.col("b").alias("rep"))
     roots = labels.select(F.col("rep").alias("node"), F.col("rep")).distinct()
-    out = labels.union(roots).distinct().localCheckpoint(eager=True)
-    # release the final EDGE generation too — only the (much smaller)
-    # per-node label set stays persisted for the caller's lazy reads,
-    # honoring the bounded-storage contract across repeated calls
-    _unpersist_ids(sc, prev_added)
-    return out, rounds
+    return labels.union(roots), rounds
 
 
 def components_summary(edges: DataFrame) -> DataFrame:

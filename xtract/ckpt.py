@@ -10,6 +10,13 @@ overwrite keyed by the bucket, so re-running a bucket replaces exactly
 its own files. Resume = anti-join of buckets against the lineage's
 completed set — a re-launched job recomputes only unfinished buckets.
 
+The lineage rows come from one ``groupBy("pk")`` over a union of a
+marker row per pending bucket, the pending input rows and the written
+spans read back with an explicit schema, so the sidecar costs one
+aggregation and no schema inference. Its rows follow
+``schema.LINEAGE``, which the resume reads back with; a sidecar that
+is missing means nothing is done yet, one that cannot be read raises.
+
 At cluster scale each bucket maps to many tasks (it is a logical
 commit unit, not a physical partition); n_buckets trades resume
 granularity against lineage-table size.
@@ -17,9 +24,16 @@ granularity against lineage-table size.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
-from . import pipeline
+from . import pipeline, schema
+
+# the span table as written: schema.SPANS plus the bucket partition column
+_SPANS_PK = T.StructType(
+    schema.SPANS.fields + [T.StructField("pk", T.IntegerType(), True)]
+)
 
 
 def bucket_of(col, n_buckets: int):
@@ -28,9 +42,11 @@ def bucket_of(col, n_buckets: int):
 
 def completed_buckets(spark: SparkSession, ckpt_dir: str, run_id: str) -> list[int]:
     try:
-        lin = spark.read.parquet(ckpt_dir)
-    except Exception:  # first run: no sidecar yet  # noqa: BLE001
-        return []
+        lin = spark.read.schema(schema.LINEAGE).parquet(ckpt_dir)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return []  # first run: no sidecar yet
     return [
         int(r.partition_key)
         for r in lin.filter(
@@ -70,44 +86,46 @@ def run_with_checkpoint(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     spans.write.mode("overwrite").partitionBy("pk").parquet(output_dir)
 
-    # per-bucket lineage: counts + an order-free checksum of the span
-    # identities (commutative XOR of row hashes)
-    # every pending bucket gets a lineage row, including empty ones —
-    # otherwise an empty bucket would be "recomputed" on every resume
-    all_pending = spark.createDataFrame([(b,) for b in pending], "pk int")
-    rows_in = all_pending.join(
-        todo.groupBy("pk").agg(F.count("*").alias("rows_in")), "pk", "left"
-    ).select("pk", F.coalesce("rows_in", F.lit(0)).alias("rows_in"))
-    metrics = (
-        spark.read.parquet(output_dir)
+    # per-bucket lineage in one groupBy("pk") over three row kinds: one
+    # marker per pending bucket (so empty buckets get a row too — else
+    # they would be "recomputed" on every resume), the pending input
+    # rows, and the written spans read back (counts + an order-free
+    # checksum of the span identities: commutative XOR of row hashes)
+    written = (
+        spark.read.schema(_SPANS_PK)
+        .parquet(output_dir)
         .filter(F.col("pk").isin(pending))
-        .groupBy("pk")
-        .agg(
-            F.count("*").alias("rows_out"),
-            F.count_if("split_from_merged").alias("splits"),
-            F.count_if("has_image").alias("merges"),
-            F.conv(
-                F.bit_xor(
-                    F.xxhash64("conv_id", "turn_idx", "seq", "span_text")
-                ).cast("string"),
-                10,
-                16,
-            ).alias("checksum"),
+        .select(
+            "pk",
+            "split_from_merged",
+            "has_image",
+            F.xxhash64("conv_id", "turn_idx", "seq", "span_text").alias("h"),
         )
     )
     lineage = (
-        rows_in.join(metrics, "pk", "left")
-        .select(
+        spark.createDataFrame([(b,) for b in pending], "pk int")
+        .unionByName(
+            todo.select("pk", F.lit(1).alias("row_in")), allowMissingColumns=True
+        )
+        .unionByName(written, allowMissingColumns=True)
+        .groupBy("pk")
+        .agg(
             F.lit(run_id).alias("run_id"),
-            F.col("pk").cast("string").alias("partition_key"),
+            F.col("pk").alias("partition_key"),
             F.lit("done").alias("status"),
-            F.col("rows_in").cast("long"),
-            F.coalesce("rows_out", F.lit(0)).cast("long").alias("rows_out"),
-            F.coalesce("splits", F.lit(0)).cast("long").alias("splits"),
-            F.coalesce("merges", F.lit(0)).cast("long").alias("merges"),
-            F.coalesce("checksum", F.lit("0")).alias("checksum"),
+            F.count("row_in").alias("rows_in"),
+            F.count("h").alias("rows_out"),
+            F.count_if("split_from_merged").alias("splits"),
+            F.count_if("has_image").alias("merges"),
+            F.coalesce(
+                F.conv(F.bit_xor("h").cast("string"), 10, 16), F.lit("0")
+            ).alias("checksum"),
             F.current_timestamp().alias("ts"),
         )
     )
-    lineage.write.mode("append").parquet(ckpt_dir)
+    # column order and types of the shared LINEAGE schema, which
+    # completed_buckets reads back, so appends keep one schema
+    lineage.select(
+        *[F.col(f.name).cast(f.dataType) for f in schema.LINEAGE]
+    ).write.mode("append").parquet(ckpt_dir)
     return {"partitions_done": len(pending), "partitions_skipped": len(done)}

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from .catalog import DEFAULT_BUCKETS
+
 
 def build(
     app: str = "xtract",
@@ -29,6 +31,11 @@ def build(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cores))
         .config("spark.sql.session.timeZone", "UTC")
+        # list bucket dirs on the driver: a parallel listing is one job per read
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(DEFAULT_BUCKETS),
+        )
         # managed-table warehouse off the repo tree (btable: refs,
         # catalog.py); in-memory catalog — metadata is per-session,
         # data files persist under the warehouse dir
