@@ -1,148 +1,7 @@
-"""Per-round benchmark (driver contract).
-
-Runs the headline extraction job plus representative registry queries
-at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS]. The FINAL stdout line is a compact headline
-JSON {"metric": ..., "value": total_sec, "unit": "sec", "sf": ...,
-"host_probe_mbps": ..., "extract": ..., "parity": ..., "queries":
-{kernel rows only}} sized to survive the driver's ~2,000-char tail
-truncation; the full per-query timing map is printed on the
-penultimate line and written to BENCH/last_queries.json.
-
-Transcripts for the extraction headline are generated deterministically
-(seeded, sized by sf) and cached as parquet in /tmp so repeated runs
-measure extraction, not generation.
-"""
+"""Host CPU probe; kept at the repo root because perfbench/run.py imports it."""
 from __future__ import annotations
 
-import json
-import os
 import time
-
-import pyspark.sql.functions as F
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-# cache tag: bump when xtract/gen.py payload generation changes, so a
-# stale /tmp corpus from an older build can never be benchmarked
-GEN_TAG = "r2"
-
-BENCH_QUERIES = [
-    "a1_pricing_summary",
-    "rollup_counts",
-    "w3_lead_gaps",
-    "w6_sessionize",
-    "j1_time_band_join",
-    "asof_view_before_purchase",
-    "j5_broadcast_lookup",
-    "supplier_nation_revenue",
-    "g6_iou",
-    "r6_qtype_classify",
-    "tok_count",
-    "split_train_val",
-    "rep_ratios",
-    "length_quantiles",
-    "length_rank_stats",
-    "table_profile",
-    "table_profile_approx",
-    "pii_scrub_stats",
-    "tfidf_top_terms",
-    "sample_per_source",
-    "funnel_steps",
-    "props_json_stats",
-    "pivot_lang_counts",
-    "hopping_30m",
-    "minhash_bands",
-    "simhash16",
-    "emb_cosine_top5",
-    "ngram_jaccard_pairs",
-    "near_dup_scored",
-    "corpus_clean",
-    "span_dedup_corpus",
-    "pack_sequences",
-    "decontaminate_eval",
-    "balance_langs",
-    "dedup_keep_list",
-    "train_order_shards",
-    "session_events_native",
-    "length_quantiles_approx",
-    "vocab_oov",
-    "bloom_dedup_exact",
-    "domain_quality_gate",
-    "cohort_retention",
-    "tfidf_cosine_pairs",
-    "jsonl_ingest_stats",
-    "scd2_user_state",
-    "winsorized_stats",
-    "peak_concurrency",
-    "fk_orphan_audit",
-    "word_pmi",
-    "outlier_3sigma",
-    "snapshot_diff",
-    "k_anonymity_audit",
-    "decayed_engagement",
-    "int8_ann_top3",
-    "trend_slope",
-    "drift_l1",
-    "hist_totalprice",
-    "edit_dist_verify",
-    "triangle_support",
-    "ohlc_hourly",
-    "ann_recall_at5",
-    "chunk_overlap",
-    "prefix_jaccard_pairs",
-    "bpe_merge_round",
-    "bpe_encode",
-    "bpe_doc_tokens",
-    "zonemap_audit",
-    "ffill_last_price",
-    "decile_stats",
-    "inverted_postings",
-    "boilerplate_lines",
-    "word_rank_fluency",
-    "dsir_importance",
-    "cms_heavy_hitters",
-    "zorder_layout",
-    "mixture_weights",
-    "weighted_sample",
-    "schema_evolution_read",
-    "skew_salted_join",
-    "minhash128_pairs",
-    "minhash128_full_pairs",
-    "longdoc_dedup",
-    "dedup_components",
-    "pagerank_dupgraph",
-    "dedup_incremental",
-    "skew_salted_stats",
-    "ann_lsh_top5",
-    "ann_ivf_top5",
-    "emb_near_dup",
-    "media_header_stats",
-    "r10_caption_join",
-    "tumbling_1h",
-    "fp_winnow",
-]
-
-
-def sf_of(path: str) -> float:
-    tag = os.path.basename(path.rstrip("/"))
-    try:
-        return float(tag.replace("sf", ""))
-    except ValueError:
-        return 0.1
-
-
-def cached_transcripts(spark, n_convs: int, parts: int = 64) -> str:
-    from xtract import gen
-
-    path = f"/tmp/xtract_bench/transcripts_{GEN_TAG}_{n_convs}.parquet"
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
-        gen.transcripts(spark, n_convs, partitions=parts).write.mode(
-            "overwrite"
-        ).parquet(path)
-    return path
 
 
 def host_probe(threads: int) -> float:
@@ -169,221 +28,3 @@ def host_probe(threads: int) -> float:
     with cf.ThreadPoolExecutor(threads) as ex:
         list(ex.map(work, range(threads)))
     return round(threads * per_thread_mb / (time.monotonic() - t0), 1)
-
-
-def main() -> None:
-    from xtract import pipeline, queries, session
-
-    sf = sf_of(SF_DIR)
-    probe_start = host_probe(CPUS)
-    spark = session.build(app="xtract-bench", cores=CPUS, shuffle_partitions=CPUS)
-    timings: dict[str, float] = {}
-
-    # headline: fused per-turn extraction throughput (cold = includes
-    # python-worker fork/import; warm = steady state)
-    n_convs = max(200, int(50000 * sf))
-    tpath = cached_transcripts(spark, n_convs)
-    tr = spark.read.parquet(tpath)
-    n_turns = tr.count()
-
-    def one_extract():
-        return pipeline.extract(tr, mode="fused").agg(
-            F.count("*").alias("spans"),
-            F.sum("image_count").alias("imgs"),
-            F.sum("score").alias("scores"),
-        ).collect()[0]
-
-    t0 = time.monotonic()
-    agg = one_extract()
-    t_cold = time.monotonic() - t0
-    t0 = time.monotonic()
-    agg = one_extract()
-    t_extract = time.monotonic() - t0
-    timings["extract_fused_cold"] = round(t_cold, 3)
-    timings["extract_fused"] = round(t_extract, 3)
-
-    # v2-analyzer groups + HTML boilerplate strip (fused kernels)
-    t0 = time.monotonic()
-    pipeline.analyze(tr, mode="fused").agg(F.count("*")).collect()
-    timings["analyze_fused"] = round(time.monotonic() - t0, 3)
-
-    from xtract import gen as gen_mod
-    from xtract import html as html_mod
-
-    hpath = "/tmp/xtract_bench/html_{}_{}.parquet".format(GEN_TAG, max(500, int(20000 * sf)))
-    if not os.path.exists(os.path.join(hpath, "_SUCCESS")):
-        gen_mod.html_transcripts(spark, max(500, int(20000 * sf))).write.mode(
-            "overwrite"
-        ).parquet(hpath)
-    hr = spark.read.parquet(hpath)
-    n_pages = hr.count()
-    t0 = time.monotonic()
-    html_mod.extract_main_content(hr).agg(F.count("*")).collect()
-    t_html = time.monotonic() - t0
-    timings["html_extract"] = round(t_html, 3)
-
-    # PDF source path: content-stream parse + extraction (fused)
-    from xtract import pdf as pdf_mod
-
-    n_pdfs = max(400, int(8000 * sf))
-    ppath = f"/tmp/xtract_bench/pdfs_{GEN_TAG}_{n_pdfs}.parquet"
-    if not os.path.exists(os.path.join(ppath, "_SUCCESS")):
-        pdf_mod.gen_pdf_turns(spark, n_pdfs, partitions=CPUS * 2).write.mode(
-            "overwrite"
-        ).parquet(ppath)
-    pr = spark.read.parquet(ppath)
-    t0 = time.monotonic()
-    pipeline.extract(pdf_mod.pdf_to_transcripts(pr), mode="fused").agg(
-        F.count("*")
-    ).collect()
-    timings["pdf_extract_staged"] = round(time.monotonic() - t0, 3)
-    t0 = time.monotonic()
-    pdf_mod.extract_pdf_turns(pr).agg(F.count("*")).collect()
-    t_pdf = time.monotonic() - t0
-    timings["pdf_extract"] = round(t_pdf, 3)
-
-    # relational strategy on a capped slice (tracked, not headline)
-    small = tr.filter(F.col("conv_id") < f"conv{max(200, n_convs // 10):08d}")
-    t0 = time.monotonic()
-    pipeline.extract(small, mode="relational", merge="rank1").agg(
-        F.count("*")
-    ).collect()
-    timings["extract_relational_rank1_slice"] = round(time.monotonic() - t0, 3)
-
-    # cross-turn assembly: dense (one conv shuffle) vs boundary-only
-    from xtract import assemble as asm_mod
-
-    spans_cached = pipeline.extract(tr, mode="fused").cache()
-    spans_cached.count()  # materialize: time the assembly, not the kernel
-    t0 = time.monotonic()
-    asm_mod.merge_continuations(spans_cached).agg(F.count("*")).collect()
-    timings["assemble_dense"] = round(time.monotonic() - t0, 3)
-    t0 = time.monotonic()
-    asm_mod.merge_continuations_sparse(spans_cached).agg(F.count("*")).collect()
-    timings["assemble_sparse"] = round(time.monotonic() - t0, 3)
-    spans_cached.unpersist()
-
-    # per-turn text-equality pass rate at corpus scale — the second
-    # half of the headline metric (distributed kernel-vs-oracle digest
-    # comparison; 1_000_000 ppm == every turn bit-identical)
-    from xtract import parity as parity_mod
-
-    t0 = time.monotonic()
-    prow = parity_mod.sweep(tr).collect()[0]
-    t_par = time.monotonic() - t0
-    timings["parity_sweep"] = round(t_par, 3)
-    parity_block = {
-        "turns": int(prow.n_turns),
-        "mismatch": int(prow.n_mismatch),
-        "pass_rate_ppm": int(prow.pass_rate_ppm),
-        "sec": round(t_par, 3),
-        "turns_per_sec": round(prow.n_turns / t_par, 1),
-    }
-
-    # session-7 transcript analytics over the same cached transcripts
-    from xtract import structure as st_mod
-
-    t0 = time.monotonic()
-    st_mod.role_transitions(tr).agg(F.count("*")).collect()
-    timings["role_transitions"] = round(time.monotonic() - t0, 3)
-    t0 = time.monotonic()
-    st_mod.context_budget(tr).agg(F.count("*")).collect()
-    timings["context_budget"] = round(time.monotonic() - t0, 3)
-    t0 = time.monotonic()
-    st_mod.conv_dedup_pairs(st_mod.conv_signatures(tr)).agg(
-        F.count("*")
-    ).collect()
-    timings["conv_dedup"] = round(time.monotonic() - t0, 3)
-    t0 = time.monotonic()
-    st_mod.conv_windows(tr).agg(F.count("*")).collect()
-    timings["conv_windows"] = round(time.monotonic() - t0, 3)
-    # session-8: SFT loss-mask spans + per-turn template dedup
-    t0 = time.monotonic()
-    st_mod.loss_mask(tr).agg(F.count("*")).collect()
-    timings["loss_mask"] = round(time.monotonic() - t0, 3)
-    t0 = time.monotonic()
-    st_mod.turn_templates(tr).agg(F.count("*")).collect()
-    timings["turn_templates"] = round(time.monotonic() - t0, 3)
-    t0 = time.monotonic()
-    st_mod.window_supervision(tr).agg(F.count("*")).collect()
-    timings["window_supervision"] = round(time.monotonic() - t0, 3)
-
-    # Materialize the near-dup cluster labels ONCE (the 100-TB
-    # composition: CC solved per corpus snapshot, persisted, consumed
-    # by every downstream reader). Timed as its own row so nothing is
-    # hidden; dedup_keep_list below then measures election cost only.
-    t0 = time.monotonic()
-    queries.dedup_cluster_labels(spark, SF_DIR).count()
-    timings["dedup_labels_mat"] = round(time.monotonic() - t0, 3)
-
-    for name in BENCH_QUERIES:
-        fn = queries.QUERIES[name]
-        t0 = time.monotonic()
-        df = fn(spark, SF_DIR)
-        df.agg(F.count("*")).collect()
-        timings[name] = round(time.monotonic() - t0, 3)
-
-    total = round(sum(timings.values()), 3)
-    probe_end = host_probe(CPUS)
-    headline = {
-        "metric": "headline_total_wall",
-        "value": total,
-        "unit": "sec",
-        "sf": sf,
-        "cpus": CPUS,
-        "host_probe_mbps": {"start": probe_start, "end": probe_end},
-        "html": {
-            "pages": n_pages,
-            "sec": round(t_html, 3),
-            "pages_per_sec": round(n_pages / t_html, 1),
-        },
-        "pdf": {
-            "pages": n_pdfs,
-            "sec": round(t_pdf, 3),
-            "pages_per_sec": round(n_pdfs / t_pdf, 1),
-        },
-        "extract": {
-            "turns": n_turns,
-            "spans": int(agg["spans"]),
-            "sec": round(t_extract, 3),
-            "turns_per_sec": round(n_turns / t_extract, 1),
-            "cold_sec": round(t_cold, 3),
-            "cold_turns_per_sec": round(n_turns / t_cold, 1),
-        },
-        "parity": parity_block,
-    }
-    # The driver's BENCH_r{N}.json artifact keeps only the TAIL of
-    # stdout (~2,000 chars); r4's single fat line lost its head
-    # (metric/value/probe) to that truncation and parsed as null. So:
-    # the full per-query map goes to a file, stdout carries the
-    # per-query map FIRST (human/log context, sacrificial under
-    # truncation) and the compact headline object as the very last
-    # line, where tail-truncation can never cut it.
-    full = dict(headline)
-    full["queries"] = timings
-    bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
-    os.makedirs(bench_dir, exist_ok=True)
-    with open(os.path.join(bench_dir, "last_queries.json"), "w") as f:
-        json.dump(full, f, indent=1, sort_keys=True)
-    print(json.dumps({"n_queries": len(timings), "queries": timings}))
-    headline["queries"] = {
-        k: timings[k]
-        for k in (
-            "extract_fused",
-            "extract_fused_cold",
-            "html_extract",
-            "pdf_extract",
-            "parity_sweep",
-            "conv_windows",
-            "window_supervision",
-        )
-        if k in timings
-    }
-    headline["queries_n"] = len(timings)
-    headline["queries_file"] = "BENCH/last_queries.json"
-    print(json.dumps(headline))
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

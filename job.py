@@ -168,6 +168,11 @@ def main(argv: list[str] | None = None) -> int:
             "is the table analogue)"
         )
 
+    # the fused kernel has one image-assignment strategy (greedy);
+    # rank1 exists only in the relational plan
+    if args.merge == "rank1" and args.mode != "relational":
+        ap.error("--merge rank1 requires --mode relational")
+
     spark = session.build(app="xtract-job", shuffle_partitions=args.partitions)
     t0 = time.monotonic()
 

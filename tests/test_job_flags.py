@@ -52,3 +52,21 @@ def test_compact_rejects_btable_ref():
         ["--input", "gen:10", "--output", "btable:spans",
          "--compact-target-mb", "64"]
     )
+
+
+def test_rank1_merge_rejects_fused_mode(tmp_path, monkeypatch):
+    """The fused kernel always assigns images greedily, so --merge
+    rank1 without --mode relational used to run and silently ignore
+    the flag. It must be a usage error, raised before any session."""
+    from xtract import session
+
+    def no_session(*a, **k):
+        raise AssertionError("session built before the usage check")
+
+    monkeypatch.setattr(session, "build", no_session)
+    out = str(tmp_path / "spans")
+    _expect_usage_error(["--input", "gen:10", "--output", out, "--merge", "rank1"])
+    _expect_usage_error(
+        ["--input", "gen:10", "--output", out, "--merge", "rank1",
+         "--checkpoint", str(tmp_path / "ck")]
+    )

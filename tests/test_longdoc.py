@@ -1,12 +1,11 @@
 """longdoc_dedup: the corpus where capped and full-text near-dup
 detection must disagree, and the planted-twin recovery property.
 
-The driver row (queries.longdoc_dedup) puts both kernels on the hash
-gate; this test pins the SEMANTIC claims the row's data is supposed to
-exhibit — every planted twin is (a) invisible to the capped kernel and
-(b) recovered by the full chunked kernel — so a regression that
-quietly re-caps the full path fails here even if both engines still
-agree with each other.
+queries.longdoc_dedup runs both kernels over that corpus; this test
+pins the semantic claims its data is supposed to exhibit — every
+planted twin is (a) invisible to the capped kernel and (b) recovered
+by the full chunked kernel — so a regression that quietly re-caps the
+full path fails here.
 """
 import pyspark.sql.functions as F
 

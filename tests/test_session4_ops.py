@@ -3,9 +3,8 @@ verification (vs a pure-Python DP), triangle support (vs brute-force
 enumeration), integer OLS trend slopes (vs the float formula), the
 drift monitor (recomputed from raw counts), the integer equi-width
 histogram (partition-of-the-domain invariants), and the transcript
-turn audit (planted violations). The cross-engine value contract is
-covered by tools/check_contract.py / the driver; these pin the
-operator-level semantics the contract can't see."""
+turn audit (planted violations), each against an independent
+recomputation."""
 import datetime
 
 import pyspark.sql.functions as F
@@ -201,37 +200,6 @@ def test_ohlc_hourly_matches_python(spark):
         assert (r.open_c, r.high_c, r.low_c, r.close_c, r.n, r.vol_c) == (
             pts[0][1], max(cs), min(cs), pts[-1][1], len(cs), sum(cs)
         )
-
-
-def test_ann_recall_consistent_with_components(spark):
-    """n_hits must equal the intersection of the two production
-    rankings (similarity.lsh_topk / cosine_topk) recomputed here, one
-    row per panel query, 0 ≤ n_hits ≤ 5, recall_pct = 20·n_hits."""
-    from xtract import similarity
-    from xtract.queries import _ensure_lsh_planes
-
-    rows = q.QUERIES["ann_recall_at5"](spark, SF).collect()
-    assert len(rows) == 20
-    e = q.t(spark, SF, "embeddings")
-    corpus = e.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-    qset = corpus.filter(F.col("id") < 20)
-    lsh = {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.lsh_topk(
-            corpus, qset, k=5, n_planes=8, n_tables=4, dim=64
-        ).collect()
-    }
-    brute = {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.cosine_topk(corpus, qset, k=5).collect()
-    }
-    inter: dict[int, int] = {}
-    for qid, nid in lsh & brute:
-        inter[qid] = inter.get(qid, 0) + 1
-    for r in rows:
-        assert 0 <= r.n_hits <= 5
-        assert r.recall_pct == r.n_hits * 20
-        assert r.n_hits == inter.get(r.qid, 0)
 
 
 def test_chunk_overlap_matches_python(spark):

@@ -3,9 +3,7 @@ Jaccard join (vs an all-pairs brute force in Python — lossless-filter
 completeness), the zone-map layout audit (disjointness/overlap
 invariants per layout), forward-fill (vs a per-user Python scan),
 decile bucketing (equal-frequency partition invariants), and
-inverted-index postings (digest recomputation). The cross-engine value
-contract is covered by tools/check_contract.py / the driver; these pin
-the operator-level semantics the contract can't see."""
+inverted-index postings (digest recomputation)."""
 import hashlib
 
 import pyspark.sql.functions as F

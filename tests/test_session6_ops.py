@@ -4,9 +4,7 @@ word-rank fluency (vs an exact Python rank model), DSIR importance
 (vs Python hashed-ratio scoring + the en-docs-score-higher property),
 count-min sketch (one-sided error guarantee + exact-recount parity),
 and Z-order layout (Morton-key bit interleave + span-bounding
-property vs the linear layout). The cross-engine value contract is
-covered by tools/check_contract.py / the driver; these pin the
-operator-level semantics the contract can't see."""
+property vs the linear layout)."""
 import hashlib
 from collections import Counter, defaultdict
 

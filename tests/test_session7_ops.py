@@ -3,26 +3,21 @@ transition matrix (vs a pure-Python adjacency recount), context-window
 accounting (running-sum/overflow invariants vs an exact Python model),
 and conversation-level minhash dedup (distributivity of the min-md5
 signature, clone recovery, and identical-conversation full-band
-agreement). The cross-engine value contract is covered by
-tools/check_contract.py / the driver; these pin the operator-level
-semantics the contract can't see."""
+agreement); plus the job.py --windows fold (conv_windows) against a
+pure-Python greedy replay."""
 import hashlib
 from collections import Counter, defaultdict
 
 import pyspark.sql.functions as F
 
-import __spark_entry__ as entrymod
 from xtract import structure
 
 SF = "/root/testdata/sf0.001"
 
 
-def _turns(spark):
-    return entrymod._derived_transcripts(spark, SF).cache()
 
-
-def test_role_transitions_vs_python(spark):
-    turns = _turns(spark)
+def test_role_transitions_vs_python(derived_transcripts):
+    turns = derived_transcripts
     rows = sorted(
         turns.select("conv_id", "turn_idx", "role").collect(),
         key=lambda r: (r.conv_id, r.turn_idx),
@@ -46,10 +41,10 @@ def test_role_transitions_vs_python(spark):
     assert sum(n for n, _ in got.values()) == len(rows) - n_convs
 
 
-def test_context_budget_vs_python(spark):
+def test_context_budget_vs_python(derived_transcripts):
     import re
 
-    turns = _turns(spark)
+    turns = derived_transcripts
     budget = structure.CONTEXT_BUDGET
     rows = sorted(
         turns.select("conv_id", "turn_idx", "text").collect(),
@@ -77,12 +72,12 @@ def test_context_budget_vs_python(spark):
         assert (ovf is None) == (tot <= budget)
 
 
-def test_conv_signature_is_distributive(spark):
+def test_conv_signature_is_distributive(derived_transcripts):
     """Computing signatures over two arbitrary halves of a
     conversation and taking the component-wise min must equal the
     one-pass signature — the property that lets the agg combine
     map-side at 10^12 turns."""
-    turns = _turns(spark).select("conv_id", "turn_idx", "text")
+    turns = derived_transcripts.select("conv_id", "turn_idx", "text")
     whole = {
         r.conv_id: [r[f"s{p}"] for p in range(structure.CONV_PERMS)]
         for r in structure.conv_signatures(turns).collect()
@@ -99,8 +94,8 @@ def test_conv_signature_is_distributive(spark):
     assert merged == whole
 
 
-def test_conv_signature_matches_python_md5(spark):
-    turns = _turns(spark).select("conv_id", "text")
+def test_conv_signature_matches_python_md5(derived_transcripts):
+    turns = derived_transcripts.select("conv_id", "text")
     texts = defaultdict(list)
     for r in turns.collect():
         texts[r.conv_id].append(r.text)
@@ -120,11 +115,11 @@ def test_conv_signature_matches_python_md5(spark):
     assert got == want
 
 
-def test_conv_dedup_recovers_exact_clones_on_all_bands(spark):
+def test_conv_dedup_recovers_exact_clones_on_all_bands(derived_transcripts):
     """An unperturbed clone must agree on all 4 bands; the pair list
     must contain exactly the planted pairs (no cross-conversation
     accidents on this corpus)."""
-    turns = _turns(spark).select("conv_id", "text")
+    turns = derived_transcripts.select("conv_id", "text")
     clones = turns.select(
         F.concat("conv_id", F.lit("~exact")).alias("conv_id"), "text"
     )
@@ -138,10 +133,10 @@ def test_conv_dedup_recovers_exact_clones_on_all_bands(spark):
         assert r.n_bands == structure.CONV_BANDS
 
 
-def test_conv_windows_vs_python_greedy(spark):
+def test_conv_windows_vs_python_greedy(derived_transcripts):
     import re
 
-    turns = _turns(spark)
+    turns = derived_transcripts
     budget = structure.CONTEXT_BUDGET
     rows = sorted(
         turns.select("conv_id", "turn_idx", "text").collect(),
@@ -168,13 +163,13 @@ def test_conv_windows_vs_python_greedy(spark):
             r.window_toks,
             r.oversize,
         )
-        for r in structure.conv_windows(_turns(spark)).collect()
+        for r in structure.conv_windows(derived_transcripts).collect()
     }
     assert got == want
 
 
-def test_conv_windows_partition_turns_exactly(spark):
-    turns = _turns(spark)
+def test_conv_windows_partition_turns_exactly(derived_transcripts):
+    turns = derived_transcripts
     wins = structure.conv_windows(turns).collect()
     # every turn lands in exactly one window
     assert sum(r.n_turns for r in wins) == turns.count()

@@ -4,29 +4,23 @@ turn-template detection (vs a pure-Python normalize+count model), and
 BPE encoding against the fixed merge table (vs a pure-Python referee
 implementing the same delimiter-complete replace contract, plus the
 overlap edge cases that motivated the bracketed-token string form).
-The cross-engine value contract is covered by tools/check_contract.py
-/ the driver; these pin the operator-level semantics the contract
-can't see."""
+window_assignments (the per-turn form of the --windows fold) is the
+second reference for conv_windows."""
 import re
 from collections import Counter, defaultdict
 
-import __spark_entry__ as entrymod
 from xtract import queries as q
 from xtract import structure
 
 SF = "/root/testdata/sf0.001"
 
 
-def _turns(spark):
-    return entrymod._derived_transcripts(spark, SF).cache()
-
-
 def _toks(text):
     return len(re.findall(r"[a-z0-9]+", text))
 
 
-def test_loss_mask_vs_python(spark):
-    turns = _turns(spark)
+def test_loss_mask_vs_python(derived_transcripts):
+    turns = derived_transcripts
     rows = sorted(
         turns.select("conv_id", "turn_idx", "role", "text").collect(),
         key=lambda r: (r.conv_id, r.turn_idx),
@@ -50,11 +44,11 @@ def test_loss_mask_vs_python(spark):
     assert got == want
 
 
-def test_loss_mask_spans_tile(spark):
+def test_loss_mask_spans_tile(derived_transcripts):
     """Per conversation the spans are contiguous, start at 0, and the
     last end_tok equals the conversation's total token count — the
     invariant a collator needs to index a flattened token buffer."""
-    turns = _turns(spark)
+    turns = derived_transcripts
     by_conv = defaultdict(list)
     for r in structure.loss_mask(turns).collect():
         by_conv[r.conv_id].append(r)
@@ -92,8 +86,8 @@ def _norm(text):
     return s[:80]
 
 
-def test_turn_templates_vs_python(spark):
-    turns = _turns(spark)
+def test_turn_templates_vs_python(derived_transcripts):
+    turns = derived_transcripts
     rows = turns.select("conv_id", "role", "text").collect()
     n_turns = Counter()
     convs = defaultdict(set)
@@ -162,12 +156,12 @@ def test_bpe_encode_overlap_edges(spark, tmp_path):
     assert got["thth"] == "<t~h><t~h>"
 
 
-def test_window_assignments_match_conv_windows(spark):
+def test_window_assignments_match_conv_windows(derived_transcripts):
     """The per-turn assignment fold and the per-window fold are the
     same greedy recursion: aggregating assignments by (conv, window)
     must reproduce conv_windows' (n_turns, window_toks) exactly —
     including window ids around oversize turns."""
-    turns = _turns(spark)
+    turns = derived_transcripts
     agg = defaultdict(lambda: [0, 0])
     for r in structure.window_assignments(turns).collect():
         a = agg[(r.conv_id, r.window_id)]
@@ -180,9 +174,9 @@ def test_window_assignments_match_conv_windows(spark):
     assert dict(agg) == want
 
 
-def test_window_supervision_vs_python(spark):
+def test_window_supervision_vs_python(derived_transcripts):
     """Pure-Python replay of the greedy fold + loss accounting."""
-    turns = _turns(spark)
+    turns = derived_transcripts
     rows = sorted(
         turns.select("conv_id", "turn_idx", "role", "text").collect(),
         key=lambda r: (r.conv_id, r.turn_idx),

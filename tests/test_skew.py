@@ -1,10 +1,9 @@
 """Skew handling: mega-conversations (gen mega_every) flow through
-extraction and salted aggregation with identical results to the
-unsalted formulation."""
+extraction with the same results as the oracle."""
 import pyspark.sql.functions as F
 import pytest
 
-from xtract import gen, pipeline, skew
+from xtract import gen, pipeline
 
 
 @pytest.fixture(scope="module")
@@ -39,53 +38,3 @@ def test_extraction_unaffected_by_skew(spark, mega):
             text = gen.turn_row(conv_id, t, conv_ord)["text"]
             for seq, row in enumerate(oracle.extract_turn(text)):
                 assert got[(conv_id, t, seq)] == row["span_text"]
-
-
-def test_salted_agg_matches_direct(spark, mega):
-    direct = {
-        (r.conv_id): (r.turns, r.tools)
-        for r in mega.groupBy("conv_id")
-        .agg(
-            F.count("*").alias("turns"),
-            F.size(F.array_distinct(F.collect_list("tool"))).alias("tools"),
-        )
-        .collect()
-    }
-    salted = {
-        (r.conv_id): (r.turns, r.tools)
-        for r in skew.salted_agg(
-            mega,
-            [
-                (F.count("*"), "turns", F.sum("turns").cast("long")),
-                (
-                    F.collect_set("tool"),
-                    "tools",
-                    F.size(F.array_distinct(F.flatten(F.collect_list("tools")))),
-                ),
-            ],
-            n_salts=8,
-        ).collect()
-    }
-    assert salted == direct
-
-
-def test_salted_repartition_spreads_heavy(spark, mega):
-    rep = skew.salted_repartition(mega, 12, n_salts=8, threshold_turns=300)
-    # heavy convs get >1 distinct salt; light convs exactly 1
-    salts = {
-        r.conv_id: r.s
-        for r in rep.groupBy("conv_id")
-        .agg(F.countDistinct("salt").alias("s"))
-        .collect()
-    }
-    counts = {
-        r.conv_id: r.c
-        for r in mega.groupBy("conv_id").agg(F.count("*").alias("c")).collect()
-    }
-    for conv, s in salts.items():
-        if counts[conv] >= 300:
-            assert s > 1, conv
-        else:
-            assert s == 1, conv
-    # row preservation
-    assert rep.count() == mega.count()

@@ -46,7 +46,7 @@ digest (ONE combined row per turn, produced by a map-side-combined
 aggregation) yields exactly the dense path's segments; every span not
 consumed by a multi-part segment passes through a BROADCAST anti-join
 as a singleton — the full span table never transits an Exchange
-(asserted in tools/explain_audit.py). The dense form is kept because
+(asserted in tests/test_assemble.py). The dense form is kept because
 the single-node oracle (and the reference's output convention,
 extractor.py:226-247 list order) number segments densely; the two are
 pinned segment-for-segment equal in tests/test_assemble.py. Third
@@ -56,9 +56,8 @@ bucketed scan satisfies the window's distribution requirement
 (tests/test_catalog.py asserts zero shuffle exchanges), so dense
 semantics cost nothing given the right storage layout. Rows per
 conversation ≈ spans, so a mega conversation holds ~3×turns small
-rows in one task — bounded and documented (skew.py salting applies to
-the *extraction* stages; this final assembly is inherently
-per-conversation-ordered).
+rows in one task — bounded and documented (this final assembly is
+inherently per-conversation-ordered).
 
 Type/score are re-derived from the merged text (structure.qtype_col /
 score_col semantics) — a continuation can complete the "（5分）" marker

@@ -6,13 +6,12 @@ consecutive hashes, keep each window's minimum; the resulting
 fingerprint set has the guarantee that any substring match of length
 ≥ k+w-1 between two documents produces at least one shared
 fingerprint. This is the "document fingerprinting (rolling hash)"
-arm of the training-data dedup toolkit (complements exact-hash,
-MinHash/LSH, SimHash, n-gram Jaccard in similarity.py/queries.py).
+step of the training-data dedup toolkit; ``job.py --dup-pairs`` and
+``--dup-clusters`` run it over the extracted spans.
 
 Hash is a plain base-B polynomial over unicode codepoints mod M —
-deliberately simple so the SAME function is expressible in DuckDB SQL
-(driver oracle queries fp_winnow / fp_shared_pairs) and the Arrow
-kernel can be cross-validated against an independent engine.
+deliberately simple so a pure-Python restatement
+(``fingerprints_naive``) can cross-check the vectorized kernel.
 
 Scale shape: the kernel is a narrow mapInPandas (numpy Horner over a
 codepoint array — k vectorized passes per batch, no per-char Python);
@@ -34,8 +33,8 @@ K = 8  # k-gram length (chars)
 W = 4  # winnowing window (hashes)
 B = 131  # polynomial base
 M = 1_000_000_007  # modulus (fits intermediate math in int64/BIGINT)
-# Default chars hashed per doc (both engines apply the same cap — it
-# keeps the DuckDB restatement tractable). Every kernel also takes
+# Default chars hashed per doc (the naive restatement applies the same
+# cap). Every kernel also takes
 # ``cap`` explicitly; cap=None winnows the WHOLE document via the
 # chunked kernel below — the 100-TB semantics (two 100 KB docs that
 # differ only after char 2000 must NOT be fingerprint-identical).
@@ -183,89 +182,6 @@ def dup_spans(
         span_key().alias("doc_id"), F.col("span_text").alias("text")
     )
     return shared_pairs(fingerprints(keyed), min_shared=min_shared, max_df=max_df)
-
-
-def winnow_summary(fps: DataFrame) -> DataFrame:
-    """Per-doc fingerprint digest (count / min / max / sum) — compact,
-    deterministic, hashable cross-engine."""
-    return fps.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("n_fp"),
-        F.min("fp").alias("fp_min"),
-        F.max("fp").alias("fp_max"),
-        F.sum("fp").cast("long").alias("fp_sum"),
-    )
-
-
-def word_bigrams(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, text) → distinct word-bigram set per doc ([a-z0-9]+ token
-    stream). The exact-scoring feature for near-dup candidates.
-
-    Shape note: pairing uses zip_with over two slices, NOT
-    transform(sequence, i -> toks[i] || toks[i+1]) — an indexed lambda
-    re-evaluates the ``toks`` expression (a regex scan of the whole
-    text) on EVERY element access, turning O(len) tokenization into
-    O(len·grams); zip_with materializes each array argument once per
-    row (measured ~10× on the sf0.1 sample)."""
-    toks = F.regexp_extract_all(F.col(text_col), F.lit("[a-z0-9]+"), 0)
-    n1 = F.greatest(F.size(toks) - 1, F.lit(0))
-    pairs = F.zip_with(
-        F.slice(toks, 1, n1),
-        F.slice(toks, 2, n1),
-        lambda x, y: F.concat_ws(" ", x, y),
-    )
-    grams = F.when(F.size(toks) >= 2, F.array_distinct(pairs)).otherwise(
-        F.array().cast("array<string>")
-    )
-    return docs.select(F.col(id_col).alias("doc_id"), grams.alias("grams"))
-
-
-def jaccard_score_pairs(candidates: DataFrame, grams: DataFrame) -> DataFrame:
-    """Exact n-gram Jaccard over CANDIDATE pairs only — the composed
-    near-dup operator: cheap recall stage (inverted-index candidates
-    from shared_pairs / minhash bands) → exact precision stage. Two
-    equi-joins attach each side's gram set; cost scales with candidate
-    count, never |doc|² (the staged-filtering strategy the reference
-    documents: cheap prune before expensive check,
-    docs/题目分割优化方案.md:356-370).
-
-    ``candidates`` needs (doc_a, doc_b); extra columns (n_shared) pass
-    through. ``grams`` is word_bigrams() output. jaccard integerized
-    to ppm for cross-engine hashing."""
-    extra = [c for c in candidates.columns if c not in ("doc_a", "doc_b")]
-    ga = grams.select(F.col("doc_id").alias("doc_a"), F.col("grams").alias("ga"))
-    gb = grams.select(F.col("doc_id").alias("doc_b"), F.col("grams").alias("gb"))
-    inter = F.size(F.array_intersect("ga", "gb"))
-    uni = F.greatest(F.size(F.array_distinct(F.concat("ga", "gb"))), F.lit(1))
-    return (
-        candidates.join(ga, "doc_a")
-        .join(gb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            *extra,
-            F.floor(F.lit(1000000.0) * inter / uni).cast("long").alias("jaccard_ppm"),
-        )
-    )
-
-
-def near_dup_scored(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_shared: int = 4,
-    max_df: int = 20,
-    cap: int | None = CAP,
-) -> DataFrame:
-    """End-to-end near-dup scoring: winnowing-fingerprint candidates
-    (inverted index + stop-gram cap) → exact word-bigram Jaccard on
-    candidates only."""
-    keyed = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    cands = shared_pairs(
-        fingerprints(keyed, cap=cap), min_shared=min_shared, max_df=max_df
-    )
-    return jaccard_score_pairs(cands, word_bigrams(keyed))
 
 
 def shared_pairs(

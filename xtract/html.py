@@ -13,8 +13,7 @@ Two-stage Spark design:
    so Catalyst sees and can reorder/prune them.
 
 The per-block feature extraction is deterministic, so the same
-classification is expressible in DuckDB for the driver cross-check
-(queries: html_block_classify).
+classification is expressible in any SQL engine.
 """
 from __future__ import annotations
 

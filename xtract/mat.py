@@ -1,21 +1,14 @@
-"""Materialized intermediates for driver-oracle cross-checks.
+"""Materialized intermediates at deterministic parquet/text paths.
 
-The flagship extraction kernel hinges on Python ``re`` semantics
-(question_splitter.py pattern family) and is not restatable in SQL
-from the raw driver tables. To still put the flagship path on the
-driver's hard correctness signal, a query materializes the kernel's
-intermediate output (spans / flat blocks) to a deterministic parquet
-path, computes the downstream operator Spark-side over that
-intermediate, and the DuckDB oracle restates the SAME downstream
-computation over the SAME parquet via ``read_parquet()``. The kernel
-itself is cross-checked against the pure-Python oracle in
-tests/test_parity.py; this pattern extends the independent-engine
-check to the aggregation / window / regex stages on top (and, for the
-relational-vs-fused pair, turns plan equivalence into a driver row).
+A query that needs an on-disk input the sf tables do not hold (a JSONL
+dump, a zone-ordered layout, an evolved-schema dataset) builds it once
+under ``ROOT/<sf>/<name>`` and reads it back, so the query's result
+does not depend on what an earlier run left there
+(queries.jsonl_ingest_stats, zonemap_audit, schema_evolution_read).
 
 Freshness: files are rewritten on first use in each Python process
 (never trusted across processes), so a stale artifact from an older
-engine build can never satisfy an oracle.
+engine build can never be read back.
 """
 from __future__ import annotations
 
@@ -25,9 +18,6 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 ROOT = "/tmp/xtract_mat"
-# the driver's oracle pass compares at this scale; its read_parquet
-# globs are pinned here (see __spark_entry__._extraction_oracles)
-ORACLE_SF = "sf0.01"
 
 _written: set[str] = set()
 
@@ -38,7 +28,7 @@ def path(sf_dir: str, name: str) -> str:
 
 
 def glob(sf_dir: str, name: str) -> str:
-    """The read_parquet() glob the DuckDB oracle uses for this target."""
+    """The read_parquet() glob over this target's files."""
     return f"{path(sf_dir, name)}/*.parquet"
 
 
@@ -50,17 +40,6 @@ def materialize(
     DataFrame."""
     p = path(sf_dir, name)
     if p not in _written:
-        # Cross-scale guard: the oracle globs are pinned to ORACLE_SF,
-        # so if this process materializes ``name`` at a DIFFERENT
-        # scale without (yet) writing the ORACLE_SF slot, delete any
-        # leftover ORACLE_SF artifact from an older process — a stale
-        # one would satisfy read_parquet() silently; a missing one
-        # fails the oracle loudly, which is the honest outcome.
-        op = path(ORACLE_SF, name)
-        if p != op and op not in _written:
-            import shutil
-
-            shutil.rmtree(op, ignore_errors=True)
         build().write.mode("overwrite").parquet(p)
         _written.add(p)
     return spark.read.parquet(p)
@@ -81,11 +60,6 @@ def materialize_partitioned(
     reads it with ``read_parquet(glob, hive_partitioning=1)``."""
     p = path(sf_dir, name)
     if p not in _written:
-        op = path(ORACLE_SF, name)
-        if p != op and op not in _written:
-            import shutil
-
-            shutil.rmtree(op, ignore_errors=True)
         build().write.mode("overwrite").partitionBy(*partition_cols).parquet(p)
         _written.add(p)
     return spark.read.parquet(p)
@@ -101,11 +75,6 @@ def materialize_text(
     because the point of the fixture is exercising readers."""
     p = path(sf_dir, name)
     if p not in _written:
-        op = path(ORACLE_SF, name)
-        if p != op and op not in _written:
-            import shutil
-
-            shutil.rmtree(op, ignore_errors=True)
         build().write.mode("overwrite").text(p)
         _written.add(p)
     return p
@@ -125,11 +94,6 @@ def materialize_multi(
     ``mergeSchema``, DuckDB ``union_by_name``)."""
     p = path(sf_dir, name)
     if p not in _written:
-        op = path(ORACLE_SF, name)
-        if p != op and op not in _written:
-            import shutil
-
-            shutil.rmtree(op, ignore_errors=True)
         for sub, build in parts.items():
             build().write.mode("overwrite").parquet(f"{p}/{sub}")
         _written.add(p)

@@ -1,14 +1,13 @@
 """Production-parameterized MinHash + LSH banding (128 permutations,
-32 bands × 4 rows — the classic Broder/LSH construction; the 2-perm
-``minhash_bands`` query stays as the didactic demo).
+32 bands × 4 rows — the classic Broder/LSH construction).
 
-All hashing is plain modular arithmetic so BOTH engines compute the
-same signatures:
+All hashing is plain modular arithmetic, so the pure-Python oracle and
+the numpy kernel compute the same signatures:
 - shingle base hash: base-B polynomial over unicode codepoints mod M
   (the same family fingerprint.py uses, K=5 here)
 - permutation i: h -> (a_i*h + b_i) mod M with the affine parameters
   DERIVED from i by a fixed formula (below) — no RNG state to ship,
-  the DuckDB oracle regenerates them from ``range(128)``.
+  any reimplementation regenerates them from ``range(128)``.
 
 Banding threshold: with b=32, r=4 the S-curve midpoint is
 (1/b)^(1/r) ~= 0.42 Jaccard — pairs above ~0.5 are near-certain
@@ -35,12 +34,10 @@ BANDS = 32
 ROWS = 4  # NPERM == BANDS * ROWS
 B = 131  # polynomial base (shared with fingerprint.py)
 M = 1_000_000_007
-# Default chars hashed per doc. The cap keeps the DuckDB oracle's
-# O(len x 128) restatement tractable and is applied in BOTH engines;
-# every kernel below also takes ``cap`` explicitly (cap=None = whole
-# document — the 100-TB semantics, driver-checked by
-# minhash128_full_pairs). Reference analogue: whole-text md5 keying,
-# question_merger.py:568-609.
+# Default chars hashed per doc; every kernel below also takes ``cap``
+# explicitly (cap=None = whole document — the 100-TB semantics,
+# checked in tests/test_fulltext.py). Reference analogue: whole-text
+# md5 keying, question_merger.py:568-609.
 CAP = 400
 # chars per kernel chunk when uncapped: bounds per-doc numpy memory on
 # multi-MB documents; chunks overlap K-1 chars so the shingle stream —
@@ -172,7 +169,7 @@ def signatures(
 
 
 MAX_BUCKET = 50  # default band-bucket skew cap (shared: candidate_pairs,
-# dedup_incremental, and the DuckDB keep-CTE in queries._minhash128_cte)
+# and the queries that call it)
 
 
 def capped_band_keys(

@@ -110,10 +110,8 @@ def conversation_stats(final_spans: DataFrame) -> DataFrame:
 
 def flatten_groups(groups: DataFrame) -> DataFrame:
     """Analyzer groups with array columns projected to sortable
-    scalars (block_ids → csv, merged_bbox → 4 int columns) — the one
-    serialization rule shared by the driver-contract row and the
-    job.py --groups sink (driver canonicalization cannot hash python
-    lists)."""
+    scalars (block_ids → csv, merged_bbox → 4 int columns) — the
+    job.py --groups sink's row shape."""
     return groups.select(
         "conv_id",
         "turn_idx",

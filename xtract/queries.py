@@ -1,17 +1,16 @@
-"""Driver-contract query registry (SURVEY.md §5.4, M6).
+"""Operator queries over the synthetic sf tables (SURVEY.md §2).
 
-Every SQL-expressible operator class from SURVEY.md §2 gets a
-(Spark DataFrame query, DuckDB oracle SQL) pair over the driver's
-parquet tables; the driver cross-checks them at sf=0.01. Names carry
-the operator id they exercise.
+No ``job.py`` path calls these. Each registered query is pinned by a
+property test in tests/test_session{4..8}_ops.py,
+tests/test_pipeline_ops.py or tests/test_longdoc.py, which recomputes
+its result independently in Python.
 
-Determinism rules used throughout (so value-hash comparison is exact
-across engines):
+Determinism rules used throughout (so results compare exactly):
 - money/measures → integer cents via floor(x*100) (identical IEEE
   doubles in, identical ints out; no float-sum ordering issues)
-- timestamps → epoch seconds via Spark ``cast(ts as long)`` / DuckDB
-  ``epoch(ts)``; each query pins the session timezone to UTC so both
-  engines read the same naive-parquet instant
+- timestamps → epoch seconds via Spark ``cast(ts as long)``; each
+  query pins the session timezone to UTC so every reader sees the same
+  naive-parquet instant
 - floats that must survive (cosine scores) → round(…, 4)
 """
 from __future__ import annotations
@@ -22,14 +21,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 QUERIES: dict[str, Callable] = {}
-ORACLE: dict[str, str] = {}
 
 
-def q(name: str, sql: str | None = None):
+def q(name: str):
     def deco(fn):
         QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
         return fn
 
     return deco
@@ -50,767 +46,7 @@ def _epoch(col):
     return col.cast("timestamp").cast("long")
 
 
-# =====================================================================
-# A1/A2-family — aggregation with map-side combine (TPC-H Q1 shape)
-# =====================================================================
-@q(
-    "a1_pricing_summary",
-    """
-    select l_returnflag, l_linestatus,
-           cast(sum(cast(floor(l_quantity*100) as bigint)) as bigint) as sum_qty_c,
-           cast(sum(cast(floor(l_extendedprice*100) as bigint)) as bigint) as sum_price_c,
-           cast(sum(cast(floor(l_extendedprice*(1-l_discount)*100) as bigint)) as bigint) as sum_disc_c,
-           count(*) as cnt
-    from lineitem
-    where l_shipdate <= timestamp '1997-09-02 00:00:00'
-    group by l_returnflag, l_linestatus
-    """,
-)
-def a1_pricing_summary(spark, sf_dir):
-    li = t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1997-09-02 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(_cents(F.col("l_quantity"))).alias("sum_qty_c"),
-            F.sum(_cents(F.col("l_extendedprice"))).alias("sum_price_c"),
-            F.sum(
-                _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-            ).alias("sum_disc_c"),
-            F.count("*").alias("cnt"),
-        )
-    )
-
-
-@q(
-    "a3_type_histogram",
-    """
-    select event_type, count(*) as cnt,
-           cast(sum(cast(floor(value*100) as bigint)) as bigint) as sum_value_c
-    from events group by event_type
-    """,
-)
-def a3_type_histogram(spark, sf_dir):
-    """A3 question-type histogram analogue (main_extraction.py:197-204)."""
-    ev = t(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.count("*").alias("cnt"),
-        F.sum(_cents(F.col("value"))).alias("sum_value_c"),
-    )
-
-
-@q(
-    "a6_consecutive_check",
-    """
-    select count(*) as orders_total,
-           cast(count_if(gapless) as bigint) as orders_gapless
-    from (
-      select l_orderkey,
-             (count(*) = max(l_linenumber) - min(l_linenumber) + 1
-              and min(l_linenumber) = 1) as gapless
-      from lineitem group by l_orderkey
-    )
-    """,
-)
-def a6_consecutive_check(spark, sf_dir):
-    """A6 consecutiveness check (…vl_ocr.py:885-890): are line numbers
-    1..n without gaps, per order."""
-    li = t(spark, sf_dir, "lineitem")
-    per = li.groupBy("l_orderkey").agg(
-        (
-            (F.count("*") == F.max("l_linenumber") - F.min("l_linenumber") + 1)
-            & (F.min("l_linenumber") == 1)
-        ).alias("gapless")
-    )
-    return per.agg(
-        F.count("*").alias("orders_total"),
-        F.count_if("gapless").alias("orders_gapless"),
-    )
-
-
-# =====================================================================
-# W-family — windows: lead boundaries, top-k, sessionization
-# =====================================================================
-@q(
-    "w3_lead_gaps",
-    """
-    select user_id,
-           count(*) as n_gaps,
-           cast(min(gap_s) as bigint) as min_gap_s,
-           cast(max(gap_s) as bigint) as max_gap_s,
-           cast(sum(gap_s) as bigint) as sum_gap_s
-    from (
-      select user_id,
-             lead(floor(epoch(ts))) over (partition by user_id order by ts, event_id) - floor(epoch(ts)) as gap_s
-      from events
-    ) where gap_s is not null
-    group by user_id
-    """,
-)
-def w3_lead_gaps(spark, sf_dir):
-    """W3 next-boundary lookahead (question_splitter.py:366-384) as the
-    canonical lead() window."""
-    ev = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    g = ev.select(
-        "user_id",
-        (F.lead(_epoch(F.col("ts"))).over(w) - _epoch(F.col("ts"))).alias(
-            "gap_s"
-        ),
-    ).filter(F.col("gap_s").isNotNull())
-    return g.groupBy("user_id").agg(
-        F.count("*").alias("n_gaps"),
-        F.min("gap_s").alias("min_gap_s"),
-        F.max("gap_s").alias("max_gap_s"),
-        F.sum("gap_s").alias("sum_gap_s"),
-    )
-
-
-@q(
-    "w5_topk_per_group",
-    """
-    select o_custkey, rk, o_orderkey from (
-      select o_custkey, o_orderkey,
-             row_number() over (partition by o_custkey
-                                order by o_totalprice desc, o_orderkey) as rk
-      from orders
-    ) where rk <= 3
-    """,
-)
-def w5_topk_per_group(spark, sf_dir):
-    """W5 top-k cap per group (question_merger.py:220)."""
-    o = t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), "o_orderkey"
-    )
-    return (
-        o.select("o_custkey", "o_orderkey", F.row_number().over(w).alias("rk"))
-        .filter(F.col("rk") <= 3)
-        .select("o_custkey", "rk", "o_orderkey")
-    )
-
-
-@q(
-    "w6_sessionize",
-    """
-    select user_id,
-           cast(count(distinct session_id) as bigint) as sessions,
-           count(*) as events
-    from (
-      select user_id,
-             sum(case when prev_ts is null or floor(epoch(ts)) - prev_ts >= 1800
-                      then 1 else 0 end)
-               over (partition by user_id order by ts, event_id
-                     rows between unbounded preceding and current row) as session_id
-      from (
-        select user_id, ts, event_id,
-               lag(floor(epoch(ts))) over (partition by user_id order by ts, event_id) as prev_ts
-        from events
-      )
-    ) group by user_id
-    """,
-)
-def w6_sessionize(spark, sf_dir):
-    """W6 same-row grouping as gaps-and-islands sessionization
-    (question_merger.py:251-285 pattern)."""
-    ev = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        (
-            F.coalesce(
-                (
-                    _epoch(F.col("ts")) - F.lag(_epoch(F.col("ts"))).over(w)
-                    >= 1800
-                ).cast("int"),
-                F.lit(1),
-            )
-        ).alias("new_session"),
-    )
-    sessioned = flagged.select(
-        "user_id",
-        F.sum("new_session")
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("session_id"),
-    )
-    return sessioned.groupBy("user_id").agg(
-        F.countDistinct("session_id").alias("sessions"),
-        F.count("*").alias("events"),
-    )
-
-
-@q(
-    "w7_first_complete",
-    """
-    select user_id, min(event_id) as first_purchase_event
-    from events where event_type = 'purchase'
-    group by user_id
-    """,
-)
-def w7_first_complete(spark, sf_dir):
-    """W7 first-match early break (extractor.py:176-191)."""
-    ev = t(spark, sf_dir, "events")
-    return (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(F.min("event_id").alias("first_purchase_event"))
-    )
-
-
-# =====================================================================
-# J-family — joins: band/theta, rank-1 assignment, anti-join
-# =====================================================================
-@q(
-    "j1_time_band_join",
-    """
-    select a.user_id as user_id, count(*) as pairs
-    from events a join events b
-      on a.user_id = b.user_id
-     and b.ts > a.ts and floor(epoch(b.ts)) - floor(epoch(a.ts)) <= 120
-     and a.event_type <> b.event_type
-    group by a.user_id
-    """,
-)
-def j1_time_band_join(spark, sf_dir):
-    """J1 spatial/band theta join with an equi pre-key
-    (question_merger.py:135-220 shape): equi on the partition key,
-    banded range predicate on top."""
-    ev = t(spark, sf_dir, "events")
-    a = ev.select(
-        F.col("user_id"),
-        F.col("ts").alias("a_ts"),
-        F.col("event_type").alias("a_type"),
-    )
-    b = ev.select(
-        F.col("user_id"),
-        F.col("ts").alias("b_ts"),
-        F.col("event_type").alias("b_type"),
-    )
-    pairs = a.join(b, "user_id").where(
-        (F.col("b_ts") > F.col("a_ts"))
-        & (_epoch(F.col("b_ts")) - _epoch(F.col("a_ts")) <= 120)
-        & (F.col("a_type") != F.col("b_type"))
-    )
-    return pairs.groupBy("user_id").agg(F.count("*").alias("pairs"))
-
-
-@q(
-    "j4_rank1_assignment",
-    """
-    select user_id, event_type, event_id from (
-      select user_id, event_type, event_id,
-             row_number() over (partition by user_id, event_type
-                                order by ts, event_id) as rk
-      from events
-    ) where rk = 1
-    """,
-)
-def j4_rank1_assignment(spark, sf_dir):
-    """J4 exclusive assignment as window rank-1 (SURVEY.md §2.5)."""
-    ev = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-    return (
-        ev.select("user_id", "event_type", "event_id", F.row_number().over(w).alias("rk"))
-        .filter(F.col("rk") == 1)
-        .drop("rk")
-    )
-
-
-@q(
-    "so1_anti_join",
-    """
-    select c.c_mktsegment as c_mktsegment, count(*) as customers_without_orders
-    from customer c anti join (select * from orders where o_orderstatus = 'F') o
-      on c.c_custkey = o.o_custkey
-    group by c.c_mktsegment
-    """,
-)
-def so1_anti_join(spark, sf_dir):
-    """SO1 id set difference as left_anti (…vl_ocr.py:833-843)."""
-    c = t(spark, sf_dir, "customer")
-    o = t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("customers_without_orders"))
-    )
-
-
-@q(
-    "j5_broadcast_lookup",
-    """
-    select n.n_name as n_name, r.r_name as r_name,
-           count(*) as customers,
-           cast(sum(cast(floor(c.c_acctbal*100) as bigint)) as bigint) as acctbal_c
-    from customer c
-    join nation n on c.c_nationkey = n.n_nationkey
-    join region r on n.n_regionkey = r.r_regionkey
-    group by n.n_name, r.r_name
-    """,
-)
-def j5_broadcast_lookup(spark, sf_dir):
-    """J5 id-equality lookup with explicitly broadcast small dims."""
-    c = t(spark, sf_dir, "customer")
-    n = F.broadcast(t(spark, sf_dir, "nation"))
-    r = F.broadcast(t(spark, sf_dir, "region"))
-    return (
-        c.join(n, c.c_nationkey == n.n_nationkey)
-        .join(r, n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name", "r_name")
-        .agg(
-            F.count("*").alias("customers"),
-            F.sum(_cents(F.col("c_acctbal"))).alias("acctbal_c"),
-        )
-    )
-
-
-@q(
-    "r10_caption_join",
-    """
-    select img_id,
-           cast(coalesce(qn_key, (img_id * 7) % 25) as int) as qn,
-           case when qn_key is not null then 'caption' else 'spatial' end as via
-    from (
-      select p_partkey as img_id,
-             cast(nullif(regexp_extract(
-               case when p_partkey % 3 = 0
-                    then '图注 第' || cast(p_partkey % 30 as varchar) || '题图'
-                    else p_name end,
-               '第([0-9]+)题图', 1), '') as int) as cap_qn
-      from part
-    ) i
-    left join (select n_nationkey as qn_key from nation) n
-      on i.cap_qn = n.qn_key
-    """,
-)
-def r10_caption_join(spark, sf_dir):
-    """R10 caption-join precedence (merge.py CAPTION_RE; reference
-    docs/试卷切题问题分析与优化方案.md:118-133) on the driver tables:
-    parse an explicit 第N题图 key out of a caption string, resolve it
-    against a BROADCAST question dim, and only fall back to the
-    deterministic 'spatial' assignment when the caption is absent or
-    names a question that doesn't exist (% 30 keys 25-29 miss the
-    25-row dim). The extraction analogue is merge_rank1's cap_assign
-    equi-join."""
-    from . import merge as merge_mod
-
-    p = t(spark, sf_dir, "part")
-    caption = F.when(
-        F.col("p_partkey") % 3 == 0,
-        F.concat(
-            F.lit("图注 第"),
-            (F.col("p_partkey") % 30).cast("string"),
-            F.lit("题图"),
-        ),
-    ).otherwise(F.col("p_name"))
-    img = p.select(
-        F.col("p_partkey").alias("img_id"),
-        F.nullif(F.regexp_extract(caption, merge_mod.CAPTION_RE, 1), F.lit(""))
-        .cast("int")
-        .alias("cap_qn"),
-    )
-    dim = F.broadcast(
-        t(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("qn_key"))
-    )
-    joined = img.join(dim, img["cap_qn"] == dim["qn_key"], "left")
-    return joined.select(
-        "img_id",
-        F.coalesce("qn_key", (F.col("img_id") * 7) % 25).cast("int").alias("qn"),
-        F.when(F.col("qn_key").isNotNull(), "caption")
-        .otherwise("spatial")
-        .alias("via"),
-    )
-
-
-# =====================================================================
-# G-family — geometry as column arithmetic
-# =====================================================================
-_BOX_SQL = """
-      select p_partkey,
-             p_partkey % 500 as ax1, (p_partkey * 7) % 500 as ay1,
-             p_partkey % 500 + 50 + p_size as ax2,
-             (p_partkey * 7) % 500 + 80 + p_size as ay2,
-             p_partkey % 500 + p_partkey % 37 as bx1,
-             (p_partkey * 7) % 500 + p_partkey % 53 as by1,
-             p_partkey % 500 + p_partkey % 37 + 60 + p_size as bx2,
-             (p_partkey * 7) % 500 + p_partkey % 53 + 70 + p_size as by2
-      from part
-"""
-
-
-def _boxes(spark, sf_dir):
-    p = t(spark, sf_dir, "part")
-    k = F.col("p_partkey")
-    s = F.col("p_size")
-    return p.select(
-        "p_partkey",
-        (k % 500).alias("ax1"),
-        ((k * 7) % 500).alias("ay1"),
-        (k % 500 + 50 + s).alias("ax2"),
-        ((k * 7) % 500 + 80 + s).alias("ay2"),
-        (k % 500 + k % 37).alias("bx1"),
-        ((k * 7) % 500 + k % 53).alias("by1"),
-        (k % 500 + k % 37 + 60 + s).alias("bx2"),
-        ((k * 7) % 500 + k % 53 + 70 + s).alias("by2"),
-    )
-
-
-@q(
-    "g6_iou",
-    f"""
-    select p_partkey, cast(floor(1000000.0 * inter / uni) as bigint) as iou_ppm from (
-      select p_partkey,
-             greatest(0, least(ax2, bx2) - greatest(ax1, bx1))
-             * greatest(0, least(ay2, by2) - greatest(ay1, by1)) as inter,
-             (ax2-ax1)*(ay2-ay1) + (bx2-bx1)*(by2-by1)
-             - greatest(0, least(ax2, bx2) - greatest(ax1, bx1))
-               * greatest(0, least(ay2, by2) - greatest(ay1, by1)) as uni
-      from ({_BOX_SQL})
-    )
-    """,
-)
-def g6_iou(spark, sf_dir):
-    """G6 IoU (evaluator.py:135-161) over deterministic synthetic boxes
-    — integer arithmetic end-to-end, one floor at the boundary."""
-    b = _boxes(spark, sf_dir)
-    iw = F.greatest(F.lit(0), F.least("ax2", "bx2") - F.greatest("ax1", "bx1"))
-    ih = F.greatest(F.lit(0), F.least("ay2", "by2") - F.greatest("ay1", "by1"))
-    inter = iw * ih
-    area_a = (F.col("ax2") - F.col("ax1")) * (F.col("ay2") - F.col("ay1"))
-    area_b = (F.col("bx2") - F.col("bx1")) * (F.col("by2") - F.col("by1"))
-    uni = area_a + area_b - inter
-    return b.select(
-        "p_partkey",
-        F.floor(F.lit(1000000.0) * inter / uni).cast("long").alias("iou_ppm"),
-    )
-
-
-@q(
-    "g5_merged_bbox",
-    f"""
-    select p_partkey % 20 as grp,
-           cast(min(ax1) as bigint) as x1, cast(min(ay1) as bigint) as y1,
-           cast(max(ax2) as bigint) as x2, cast(max(ay2) as bigint) as y2,
-           count(*) as members
-    from ({_BOX_SQL})
-    group by p_partkey % 20
-    """,
-)
-def g5_merged_bbox(spark, sf_dir):
-    """G5 merged min-enclosing bbox (question_merger.py:542-555)."""
-    b = _boxes(spark, sf_dir)
-    return b.groupBy((F.col("p_partkey") % 20).alias("grp")).agg(
-        F.min("ax1").cast("long").alias("x1"),
-        F.min("ay1").cast("long").alias("y1"),
-        F.max("ax2").cast("long").alias("x2"),
-        F.max("ay2").cast("long").alias("y2"),
-        F.count("*").alias("members"),
-    )
-
-
-# =====================================================================
-# R-family — regex/string classification & extraction
-# =====================================================================
-@q(
-    "r6_qtype_classify",
-    """
-    select lang,
-           case when regexp_matches(text, '[A-D][\\.、]') then '选择题'
-                when regexp_matches(text, '[（(]\\s*[）)]|_{2,}') then '填空题'
-                when regexp_matches(text, '判断|对错|正确|错误|√|×|[（(]\\s*[）)]')
-                     and length(text) < 200 then '判断题'
-                when regexp_matches(text, '计算|求值|求出|算出') then '计算题'
-                when regexp_matches(text, '解答|证明|说明|分析|简述')
-                     or length(text) > 100 then '解答题'
-                else '其他' end as qtype,
-           count(*) as cnt
-    from documents group by 1, 2
-    """,
-)
-def r6_qtype_classify(spark, sf_dir):
-    """R6 type-classifier chain (extractor.py:253-280) — order matters,
-    first match wins."""
-    from .structure import qtype_col
-
-    d = t(spark, sf_dir, "documents")
-    return d.groupBy(
-        "lang", qtype_col(F.col("text")).alias("qtype")
-    ).agg(F.count("*").alias("cnt"))
-
-
-@q(
-    "r7_score_extract",
-    """
-    select score, count(*) as cnt from (
-      select coalesce(
-               cast(nullif(regexp_extract(s, '[（(](\\d+)分[）)]', 1), '') as int),
-               cast(nullif(regexp_extract(s, '(\\d+)分', 1), '') as int),
-               cast(nullif(regexp_extract(s, '每题(\\d+)分', 1), '') as int),
-               cast(nullif(regexp_extract(s, '共(\\d+)分', 1), '') as int),
-               0) as score
-      from (
-        select case when doc_id % 4 = 0 then '（' || (n_chars % 21) || '分）'
-                    when doc_id % 4 = 1 then '本大题每题' || (n_chars % 7) || '分'
-                    when doc_id % 4 = 2 then '本卷共' || (n_chars % 31) || '分'
-                    else text end as s
-        from documents
-      )
-    ) group by score
-    """,
-)
-def r7_score_extract(spark, sf_dir):
-    """R7 score extraction with pattern priority (extractor.py:282-303)
-    over deterministically constructed strings."""
-    from .structure import score_col
-
-    d = t(spark, sf_dir, "documents")
-    s = (
-        F.when(
-            F.col("doc_id") % 4 == 0,
-            F.concat(F.lit("（"), (F.col("n_chars") % 21).cast("string"), F.lit("分）")),
-        )
-        .when(
-            F.col("doc_id") % 4 == 1,
-            F.concat(
-                F.lit("本大题每题"), (F.col("n_chars") % 7).cast("string"), F.lit("分")
-            ),
-        )
-        .when(
-            F.col("doc_id") % 4 == 2,
-            F.concat(F.lit("本卷共"), (F.col("n_chars") % 31).cast("string"), F.lit("分")),
-        )
-        .otherwise(F.col("text"))
-    )
-    return d.select(score_col(s).alias("score")).groupBy("score").agg(
-        F.count("*").alias("cnt")
-    )
-
-
-@q(
-    "r8_meta_extract",
-    """
-    select cast(sum(cast(tm as bigint)) as bigint) as sum_minutes,
-           cast(sum(cast(sc as bigint)) as bigint) as sum_scores,
-           count(*) as docs
-    from (
-      select cast(nullif(regexp_extract(s, '时间[：:]\\s*(\\d+)\\s*分钟', 1), '') as int) as tm,
-             cast(nullif(regexp_extract(s, '满分[：:]\\s*(\\d+)\\s*分', 1), '') as int) as sc
-      from (
-        select '时间：' || (doc_id % 120) || '分钟 满分：' || (n_chars % 150) || '分' as s
-        from documents where doc_id % 3 = 0
-      )
-    )
-    """,
-)
-def r8_meta_extract(spark, sf_dir):
-    """R8 exam-info regexes (extractor.py:176-191)."""
-    d = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 0)
-    s = F.concat(
-        F.lit("时间："),
-        (F.col("doc_id") % 120).cast("string"),
-        F.lit("分钟 满分："),
-        (F.col("n_chars") % 150).cast("string"),
-        F.lit("分"),
-    )
-    e = d.select(
-        F.nullif(F.regexp_extract(s, r"时间[：:]\s*(\d+)\s*分钟", 1), F.lit(""))
-        .cast("int")
-        .alias("tm"),
-        F.nullif(F.regexp_extract(s, r"满分[：:]\s*(\d+)\s*分", 1), F.lit(""))
-        .cast("int")
-        .alias("sc"),
-    )
-    return e.agg(
-        F.sum(F.col("tm").cast("long")).alias("sum_minutes"),
-        F.sum(F.col("sc").cast("long")).alias("sum_scores"),
-        F.count("*").alias("docs"),
-    )
-
-
-# =====================================================================
-# text-analysis family (training-data pipeline ops)
-# =====================================================================
-@q(
-    "tok_count",
-    """
-    select lang, count(*) as docs,
-           cast(sum(toks) as bigint) as total_tokens,
-           cast(max(toks) as bigint) as max_tokens
-    from (
-      select lang, len(regexp_extract_all(text, '[a-z0-9]+')) as toks
-      from documents
-    ) group by lang
-    """,
-)
-def tok_count(spark, sf_dir):
-    """Token counting (whitespace/wordish regex) per doc, rolled up."""
-    d = t(spark, sf_dir, "documents")
-    toks = F.size(F.regexp_extract_all(F.col("text"), F.lit("[a-z0-9]+"), 0))
-    return d.select("lang", toks.alias("toks")).groupBy("lang").agg(
-        F.count("*").alias("docs"),
-        F.sum("toks").cast("long").alias("total_tokens"),
-        F.max("toks").cast("long").alias("max_tokens"),
-    )
-
-
-@q(
-    "fp_dedup_exact",
-    """
-    select count(*) as docs,
-           cast(count(distinct md5(lower(trim(text)))) as bigint) as distinct_fps,
-           cast(count(*) - count(distinct md5(lower(trim(text)))) as bigint) as exact_dups
-    from documents
-    """,
-)
-def fp_dedup_exact(spark, sf_dir):
-    """Exact dedup by content fingerprint (hash-groupBy)."""
-    d = t(spark, sf_dir, "documents")
-    fp = F.md5(F.lower(F.trim(F.col("text"))))
-    return d.select(fp.alias("fp")).agg(
-        F.count("*").alias("docs"),
-        F.countDistinct("fp").alias("distinct_fps"),
-        (F.count("*") - F.countDistinct("fp")).alias("exact_dups"),
-    )
-
-
-@q(
-    "quality_score",
-    """
-    select source,
-           count(*) as docs,
-           cast(sum(case when q >= 50 then 1 else 0 end) as bigint) as good_docs,
-           cast(sum(q) as bigint) as sum_q
-    from (
-      select source,
-             least(100, cast(floor(
-               0.5 * least(n_chars, 500) / 5.0
-               + 50.0 * len(regexp_extract_all(text, '\\bthe\\b|\\ba\\b'))
-                 / greatest(len(regexp_extract_all(text, '[a-z0-9]+')), 1)
-             ) as bigint)) as q
-      from documents
-    ) group by source
-    """,
-)
-def quality_score(spark, sf_dir):
-    """Quality scoring: length + stopword-ratio heuristic
-    (jusText/Readability-style density features, integerized)."""
-    d = t(spark, sf_dir, "documents")
-    toks = F.size(F.regexp_extract_all(F.col("text"), F.lit("[a-z0-9]+"), 0))
-    stops = F.size(F.regexp_extract_all(F.col("text"), F.lit(r"\bthe\b|\ba\b"), 0))
-    qv = F.least(
-        F.lit(100),
-        F.floor(
-            0.5 * F.least(F.col("n_chars"), F.lit(500)) / 5.0
-            + 50.0 * stops / F.greatest(toks, F.lit(1))
-        ).cast("long"),
-    )
-    return d.select("source", qv.alias("q")).groupBy("source").agg(
-        F.count("*").alias("docs"),
-        F.sum(F.when(F.col("q") >= 50, 1).otherwise(0)).cast("long").alias("good_docs"),
-        F.sum("q").cast("long").alias("sum_q"),
-    )
-
-
-@q(
-    "lang_id_heuristic",
-    """
-    select lang, guess, count(*) as cnt from (
-      select lang,
-             case when regexp_matches(text, '[\\x{4e00}-\\x{9fff}]') then 'zh'
-                  when len(regexp_extract_all(text, '\\b(the|of|and)\\b'))
-                       >= len(regexp_extract_all(text, '\\b(der|die|das|el|la|de)\\b'))
-                       then 'en'
-                  else 'other' end as guess
-      from documents
-    ) group by lang, guess
-    """,
-)
-def lang_id_heuristic(spark, sf_dir):
-    """n-gram/marker language-ID heuristic (mechanics of the operator;
-    the driver corpus is synthetic so agreement with the label is
-    incidental)."""
-    d = t(spark, sf_dir, "documents")
-    en = F.size(F.regexp_extract_all(F.col("text"), F.lit(r"\b(the|of|and)\b"), 0))
-    other = F.size(
-        F.regexp_extract_all(F.col("text"), F.lit(r"\b(der|die|das|el|la|de)\b"), 0)
-    )
-    guess = (
-        F.when(F.col("text").rlike(r"[一-鿿]"), "zh")
-        .when(en >= other, "en")
-        .otherwise("other")
-    )
-    return d.select("lang", guess.alias("guess")).groupBy("lang", "guess").agg(
-        F.count("*").alias("cnt")
-    )
-
-# =====================================================================
-# similarity family — minhash / simhash / embedding ANN
-# =====================================================================
-@q(
-    "minhash_bands",
-    """
-    select band_key, count(*) as bucket_size from (
-      select md5(s0 || s1) as band_key from (
-        select list_min(list_transform(sh, x -> md5('p0' || x))) as s0,
-               list_min(list_transform(sh, x -> md5('p1' || x))) as s1
-        from (
-          select list_transform(range(1, greatest(length(text) - 3, 2)),
-                                i -> text[i:i+4]) as sh
-          from documents
-        )
-      )
-    ) group by band_key having count(*) > 1
-    """,
-)
-def minhash_bands(spark, sf_dir):
-    """MinHash+LSH banding: 5-char shingles → 2 md5 'permutations' →
-    band key → bucket sizes (near-dup candidate generation).
-    DIDACTIC BASELINE, kept deliberately: the 2-permutation/1-band
-    form exists to make the banding mechanics oracle-checkable in
-    isolation; the production path is the 128-perm/32x4 family
-    (minhash128_pairs / minhash128_full_pairs / conv-level dedup in
-    xtract/minhash.py). Driver-green in r01, r02 and r03; holds no
-    permanent sample slot and cycles with the r6+ rotation."""
-    d = t(spark, sf_dir, "documents")
-    n = F.length("text")
-    sh = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - 4, F.lit(1))),
-        lambda i: F.substring(F.col("text"), i, 5),
-    )
-    d = d.select(sh.alias("sh"))
-    s0 = F.array_min(F.transform(F.col("sh"), lambda x: F.md5(F.concat(F.lit("p0"), x))))
-    s1 = F.array_min(F.transform(F.col("sh"), lambda x: F.md5(F.concat(F.lit("p1"), x))))
-    bands = d.select(F.md5(F.concat(s0, s1)).alias("band_key"))
-    return (
-        bands.groupBy("band_key")
-        .agg(F.count("*").alias("bucket_size"))
-        .filter(F.col("bucket_size") > 1)
-    )
-
-
-@q(
-    "emb_cosine_top5",
-    """
-    select qid, rk, nid, score from (
-      select qid, nid, score,
-             row_number() over (partition by qid order by score desc, nid) as rk
-      from (
-        select q.vec_id as qid, c.vec_id as nid,
-               round(
-                 list_sum(list_transform(range(1, 65),
-                   i -> cast(q.embedding[i] as double) * cast(c.embedding[i] as double)))
-                 / sqrt(list_sum(list_transform(range(1, 65),
-                   i -> cast(q.embedding[i] as double) * cast(q.embedding[i] as double))))
-                 / sqrt(list_sum(list_transform(range(1, 65),
-                   i -> cast(c.embedding[i] as double) * cast(c.embedding[i] as double))))
-               , 4) + 0.0 as score
-        from embeddings q join embeddings c on q.vec_id < 20 and c.vec_id != q.vec_id
-      )
-    ) where rk <= 5
-    """,
-)
+@q("emb_cosine_top5")
 def emb_cosine_top5(spark, sf_dir):
     """Brute-force cosine top-k ANN baseline over the embedding column
     (F.aggregate/zip_with dot products; score rounded to 4dp so the
@@ -843,1080 +79,6 @@ def emb_cosine_top5(spark, sf_dir):
         .filter(F.col("rk") <= 5)
         .select("qid", "rk", "nid", "score")
     )
-
-
-_MEDIA_GLOB = "/tmp/xtract_mat/sf0.01/media/*.parquet"
-
-def _hex_int_sql(byte_off: int) -> str:
-    """DuckDB: big-endian uint32 at 1-indexed BYTE offset of a blob,
-    parsed from the hex dump (byte k = hex chars 2k-1..2k)."""
-    start = 2 * (byte_off - 1)
-    return (
-        "cast(list_sum(list_transform(range(1, 9), i -> "
-        f"(strpos('0123456789ABCDEF', substring(hex(payload), {start} + i, 1)) - 1)"
-        " * pow(16, 8 - i))) as bigint)"
-    )
-
-
-@q(
-    "media_header_stats",
-    f"""
-    select kind, count(*) as cnt,
-           cast(sum(octet_length(payload)) as bigint) as total_bytes,
-           cast(sum(a) as bigint) as sum_a,
-           cast(sum(c) as bigint) as sum_c,
-           cast(count_if(
-             (width is null or a = width)
-             and (height is null or b = height)
-             and (duration_ms is null or c = duration_ms)
-           ) as bigint) as header_meta_matches
-    from (
-      select kind, payload,
-             meta.width as width, meta.height as height,
-             meta.duration_ms as duration_ms,
-             {_hex_int_sql(8)} as a,
-             {_hex_int_sql(12)} as b,
-             {_hex_int_sql(16)} as c
-      from read_parquet('{_MEDIA_GLOB}')
-    ) group by kind
-    """,
-)
-def media_header_stats(spark, sf_dir):
-    """Multimodal binary plumbing on the hard signal: the deterministic
-    media table (binary payloads + typed meta struct,
-    multimodal.gen_media) materializes to parquet; BOTH engines then
-    natively parse the big-endian header fields out of the raw bytes
-    (no Python UDF — Spark conv(hex(substring)), DuckDB hex-dump
-    arithmetic) and cross-check them against the meta struct. Proves
-    the opaque-binary column round-trips byte-exactly and the typed
-    metadata matches the payload, engine-independently."""
-    from . import mat, multimodal
-
-    media = mat.materialize(
-        spark, sf_dir, "media", lambda: multimodal.gen_media(spark, 500, partitions=8)
-    )
-
-    def be32(off):
-        return F.conv(F.hex(F.substring(F.col("payload"), off, 4)), 16, 10).cast(
-            "long"
-        )
-
-    parsed = media.select(
-        "kind",
-        F.length("payload").cast("long").alias("nb"),
-        be32(8).alias("a"),
-        be32(12).alias("b"),
-        be32(16).alias("c"),
-        F.col("meta.width").alias("width"),
-        F.col("meta.height").alias("height"),
-        F.col("meta.duration_ms").alias("duration_ms"),
-    )
-    ok = (
-        (F.col("width").isNull() | (F.col("a") == F.col("width")))
-        & (F.col("height").isNull() | (F.col("b") == F.col("height")))
-        & (F.col("duration_ms").isNull() | (F.col("c") == F.col("duration_ms")))
-    )
-    return parsed.groupBy("kind").agg(
-        F.count("*").alias("cnt"),
-        F.sum("nb").alias("total_bytes"),
-        F.sum("a").alias("sum_a"),
-        F.sum("c").alias("sum_c"),
-        F.count_if(ok).cast("long").alias("header_meta_matches"),
-    )
-
-
-_LSH_PLANES_GLOB = "/tmp/xtract_mat/sf0.01/lsh_planes/*.parquet"
-
-@q(
-    "ann_lsh_top5",
-    f"""
-    with planes as (select tbl, j, w from read_parquet('{_LSH_PLANES_GLOB}')),
-    e as (
-      select vec_id, list_transform(embedding, x -> cast(x as double)) as v
-      from embeddings
-    ),
-    sigs as (
-      select e.vec_id as id, p.tbl as tbl,
-             cast(sum(case when list_sum(list_transform(range(1, 65),
-                               i -> e.v[i] * p.w[i])) > 0
-                      then cast(pow(2, p.j) as bigint) else 0 end) as bigint) as sig
-      from e cross join planes p
-      group by e.vec_id, p.tbl
-    ),
-    cand as (
-      select distinct q.id as qid, c.id as nid
-      from (select * from sigs where id < 20) q
-      join sigs c on q.tbl = c.tbl and q.sig = c.sig and c.id <> q.id
-    ),
-    scored as (
-      select cand.qid, cand.nid,
-             round(
-               list_sum(list_transform(range(1, 65), i -> eq.v[i] * ec.v[i]))
-               / sqrt(list_sum(list_transform(range(1, 65), i -> eq.v[i] * eq.v[i])))
-               / sqrt(list_sum(list_transform(range(1, 65), i -> ec.v[i] * ec.v[i])))
-             , 6) as s6
-      from cand join e eq on eq.vec_id = cand.qid
-                join e ec on ec.vec_id = cand.nid
-    )
-    select qid, rk, nid, round(s6, 4) + 0.0 as score from (
-      select qid, nid, s6,
-             row_number() over (partition by qid order by s6 desc, nid) as rk
-      from scored
-    ) where rk <= 5
-    """,
-)
-def ann_lsh_top5(spark, sf_dir):
-    """The LSH SCALE path on the driver's hard signal (not just the
-    brute-force baseline): random-hyperplane signatures -> per-table
-    bucket equi-join candidates -> exact cosine rerank
-    (similarity.lsh_topk). The seeded planes are materialized to
-    parquet so DuckDB independently recomputes signatures, buckets,
-    candidates, and the rerank from the same planes. Rank order uses
-    the 6dp score (lsh_topk contract); output re-rounds to 4dp, and
-    the oracle mirrors the double rounding."""
-    from . import similarity
-
-    e = t(spark, sf_dir, "embeddings")
-    _ensure_lsh_planes(spark, sf_dir)
-    corpus = e.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-    qset = corpus.filter(F.col("id") < 20)
-    out = similarity.lsh_topk(corpus, qset, k=5, n_planes=8, n_tables=4, dim=64)
-    return out.select(
-        F.col("query_id").alias("qid"),
-        F.col("rank").alias("rk"),
-        F.col("neighbor_id").alias("nid"),
-        (F.round("score", 4) + F.lit(0.0)).alias("score"),
-    )
-
-
-@q(
-    "emb_near_dup",
-    f"""
-    with planes as (select tbl, j, w from read_parquet('{_LSH_PLANES_GLOB}')),
-    base as (
-      select vec_id, list_transform(embedding, x -> cast(x as double)) as v
-      from embeddings
-    ),
-    corpus as (
-      select vec_id as id, v from base
-      union all
-      select vec_id + 100000 as id,
-             list_transform(range(1, 65),
-               k -> v[k] + ((vec_id * 31 + (k - 1)) % 7 - 3) * 0.003) as v
-      from base
-    ),
-    sigs as (
-      select c.id, p.tbl,
-             cast(sum(case when list_sum(list_transform(range(1, 65),
-                               i -> c.v[i] * p.w[i])) > 0
-                      then cast(pow(2, p.j) as bigint) else 0 end) as bigint) as sig
-      from corpus c cross join planes p
-      group by c.id, p.tbl
-    ),
-    cand as (
-      select distinct a.id as id_a, b.id as id_b
-      from sigs a join sigs b on a.tbl = b.tbl and a.sig = b.sig and a.id < b.id
-    ),
-    scored as (
-      select cand.id_a, cand.id_b,
-             round(
-               list_sum(list_transform(range(1, 65), i -> ca.v[i] * cb.v[i]))
-               / sqrt(list_sum(list_transform(range(1, 65), i -> ca.v[i] * ca.v[i])))
-               / sqrt(list_sum(list_transform(range(1, 65), i -> cb.v[i] * cb.v[i])))
-             , 6) as s6
-      from cand join corpus ca on ca.id = cand.id_a
-                join corpus cb on cb.id = cand.id_b
-    )
-    select id_a, id_b, round(s6, 4) + 0.0 as score
-    from scored where s6 >= 0.99
-    """,
-)
-def emb_near_dup(spark, sf_dir):
-    """Embedding-cosine NEAR-DUP (the dedup-toolkit arm distinct from
-    top-k search): thresholded duplicate pairs found through LSH
-    bucket candidates — never an all-pairs scan. The driver's
-    embeddings table has no natural near-dups (max off-diagonal
-    cosine ~ 0.51; vectors are unit-norm), so the corpus is augmented with deterministic
-    perturbed clones (same closed-form arithmetic in both engines);
-    the expected output is exactly the planted (original, clone)
-    pairs at cosine ≥ 0.99, recovered via signature-bucket equi-join
-    + exact rerank."""
-    from . import mat, similarity
-
-    e = t(spark, sf_dir, "embeddings")
-    _ensure_lsh_planes(spark, sf_dir)
-
-    base = e.select(
-        F.col("vec_id").alias("vec_id"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
-    )
-    clone_v = F.transform(
-        F.sequence(F.lit(1), F.lit(64)),
-        lambda k: F.element_at(F.col("v"), k)
-        + (((F.col("vec_id") * 31 + (k - 1)) % 7) - 3) * 0.003,
-    )
-    corpus = base.select(F.col("vec_id").alias("id"), "v").unionAll(
-        base.select((F.col("vec_id") + 100000).alias("id"), clone_v.alias("v"))
-    )
-    sigs = similarity._signatures(
-        corpus.select("id", F.col("v").alias("vec")), dim=64, n_planes=8, n_tables=4
-    )
-    a = sigs.select(F.col("id").alias("id_a"), "table", "sig")
-    b = sigs.select(F.col("id").alias("id_b"), "table", "sig")
-    cand = (
-        a.join(b, ["table", "sig"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    ca = corpus.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
-    cb = corpus.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p_, q_: p_ * q_), F.lit(0.0), lambda acc, z: acc + z
-        )
-
-    s6 = F.round(
-        dot(F.col("va"), F.col("vb"))
-        / F.sqrt(dot(F.col("va"), F.col("va")))
-        / F.sqrt(dot(F.col("vb"), F.col("vb"))),
-        6,
-    )
-    return (
-        cand.join(ca, "id_a")
-        .join(cb, "id_b")
-        .select("id_a", "id_b", s6.alias("s6"))
-        .where(F.col("s6") >= 0.99)
-        .select(
-            "id_a", "id_b", (F.round("s6", 4) + F.lit(0.0)).alias("score")
-        )
-    )
-
-
-def _ensure_lsh_planes(spark, sf_dir):
-    """Materialize the shared 8x4 hyperplane table (used by
-    ann_lsh_top5 and emb_near_dup oracles)."""
-    import pandas as pd
-
-    from . import mat, similarity
-
-    def build_planes():
-        rows = []
-        for tb in range(4):
-            pl = similarity._planes(64, 8, tb)
-            for j in range(8):
-                rows.append({"tbl": tb, "j": j, "w": pl[j].tolist()})
-        return spark.createDataFrame(
-            pd.DataFrame(rows), schema="tbl int, j int, w array<double>"
-        )
-
-    mat.materialize(spark, sf_dir, "lsh_planes", build_planes)
-
-
-_IVF_CENTROIDS_GLOB = "/tmp/xtract_mat/sf0.01/ivf_centroids/*.parquet"
-
-@q(
-    "ann_ivf_top5",
-    f"""
-    with cents as (select cell, w from read_parquet('{_IVF_CENTROIDS_GLOB}')),
-    e as (
-      select vec_id, list_transform(embedding, x -> cast(x as double)) as v
-      from embeddings
-    ),
-    en as (
-      select vec_id, v,
-             greatest(sqrt(list_sum(list_transform(range(1, 65), i -> v[i] * v[i]))), 1e-12) as nrm
-      from e
-    ),
-    sims as (
-      select en.vec_id as id, c.cell,
-             list_sum(list_transform(range(1, 65), i -> en.v[i] / en.nrm * c.w[i])) as sim
-      from en cross join cents c
-    ),
-    ca as (
-      select id as neighbor_id, cell from (
-        select id, cell, row_number() over (partition by id order by sim desc, cell) as rk
-        from sims
-      ) where rk = 1
-    ),
-    qa as (
-      select id as query_id, cell from (
-        select id, cell, row_number() over (partition by id order by sim desc, cell) as rk
-        from sims where id < 20
-      ) where rk <= 4
-    ),
-    cand as (
-      select distinct qa.query_id as qid, ca.neighbor_id as nid
-      from qa join ca using (cell)
-      where ca.neighbor_id <> qa.query_id
-    ),
-    scored as (
-      select cand.qid, cand.nid,
-             round(
-               list_sum(list_transform(range(1, 65), i -> eq.v[i] * ec.v[i]))
-               / sqrt(list_sum(list_transform(range(1, 65), i -> eq.v[i] * eq.v[i])))
-               / sqrt(list_sum(list_transform(range(1, 65), i -> ec.v[i] * ec.v[i])))
-             , 6) as s6
-      from cand join e eq on eq.vec_id = cand.qid
-                join e ec on ec.vec_id = cand.nid
-    )
-    select qid, rk, nid, round(s6, 4) + 0.0 as score from (
-      select qid, nid, s6,
-             row_number() over (partition by qid order by s6 desc, nid) as rk
-      from scored
-    ) where rk <= 5
-    """,
-)
-def ann_ivf_top5(spark, sf_dir):
-    """The IVF scale path on the driver's hard signal
-    (similarity.ivf_topk): seeded unit centroids materialize to
-    parquet; DuckDB independently recomputes normalized assignments
-    (corpus: nearest cell; queries: 4 probed cells), the cell
-    equi-join candidates, and the exact rerank. Same rounding
-    contract as ann_lsh_top5."""
-    import pandas as pd
-
-    from . import mat, similarity
-
-    e = t(spark, sf_dir, "embeddings")
-
-    def build_centroids():
-        cents = similarity._centroids(64, 16)
-        rows = [{"cell": c, "w": cents[c].tolist()} for c in range(16)]
-        return spark.createDataFrame(
-            pd.DataFrame(rows), schema="cell int, w array<double>"
-        )
-
-    mat.materialize(spark, sf_dir, "ivf_centroids", build_centroids)
-    corpus = e.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-    qset = corpus.filter(F.col("id") < 20)
-    out = similarity.ivf_topk(corpus, qset, k=5, n_cells=16, nprobe=4, dim=64)
-    return out.select(
-        F.col("query_id").alias("qid"),
-        F.col("rank").alias("rk"),
-        F.col("neighbor_id").alias("nid"),
-        (F.round("score", 4) + F.lit(0.0)).alias("score"),
-    )
-
-
-@q(
-    "simhash16",
-    """
-    select sig, count(*) as cnt from (
-      select bit0*32768 + bit1*16384 + bit2*8192 + bit3*4096
-           + bit4*2048 + bit5*1024 + bit6*512 + bit7*256
-           + bit8*128 + bit9*64 + bit10*32 + bit11*16
-           + bit12*8 + bit13*4 + bit14*2 + bit15 as sig
-      from (
-        select {cols}
-        from (
-          select doc_id, unnest(regexp_extract_all(text, '[a-z0-9]+')) as tok
-          from documents
-        ) group by doc_id
-      )
-    ) group by sig having count(*) > 1
-    """.format(
-        cols=", ".join(
-            "case when sum(case when substring(md5(tok), {p}, 1) in "
-            "('8','9','a','b','c','d','e','f') then 1 else -1 end) > 0 "
-            "then 1 else 0 end as bit{b}".format(p=b + 1, b=b)
-            for b in range(16)
-        )
-    ),
-)
-def simhash16(spark, sf_dir):
-    """SimHash (16-bit nibble-majority variant): explode tokens, per-bit
-    majority vote of md5 nibble high-bits, assemble signature; emit
-    collision buckets (near-dup candidates)."""
-    d = t(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.explode(F.regexp_extract_all(F.col("text"), F.lit("[a-z0-9]+"), 0)).alias(
-            "tok"
-        ),
-    )
-    bit_cols = []
-    for b in range(16):
-        nib = F.substring(F.md5(F.col("tok")), b + 1, 1)
-        vote = F.when(nib.isin(*"89abcdef"), 1).otherwise(-1)
-        bit_cols.append(
-            F.when(F.sum(vote) > 0, F.lit(1)).otherwise(F.lit(0)).alias(f"bit{b}")
-        )
-    bits = toks.groupBy("doc_id").agg(*bit_cols)
-    sig = sum(
-        (F.col(f"bit{b}") * (1 << (15 - b)) for b in range(16)), F.lit(0)
-    ).alias("sig")
-    return (
-        bits.select(sig)
-        .groupBy("sig")
-        .agg(F.count("*").alias("cnt"))
-        .filter(F.col("cnt") > 1)
-    )
-
-
-@q(
-    "ngram_jaccard_pairs",
-    """
-    with g as (
-      select doc_id,
-             case when len(toks) >= 2
-                  then list_distinct(list_transform(range(1, len(toks)),
-                         i -> toks[i] || ' ' || toks[i+1]))
-                  else [] end as grams
-      from (select doc_id, regexp_extract_all(text, '[a-z0-9]+') as toks
-            from documents where doc_id % 10 = 0)
-    ),
-    e as (select doc_id, unnest(grams) as gram from g),
-    keep as (select gram from e group by gram having count(distinct doc_id) <= 20),
-    e2 as (select e.doc_id, e.gram from e join keep using (gram)),
-    counts as (select doc_id, cast(count(*) as bigint) as n from e2 group by doc_id),
-    inter as (
-      select a.doc_id as doc_a, b.doc_id as doc_b,
-             cast(count(*) as bigint) as shared
-      from e2 a join e2 b on a.gram = b.gram and a.doc_id < b.doc_id
-      group by 1, 2
-    )
-    select i.doc_a, i.doc_b,
-           cast(floor(1000000.0 * i.shared
-                      / greatest(ca.n + cb.n - i.shared, 1)) as bigint) as jaccard_ppm
-    from inter i
-    join counts ca on ca.doc_id = i.doc_a
-    join counts cb on cb.doc_id = i.doc_b
-    """,
-)
-def ngram_jaccard_pairs(spark, sf_dir):
-    """Word-bigram Jaccard over a deterministic 10% sample — in the
-    100-TB shape: an INVERTED INDEX on the grams (explode →
-    doc-frequency cap ≤ 20 drops stop grams → gram-key equi
-    self-join) both GENERATES the candidate pairs and COUNTS their
-    intersections in one aggregation; per-doc kept-gram counts then
-    close the Jaccard without ever re-joining gram arrays. Jaccard is
-    over the capped (non-stop) gram space — idf-style pruning, same
-    definition in both engines. Shuffle volume scales with posting
-    rows bounded by the cap, never |doc|² or per-pair gram payloads.
-    Integerized to ppm."""
-    from . import fingerprint as fpm
-
-    d = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    g = fpm.word_bigrams(d)
-    e = g.select("doc_id", F.explode("grams").alias("gram"))
-    keep = (
-        e.groupBy("gram")
-        .agg(F.count_distinct("doc_id").alias("df"))
-        .filter(F.col("df") <= 20)
-        .select("gram")
-    )
-    e2 = e.join(keep, "gram", "left_semi")
-    counts = e2.groupBy("doc_id").agg(F.count("*").alias("n"))
-    inter = (
-        e2.alias("a")
-        .join(
-            e2.alias("b"),
-            (F.col("a.gram") == F.col("b.gram"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("shared"))
-    )
-    ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    cb = counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    return (
-        inter.join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.floor(
-                F.lit(1000000.0)
-                * F.col("shared")
-                / F.greatest(F.col("na") + F.col("nb") - F.col("shared"), F.lit(1))
-            )
-            .cast("long")
-            .alias("jaccard_ppm"),
-        )
-    )
-
-
-
-
-
-# =====================================================================
-# streaming-shape — tumbling-window aggregation over event time
-# =====================================================================
-@q(
-    "tumbling_1h",
-    """
-    select event_type,
-           cast(floor(floor(epoch(ts)) / 3600) as bigint) as bucket,
-           count(*) as cnt,
-           cast(sum(cast(floor(value*100) as bigint)) as bigint) as sum_value_c
-    from events
-    group by event_type, floor(floor(epoch(ts)) / 3600)
-    """,
-)
-def tumbling_1h(spark, sf_dir):
-    """Tumbling 1h event-time window (batch twin of the Structured
-    Streaming windowed agg; bucket emitted as epoch-hours so both
-    engines hash identical integers)."""
-    ev = t(spark, sf_dir, "events")
-    bucket = F.floor(_epoch(F.col("ts")) / 3600).cast("long")
-    return ev.groupBy("event_type", bucket.alias("bucket")).agg(
-        F.count("*").alias("cnt"),
-        F.sum(_cents(F.col("value"))).alias("sum_value_c"),
-    )
-
-
-@q(
-    "g8_normalize_coords",
-    """
-    select p_partkey,
-           cast(floor(nx1 * 2866 / 1000.0) as bigint) as px1,
-           cast(floor(ny1 * 2023 / 1000.0) as bigint) as py1,
-           cast(floor(nx2 * 2866 / 1000.0) as bigint) as px2,
-           cast(floor(ny2 * 2023 / 1000.0) as bigint) as py2
-    from (
-      select p_partkey,
-             p_partkey % 900 as nx1, (p_partkey * 3) % 900 as ny1,
-             p_partkey % 900 + 50 as nx2, (p_partkey * 3) % 900 + 60 as ny2
-      from part
-    )
-    """,
-)
-def g8_normalize_coords(spark, sf_dir):
-    """G8 0-1000→pixel normalization (exam_paper_splitter_v3.py:108-126),
-    int truncation preserved via floor (coords non-negative)."""
-    p = t(spark, sf_dir, "part")
-    k = F.col("p_partkey")
-    nx1, ny1 = k % 900, (k * 3) % 900
-    return p.select(
-        "p_partkey",
-        F.floor(nx1 * 2866 / 1000.0).cast("long").alias("px1"),
-        F.floor(ny1 * 2023 / 1000.0).cast("long").alias("py1"),
-        F.floor((nx1 + 50) * 2866 / 1000.0).cast("long").alias("px2"),
-        F.floor((ny1 + 60) * 2023 / 1000.0).cast("long").alias("py2"),
-    )
-
-
-@q(
-    "g9_bbox_string_parse",
-    """
-    select cast(sum(cast(regexp_extract(s, '<bbox>\\s*(\\d+)\\s+(\\d+)\\s+(\\d+)\\s+(\\d+)\\s*</bbox>', 1) as int)) as bigint) as sum_x1,
-           cast(sum(cast(regexp_extract(s, '<bbox>\\s*(\\d+)\\s+(\\d+)\\s+(\\d+)\\s+(\\d+)\\s*</bbox>', 4) as int)) as bigint) as sum_y2,
-           count(*) as n
-    from (
-      select '答案区域 <bbox>' || (p_partkey % 500) || ' ' || (p_size * 3) || ' '
-             || (p_partkey % 500 + 80) || ' ' || (p_size * 3 + 90) || '</bbox> 结束' as s
-      from part where p_partkey % 2 = 0
-    )
-    """,
-)
-def g9_bbox_string_parse(spark, sf_dir):
-    """G9 '<bbox>x y x y</bbox>' parse (exam_paper_splitter_v3.py:92-106)."""
-    p = t(spark, sf_dir, "part").filter(F.col("p_partkey") % 2 == 0)
-    s = F.concat(
-        F.lit("答案区域 <bbox>"),
-        (F.col("p_partkey") % 500).cast("string"),
-        F.lit(" "),
-        (F.col("p_size") * 3).cast("string"),
-        F.lit(" "),
-        (F.col("p_partkey") % 500 + 80).cast("string"),
-        F.lit(" "),
-        (F.col("p_size") * 3 + 90).cast("string"),
-        F.lit("</bbox> 结束"),
-    )
-    pat = r"<bbox>\s*(\d+)\s+(\d+)\s+(\d+)\s+(\d+)\s*</bbox>"
-    return p.select(
-        F.regexp_extract(s, pat, 1).cast("int").alias("x1"),
-        F.regexp_extract(s, pat, 4).cast("int").alias("y2"),
-    ).agg(
-        F.sum(F.col("x1").cast("long")).alias("sum_x1"),
-        F.sum(F.col("y2").cast("long")).alias("sum_y2"),
-        F.count("*").alias("n"),
-    )
-
-
-@q(
-    "g10_scale_autofix",
-    """
-    select cast(count_if(fixed_x2 > raw_x2) as bigint) as rescaled,
-           count(*) as n,
-           cast(sum(fixed_x2) as bigint) as sum_fixed_x2
-    from (
-      select raw_x2,
-             case when greatest(raw_x1, raw_y1, raw_x2, raw_y2) < least(2866, 2023) / 3
-                  then cast(floor(raw_x2 * (cast(least(2866, 2023) as double)
-                       / greatest(cast(greatest(raw_x1, raw_y1, raw_x2, raw_y2) as double), 1.0))) as bigint)
-                  else cast(raw_x2 as bigint) end as fixed_x2
-      from (
-        select p_partkey % 700 as raw_x1, (p_partkey * 3) % 700 as raw_y1,
-               p_partkey % 700 + p_size as raw_x2, (p_partkey * 3) % 700 + p_size as raw_y2
-        from part
-      )
-    )
-    """,
-)
-def g10_scale_autofix(spark, sf_dir):
-    """G10 scale-mismatch autofix (docs/坐标缩放问题修复说明.md:151-173):
-    coords recorded in a smaller space than the page get rescaled."""
-    p = t(spark, sf_dir, "part")
-    k, s = F.col("p_partkey"), F.col("p_size")
-    x1, y1 = k % 700, (k * 3) % 700
-    x2, y2 = x1 + s, y1 + s
-    mx = F.greatest(x1, y1, x2, y2)
-    needs = mx < F.least(F.lit(2866), F.lit(2023)) / 3
-    scale = F.least(F.lit(2866), F.lit(2023)).cast("double") / F.greatest(
-        mx.cast("double"), F.lit(1.0)
-    )
-    fixed_x2 = F.when(needs, F.floor(x2 * scale).cast("long")).otherwise(x2.cast("long"))
-    return p.select(x2.alias("raw_x2"), fixed_x2.alias("fixed_x2")).agg(
-        F.count_if(F.col("fixed_x2") > F.col("raw_x2")).cast("long").alias("rescaled"),
-        F.count("*").alias("n"),
-        F.sum("fixed_x2").cast("long").alias("sum_fixed_x2"),
-    )
-
-
-@q(
-    "html_block_classify",
-    """
-    select label, count(*) as cnt, cast(sum(nc) as bigint) as sum_chars from (
-      select case
-               when cast(lc as double) / greatest(nc, 1) > 0.4 then 'boilerplate'
-               when nc < 20 then 'boilerplate'
-               when cast(ck as double) / greatest(nc, 1) >= 0.5 then 'good'
-               when cast(sh as double) / greatest(nt, 1) >= 0.25 and nc >= 80 then 'good'
-               when nc >= 200 then 'good'
-               else 'boilerplate' end as label,
-             nc
-      from (
-        select length(text) as nc,
-               0 as lc,
-               len(regexp_extract_all(lower(text), '[a-z0-9]+|[\\x{4e00}-\\x{9fff}]')) as nt,
-               len(regexp_extract_all(text, '[\\x{4e00}-\\x{9fff}]')) as ck,
-               len(regexp_extract_all(lower(text),
-                 '\\b(the|a|an|of|and|or|to|in|is|are|was|were|it|that|this|for|on|with|as|at|by|be)\\b')) as sh
-        from documents
-      )
-    ) group by label
-    """,
-)
-def html_block_classify(spark, sf_dir):
-    """HTML boilerplate-strip cross-check: wrap each document's text in
-    a real page (nav + <p>), run the actual DOM kernel + native
-    jusText-style classifier, and compare the <p> labels against
-    DuckDB recomputing the same features from the raw text."""
-    from . import html as html_mod
-
-    d = t(spark, sf_dir, "documents")
-    page = F.concat(
-        F.lit('<html><body><nav><a href="/">Home</a></nav><p>'),
-        F.col("text"),
-        F.lit("</p></body></html>"),
-    )
-    tr = d.select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).alias("turn_idx"),
-        page.alias("text"),
-    )
-    blocks = html_mod.classify(html_mod.dom_blocks(tr)).filter(F.col("tag") == "p")
-    return blocks.groupBy("label").agg(
-        F.count("*").alias("cnt"),
-        F.sum(F.col("n_chars").cast("long")).alias("sum_chars"),
-    )
-
-
-def _minhash128_cte(
-    cap: int | None = None,
-    source: str = "documents",
-    sfx: str = "",
-    bare: bool = False,
-) -> str:
-    """Shared DuckDB prefix: 128-perm MinHash signatures -> 32x4 band
-    keys -> skew-capped buckets (xtract/minhash.py arithmetic restated
-    from scratch; used by minhash128_pairs, minhash128_full_pairs,
-    dedup_components and longdoc_dedup, so the oracles agree on the
-    candidate graph by construction). cap=None restates the FULL-TEXT
-    kernel — shingle positions come from unnest(range(...)) over each
-    doc's own length, so no truncation anywhere. Opens with WITH
-    RECURSIVE so callers may append recursive CTEs.
-
-    ``source`` is the (doc_id, text) relation (a view name or a
-    read_parquet() call). ``sfx`` suffixes every CTE name so two
-    instantiations (e.g. capped + full over the same corpus) can
-    coexist in one statement; internal column references go through
-    table aliases, so only the names change. ``bare=True`` omits the
-    leading WITH RECURSIVE for appending after an existing CTE list."""
-    from . import minhash as mh
-
-    pw_values = ", ".join(
-        f"({j}, {pow(mh.B, mh.K - 1 - j, mh.M)})" for j in range(mh.K)
-    )
-    t_sql = f"substr(text, 1, {cap})" if cap is not None else "text"
-    head = "" if bare else "with recursive "
-    s = sfx
-    return f"""
-    {head}docs{s} as (
-      select doc_id, {t_sql} as t
-      from {source}
-      where length({t_sql}) >= {mh.K}
-    ),
-    pw{s}(j, pm) as (values {pw_values}),
-    kg{s} as (
-      select d.doc_id, d.p,
-             cast(sum(cast(unicode(substr(d.t, d.p + pw.j, 1)) as bigint)
-                      * cast(pw.pm as bigint)) % {mh.M} as bigint) as h
-      from (
-        select doc_id, t, unnest(range(1, length(t) - {mh.K - 2})) as p
-        from docs{s}
-      ) d
-      cross join pw{s} pw
-      group by d.doc_id, d.p
-    ),
-    perm{s} as (
-      select cast(i as bigint) as i,
-             ((i + 1) * {mh._A_MUL} + 1) % {mh.M} as a,
-             ((i + 1) * {mh._B_MUL} + 7) % {mh.M} as b
-      from range({mh.NPERM}) t(i)
-    ),
-    sig{s} as (
-      select kg.doc_id, perm.i,
-             min((perm.a * kg.h + perm.b) % {mh.M}) as s
-      from kg{s} kg cross join perm{s} perm
-      group by kg.doc_id, perm.i
-    ),
-    bands{s} as (
-      select doc_id, cast(i // {mh.ROWS} as int) as band,
-             md5(string_agg(cast(s as varchar), ',' order by i)) as bkey
-      from sig{s} group by doc_id, i // {mh.ROWS}
-    ),
-    keep{s} as (
-      select band, bkey from bands{s} group by band, bkey
-      having count(*) <= {mh.MAX_BUCKET}
-    ),
-    kept{s} as (select b.* from bands{s} b join keep{s} using (band, bkey))"""
-
-
-def _dedup_components_sql() -> str:
-    from . import minhash as mh
-
-    # same cap constant as the Spark side's candidate_pairs default —
-    # a single source of truth so tuning minhash.CAP cannot
-    # desynchronize the two engines
-    return _minhash128_cte(cap=mh.CAP) + """
-    , pairs as (
-      select a.doc_id as a, b.doc_id as b
-      from kept a join kept b
-        on a.band = b.band and a.bkey = b.bkey and a.doc_id < b.doc_id
-      group by 1, 2
-    ),
-    edges as (select a, b from pairs union select b, a from pairs),
-    closure(a, b) as (
-      select a, b from edges
-      union
-      select c.a, e.b from closure c join edges e on c.b = e.a
-      where c.a <> e.b
-    )
-    select rep, cast(count(*) as bigint) as members from (
-      select a as doc, least(a, min(b)) as rep from closure group by a
-    ) group by rep having count(*) > 1
-    """
-
-
-@q("dedup_components", _dedup_components_sql())
-def dedup_components(spark, sf_dir):
-    """Near-duplicate CLUSTERS: connected components over the
-    PRODUCTION MinHash candidate graph (minhash.candidate_pairs: 128
-    perms, 32x4 banding, bucket-size skew cap 50), solved with the
-    large-star/small-star algorithm (xtract/cc.py) - O(log n) rounds
-    independent of component diameter, per-round localCheckpoint to
-    cut lineage, at most two edge generations persisted at any time.
-    Replaces the r2 shape (2-perm demo bands + min-label propagation:
-    O(diameter) rounds, cache never released). DuckDB independently
-    recomputes signatures, bands, buckets and the candidate edge set,
-    then closes it with a recursive-CTE transitive closure."""
-    from . import cc
-    from . import minhash as mh
-
-    d = t(spark, sf_dir, "documents").select("doc_id", "text")
-    pairs = mh.candidate_pairs(d, max_bucket=50).select(
-        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-    )
-    return cc.components_summary(pairs)
-
-
-# =====================================================================
-# Document fingerprinting — k-gram rolling hash + winnowing
-# (fingerprint.py; the Arrow kernel is cross-validated here against an
-# explicit SQL restatement of the same polynomial-hash + window-min)
-# =====================================================================
-def _fp_cte(
-    source: str = "documents", id_sql: str = "doc_id", text_sql: str = "text"
-) -> str:
-    from . import fingerprint as fpm
-
-    pw_values = ", ".join(f"({j}, {p})" for j, p in enumerate(fpm.POW_MOD))
-    return f"""
-    with docs as (
-      select {id_sql} as doc_id, substr({text_sql}, 1, {fpm.CAP}) as t
-      from {source}
-      where length(substr({text_sql}, 1, {fpm.CAP})) >= {fpm.K + fpm.W - 1}
-    ),
-    pw(j, pm) as (values {pw_values}),
-    kg as (
-      select d.doc_id, g.p,
-             cast(sum(cast(unicode(substr(d.t, g.p + pw.j, 1)) as bigint)
-                      * cast(pw.pm as bigint)) % {fpm.M} as bigint) as h
-      from docs d
-      join generate_series(1, {fpm.CAP}) as g(p)
-        on g.p <= length(d.t) - {fpm.K - 1}
-      cross join pw
-      group by d.doc_id, g.p
-    ),
-    win as (
-      select doc_id, p,
-             min(h) over (partition by doc_id order by p
-                          rows between current row and {fpm.W - 1} following) as mh,
-             count(*) over (partition by doc_id) as np
-      from kg
-    ),
-    fp as (
-      select distinct doc_id, mh as fp from win where p <= np - {fpm.W - 1}
-    )"""
-
-
-@q(
-    "fp_winnow",
-    _fp_cte()
-    + """
-    select doc_id, cast(count(*) as bigint) as n_fp,
-           cast(min(fp) as bigint) as fp_min,
-           cast(max(fp) as bigint) as fp_max,
-           cast(sum(fp) as bigint) as fp_sum
-    from fp group by doc_id
-    """,
-)
-def fp_winnow(spark, sf_dir):
-    """Winnowing fingerprint digest per document (rolling-hash
-    fingerprinting arm of the dedup toolkit)."""
-    from . import fingerprint as fpm
-
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    return fpm.winnow_summary(fpm.fingerprints(docs))
-
-
-@q(
-    "fp_shared_pairs",
-    _fp_cte()
-    + """
-    , keep as (select fp from fp group by fp having count(distinct doc_id) <= 20)
-    select a.doc_id as doc_a, b.doc_id as doc_b,
-           cast(count(*) as bigint) as n_shared
-    from fp a join fp b on a.fp = b.fp and a.doc_id < b.doc_id
-    where a.fp in (select fp from keep)
-    group by 1, 2 having count(*) >= 4
-    """,
-)
-def fp_shared_pairs(spark, sf_dir):
-    """Near-dup candidate pairs via shared winnowed fingerprints
-    (inverted-index equi-join — |fp| shuffle rows, not |doc|^2;
-    stop-gram fingerprints with doc-frequency > 20 dropped first)."""
-    from . import fingerprint as fpm
-
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    return fpm.shared_pairs(fpm.fingerprints(docs), min_shared=4, max_df=20)
-
-
-@q(
-    "near_dup_scored",
-    _fp_cte()
-    + """
-    , keep as (select fp from fp group by fp having count(distinct doc_id) <= 20),
-    cand as (
-      select a.doc_id as doc_a, b.doc_id as doc_b,
-             cast(count(*) as bigint) as n_shared
-      from fp a join fp b on a.fp = b.fp and a.doc_id < b.doc_id
-      where a.fp in (select fp from keep)
-      group by 1, 2 having count(*) >= 4
-    ),
-    g as (
-      select doc_id,
-             case when len(toks) >= 2
-                  then list_distinct(list_transform(range(1, len(toks)),
-                         i -> toks[i] || ' ' || toks[i+1]))
-                  else [] end as grams
-      from (select doc_id, regexp_extract_all(text, '[a-z0-9]+') as toks
-            from documents)
-    )
-    select c.doc_a, c.doc_b, c.n_shared,
-           cast(floor(1000000.0
-             * len(list_intersect(ga.grams, gb.grams))
-             / greatest(len(list_distinct(list_concat(ga.grams, gb.grams))), 1)
-           ) as bigint) as jaccard_ppm
-    from cand c
-    join g ga on ga.doc_id = c.doc_a
-    join g gb on gb.doc_id = c.doc_b
-    """,
-)
-def near_dup_scored(spark, sf_dir):
-    """Composed near-dup operator (fingerprint.near_dup_scored):
-    winnowing-fingerprint candidates (inverted index + stop-gram cap)
-    → exact word-bigram Jaccard on candidates only. The
-    recall-then-precision staging that survives 100 TB."""
-    from . import fingerprint as fpm
-
-    d = t(spark, sf_dir, "documents").select("doc_id", "text")
-    return fpm.near_dup_scored(d, min_shared=4, max_df=20)
-
-
-# ---- end-to-end training-data cleaning pipeline (composition demo) ----
-_GATE_SQL = """
-      (case when regexp_matches(text, '[\\x{4e00}-\\x{9fff}]') then 'zh'
-            when len(regexp_extract_all(text, '\\b(the|of|and)\\b'))
-                 >= len(regexp_extract_all(text, '\\b(der|die|das|el|la|de)\\b'))
-                 then 'en'
-            else 'other' end) = 'en'
-      and least(100, cast(floor(
-            0.5 * least(n_chars, 500) / 5.0
-            + 50.0 * len(regexp_extract_all(text, '\\bthe\\b|\\ba\\b'))
-              / greatest(len(regexp_extract_all(text, '[a-z0-9]+')), 1)
-          ) as bigint)) >= 40
-"""
-
-
-def _corpus_clean_sql() -> str:
-    return (
-        _fp_cte(
-            source=f"(select doc_id, text from documents where {_GATE_SQL})",
-        )
-        + f"""
-        , keep as (select fp from fp group by fp having count(distinct doc_id) <= 20),
-        pairs as (
-          select a.doc_id as doc_a, b.doc_id as doc_b
-          from fp a join fp b on a.fp = b.fp and a.doc_id < b.doc_id
-          where a.fp in (select fp from keep)
-          group by 1, 2 having count(*) >= 24
-        ),
-        gated as (
-          select doc_id, source, n_chars from documents where {_GATE_SQL}
-        ),
-        dropped as (select distinct doc_b as doc_id from pairs),
-        totals as (select source, count(*) as docs_total from documents group by source)
-        select t.source,
-               t.docs_total,
-               cast(count(g.doc_id) as bigint) as docs_gated,
-               cast(count_if(g.doc_id is not null and d.doc_id is null) as bigint) as docs_final,
-               cast(coalesce(sum(case when g.doc_id is not null and d.doc_id is null
-                                      then g.n_chars end), 0) as bigint) as chars_final
-        from totals t
-        left join gated g using (source)
-        left join dropped d on g.doc_id = d.doc_id
-        group by t.source, t.docs_total
-        """
-    )
-
-
-@q("corpus_clean", _corpus_clean_sql())
-def corpus_clean(spark, sf_dir):
-    """The training-data cleaning pipeline COMPOSED end-to-end, per
-    source: language gate (n-gram marker heuristic = 'en') → quality
-    gate (length + stopword-density score ≥ 40) → near-dup removal
-    (winnowing-fingerprint pairs on the survivors; keep-first: the
-    higher doc_id of each pair drops). All three stages are the
-    already-verified operators chained — the oracle restates the whole
-    pipeline, so the composition itself (filters feeding the
-    inverted-index dedup, anti-join removal) is what gets
-    cross-checked. Every stage is native SQL or the narrow fingerprint
-    kernel; dedup cost scales with posting lists of the GATED corpus,
-    never all pairs."""
-    from . import fingerprint as fpm
-
-    d = t(spark, sf_dir, "documents")
-    en = F.size(F.regexp_extract_all(F.col("text"), F.lit(r"\b(the|of|and)\b"), 0))
-    other = F.size(
-        F.regexp_extract_all(F.col("text"), F.lit(r"\b(der|die|das|el|la|de)\b"), 0)
-    )
-    guess = (
-        F.when(F.col("text").rlike(r"[一-鿿]"), "zh")
-        .when(en >= other, "en")
-        .otherwise("other")
-    )
-    toks = F.size(F.regexp_extract_all(F.col("text"), F.lit("[a-z0-9]+"), 0))
-    stops = F.size(F.regexp_extract_all(F.col("text"), F.lit(r"\bthe\b|\ba\b"), 0))
-    qv = F.least(
-        F.lit(100),
-        F.floor(
-            0.5 * F.least(F.col("n_chars"), F.lit(500)) / 5.0
-            + 50.0 * stops / F.greatest(toks, F.lit(1))
-        ).cast("long"),
-    )
-    gated = d.filter((guess == "en") & (qv >= 40)).select(
-        "doc_id", "source", "n_chars", "text"
-    )
-    # min_shared=24: the synthetic corpus reuses a small phrase
-    # vocabulary, so a loose threshold flags nearly everything; 24
-    # shared winnowed fingerprints ≈ a genuinely repeated passage
-    pairs = fpm.shared_pairs(
-        fpm.fingerprints(gated.select("doc_id", "text")), min_shared=24, max_df=20
-    )
-    dropped = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-    final = gated.join(dropped, "doc_id", "left_anti")
-
-    totals = d.groupBy("source").agg(F.count("*").alias("docs_total"))
-    g_stats = gated.groupBy("source").agg(F.count("*").alias("docs_gated"))
-    f_stats = final.groupBy("source").agg(
-        F.count("*").alias("docs_final"),
-        F.sum("n_chars").cast("long").alias("chars_final"),
-    )
-    return (
-        totals.join(g_stats, "source", "left")
-        .join(f_stats, "source", "left")
-        .select(
-            "source",
-            "docs_total",
-            F.coalesce("docs_gated", F.lit(0)).cast("long").alias("docs_gated"),
-            F.coalesce("docs_final", F.lit(0)).cast("long").alias("docs_final"),
-            F.coalesce("chars_final", F.lit(0)).cast("long").alias("chars_final"),
-        )
-    )
-
-
-def _minhash128_pairs_tail() -> str:
-    return """
-    select a.doc_id as doc_a, b.doc_id as doc_b,
-           cast(count(*) as bigint) as n_bands
-    from kept a join kept b
-      on a.band = b.band and a.bkey = b.bkey and a.doc_id < b.doc_id
-    group by 1, 2
-    """
-
-
-def _minhash128_sql() -> str:
-    from . import minhash as mh
-
-    return _minhash128_cte(cap=mh.CAP) + _minhash128_pairs_tail()
-
-
-def _minhash128_full_sql() -> str:
-    return _minhash128_cte(cap=None) + _minhash128_pairs_tail()
-
-
-@q("minhash128_full_pairs", _minhash128_full_sql())
-def minhash128_full_pairs(spark, sf_dir):
-    """WHOLE-document MinHash LSH (cap=None): the chunked signature
-    kernel hashes every shingle of every doc, so two documents that
-    agree only in their first 400 chars are NOT candidates and a
-    duplicate block deep in a long doc still is. The capped variant
-    (minhash128_pairs) remains the didactic/oracle-cheap twin; this
-    row puts the 100-TB semantics on the driver's hash gate (DuckDB
-    recomputes full-text signatures via per-doc unnest(range())).
-    Reference analogue: whole-text md5 keying,
-    question_merger.py:568-609."""
-    from . import minhash as mh
-
-    d = t(spark, sf_dir, "documents").select("doc_id", "text")
-    return mh.candidate_pairs(d, max_bucket=50, cap=None)
 
 
 # =====================================================================
@@ -1965,50 +127,7 @@ def longdoc_corpus(spark, sf_dir) -> DataFrame:
     return base.unionByName(twins)
 
 
-def _longdoc_dedup_sql() -> str:
-    from . import minhash as mh
-
-    corpus_cte = f"""
-    with recursive longdocs as (
-      select cast(doc_id // {LONGDOC_GROUP} as bigint) as doc_id,
-             string_agg(text, chr(10) order by doc_id) as text
-      from documents group by doc_id // {LONGDOC_GROUP}
-    ),
-    twins as (
-      select doc_id + {LONGDOC_TWIN_OFFSET} as doc_id,
-             repeat(md5('twin' || cast(doc_id as varchar)), 40)
-               || substr(text, {LONGDOC_TWIN_SKIP + 1}) as text
-      from longdocs where doc_id % 2 = 0
-    ),
-    corpus as (select * from longdocs union all select * from twins),"""
-    pair = """
-      select a.doc_id as doc_a, b.doc_id as doc_b,
-             cast(count(*) as bigint) as n_bands
-      from kept{s} a join kept{s} b
-        on a.band = b.band and a.bkey = b.bkey and a.doc_id < b.doc_id
-      group by 1, 2
-    """
-    return (
-        corpus_cte
-        + _minhash128_cte(cap=None, source="corpus", sfx="_f", bare=True)
-        + ","
-        + _minhash128_cte(cap=mh.CAP, source="corpus", sfx="_c", bare=True)
-        + ", pf as ("
-        + pair.format(s="_f")
-        + "), pc as ("
-        + pair.format(s="_c")
-        + """)
-    select coalesce(pf.doc_a, pc.doc_a) as doc_a,
-           coalesce(pf.doc_b, pc.doc_b) as doc_b,
-           cast(coalesce(pf.n_bands, 0) as bigint) as n_bands_full,
-           cast(coalesce(pc.n_bands, 0) as bigint) as n_bands_capped
-    from pf full outer join pc
-      on pf.doc_a = pc.doc_a and pf.doc_b = pc.doc_b
-    """
-    )
-
-
-@q("longdoc_dedup", _longdoc_dedup_sql())
+@q("longdoc_dedup")
 def longdoc_dedup(spark, sf_dir):
     """Capped vs FULL-text near-dup detection on a corpus where they
     must disagree: each planted twin shares its base's content only
@@ -2038,724 +157,6 @@ def longdoc_dedup(spark, sf_dir):
     )
 
 
-@q("minhash128_pairs", _minhash128_sql())
-def minhash128_pairs(spark, sf_dir):
-    """Production-parameterized MinHash LSH (xtract/minhash.py: 128
-    affine permutations over polynomial shingle hashes, 32 bands x 4
-    rows, bucket-size skew cap): candidate pairs sharing >=1 band
-    bucket, with the full signature/banding pipeline independently
-    recomputed by DuckDB from the same arithmetic."""
-    from . import minhash as mh
-
-    d = t(spark, sf_dir, "documents").select("doc_id", "text")
-    return mh.candidate_pairs(d, max_bucket=50)
-
-
-
-# =====================================================================
-# W8 — cross-page continuation merge (assemble.py operator shape):
-# lag flag → running-sum islands → per-segment rollup, both engines
-# =====================================================================
-_TERM_RE = r"[。？！；?!;.）)】\\]]\\s*$"
-
-
-@q(
-    "w8_page_continuation",
-    f"""
-    with f as (
-      select source, doc_id, text,
-             lag(text) over (partition by source order by doc_id) as prev_text
-      from documents
-    ),
-    g as (
-      select source, doc_id, text,
-             sum(case when prev_text is not null
-                       and length(trim(prev_text)) > 0
-                       and not regexp_matches(prev_text, '{_TERM_RE}')
-                  then 0 else 1 end)
-               over (partition by source order by doc_id) as seg1
-      from f
-    )
-    select source, cast(seg1 - 1 as int) as segment,
-           cast(min(doc_id) as bigint) as doc_first,
-           cast(max(doc_id) as bigint) as doc_last,
-           cast(count(*) as bigint) as n_parts,
-           cast(sum(length(text)) as bigint) as chars
-    from g group by source, seg1
-    """,
-)
-def w8_page_continuation(spark, sf_dir):
-    """Continuation-merge segmentation over an ordered per-source doc
-    stream — the driver-table analogue of assemble.merge_continuations
-    (same lag → island → rollup plan; one shuffle on source)."""
-    d = t(spark, sf_dir, "documents").select("source", "doc_id", "text")
-    w = Window.partitionBy("source").orderBy("doc_id")
-    prev_text = F.lag("text").over(w)
-    new_seg = F.when(
-        prev_text.isNotNull()
-        & (F.length(F.trim(prev_text)) > 0)
-        & ~prev_text.rlike(_TERM_RE),
-        0,
-    ).otherwise(1)
-    g = d.select(
-        "source", "doc_id", "text", F.sum(new_seg).over(w).alias("seg1")
-    )
-    return g.groupBy("source", (F.col("seg1") - 1).cast("int").alias("segment")).agg(
-        F.min("doc_id").cast("long").alias("doc_first"),
-        F.max("doc_id").cast("long").alias("doc_last"),
-        F.count("*").cast("long").alias("n_parts"),
-        F.sum(F.length("text")).cast("long").alias("chars"),
-    )
-
-
-# =====================================================================
-# Skew handling — the explicit two-phase salted aggregation
-# (xtract/skew.py; north rule "hash-partition by conv_id with salt on
-# skewed mega-conversations")
-# =====================================================================
-@q(
-    "skew_salted_stats",
-    """
-    select user_id,
-           cast(count(*) as bigint) as n_events,
-           string_agg(distinct event_type, ',' order by event_type) as types_csv,
-           cast(min(event_id) as bigint) as ev_min,
-           cast(max(event_id) as bigint) as ev_max
-    from events group by user_id
-    """,
-)
-def skew_salted_stats(spark, sf_dir):
-    """Salted two-phase aggregation on the driver gate: per-user event
-    rollups computed via groupBy(key, salt) partials then a
-    groupBy(key) final — the shape that spreads a mega-key across
-    n_salts reducers for NON-algebraic aggregates (here collect_set,
-    which Spark cannot partially aggregate map-side the way it does
-    counters). The DuckDB oracle is the plain one-phase groupBy, so
-    the row proves salting is semantics-preserving. Plan shape
-    (two HashAggregate pairs, first keyed with salt) is asserted in
-    tools/explain_audit.py."""
-    from . import skew
-
-    e = t(spark, sf_dir, "events")
-    out = skew.salted_agg(
-        e,
-        [
-            (F.count("*"), "n_events", F.sum("n_events").cast("long")),
-            (
-                F.collect_set("event_type"),
-                "types_csv",
-                F.array_join(
-                    F.array_sort(
-                        F.array_distinct(F.flatten(F.collect_list("types_csv")))
-                    ),
-                    ",",
-                ),
-            ),
-            (F.min("event_id"), "ev_min", F.min("ev_min").cast("long")),
-            (F.max("event_id"), "ev_max", F.max("ev_max").cast("long")),
-        ],
-        n_salts=8,
-        key="user_id",
-        salt_from="event_id",
-    )
-    return out.select("user_id", "n_events", "types_csv", "ev_min", "ev_max")
-
-
-# =====================================================================
-# As-of join — the time-series operator family (nearest earlier event):
-# Spark lacks a native ASOF JOIN; the scale form is the union +
-# last(ignorenulls) ordered window (ONE shuffle on the join key, no
-# join, no per-key fan-out), cross-checked against DuckDB's native
-# ASOF LEFT JOIN.
-# =====================================================================
-@q(
-    "asof_view_before_purchase",
-    """
-    with v as (
-      -- deterministic tie-break: one view per (user, ts), max event_id;
-      -- ts is not null: Spark's NULLS FIRST window ordering would treat
-      -- a null-ts view as earliest while ASOF's <= never matches null
-      select user_id, ts, max(event_id) as view_id
-      from events where event_type = 'view' and ts is not null
-      group by user_id, ts
-    ),
-    p as (
-      select event_id as purchase_id, user_id, ts
-      from events where event_type = 'purchase'
-    )
-    select p.purchase_id, p.user_id,
-           cast(floor(epoch(p.ts)) as bigint) as p_ts,
-           v.view_id,
-           cast(floor(epoch(p.ts)) - floor(epoch(v.ts)) as bigint) as gap_s
-    from p asof left join v
-      on p.user_id = v.user_id and v.ts <= p.ts
-    """,
-)
-def asof_view_before_purchase(spark, sf_dir):
-    """AS-OF join: for every purchase, the most recent view event at or
-    before it by the same user. Implemented as the merge-of-sorted-
-    streams form — tag both sides, ONE window ordered by (ts, side,
-    event_id) per user, last(view, ignorenulls) — which shuffles each
-    row exactly once on the key and never materializes a join
-    (the classic time-series as-of shape that survives 100x; a range
-    join here would fan out per key, an equi-join can't express
-    'nearest earlier'). Ties: views sort before purchases at equal ts
-    (inclusive as-of), max event_id wins among equal-ts views."""
-    e = t(spark, sf_dir, "events")
-    views = (
-        e.filter((F.col("event_type") == "view") & F.col("ts").isNotNull())
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("view_id"))
-        .select(
-            "user_id", "ts", F.lit(0).alias("side"),
-            "view_id", F.lit(None).cast("long").alias("purchase_id"),
-        )
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.lit(1).alias("side"),
-        F.lit(None).cast("long").alias("view_id"),
-        F.col("event_id").alias("purchase_id"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        # view_id is the final tie-break: today views are pre-aggregated
-        # to one row per (user_id, ts) so (ts, side) alone is total, but
-        # if that pre-aggregation is ever relaxed, ascending view_id
-        # keeps "max view_id wins among equal-ts views" true here too
-        .orderBy("ts", "side", "view_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # both running-last expressions in ONE select → a single Window
-    # operator (chained withColumn would compile two)
-    tagged = views.unionByName(purchases).select(
-        "*",
-        F.last("view_id", ignorenulls=True).over(w).alias("lv"),
-        F.last(F.when(F.col("side") == 0, F.col("ts")), ignorenulls=True)
-        .over(w)
-        .alias("lts"),
-    )
-    return tagged.filter(F.col("side") == 1).select(
-        "purchase_id",
-        "user_id",
-        _epoch(F.col("ts")).alias("p_ts"),
-        F.col("lv").alias("view_id"),
-        (_epoch(F.col("ts")) - _epoch(F.col("lts"))).alias("gap_s"),
-    )
-
-
-# =====================================================================
-# Training-data splitting + term weighting (pipeline ops)
-# =====================================================================
-@q(
-    "split_train_val",
-    """
-    select doc_id,
-           cast(cast(('0x' || substr(md5(text), 1, 8)) as bigint) % 100
-                as bigint) as bucket,
-           case when cast(('0x' || substr(md5(text), 1, 8)) as bigint) % 100 < 80
-                then 'train'
-                when cast(('0x' || substr(md5(text), 1, 8)) as bigint) % 100 < 90
-                then 'val' else 'test' end as split
-    from documents
-    """,
-)
-def split_train_val(spark, sf_dir):
-    """Deterministic content-addressed train/val/test split (80/10/10):
-    the bucket is a hash of the TEXT, not the id or a RNG draw, so (a)
-    the split is stable under repartitioning, re-runs and engine
-    changes, and (b) byte-identical duplicate documents land in the
-    SAME split — the standard guard against train/test leakage through
-    exact dups. Pure native column expressions; the same md5-prefix
-    arithmetic is restated in DuckDB."""
-    d = t(spark, sf_dir, "documents")
-    b = (
-        F.conv(F.substring(F.md5(F.col("text")), 1, 8), 16, 10).cast("long")
-        % 100
-    )
-    return d.select(
-        "doc_id",
-        b.alias("bucket"),
-        F.when(b < 80, "train").when(b < 90, "val").otherwise("test").alias(
-            "split"
-        ),
-    )
-
-
-@q(
-    "tfidf_top_terms",
-    """
-    with tok as (
-      select doc_id, unnest(regexp_extract_all(lower(text), '[a-z]{3,}')) as term
-      from documents
-    ),
-    tf as (
-      select doc_id, term, cast(count(*) as bigint) as tf
-      from tok group by doc_id, term
-    ),
-    df as (
-      select term, cast(count(distinct doc_id) as bigint) as df
-      from tf group by term
-    ),
-    n as (select cast(count(*) as bigint) as n from documents),
-    scored as (
-      select tf.doc_id, tf.term, tf.tf,
-             (tf.tf * 1000000 * n.n) // df.df as score_scaled
-      from tf join df using (term) cross join n
-    ),
-    ranked as (
-      select *, row_number() over (
-        partition by doc_id order by score_scaled desc, term
-      ) as rk
-      from scored
-    )
-    select doc_id, cast(rk as int) as rk, term,
-           tf, cast(score_scaled as bigint) as score_scaled
-    from ranked where rk <= 3
-    """,
-)
-def tfidf_top_terms(spark, sf_dir):
-    """Per-document top-3 terms by tf·idf with a LINEAR idf (N/df) and
-    pure integer scoring — floor(tf·1e6·N/df) — so both engines rank
-    on exact arithmetic (a log-idf in doubles can flip floor()
-    boundaries between libm implementations). The shape is the
-    inverted-index one: explode → (doc, term) counts → term df agg →
-    equi-join back → per-doc top-k window. All shuffles carry token
-    aggregates, never raw text."""
-    d = t(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit("[a-z]{3,}"), 0)
-        ).alias("term"),
-    )
-    tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    df_ = tf.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    # lazy 1-row N (broadcast cross join) — an eager d.count() here
-    # would cost a full extra table pass at plan-construction time
-    n_df = F.broadcast(d.agg(F.count("*").cast("long").alias("n_docs")))
-    scored = (
-        tf.join(df_, "term")
-        .crossJoin(n_df)
-        .select(
-            "doc_id",
-            "term",
-            F.col("tf").cast("long").alias("tf"),
-            # integer `div`, matching the oracle's `//` exactly — a
-            # double `/` + floor diverges once tf*1e6*N ≥ 2^53
-            F.expr("(tf * 1000000L * n_docs) div df")
-            .cast("long")
-            .alias("score_scaled"),
-        )
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("score_scaled"), F.asc("term")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("doc_id", F.col("rk").cast("int"), "term", "tf", "score_scaled")
-    )
-
-
-# =====================================================================
-# Repetition-based quality filters (the Gopher-rule family, public:
-# Rae et al. 2021 §A1.1) + PII pattern statistics — both as native
-# column/window SQL in each engine, integerized to ppm for hashing.
-# =====================================================================
-@q(
-    "rep_ratios",
-    """
-    with l as (
-      select doc_id, trim(line) as line
-      from (
-        select doc_id, unnest(string_split(text, chr(10))) as line
-        from documents
-      ) where length(trim(line)) > 0
-    ),
-    lc as (
-      select doc_id, line, cast(count(*) as bigint) as c,
-             cast(length(line) as bigint) as chars
-      from l group by doc_id, line
-    ),
-    lines_agg as (
-      select doc_id,
-             sum(c) as n_lines,
-             sum(case when c > 1 then c else 0 end) as dup_lines,
-             sum(c * chars) as all_chars,
-             sum(case when c > 1 then c * chars else 0 end) as dup_chars
-      from lc group by doc_id
-    ),
-    tok as (
-      select doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') as toks
-      from documents
-    ),
-    bg as (
-      select doc_id, unnest(
-        list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i + 1])
-      ) as bigram
-      from tok where len(toks) >= 2
-    ),
-    bgc as (
-      select doc_id, bigram, cast(count(*) as bigint) as c
-      from bg group by doc_id, bigram
-    ),
-    bg_agg as (
-      select doc_id, max(c) as top_c, sum(c) as n_bigrams
-      from bgc group by doc_id
-    )
-    select a.doc_id,
-           cast(a.n_lines as bigint) as n_lines,
-           cast(a.dup_lines * 1000000 // a.n_lines as bigint) as dup_line_ppm,
-           cast(a.dup_chars * 1000000 // greatest(a.all_chars, 1) as bigint)
-             as dup_char_ppm,
-           cast(coalesce(b.top_c * 1000000 // b.n_bigrams, 0) as bigint)
-             as top_bigram_ppm
-    from lines_agg a left join bg_agg b using (doc_id)
-    """,
-)
-def rep_ratios(spark, sf_dir):
-    """Within-document repetition ratios — the Gopher-family quality
-    filters (duplicate-line fraction, duplicate-line CHARACTER
-    fraction, most-common-word-bigram fraction), all as native explode
-    → groupBy aggregates (no UDF, map-side combinable) with ppm
-    integerization so both engines hash identically. At 100 TB these
-    are the cheap first-pass gates that run before any hashing."""
-    d = t(spark, sf_dir, "documents")
-    lines = d.select(
-        "doc_id", F.explode(F.split("text", "\n")).alias("line")
-    ).select("doc_id", F.trim("line").alias("line")).filter(
-        F.length("line") > 0
-    )
-    lc = lines.groupBy("doc_id", "line").agg(
-        F.count("*").cast("long").alias("c"),
-        F.length(F.first("line")).cast("long").alias("chars"),
-    )
-    la = lc.groupBy("doc_id").agg(
-        F.sum("c").alias("n_lines"),
-        F.sum(F.when(F.col("c") > 1, F.col("c")).otherwise(0)).alias("dup_lines"),
-        F.sum(F.col("c") * F.col("chars")).alias("all_chars"),
-        F.sum(
-            F.when(F.col("c") > 1, F.col("c") * F.col("chars")).otherwise(0)
-        ).alias("dup_chars"),
-    )
-    toks = F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
-    n1 = F.greatest(F.size(toks) - 1, F.lit(0))
-    bigrams = F.zip_with(
-        F.slice(toks, 1, n1), F.slice(toks, 2, n1),
-        lambda x, y: F.concat_ws(" ", x, y),
-    )
-    bg = (
-        d.select("doc_id", bigrams.alias("bgs"))
-        .filter(F.size("bgs") >= 1)
-        .select("doc_id", F.explode("bgs").alias("bigram"))
-    )
-    bga = (
-        bg.groupBy("doc_id", "bigram")
-        .agg(F.count("*").cast("long").alias("c"))
-        .groupBy("doc_id")
-        .agg(F.max("c").alias("top_c"), F.sum("c").alias("n_bigrams"))
-    )
-    # integer `div` everywhere — the same exactness rule tfidf follows
-    # (double '/' + floor can diverge from DuckDB's '//' at 2^53)
-    return la.join(bga, "doc_id", "left").select(
-        "doc_id",
-        F.col("n_lines").cast("long"),
-        F.expr("(dup_lines * 1000000L) div n_lines")
-        .cast("long")
-        .alias("dup_line_ppm"),
-        F.expr("(dup_chars * 1000000L) div greatest(all_chars, 1L)")
-        .cast("long")
-        .alias("dup_char_ppm"),
-        F.coalesce(
-            F.expr("(top_c * 1000000L) div n_bigrams"), F.lit(0)
-        )
-        .cast("long")
-        .alias("top_bigram_ppm"),
-    )
-
-
-_PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-_PII_URL = r"https?://[A-Za-z0-9./_%-]+"
-_PII_PHONE = r"[0-9]{3}[- ][0-9]{3,4}[- ][0-9]{4}"
-
-
-def _pii_sql() -> str:
-    return f"""
-    select doc_id,
-           cast(len(regexp_extract_all(text, '{_PII_EMAIL}')) as bigint)
-             as emails,
-           cast(len(regexp_extract_all(text, '{_PII_URL}')) as bigint)
-             as urls,
-           cast(len(regexp_extract_all(text, '{_PII_PHONE}')) as bigint)
-             as phones,
-           cast(length(regexp_replace(regexp_replace(
-                  regexp_replace(text, '{_PII_EMAIL}', '<EMAIL>', 'g'),
-                  '{_PII_URL}', '<URL>', 'g'),
-                  '{_PII_PHONE}', '<PHONE>', 'g')) as bigint) as scrubbed_len
-    from documents
-    """
-
-
-@q("pii_scrub_stats", _pii_sql())
-def pii_scrub_stats(spark, sf_dir):
-    """PII pattern statistics + scrub: email/URL/phone hit counts and
-    the post-redaction length, all with explicit ASCII character
-    classes so the Java and RE2 regex engines agree byte-for-byte (the
-    \\d/\\w unicode-divergence lesson applied to the scrubbing pass
-    every published pretraining pipeline runs). Native expressions
-    only — codegen-eligible, no UDF."""
-    d = t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.regexp_count("text", F.lit(_PII_EMAIL)).cast("long").alias("emails"),
-        F.regexp_count("text", F.lit(_PII_URL)).cast("long").alias("urls"),
-        F.regexp_count("text", F.lit(_PII_PHONE)).cast("long").alias("phones"),
-        F.length(
-            F.regexp_replace(
-                F.regexp_replace(
-                    F.regexp_replace("text", _PII_EMAIL, "<EMAIL>"),
-                    _PII_URL,
-                    "<URL>",
-                ),
-                _PII_PHONE,
-                "<PHONE>",
-            )
-        )
-        .cast("long")
-        .alias("scrubbed_len"),
-    )
-
-
-# =====================================================================
-# Data-profiling ops: exact rank-based quantiles + per-column profile
-# (all-integer arithmetic — interpolating quantiles differ between
-# engines in the last ulp and can flip a floor/round boundary)
-# =====================================================================
-@q(
-    "length_quantiles",
-    """
-    with r as (
-      select source, n_chars,
-             row_number() over (partition by source
-                                order by n_chars, doc_id) as rn,
-             count(*) over (partition by source) as n
-      from documents
-    )
-    select source,
-           cast(max(n) as bigint) as docs,
-           cast(max(case when rn = (n - 1) // 2 + 1 then n_chars end)
-                as bigint) as p50_chars,
-           cast(max(case when rn = (9 * (n - 1)) // 10 + 1 then n_chars end)
-                as bigint) as p90_chars,
-           cast(max(case when rn = (99 * (n - 1)) // 100 + 1 then n_chars end)
-                as bigint) as p99_chars,
-           cast(max(n_chars) as bigint) as max_chars
-    from r group by source
-    """,
-)
-def length_quantiles(spark, sf_dir):
-    """Per-source document-length quantiles by EXPLICIT integer rank
-    (lower discrete quantile: rank = floor(p·(n−1))+1 over a
-    deterministic (n_chars, doc_id) order). Interpolating
-    percentile/quantile_cont computes (1−f)a+fb in doubles and the two
-    engines disagree in the last ulp, which flips floor/round at
-    half-integer boundaries — rank arithmetic is exact everywhere.
-    One window + one agg, both partitioned by source."""
-    d = t(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy("n_chars", "doc_id")
-    r = d.select(
-        "source",
-        "n_chars",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(Window.partitionBy("source")).alias("n"),
-    )
-
-    def pick(rank_sql):
-        # integer `div` rank arithmetic — same exactness rule as the
-        # oracle's '//' (double '/' + floor can diverge at 2^53)
-        return F.max(
-            F.when(F.col("rn") == F.expr(rank_sql), F.col("n_chars"))
-        ).cast("long")
-
-    return r.groupBy("source").agg(
-        F.max("n").cast("long").alias("docs"),
-        pick("((n - 1) div 2) + 1").alias("p50_chars"),
-        pick("((n - 1) * 9 div 10) + 1").alias("p90_chars"),
-        pick("((n - 1) * 99 div 100) + 1").alias("p99_chars"),
-        F.max("n_chars").cast("long").alias("max_chars"),
-    )
-
-
-@q(
-    "table_profile",
-    """
-    select 'doc_id' as col, cast(count(*) as bigint) as n,
-           cast(count_if(doc_id is null) as bigint) as nulls,
-           cast(count(distinct doc_id) as bigint) as n_distinct
-    from documents
-    union all
-    select 'source', cast(count(*) as bigint),
-           cast(count_if(source is null) as bigint),
-           cast(count(distinct source) as bigint) from documents
-    union all
-    select 'lang', cast(count(*) as bigint),
-           cast(count_if(lang is null) as bigint),
-           cast(count(distinct lang) as bigint) from documents
-    union all
-    select 'n_chars', cast(count(*) as bigint),
-           cast(count_if(n_chars is null) as bigint),
-           cast(count(distinct n_chars) as bigint) from documents
-    """,
-)
-def table_profile(spark, sf_dir):
-    """Column-profile operator (the EDA pass any ingestion runs first):
-    per-column row/null/exact-distinct counts as one unioned
-    aggregation. Exact countDistinct here because the oracle must
-    hash-match; the 100-TB variant swaps in approx_count_distinct
-    (HLL) with a documented error bound."""
-    d = t(spark, sf_dir, "documents")
-
-    def prof(col):
-        return d.agg(
-            F.lit(col).alias("col"),
-            F.count("*").cast("long").alias("n"),
-            F.count_if(F.col(col).isNull()).cast("long").alias("nulls"),
-            F.countDistinct(col).cast("long").alias("n_distinct"),
-        )
-
-    out = prof("doc_id")
-    for c in ("source", "lang", "n_chars"):
-        out = out.unionByName(prof(c))
-    return out
-
-
-@q(
-    "table_profile_approx",
-    """
-    select 'doc_id' as col, cast(count(distinct doc_id) as bigint)
-             as n_distinct_exact, true as approx_ok from documents
-    union all
-    select 'source', cast(count(distinct source) as bigint), true
-    from documents
-    union all
-    select 'lang', cast(count(distinct lang) as bigint), true
-    from documents
-    union all
-    select 'n_chars', cast(count(distinct n_chars) as bigint), true
-    from documents
-    """,
-)
-def table_profile_approx(spark, sf_dir):
-    """The 100-TB variant of table_profile's distinct counts:
-    approx_count_distinct (HyperLogLog++, rsd=0.05) instead of the
-    exact shuffle-heavy countDistinct. HLL sketches merge map-side, so
-    the profile costs one pass and O(sketch) shuffle bytes per column
-    regardless of cardinality — the exact twin keeps the hash-gate
-    bit-for-bit check; this row gates the ESTIMATE: approx_ok is
-    computed Spark-side as |approx − exact| ≤ max(3, 15% of exact)
-    (3σ of the default rsd) and the oracle pins it literally true, so
-    an HLL regression past the bound flips the row red. Exact counts
-    are also emitted, keeping the estimate column itself off the typed
-    hash (two engines' HLL implementations can never bit-match)."""
-    d = t(spark, sf_dir, "documents")
-
-    def prof(col):
-        return d.agg(
-            F.lit(col).alias("col"),
-            F.countDistinct(col).cast("long").alias("n_distinct_exact"),
-            F.approx_count_distinct(col, rsd=0.05).cast("long").alias("_a"),
-        )
-
-    out = prof("doc_id")
-    for c in ("source", "lang", "n_chars"):
-        out = out.unionByName(prof(c))
-    bound = F.greatest(
-        F.lit(3).cast("double"), F.col("n_distinct_exact") * 0.15
-    )
-    return out.select(
-        "col",
-        "n_distinct_exact",
-        (
-            F.abs(F.col("_a") - F.col("n_distinct_exact")).cast("double")
-            <= bound
-        ).alias("approx_ok"),
-    )
-
-
-# =====================================================================
-# Incremental dedup — new batch vs EXISTING corpus (the "don't
-# re-ingest what the corpus already contains" step; at 100 TB the
-# reference side is the standing corpus's band-bucket index, which is
-# an incremental artifact, not a recompute)
-# =====================================================================
-def _dedup_incr_sql() -> str:
-    from . import minhash as mh
-
-    return _minhash128_cte(cap=mh.CAP) + """
-    , ref as (select * from kept where doc_id % 2 = 0),
-    new as (select * from kept where doc_id % 2 = 1),
-    hits as (
-      select distinct new.doc_id
-      from new join ref on new.band = ref.band and new.bkey = ref.bkey
-    )
-    select d.source,
-           cast(count(*) as bigint) as new_docs,
-           cast(count(h.doc_id) as bigint) as near_dup_of_corpus,
-           cast(count(*) - count(h.doc_id) as bigint) as admitted
-    from documents d left join hits h using (doc_id)
-    where d.doc_id % 2 = 1
-    group by d.source
-    """
-
-
-@q("dedup_incremental", _dedup_incr_sql())
-def dedup_incremental(spark, sf_dir):
-    """Incremental near-dup gate: an arriving batch (odd doc_ids) is
-    checked against the STANDING corpus (even doc_ids) by MinHash band
-    buckets — new docs sharing any bucket with a corpus doc are
-    rejected, the rest admitted. The join is new-side bands against
-    the corpus bucket index (broadcast-able when the daily batch is
-    small, shuffle-bounded by band rows otherwise) — never new×corpus
-    pairs. The same banding CTE as minhash128_pairs, so the oracle
-    agrees with the candidate graph by construction."""
-    from . import minhash as mh
-
-    d = t(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    # the ONE capped-bucket implementation candidate_pairs also uses
-    bands = mh.capped_band_keys(d.select("doc_id", "text"))
-    # both sides derive from the same parent plan — alias them so the
-    # join condition names distinct attributes (an unaliased
-    # new["band"] == ref["band"] resolves to the SAME attribute and
-    # Spark degrades it to a trivially-true predicate with a warning)
-    ref = (
-        bands.filter(F.col("doc_id") % 2 == 0)
-        .select("band", "bkey")
-        .distinct()
-        .alias("ref")
-    )
-    new = bands.filter(F.col("doc_id") % 2 == 1).alias("new")
-    hits = (
-        new.join(
-            ref,
-            (F.col("new.band") == F.col("ref.band"))
-            & (F.col("new.bkey") == F.col("ref.bkey")),
-        )
-        .select("new.doc_id")
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
-    newdocs = d.filter(F.col("doc_id") % 2 == 1)
-    return (
-        newdocs.join(hits, "doc_id", "left")
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("new_docs"),
-            F.count("hit").cast("long").alias("near_dup_of_corpus"),
-            (F.count("*") - F.count("hit")).cast("long").alias("admitted"),
-        )
-    )
-
-
 # =====================================================================
 # Corpus-level span dedup (C4/CCNet-style): remove text spans that
 # appear anywhere else in the corpus, keeping the first occurrence
@@ -2773,888 +174,6 @@ _SPAN_CHUNKS = (
 ).format(w=SPAN_WORDS)
 
 
-@q(
-    "span_dedup_corpus",
-    f"""
-    with w as (select doc_id, string_split(text, ' ') as ws from documents),
-    c as (
-      select doc_id, i as pos,
-             array_to_string(ws[(i*{SPAN_WORDS}+1):(i*{SPAN_WORDS}+{SPAN_WORDS})], ' ') as chunk
-      from (
-        select doc_id, ws,
-               unnest(range(0, cast(ceil(len(ws)/{SPAN_WORDS}.0) as bigint))) as i
-        from w
-      )
-    ),
-    r as (
-      select *, row_number() over (partition by chunk
-                                   order by doc_id, pos) as rn
-      from c
-    )
-    select doc_id,
-           cast(count(*) as bigint) as chunks_total,
-           cast(count_if(rn = 1) as bigint) as chunks_kept,
-           cast(count(*) - count_if(rn = 1) as bigint) as chunks_removed,
-           md5(string_agg(chunk, ' ' order by pos) filter (rn = 1)) as clean_md5
-    from r group by doc_id
-    """,
-)
-def span_dedup_corpus(spark, sf_dir):
-    """Corpus-level span dedup, the C4 'discard repeated spans' /
-    CCNet 'drop duplicated paragraphs' step: every {SPAN_WORDS}-word
-    span that occurs anywhere else in the corpus is removed except its
-    FIRST occurrence (global (doc_id, pos) order), and each document
-    is re-assembled from its surviving spans (clean_md5 puts the exact
-    reconstruction on the hash gate; null when a doc — an exact
-    duplicate — loses every span). Plan: explode to span rows, ONE
-    hash shuffle partitioned by span content for the first-occurrence
-    window, one groupBy(doc_id) to re-assemble. At 100 TB the window
-    key would be xxhash64(chunk) (collision-checked) rather than the
-    raw string to shrink shuffle bytes; semantics identical."""
-    d = t(spark, sf_dir, "documents")
-    c = d.select("doc_id", F.split("text", " ").alias("ws")).select(
-        "doc_id",
-        F.posexplode(F.expr(_SPAN_CHUNKS)).alias("pos", "chunk"),
-    )
-    w_first = Window.partitionBy("chunk").orderBy("doc_id", "pos")
-    r = c.withColumn("rn", F.row_number().over(w_first))
-    kept_struct = F.array_sort(
-        F.collect_list(
-            F.when(F.col("rn") == 1, F.struct("pos", "chunk"))
-        )
-    )
-    return r.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("chunks_total"),
-        F.count_if(F.col("rn") == 1).cast("long").alias("chunks_kept"),
-        (F.count("*") - F.count_if(F.col("rn") == 1))
-        .cast("long")
-        .alias("chunks_removed"),
-        F.when(
-            F.count_if(F.col("rn") == 1) > 0,
-            F.md5(
-                F.array_join(
-                    F.transform(kept_struct, lambda s: s["chunk"]), " "
-                )
-            ),
-        ).alias("clean_md5"),
-    )
-
-
-# =====================================================================
-# Sequence packing: contiguous token-budget batching (constant-length
-# training sequences from variable-length documents)
-# =====================================================================
-PACK_BUDGET = 512  # whitespace tokens per pack
-
-
-@q(
-    "pack_sequences",
-    f"""
-    with d as (
-      select doc_id, source,
-             cast(len(string_split(text, ' ')) as bigint) as n_tokens
-      from documents
-    )
-    select doc_id, source, n_tokens,
-           cast(coalesce(sum(n_tokens) over (
-                  partition by source order by doc_id
-                  rows between unbounded preceding and 1 preceding), 0)
-                // {PACK_BUDGET} as bigint) as pack_id
-    from d
-    """,
-)
-def pack_sequences(spark, sf_dir):
-    """Sequence packing for constant-length training batches:
-    documents are packed contiguously per source in doc_id order, and
-    a document's pack is floor(tokens_before_it / {PACK_BUDGET}) —
-    the contiguous-packing rule (a pack may overflow the budget by at
-    most one document; the first-fit alternative is inherently
-    sequential and not worth a driver-side loop). One running-sum
-    window per source partition, integer-exact in both engines."""
-    d = t(spark, sf_dir, "documents").select(
-        "doc_id",
-        "source",
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
-    )
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return d.select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        F.expr(
-            f"coalesce(sum(n_tokens) over (partition by source order by doc_id"
-            f" rows between unbounded preceding and 1 preceding), 0)"
-            f" div {PACK_BUDGET}"
-        ).alias("pack_id"),
-    )
-
-
-# =====================================================================
-# Decontamination: flag training docs sharing word n-grams with a
-# held-out evaluation set (the GPT-3 appendix-C overlap rule)
-# =====================================================================
-# words per overlap n-gram. GPT-3 used 13-gram tokens on natural text;
-# this synthetic corpus draws from a small vocabulary where long grams
-# never recur, so 4 is the calibrated size that makes the detection
-# path non-trivial (7 of 494 training docs flagged at sf0.01 — n >= 6
-# flags zero and would leave the join untested)
-DECON_N = 4
-DECON_EVAL_MOD = 97  # doc_id % MOD == 0 -> evaluation set
-
-# over a pre-split `ws` array column (same no-CSE-inside-lambda
-# rationale as _SPAN_CHUNKS)
-_DECON_NGRAMS = (
-    "transform(sequence(0, greatest(size(ws) - {n}, 0) - 1),"
-    " i -> array_join(slice(ws, i + 1, {n}), ' '))"
-).format(n=DECON_N)
-
-
-@q(
-    "decontaminate_eval",
-    f"""
-    with w as (select doc_id, string_split(text, ' ') as ws from documents),
-    g as (
-      select doc_id,
-             array_to_string(ws[(i+1):(i+{DECON_N})], ' ') as ng
-      from (
-        select doc_id, ws,
-               unnest(range(0, greatest(len(ws) - {DECON_N}, 0))) as i
-        from w
-      )
-    ),
-    ev as (select distinct ng from g where doc_id % {DECON_EVAL_MOD} = 0),
-    hits as (
-      select g.doc_id, count(distinct g.ng) as n_overlap
-      from g join ev using (ng)
-      where g.doc_id % {DECON_EVAL_MOD} <> 0
-      group by g.doc_id
-    )
-    select d.doc_id,
-           cast(coalesce(h.n_overlap, 0) as bigint) as n_overlap,
-           coalesce(h.n_overlap, 0) > 0 as contaminated
-    from documents d left join hits h using (doc_id)
-    where d.doc_id % {DECON_EVAL_MOD} <> 0
-    """,
-)
-def decontaminate_eval(spark, sf_dir):
-    """Training-set decontamination: a training document is flagged
-    when it shares any {DECON_N}-word n-gram with the held-out
-    evaluation slice (doc_id % {DECON_EVAL_MOD} == 0) — the GPT-3
-    overlap rule at word-gram granularity. The eval n-gram set is tiny
-    by construction (~1% of docs), so it is BROADCAST to the training
-    side's exploded n-grams: no shuffle of the big side at all, which
-    is the only shape that survives a 100-TB training corpus (the eval
-    set is fixed-size; at larger eval sets the same join degrades
-    gracefully to a shuffle-hash join on the n-gram)."""
-    d = t(spark, sf_dir, "documents")
-    g = d.select("doc_id", F.split("text", " ").alias("ws")).select(
-        "doc_id", F.explode(F.expr(_DECON_NGRAMS)).alias("ng")
-    )
-    ev = F.broadcast(
-        g.filter(F.col("doc_id") % DECON_EVAL_MOD == 0).select("ng").distinct()
-    )
-    hits = (
-        g.filter(F.col("doc_id") % DECON_EVAL_MOD != 0)
-        .join(ev, "ng")
-        .groupBy("doc_id")
-        .agg(F.countDistinct("ng").alias("n_overlap"))
-    )
-    return (
-        d.filter(F.col("doc_id") % DECON_EVAL_MOD != 0)
-        .select("doc_id")
-        .join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_overlap", F.lit(0)).cast("long").alias("n_overlap"),
-            (F.coalesce("n_overlap", F.lit(0)) > 0).alias("contaminated"),
-        )
-    )
-
-
-# =====================================================================
-# Grouping-set / pivot surface (SQL-analytics completeness)
-# =====================================================================
-@q(
-    "rollup_counts",
-    """
-    select coalesce(source, '(all)') as source,
-           coalesce(lang, '(all)') as lang,
-           cast(grouping(source) * 2 + grouping(lang) as bigint) as gid,
-           cast(count(*) as bigint) as docs,
-           cast(sum(n_chars) as bigint) as chars
-    from documents
-    group by rollup(source, lang)
-    """,
-)
-def rollup_counts(spark, sf_dir):
-    """ROLLUP grouping sets: per-(source, lang) counts with per-source
-    subtotals and a grand total in ONE aggregation pass (Spark expands
-    grouping sets inside a single shuffle — three separate groupBys
-    would scan the table three times). grouping() bits disambiguate a
-    literal '(all)' value from the subtotal rows."""
-    d = t(spark, sf_dir, "documents")
-    return (
-        d.rollup("source", "lang")
-        .agg(
-            (F.grouping("source") * 2 + F.grouping("lang"))
-            .cast("long")
-            .alias("gid"),
-            F.count("*").cast("long").alias("docs"),
-            F.sum("n_chars").cast("long").alias("chars"),
-        )
-        .select(
-            F.coalesce("source", F.lit("(all)")).alias("source"),
-            F.coalesce("lang", F.lit("(all)")).alias("lang"),
-            "gid",
-            "docs",
-            "chars",
-        )
-    )
-
-
-@q(
-    "pivot_lang_counts",
-    """
-    select source,
-           cast(count_if(lang = 'en') as bigint) as en,
-           cast(count_if(lang = 'zh') as bigint) as zh,
-           cast(count_if(lang = 'fr') as bigint) as fr,
-           cast(count_if(lang = 'de') as bigint) as de,
-           cast(count_if(lang = 'es') as bigint) as es
-    from documents group by source
-    """,
-)
-def pivot_lang_counts(spark, sf_dir):
-    """PIVOT: language distribution per source as columns. The Spark
-    side uses the native pivot operator WITH the value list supplied —
-    omitting it costs an extra distinct-collecting job before the real
-    aggregation (the classic pivot footgun at scale). The oracle is
-    the equivalent conditional aggregation."""
-    d = t(spark, sf_dir, "documents")
-    langs = ["en", "zh", "fr", "de", "es"]
-    out = (
-        d.groupBy("source")
-        .pivot("lang", langs)
-        .agg(F.count(F.lit(1)))
-    )
-    return out.select(
-        "source",
-        *[F.coalesce(F.col(lang), F.lit(0)).cast("long").alias(lang) for lang in langs],
-    )
-
-
-@q(
-    "sample_per_source",
-    """
-    with r as (
-      select doc_id, source,
-             row_number() over (
-               partition by source
-               order by md5(cast(doc_id as varchar) || ':' || source), doc_id
-             ) as rk
-      from documents
-    )
-    select doc_id, source, cast(rk as int) as rk
-    from r where rk <= 5
-    """,
-)
-def sample_per_source(spark, sf_dir):
-    """Deterministic balanced subsampling: exactly 5 docs per source,
-    chosen by ranking on a content-independent md5 of (doc_id, source)
-    — reproducible across runs, engines and partitionings (a rand()
-    sample is none of those), and uniform because the hash is
-    effectively a random permutation per group. The per-group top-k
-    window is the same shape as w5; at 100 TB the rank threshold
-    turns into the per-group quota of the sampling design."""
-    from pyspark.sql import Window
-
-    d = t(spark, sf_dir, "documents")
-    key = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.col("source")))
-    w = Window.partitionBy("source").orderBy(key, "doc_id")
-    return (
-        d.select("doc_id", "source", F.row_number().over(w).alias("rk"))
-        .filter(F.col("rk") <= 5)
-        .select("doc_id", "source", F.col("rk").cast("int"))
-    )
-
-
-@q(
-    "funnel_steps",
-    """
-    with m as (
-      select user_id,
-             min(case when event_type = 'signup' then ts end) as t_signup,
-             min(case when event_type = 'view' then ts end) as t_view,
-             min(case when event_type = 'purchase' then ts end) as t_purchase
-      from events group by user_id
-    )
-    select cast(count(*) as bigint) as users,
-           cast(count_if(t_signup is not null) as bigint) as did_signup,
-           cast(count_if(t_signup is not null and t_view > t_signup)
-                as bigint) as then_viewed,
-           cast(count_if(t_signup is not null and t_view > t_signup
-                         and t_purchase > t_view) as bigint) as then_purchased
-    from m
-    """,
-)
-def funnel_steps(spark, sf_dir):
-    """Ordered-event funnel (signup → view → purchase): one conditional
-    min-timestamp aggregation per user then step comparisons — a
-    single groupBy pass regardless of funnel depth (the self-join
-    formulation explodes per step; the conditional-min form is the
-    scale shape). Null-safe: a '>' against a missing step is null →
-    count_if false, exactly matching DuckDB."""
-    e = t(spark, sf_dir, "events")
-
-    def first_ts(ev):
-        return F.min(F.when(F.col("event_type") == ev, F.col("ts")))
-
-    m = e.groupBy("user_id").agg(
-        first_ts("signup").alias("t_signup"),
-        first_ts("view").alias("t_view"),
-        first_ts("purchase").alias("t_purchase"),
-    )
-    sign = F.col("t_signup").isNotNull()
-    viewed = sign & (F.col("t_view") > F.col("t_signup"))
-    purchased = viewed & (F.col("t_purchase") > F.col("t_view"))
-    return m.agg(
-        F.count("*").cast("long").alias("users"),
-        F.count_if(sign).cast("long").alias("did_signup"),
-        F.count_if(viewed).cast("long").alias("then_viewed"),
-        F.count_if(purchased).cast("long").alias("then_purchased"),
-    )
-
-
-@q(
-    "props_json_stats",
-    """
-    select event_type,
-           cast(count(*) as bigint) as events,
-           cast(sum(cast(json_extract_string(props, '$.k') as bigint))
-                as bigint) as sum_k,
-           cast(max(cast(json_extract_string(props, '$.k') as bigint))
-                as bigint) as max_k
-    from events group by event_type
-    """,
-)
-def props_json_stats(spark, sf_dir):
-    """Semi-structured column handling on the driver tables: the
-    events.props JSON string is parsed with get_json_object (no
-    schema declaration needed for ad-hoc fields; the full from_json
-    schema-on-read arm is the payload parse in sources.py) and
-    aggregated natively."""
-    e = t(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("long")
-    return e.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("events"),
-        F.sum(k).cast("long").alias("sum_k"),
-        F.max(k).cast("long").alias("max_k"),
-    )
-
-
-@q(
-    "hopping_30m",
-    """
-    with e as (
-      -- bigint BEFORE the floor-div: DuckDB's // on a DOUBLE operand
-      -- degenerates to plain division and the alignment vanishes
-      select event_type, cast(floor(epoch(ts)) as bigint) as es from events
-    ),
-    w as (
-      -- an event lands in the two 1h windows that contain it when
-      -- sliding by 30m: starts at floor-to-30m and that minus 30m
-      select event_type, es,
-             unnest([es // 1800 * 1800, es // 1800 * 1800 - 1800]) as ws
-      from e
-    )
-    select cast(ws as bigint) as win_start, event_type,
-           cast(count(*) as bigint) as events
-    from w where es >= ws and es < ws + 3600
-    group by ws, event_type
-    """,
-)
-def hopping_30m(spark, sf_dir):
-    """HOPPING (sliding) window aggregation: 1-hour windows every 30
-    minutes — each event contributes to two windows (the overlap is
-    what a tumbling window cannot express; Spark's window() handles
-    the fan-out natively and the same plan runs under readStream with
-    a watermark). DuckDB restates the window membership arithmetic
-    explicitly."""
-    e = t(spark, sf_dir, "events")
-    return (
-        e.groupBy(
-            F.window("ts", "1 hour", "30 minutes").alias("win"), "event_type"
-        )
-        .agg(F.count("*").cast("long").alias("events"))
-        .select(
-            F.col("win.start").cast("timestamp").cast("long").alias("win_start"),
-            "event_type",
-            "events",
-        )
-    )
-
-
-@q(
-    "length_rank_stats",
-    """
-    select doc_id, source,
-           cast(floor(1000000 * percent_rank() over w) as bigint)
-             as pr_ppm,
-           cast(floor(1000000 * cume_dist() over w) as bigint)
-             as cd_ppm
-    from documents
-    window w as (partition by source order by n_chars, doc_id)
-    """,
-)
-def length_rank_stats(spark, sf_dir):
-    """percent_rank + cume_dist per source over a deterministic
-    (n_chars, doc_id) order. Cross-engine exactness note: both are
-    single IEEE divisions of the same small integers — one identical
-    double op in each engine — so floor(1e6·x) agrees bit-for-bit
-    (unlike interpolated quantiles, which chain multiplications and
-    diverge in the last ulp)."""
-    from pyspark.sql import Window
-
-    d = t(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy("n_chars", "doc_id")
-    return d.select(
-        "doc_id",
-        "source",
-        F.floor(F.percent_rank().over(w) * 1000000).cast("long").alias("pr_ppm"),
-        F.floor(F.cume_dist().over(w) * 1000000).cast("long").alias("cd_ppm"),
-    )
-
-
-# =====================================================================
-# Language rebalancing — downsample every language to the rarest
-# language's count (the multilingual-training balance step)
-# =====================================================================
-@q(
-    "balance_langs",
-    """
-    with c as (select lang, count(*) as n_l from documents group by lang),
-    qta as (select min(n_l) as quota from c),
-    r as (
-      select doc_id, lang,
-             row_number() over (
-               partition by lang
-               order by md5(cast(doc_id as varchar) || ':' || lang), doc_id
-             ) as rk
-      from documents
-    )
-    select doc_id, lang, rk <= (select quota from qta) as keep
-    from r
-    """,
-)
-def balance_langs(spark, sf_dir):
-    """Language rebalancing for multilingual training: every language
-    is downsampled to the RAREST language's document count (the
-    corpus here is ~3.4x en-heavy), with membership decided by the
-    same content-independent md5 permutation sample_per_source uses —
-    reproducible across runs, engines and partitionings. The quota is
-    data-dependent (min over per-lang counts): a 5-row aggregate
-    broadcast into the per-doc verdict, so the big side is touched by
-    exactly one window shuffle on lang. Integer-exact by construction
-    (count-based quota, no temperature exponent whose floating-point
-    would differ between engines)."""
-    d = t(spark, sf_dir, "documents")
-    quota = d.groupBy("lang").count().agg(
-        F.min("count").cast("long").alias("quota")
-    )
-    key = F.md5(
-        F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.col("lang"))
-    )
-    w = Window.partitionBy("lang").orderBy(key, "doc_id")
-    return (
-        d.select("doc_id", "lang", F.row_number().over(w).alias("rk"))
-        .crossJoin(F.broadcast(quota))
-        .select("doc_id", "lang", (F.col("rk") <= F.col("quota")).alias("keep"))
-    )
-
-
-# =====================================================================
-# Dedup keep-list — canonical document per near-dup cluster (the
-# pairs -> clusters -> keep/drop verdict that actually prunes a corpus)
-# =====================================================================
-def _dedup_keep_list_sql() -> str:
-    from . import minhash as mh
-
-    return _minhash128_cte(cap=mh.CAP) + """
-    , pairs as (
-      select a.doc_id as a, b.doc_id as b
-      from kept a join kept b
-        on a.band = b.band and a.bkey = b.bkey and a.doc_id < b.doc_id
-      group by 1, 2
-    ),
-    edges as (select a, b from pairs union select b, a from pairs),
-    closure(a, b) as (
-      select a, b from edges
-      union
-      select c.a, e.b from closure c join edges e on c.b = e.a
-      where c.a <> e.b
-    ),
-    reps as (select a as doc, least(a, min(b)) as rep from closure group by a)
-    select d.doc_id,
-           cast(coalesce(r.rep, d.doc_id) as bigint) as cluster_rep,
-           row_number() over (
-             partition by coalesce(r.rep, d.doc_id)
-             order by d.n_chars desc, d.doc_id
-           ) = 1 as keep
-    from documents d left join reps r on d.doc_id = r.doc
-    """
-
-
-def dedup_cluster_labels(spark, sf_dir):
-    """Materialized per-document near-dup cluster labels (doc_id, rep):
-    the large-star/small-star connected-components solution over the
-    production 128-perm banded candidate graph, written once per
-    process to the mat sidecar and read back as parquet. This is the
-    100-TB composition: the CC solve is a heavy multi-round job you
-    run ONCE per corpus snapshot and persist; every downstream
-    consumer (keep-list election, cluster statistics, incremental
-    re-dedup) reads the materialized table instead of re-deriving the
-    graph. Isolated documents don't appear — absence means singleton."""
-    from . import cc, mat
-    from . import minhash as mh
-
-    def build():
-        d = t(spark, sf_dir, "documents").select("doc_id", "text")
-        pairs = mh.candidate_pairs(d, max_bucket=50).select(
-            F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-        )
-        labels, _ = cc.connected_components(pairs)
-        return labels.withColumnRenamed("node", "doc_id")
-
-    return mat.materialize(spark, sf_dir, "dedup_labels", build)
-
-
-@q("dedup_keep_list", _dedup_keep_list_sql())
-def dedup_keep_list(spark, sf_dir):
-    """The step that actually prunes a corpus: per near-dup cluster,
-    elect ONE canonical document — longest first (n_chars desc),
-    smallest doc_id on ties — and emit a per-document keep/drop
-    verdict. Unlabeled documents are singletons and keep themselves.
-    The keep column is the materialized artifact a 100-TB ingest
-    anti-joins at write time; the canonical-election window shuffles
-    on the cluster key. PRODUCTION COMPOSITION: the cluster labels
-    come from the MATERIALIZED components table
-    (dedup_cluster_labels — solved once per corpus snapshot, read
-    back as parquet), so this query's own cost is the election only;
-    recomputing minhash->CC inline per consumer would repeat the
-    corpus-dominant work for every downstream reader. Note clusters
-    are NOT bounded in size (band chaining builds giant components —
-    this sf0.01 corpus has a 474-member one, and the oracle agrees on
-    it); if a pathological cluster ever dominated a task, the
-    election degrades gracefully to a two-phase
-    max_by(doc_id, (n_chars, -doc_id)) aggregation + broadcast join,
-    which salts like any skewed agg. DuckDB stays fully independent:
-    it rebuilds signatures -> bands -> candidate edges from the raw
-    documents, closes them with a recursive CTE, and re-runs the
-    election — so a green row also re-certifies the materialized
-    labels against a from-scratch recomputation."""
-    d = t(spark, sf_dir, "documents")
-    labels = dedup_cluster_labels(spark, sf_dir)
-    j = d.select("doc_id", "n_chars").join(labels, "doc_id", "left")
-    j = j.withColumn(
-        "cluster_rep", F.coalesce("rep", "doc_id").cast("long")
-    )
-    w = Window.partitionBy("cluster_rep").orderBy(
-        F.col("n_chars").desc(), "doc_id"
-    )
-    return j.select(
-        "doc_id",
-        "cluster_rep",
-        (F.row_number().over(w) == 1).alias("keep"),
-    )
-
-
-# =====================================================================
-# Deterministic global training order + shard assignment — the
-# scalable global row_number (bucketed two-pass, never a
-# single-partition window)
-# =====================================================================
-SHARD_DOCS = 100  # documents per output shard
-
-
-@q(
-    "train_order_shards",
-    f"""
-    with r as (
-      select doc_id,
-             row_number() over (
-               order by md5(cast(doc_id as varchar)), doc_id
-             ) - 1 as train_rank
-      from documents
-    )
-    select doc_id, cast(train_rank as bigint) as train_rank,
-           cast(train_rank // {SHARD_DOCS} as bigint) as shard_id
-    from r
-    """,
-)
-def train_order_shards(spark, sf_dir):
-    """Deterministic global training order (the corpus 'shuffle' a
-    trainer replays identically every epoch) plus contiguous shard
-    assignment, WITHOUT the single-partition global window that a
-    naive row_number() over (order by ...) compiles to. Two-pass
-    bucketed rank: the order key is md5(doc_id); its first two hex
-    chars define 256 buckets whose counts are a metadata-sized
-    aggregate (collected to the driver — bounded at 256 rows, the
-    ckpt.py precedent); cumulative bucket offsets broadcast back and
-    each document's rank is offset[bucket] + its row_number within
-    the bucket (bucket is a PREFIX of the key, so per-bucket order
-    concatenates to the global order). The heavy table sees one
-    window shuffle over 256 uniform groups — at 100 TB widen the
-    prefix to 4 hex chars (65k buckets) and nothing else changes.
-    Plan-audited: no SinglePartition exchange anywhere."""
-    d = t(spark, sf_dir, "documents").select(
-        "doc_id", F.md5(F.col("doc_id").cast("string")).alias("k")
-    )
-    d = d.withColumn("bkt", F.substring("k", 1, 2))
-    rows = sorted(
-        (r["bkt"], r["n"])
-        for r in d.groupBy("bkt").agg(F.count("*").alias("n")).collect()
-    )
-    offs, acc = [], 0
-    for bkt, n in rows:
-        offs.append((bkt, acc))
-        acc += n
-    off_df = d.sparkSession.createDataFrame(offs, "bkt string, off long")
-    w = Window.partitionBy("bkt").orderBy("k", "doc_id")
-    return (
-        d.join(F.broadcast(off_df), "bkt")
-        .select(
-            "doc_id",
-            (F.col("off") + F.row_number().over(w) - 1).alias("train_rank"),
-        )
-        .select(
-            "doc_id",
-            F.col("train_rank").cast("long"),
-            F.floor(F.col("train_rank") / SHARD_DOCS)
-            .cast("long")
-            .alias("shard_id"),
-        )
-    )
-
-
-# =====================================================================
-# Native session windows (gap-timeout sessionization over event time —
-# the built-in session_window operator, distinct from w6's
-# turn-distance gaps-and-islands)
-# =====================================================================
-SESSION_GAP_H = 8  # hours of inactivity that closes a session
-
-
-@q(
-    "session_events_native",
-    f"""
-    with g as (
-      select user_id, ts, event_type,
-             case when lag(ts) over w is null
-                       or ts - lag(ts) over w > interval {SESSION_GAP_H} hour
-                  then 1 else 0 end as brk
-      from events
-      window w as (partition by user_id order by ts, event_id)
-    ),
-    s as (
-      select *, sum(brk) over (partition by user_id order by ts
-                               rows unbounded preceding) as sid
-      from g
-    )
-    select user_id,
-           cast(epoch_us(min(ts)) as bigint) as s_start_us,
-           cast(epoch_us(max(ts)) + {SESSION_GAP_H * 3600 * 1000000}
-                as bigint) as s_end_us,
-           cast(count(*) as bigint) as n_events,
-           cast(count_if(event_type = 'purchase') as bigint) as n_purchases
-    from s group by user_id, sid
-    """,
-)
-def session_events_native(spark, sf_dir):
-    """Gap-timeout sessionization with Spark's NATIVE session_window
-    aggregate ({SESSION_GAP_H}h inactivity closes a session): one
-    groupBy(user_id, session_window(ts, gap)) pass — the engine merges
-    adjacent windows internally, no self-window needed, and the same
-    expression works unchanged under readStream with a watermark
-    (the streaming sessionization path). DuckDB has no session window,
-    so the oracle restates it as lag-break gaps-and-islands; window
-    end is last-event + gap by session_window's definition. Timestamps
-    compared in integer microseconds."""
-    d = t(spark, sf_dir, "events")
-    sw = F.session_window(
-        F.col("ts").cast("timestamp"), f"{SESSION_GAP_H} hours"
-    )
-    return (
-        d.groupBy("user_id", sw.alias("sw"))
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.count_if(F.col("event_type") == "purchase")
-            .cast("long")
-            .alias("n_purchases"),
-        )
-        .select(
-            "user_id",
-            F.unix_micros("sw.start").alias("s_start_us"),
-            F.unix_micros("sw.end").alias("s_end_us"),
-            "n_events",
-            "n_purchases",
-        )
-    )
-
-
-# =====================================================================
-# Approximate-quantile twin of length_quantiles (the 100-TB variant,
-# with the estimate gated instead of hash-compared)
-# =====================================================================
-@q(
-    "length_quantiles_approx",
-    """
-    with r as (
-      select source, n_chars,
-             row_number() over (partition by source
-                                order by n_chars, doc_id) as rn,
-             count(*) over (partition by source) as n
-      from documents
-    )
-    select source,
-           cast(max(case when rn = (n - 1) // 2 + 1 then n_chars end)
-                as bigint) as p50_exact,
-           cast(max(case when rn = (9 * (n - 1)) // 10 + 1 then n_chars end)
-                as bigint) as p90_exact,
-           true as approx_ok
-    from r group by source
-    """,
-)
-def length_quantiles_approx(spark, sf_dir):
-    """The 100-TB variant of length_quantiles: approx_percentile
-    (Greenwald-Khanna sketch, accuracy 1/eps = 100) replaces the
-    full-sort rank window — sketches merge map-side, so the quantile
-    pass costs one aggregation and O(sketch) shuffle bytes per source
-    regardless of group size. Same gating discipline as
-    table_profile_approx, but in the sketch's OWN error model: GK
-    bounds RANK error (eps·n with eps = 1/accuracy = 1/100), not
-    value error, so the gate accepts the approx value iff it lies
-    between the exact order statistics at rank ± (1 + ceil(n/100))
-    around the target — the sketch's guaranteed rank slack plus one
-    order statistic for the engine's discrete-percentile convention
-    at small n. Verified to hold at both sf0.01 (n=25/group, tol 2)
-    and sf0.1 (n=250/group, tol 4). The boolean is pinned literally
-    true by the oracle; the exact values ride the hash gate."""
-    d = t(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy("n_chars", "doc_id")
-    r = d.select(
-        "source",
-        "n_chars",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(Window.partitionBy("source")).alias("n"),
-    )
-
-    def pick(rank_sql):
-        return F.max(
-            F.when(F.col("rn") == F.expr(rank_sql), F.col("n_chars"))
-        ).cast("long")
-
-    tol = "(1 + (n + 99) div 100)"  # 1 + ceil(eps*n), eps = 1/100
-    exact = r.groupBy("source").agg(
-        pick("(n - 1) div 2 + 1").alias("p50_exact"),
-        pick(f"greatest((n - 1) div 2 + 1 - {tol}, 1)").alias("p50_lo"),
-        pick(f"least((n - 1) div 2 + 1 + {tol}, n)").alias("p50_hi"),
-        pick("(9 * (n - 1)) div 10 + 1").alias("p90_exact"),
-        pick(f"greatest((9 * (n - 1)) div 10 + 1 - {tol}, 1)").alias("p90_lo"),
-        pick(f"least((9 * (n - 1)) div 10 + 1 + {tol}, n)").alias("p90_hi"),
-    )
-    approx = d.groupBy("source").agg(
-        F.expr(
-            "approx_percentile(n_chars, array(0.5, 0.9), 100)"
-        ).alias("ap")
-    )
-    ok = (
-        F.col("ap")[0].between(F.col("p50_lo"), F.col("p50_hi"))
-    ) & (F.col("ap")[1].between(F.col("p90_lo"), F.col("p90_hi")))
-    return (
-        exact.join(approx, "source")
-        .select("source", "p50_exact", "p90_exact", ok.alias("approx_ok"))
-    )
-
-
-# =====================================================================
-# Vocabulary build + out-of-vocabulary rate (tokenizer-prep pass)
-# =====================================================================
-VOCAB_K = 256  # vocabulary size (top word-bigrams by frequency)
-
-
-@q(
-    "vocab_oov",
-    f"""
-    with w as (select doc_id, string_split(text, ' ') as ws from documents),
-    b as (
-      select doc_id, ws[i] || ' ' || ws[i+1] as bg
-      from (select doc_id, ws, unnest(range(1, len(ws))) as i from w)
-    ),
-    v as (
-      select bg from (
-        select bg, row_number() over (
-                 order by count(*) desc, bg) as rk
-        from b group by bg
-      ) where rk <= {VOCAB_K}
-    )
-    select b.doc_id,
-           cast(count(*) as bigint) as n_bigrams,
-           cast(count_if(v.bg is null) as bigint) as n_oov,
-           cast(count_if(v.bg is null) * 1000000 // count(*) as bigint)
-             as oov_ppm
-    from b left join v on b.bg = v.bg
-    group by b.doc_id
-    """,
-)
-def vocab_oov(spark, sf_dir):
-    """Tokenizer-prep pass: build a frequency vocabulary (top
-    {VOCAB_K} word bigrams, ties broken lexicographically for
-    determinism) and score every document's out-of-vocabulary rate
-    against it. The vocabulary is computed with a distributed top-k
-    (orderBy+limit compiles to TakeOrderedAndProject — per-partition
-    partial top-k, never a global sort) over the aggregated gram
-    table, whose size is the VOCABULARY, not the corpus; it is then
-    BROADCAST back to the exploded gram stream, so the 100-TB side
-    joins without a shuffle. oov_ppm is integer floor arithmetic —
-    exact in both engines."""
-    d = t(spark, sf_dir, "documents")
-    # split once per row, THEN build bigrams over the array — the
-    # single-expression form re-evaluates split() per bigram (no CSE
-    # inside lambda bodies) and costs ~4x on wide docs
-    b = d.select("doc_id", F.split("text", " ").alias("ws")).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(ws) - 1),"
-                " i -> concat(element_at(ws, i), ' ',"
-                "             element_at(ws, i + 1)))"
-            )
-        ).alias("bg"),
-    )
-    vocab = (
-        b.groupBy("bg")
-        .agg(F.count("*").alias("c"))
-        .orderBy(F.desc("c"), "bg")
-        .limit(VOCAB_K)
-        .select("bg", F.lit(True).alias("_in"))
-    )
-    return (
-        b.join(F.broadcast(vocab), "bg", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_bigrams"),
-            F.count_if(F.col("_in").isNull()).cast("long").alias("n_oov"),
-            F.expr("count_if(_in is null) * 1000000 div count(*)")
-            .cast("long")
-            .alias("oov_ppm"),
-        )
-    )
-
-
 # =====================================================================
 # Bloom-pruned incremental exact dedup: the 100-TB membership pattern
 # (runtime bloom semi-join) with an EXACT final answer the driver's
@@ -3670,24 +189,7 @@ PFX_WORDS = 5  # membership fingerprint = md5 of the first 5 words —
 # duplicates, so the prefix key is what yields real membership hits)
 
 
-@q(
-    "bloom_dedup_exact",
-    f"""
-    with f as (
-      select doc_id, source,
-             md5(array_to_string(string_split(text, ' ')[1:{PFX_WORDS}], ' ')) as fp
-      from documents
-    ),
-    c as (select distinct fp from f where doc_id % 2 = 0)
-    select f.source,
-           cast(count(*) as bigint) as new_docs,
-           cast(count_if(c.fp is not null) as bigint) as dup_of_corpus,
-           cast(count(*) - count_if(c.fp is not null) as bigint) as admitted
-    from f left join c on f.fp = c.fp
-    where f.doc_id % 2 = 1
-    group by f.source
-    """,
-)
+@q("bloom_dedup_exact")
 def bloom_dedup_exact(spark, sf_dir):
     """Incremental EXACT dedup of an arriving batch (odd doc_ids)
     against the standing corpus (even doc_ids), pruned by a
@@ -3762,23 +264,7 @@ def bloom_dedup_exact(spark, sf_dir):
 # Domain-level quality gate (RefinedWeb-style): score whole SOURCES,
 # not documents — two-phase agg + broadcast scalar bar
 # =====================================================================
-@q(
-    "domain_quality_gate",
-    """
-    with s as (
-      select source,
-             cast(count(*) as bigint) as docs,
-             cast(sum(n_chars) as bigint) as chars,
-             cast(sum(len(string_split(text, ' '))) as bigint) as words
-      from documents group by source
-    ),
-    g as (select cast((1000 * sum(chars)) // sum(words) as bigint) as bar from s)
-    select s.source, s.docs,
-           cast((1000 * s.chars) // s.words as bigint) as cpw_milli,
-           ((1000 * s.chars) // s.words >= g.bar) as kept
-    from s, g
-    """,
-)
+@q("domain_quality_gate")
 def domain_quality_gate(spark, sf_dir):
     """Source-level (domain-level) quality gating, the RefinedWeb /
     CCNet move of scoring whole domains rather than documents: one
@@ -3805,27 +291,7 @@ def domain_quality_gate(spark, sf_dir):
     )
 
 
-# =====================================================================
-# Cohort retention matrix: first-purchase week x week offset
-# =====================================================================
-_WEEK = "cast(floor(floor(epoch(ts)) / 604800) as bigint)"
-
-
-@q(
-    "cohort_retention",
-    f"""
-    with e as (select user_id, event_type, {_WEEK} as w from events),
-    u as (select user_id, min(w) as cw from e
-          where event_type = 'purchase' group by user_id),
-    a as (select distinct user_id, w from e)
-    select u.cw as cohort_week,
-           cast(a.w - u.cw as bigint) as week_offset,
-           cast(count(distinct a.user_id) as bigint) as active_users
-    from a join u on a.user_id = u.user_id
-    where a.w >= u.cw
-    group by u.cw, a.w - u.cw
-    """,
-)
+@q("cohort_retention")
 def cohort_retention(spark, sf_dir):
     """Weekly cohort retention: users cohorted by the week of their
     FIRST purchase, counted as active in every later week they emit
@@ -3870,52 +336,7 @@ COS_DF_MAX = 40  # posting-list cap: a term in more than this many
 # role fingerprint.py's df cap plays for winnowing buckets)
 
 
-@q(
-    "tfidf_cosine_pairs",
-    f"""
-    with tok as (
-      select doc_id, lower(words[i] || ' ' || words[i+1]) as term
-      from (
-        select doc_id, string_split(text, ' ') as words
-        from documents where doc_id % 5 = 0
-      ), lateral (select unnest(generate_series(1, len(words)-1)) as i)
-      where len(words) >= 2
-    ),
-    tf as (
-      select doc_id, term, cast(count(*) as bigint) as tf
-      from tok group by doc_id, term
-    ),
-    df as (
-      select term, cast(count(distinct doc_id) as bigint) as df
-      from tf group by term
-    ),
-    n as (select cast(count(*) as bigint) as n from documents where doc_id % 5 = 0),
-    w as (
-      select tf.doc_id, tf.term,
-             cast((tf.tf * 100 * n.n) // df.df as bigint) as w
-      from tf join df using (term) cross join n
-      where df.df between 2 and {COS_DF_MAX}
-    ),
-    wn as (
-      select doc_id, term, w,
-             cast(sum(w * w) over (partition by doc_id) as bigint) as norm2
-      from w
-    ),
-    dots as (
-      select a.doc_id as doc_a, b.doc_id as doc_b,
-             cast(count(*) as bigint) as shared_terms,
-             cast(sum(a.w * b.w) as bigint) as dot,
-             cast(max(a.norm2) as bigint) as norm2_a,
-             cast(max(b.norm2) as bigint) as norm2_b
-      from wn a join wn b on a.term = b.term and a.doc_id < b.doc_id
-      group by a.doc_id, b.doc_id
-      having count(*) >= 3
-    )
-    select doc_a, doc_b, shared_terms, dot, norm2_a, norm2_b,
-           cast(floor(dot / sqrt(cast(norm2_a as double) * cast(norm2_b as double)) * 1000) as bigint) as cos_milli
-    from dots
-    """,
-)
+@q("tfidf_cosine_pairs")
 def tfidf_cosine_pairs(spark, sf_dir):
     """Pairwise document similarity over SPARSE tf-idf vectors via the
     inverted index: the term unit is the word BIGRAM (unigrams are
@@ -4016,21 +437,7 @@ def tfidf_cosine_pairs(spark, sf_dir):
 CORRUPT_EVERY = 37  # doc_id % CORRUPT_EVERY == 0 lines are truncated
 
 
-@q(
-    "jsonl_ingest_stats",
-    f"""
-    select source,
-           cast(count(*) as bigint) as n_good,
-           cast(sum(length(text)) as bigint) as chars_good
-    from documents where doc_id % {CORRUPT_EVERY} <> 0
-    group by source
-    union all
-    select '__corrupt__' as source,
-           cast(count(*) as bigint) as n_good,
-           cast(0 as bigint) as chars_good
-    from documents where doc_id % {CORRUPT_EVERY} = 0
-    """,
-)
+@q("jsonl_ingest_stats")
 def jsonl_ingest_stats(spark, sf_dir):
     """End-to-end JSONL ingestion robustness: the corpus is serialized
     to a JSON-lines text fixture with every CORRUPT_EVERY-th line
@@ -4100,34 +507,7 @@ def jsonl_ingest_stats(spark, sf_dir):
 # CDC compaction to SCD2 effective ranges: event stream → slowly-
 # changing-dimension history table (one row per state episode)
 # =====================================================================
-@q(
-    "scd2_user_state",
-    """
-    with e as (
-      select user_id, event_id, event_type, cast(floor(epoch(ts)) as bigint) as ts_s
-      from events where user_id % 10 = 0
-    ),
-    c as (
-      select *, lag(event_type) over (
-        partition by user_id order by ts_s, event_id
-      ) as prev
-      from e
-    ),
-    episodes as (
-      select user_id, event_type as state, ts_s as valid_from
-      from c where prev is null or prev <> event_type
-    )
-    select user_id, state,
-           cast(row_number() over (
-             partition by user_id order by valid_from
-           ) as bigint) as version,
-           valid_from,
-           lead(valid_from) over (
-             partition by user_id order by valid_from
-           ) as valid_to
-    from episodes
-    """,
-)
+@q("scd2_user_state")
 def scd2_user_state(spark, sf_dir):
     """Change-data-capture compaction: an append-only event stream is
     compacted into an SCD-type-2 history table — one row per state
@@ -4172,35 +552,7 @@ def scd2_user_state(spark, sf_dir):
 # Winsorized (outlier-trimmed) per-group statistics: exact integer-
 # rank bounds, broadcast back for the clamp — robust stats at scale
 # =====================================================================
-@q(
-    "winsorized_stats",
-    """
-    with r as (
-      select source, doc_id, n_chars,
-             row_number() over (
-               partition by source order by n_chars, doc_id
-             ) as rn,
-             count(*) over (partition by source) as cnt
-      from documents
-    ),
-    b as (
-      select source,
-             cast(max(cnt) as bigint) as cnt,
-             cast(max(case when rn = (5 * cnt) // 100 + 1 then n_chars end)
-                  as bigint) as lo,
-             cast(max(case when rn = cnt - (5 * cnt) // 100 then n_chars end)
-                  as bigint) as hi
-      from r group by source
-    )
-    select r.source, b.cnt, b.lo, b.hi,
-           cast(sum(least(greatest(r.n_chars, b.lo), b.hi)) as bigint)
-             as wins_sum,
-           cast((1000 * sum(least(greatest(r.n_chars, b.lo), b.hi))) // max(b.cnt)
-             as bigint) as wins_mean_milli
-    from r join b on r.source = b.source
-    group by r.source, b.cnt, b.lo, b.hi
-    """,
-)
+@q("winsorized_stats")
 def winsorized_stats(spark, sf_dir):
     """Per-source winsorized mean of document length — the robust
     aggregate a quality dashboard wants when a handful of megadocs
@@ -4214,8 +566,7 @@ def winsorized_stats(spark, sf_dir):
     broadcast-joins back for the clamp (audit-asserted — the big side
     never re-shuffles for the join), and the final agg reuses the
     source key. At 100 TB the rank window is the only corpus-sized
-    stage; swap it for approx_percentile when exactness can relax —
-    the documented twin discipline length_quantiles set."""
+    stage; swap it for approx_percentile when exactness can relax."""
     d = t(spark, sf_dir, "documents").select("source", "doc_id", "n_chars")
     w = Window.partitionBy("source").orderBy("n_chars", "doc_id")
     r = d.select(
@@ -4264,36 +615,7 @@ def winsorized_stats(spark, sf_dir):
 SESS_LEN_S = 1800  # each event opens a 30-min active interval
 
 
-@q(
-    "peak_concurrency",
-    f"""
-    with deltas as (
-      select event_type, cast(floor(epoch(ts)) as bigint) as t,
-             cast(1 as bigint) as delta
-      from events
-      union all
-      select event_type, cast(floor(epoch(ts)) as bigint) + {SESS_LEN_S},
-             cast(-1 as bigint)
-      from events
-    ),
-    run as (
-      select event_type, t, delta,
-             sum(delta) over (
-               partition by event_type order by t, delta
-             ) as live
-      from deltas
-    ),
-    pk as (
-      select event_type, cast(max(live) as bigint) as peak
-      from run group by event_type
-    )
-    select r.event_type, pk.peak,
-           cast(min(case when r.live = pk.peak then r.t end) as bigint)
-             as first_peak_t
-    from run r join pk using (event_type)
-    group by r.event_type, pk.peak
-    """,
-)
+@q("peak_concurrency")
 def peak_concurrency(spark, sf_dir):
     """Peak concurrent active sessions per event type by SWEEP-LINE:
     each event contributes a +1 delta at its timestamp and a -1 at
@@ -4337,40 +659,7 @@ def peak_concurrency(spark, sf_dir):
 # Referential-conformance audit: FK orphan counts across the star
 # schema in one report (anti-join per relation, dims broadcast)
 # =====================================================================
-@q(
-    "fk_orphan_audit",
-    """
-    select 'orders.o_custkey->customer' as relation,
-           cast((select count(*) from orders) as bigint) as total_rows,
-           cast((select count(*) from orders o
-                 where not exists (select 1 from customer c
-                                   where c.c_custkey = o.o_custkey)) as bigint)
-             as orphans,
-           cast((select count(distinct o_custkey) from orders) as bigint)
-             as distinct_keys
-    union all
-    select 'lineitem.l_orderkey->orders',
-           cast((select count(*) from lineitem) as bigint),
-           cast((select count(*) from lineitem l
-                 where not exists (select 1 from orders o
-                                   where o.o_orderkey = l.l_orderkey)) as bigint),
-           cast((select count(distinct l_orderkey) from lineitem) as bigint)
-    union all
-    select 'lineitem.l_partkey->part',
-           cast((select count(*) from lineitem) as bigint),
-           cast((select count(*) from lineitem l
-                 where not exists (select 1 from part p
-                                   where p.p_partkey = l.l_partkey)) as bigint),
-           cast((select count(distinct l_partkey) from lineitem) as bigint)
-    union all
-    select 'customer.c_nationkey->nation',
-           cast((select count(*) from customer) as bigint),
-           cast((select count(*) from customer c
-                 where not exists (select 1 from nation n
-                                   where n.n_nationkey = c.c_nationkey)) as bigint),
-           cast((select count(distinct c_nationkey) from customer) as bigint)
-    """,
-)
+@q("fk_orphan_audit")
 def fk_orphan_audit(spark, sf_dir):
     """Data-conformance audit: foreign-key orphan counts for every
     edge of the star schema in ONE report — the pre-flight check any
@@ -4438,32 +727,7 @@ def fk_orphan_audit(spark, sf_dir):
 PMI_MIN_CO = 5  # minimum co-occurring docs for a pair to be reported
 
 
-@q(
-    "word_pmi",
-    f"""
-    with wd as (
-      select distinct doc_id, unnest(regexp_extract_all(lower(text), '[a-z]{{3,}}')) as word
-      from documents
-    ),
-    wc as (select word, cast(count(*) as bigint) as n from wd group by word),
-    n as (select cast(count(*) as bigint) as n_docs from documents),
-    co as (
-      select a.word as word_a, b.word as word_b,
-             cast(count(*) as bigint) as n_ab
-      from wd a join wd b on a.doc_id = b.doc_id and a.word < b.word
-      group by a.word, b.word
-      having count(*) >= {PMI_MIN_CO}
-    )
-    select co.word_a, co.word_b, co.n_ab,
-           ca.n as n_a, cb.n as n_b,
-           cast((co.n_ab * n.n_docs * 1000000) // (ca.n * cb.n) as bigint)
-             as pmi_ratio_e6
-    from co
-    join wc ca on co.word_a = ca.word
-    join wc cb on co.word_b = cb.word
-    cross join n
-    """,
-)
+@q("word_pmi")
 def word_pmi(spark, sf_dir):
     """Pointwise-mutual-information-style association scores for word
     pairs: ratio = P(a,b)/(P(a)P(b)) over document incidence, held in
@@ -4521,26 +785,7 @@ def word_pmi(spark, sf_dir):
 # Exact integer 3-sigma outlier detection: cross-multiplied variance
 # (no sqrt, no float moments) — broadcast group stats, map-side flag
 # =====================================================================
-@q(
-    "outlier_3sigma",
-    """
-    with e as (
-      select event_id, event_type, cast(floor(value) as bigint) as v_units
-      from events
-    ),
-    s as (
-      select event_type,
-             cast(count(*) as bigint) as c,
-             cast(sum(v_units) as bigint) as s,
-             cast(sum(v_units * v_units) as bigint) as ss
-      from e group by event_type
-    )
-    select e.event_id, e.event_type, e.v_units
-    from e join s using (event_type)
-    where (s.c * e.v_units - s.s) * (s.c * e.v_units - s.s)
-          > 9 * (s.c * s.ss - s.s * s.s)
-    """,
-)
+@q("outlier_3sigma")
 def outlier_3sigma(spark, sf_dir):
     """Per-group 3σ outlier flags with EXACT integer arithmetic: the
     test |x−μ| > 3σ is cross-multiplied into (c·x−s)² > 9(c·ss−s²)
@@ -4554,8 +799,7 @@ def outlier_3sigma(spark, sf_dir):
     units to keep every product within int64 through sf1-scale group
     counts (bound documented: c·ss ≤ 9e17 at c≈9e5, v≤1e3); beyond
     that, flip to per-partition compensated double moments — the
-    documented swap point, same discipline as table_profile's HLL
-    twin."""
+    documented swap point."""
     e = t(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -4581,25 +825,7 @@ def outlier_3sigma(spark, sf_dir):
 # Snapshot diff: added/removed/changed report between two corpus
 # versions — full-outer id join + content-hash compare
 # =====================================================================
-@q(
-    "snapshot_diff",
-    """
-    with v1 as (
-      select doc_id, md5(text) as h from documents where doc_id % 7 <> 0
-    ),
-    v2 as (
-      select doc_id,
-             md5(case when doc_id % 11 = 0 then upper(text) else text end) as h
-      from documents where doc_id % 5 <> 0
-    )
-    select coalesce(v1.doc_id, v2.doc_id) as doc_id,
-           case when v1.doc_id is null then 'added'
-                when v2.doc_id is null then 'removed'
-                else 'changed' end as status
-    from v1 full outer join v2 on v1.doc_id = v2.doc_id
-    where v1.doc_id is null or v2.doc_id is null or v1.h <> v2.h
-    """,
-)
+@q("snapshot_diff")
 def snapshot_diff(spark, sf_dir):
     """Corpus version diff — the added/removed/changed report a data
     registry publishes between snapshot releases. Two deterministic
@@ -4648,18 +874,7 @@ K_ANON = 5
 LEN_BUCKET = 100  # n_chars granularity in the quasi-identifier
 
 
-@q(
-    "k_anonymity_audit",
-    f"""
-    with g as (
-      select lang, cast(n_chars // {LEN_BUCKET} as bigint) as len_bucket,
-             cast(count(*) as bigint) as n
-      from documents group by lang, n_chars // {LEN_BUCKET}
-    )
-    select lang, len_bucket, n, n < {K_ANON} as at_risk
-    from g
-    """,
-)
+@q("k_anonymity_audit")
 def k_anonymity_audit(spark, sf_dir):
     """k-anonymity audit over the release's quasi-identifier space
     (lang × bucketed length): every equivalence class whose size is
@@ -4670,8 +885,8 @@ def k_anonymity_audit(spark, sf_dir):
     flag is a pure comparison; the remediation step (suppress or
     generalize at-risk classes) is then a broadcast semi-join of this
     table against the corpus — the same shape as domain_quality_gate.
-    This is the governance twin of pii_scrub_stats: PII scrubbing
-    removes direct identifiers, this audits the indirect ones."""
+    PII scrubbing removes direct identifiers; this audits the indirect
+    ones."""
     d = t(spark, sf_dir, "documents")
     g = d.groupBy(
         "lang",
@@ -4689,24 +904,7 @@ def k_anonymity_audit(spark, sf_dir):
 DECAY_WEEK_S = 604800
 
 
-@q(
-    "decayed_engagement",
-    f"""
-    with e as (
-      select user_id, cast(floor(value) as bigint) as v,
-             cast(floor(epoch(ts)) as bigint) as t
-      from events
-    ),
-    m as (select cast(max(t) as bigint) as mt from e)
-    select e.user_id,
-           cast(count(*) as bigint) as n_events,
-           cast(sum(case when (m.mt - e.t) // {DECAY_WEEK_S} < 63
-                         then e.v >> ((m.mt - e.t) // {DECAY_WEEK_S})
-                         else 0 end) as bigint) as decayed_units
-    from e cross join m
-    group by e.user_id
-    """,
-)
+@q("decayed_engagement")
 def decayed_engagement(spark, sf_dir):
     """Recency-weighted engagement per user with a one-week half-life,
     in EXACT integer arithmetic: weight = 2^-age_weeks implemented as
@@ -4749,30 +947,7 @@ def decayed_engagement(spark, sf_dir):
 # quantization + EXACT integer dot products — the 4x memory/bandwidth
 # scale path for vector search
 # =====================================================================
-@q(
-    "int8_ann_top3",
-    """
-    with q8 as (
-      select vec_id,
-             list_transform(embedding, x ->
-               cast(floor((cast(x as double) * 127.0) /
-                    greatest(list_max(list_transform(embedding,
-                      y -> abs(cast(y as double)))), 1e-12)) as bigint)
-             ) as qv
-      from embeddings
-    )
-    select qid, rk, nid, idot from (
-      select qid, nid, idot,
-             row_number() over (partition by qid order by idot desc, nid) as rk
-      from (
-        select q.vec_id as qid, c.vec_id as nid,
-               cast(list_sum(list_transform(range(1, 65),
-                 i -> q.qv[i] * c.qv[i])) as bigint) as idot
-        from q8 q join q8 c on q.vec_id < 10 and c.vec_id != q.vec_id
-      )
-    ) where rk <= 3
-    """,
-)
+@q("int8_ann_top3")
 def int8_ann_top3(spark, sf_dir):
     """Vector retrieval over int8-QUANTIZED embeddings — the memory/
     bandwidth scale path (4x smaller vectors than f32, SIMD int dot):
@@ -4783,7 +958,7 @@ def int8_ann_top3(spark, sf_dir):
     fixed-shape IEEE mul/div/floor with no accumulation order — both
     engines produce identical ints). The brute top-3 here is the
     exactness baseline over the quantized space; composing with the
-    IVF/LSH bucketing (similarity.py) gives quantized ANN, which is
+    IVF/LSH bucketing gives quantized ANN, which is
     precisely the IVF-PQ-family layout vector stores run at billions
     of vectors. Zero-vector guard: scale clamps at 1e-12 (identical
     literal both engines)."""
@@ -4832,42 +1007,10 @@ PR_ITERS = 5
 PR_R0 = 1_000_000  # initial rank mass per node (micros)
 
 
-def _pagerank_sql() -> str:
-    from . import minhash as mh
-
-    base = _minhash128_cte(cap=mh.CAP) + """
-    , pairs as (
-      select a.doc_id as a, b.doc_id as b
-      from kept a join kept b
-        on a.band = b.band and a.bkey = b.bkey and a.doc_id < b.doc_id
-      group by 1, 2
-    ),
-    edges as (select a as src, b as dst from pairs
-              union select b, a from pairs),
-    deg as (select src, cast(count(*) as bigint) as d from edges group by src),
-    pr0 as (select src as node, cast(%d as bigint) as r from deg)
-    """ % PR_R0
-    step = """
-    , pr{i} as (
-      select e.dst as node,
-             cast(150000 + (85 * sum(p.r // g.d)) // 100 as bigint) as r
-      from edges e
-      join pr{j} p on e.src = p.node
-      join deg g on e.src = g.src
-      group by e.dst
-    )
-    """
-    for i in range(1, PR_ITERS + 1):
-        base += step.format(i=i, j=i - 1)
-    return base + f"""
-    select node as doc_id, r as rank_e6 from pr{PR_ITERS}
-    """
-
-
-@q("pagerank_dupgraph", _pagerank_sql())
+@q("pagerank_dupgraph")
 def pagerank_dupgraph(spark, sf_dir):
     """PageRank centrality over the production near-dup candidate
-    graph (the 128-perm banded pairs dedup_components clusters) —
+    graph (the 128-perm banded pairs of minhash.candidate_pairs) —
     which documents sit at the CENTER of duplication neighborhoods,
     the signal a crawl-frontier or canonical-selection policy ranks
     by. The contract is bit-exact through all PR_ITERS iterations
@@ -4919,33 +1062,7 @@ def pagerank_dupgraph(spark, sf_dir):
 ED_CAP = 1000  # chars compared per pair — bounds the O(a*b) DP cell count
 
 
-def _edit_dist_sql() -> str:
-    from . import minhash as mh
-
-    return _minhash128_cte(cap=mh.CAP) + f"""
-    , pairs as (
-      select a.doc_id as doc_a, b.doc_id as doc_b
-      from kept a join kept b
-        on a.band = b.band and a.bkey = b.bkey and a.doc_id < b.doc_id
-      group by 1, 2
-    )
-    select p.doc_a, p.doc_b,
-           cast(levenshtein(substr(da.text, 1, {ED_CAP}),
-                            substr(db.text, 1, {ED_CAP})) as bigint) as dist,
-           cast(((greatest(length(substr(da.text, 1, {ED_CAP})),
-                           length(substr(db.text, 1, {ED_CAP})))
-                  - levenshtein(substr(da.text, 1, {ED_CAP}),
-                                substr(db.text, 1, {ED_CAP}))) * 1000000)
-                // greatest(length(substr(da.text, 1, {ED_CAP})),
-                            length(substr(db.text, 1, {ED_CAP})), 1)
-                as bigint) as sim_ppm
-    from pairs p
-    join documents da on da.doc_id = p.doc_a
-    join documents db on db.doc_id = p.doc_b
-    """
-
-
-@q("edit_dist_verify", _edit_dist_sql())
+@q("edit_dist_verify")
 def edit_dist_verify(spark, sf_dir):
     """Levenshtein VERIFICATION of the MinHash candidate pairs — the
     classic recall→precision dedup ladder's last rung: banding finds
@@ -4989,44 +1106,14 @@ def edit_dist_verify(spark, sf_dir):
     )
 
 
-# =====================================================================
-# Triangle counting on the near-dup candidate graph: per-node triangle
-# support, the densest-neighborhood signal (clustering coefficient
-# numerator / k-truss basis)
-# =====================================================================
-def _triangle_sql() -> str:
-    from . import minhash as mh
-
-    return _minhash128_cte(cap=mh.CAP) + """
-    , pairs as (
-      select a.doc_id as a, b.doc_id as b
-      from kept a join kept b
-        on a.band = b.band and a.bkey = b.bkey and a.doc_id < b.doc_id
-      group by 1, 2
-    ),
-    tri as (
-      select e1.a as x, e1.b as y, e2.b as z
-      from pairs e1
-      join pairs e2 on e2.a = e1.b
-      join pairs e3 on e3.a = e1.a and e3.b = e2.b
-    )
-    select node as doc_id, cast(count(*) as bigint) as n_tri
-    from (
-      select unnest([x, y, z]) as node from tri
-    )
-    group by node
-    """
-
-
-@q("triangle_support", _triangle_sql())
+@q("triangle_support")
 def triangle_support(spark, sf_dir):
     """Per-node TRIANGLE support over the production near-dup
     candidate graph — the local-density signal that separates a tight
     duplication clique (template spam, mirrored boilerplate) from a
     chain of borderline pairs: cliques are triangle-rich, chains are
-    triangle-free. Same edge set as dedup_components / pagerank (the
-    128-perm banded pairs), so the three graph views certify each
-    other. The id-oriented edge list (a<b) counts each triangle
+    triangle-free. Same edge set as pagerank_dupgraph (the 128-perm
+    banded pairs), so the two graph views certify each other. The id-oriented edge list (a<b) counts each triangle
     exactly once as (x<y<z): wedge join on the middle node, then a
     closing join on (x,z) — two shuffles on node id, no node ever
     enumerates its full neighborhood in one task. At 10^12-doc scale
@@ -5056,26 +1143,7 @@ def triangle_support(spark, sf_dir):
 # Per-user engagement trend: exact integer least-squares slope
 # (numerator/denominator pair — no float regression to diverge)
 # =====================================================================
-@q(
-    "trend_slope",
-    """
-    with base as (
-      select user_id,
-             (cast(floor(epoch(ts)) as bigint)
-              - (select min(cast(floor(epoch(ts)) as bigint)) from events))
-               // 3600 as x,
-             cast(floor(value) as bigint) as y
-      from events
-    )
-    select user_id,
-           cast(count(*) as bigint) as n,
-           cast(count(*) * sum(x * y) - sum(x) * sum(y) as bigint) as slope_num,
-           cast(count(*) * sum(x * x) - sum(x) * sum(x) as bigint) as slope_den
-    from base
-    group by user_id
-    having count(*) >= 2
-    """,
-)
+@q("trend_slope")
 def trend_slope(spark, sf_dir):
     """Per-user engagement TREND via exact integer least squares —
     is each user's event value rising or falling over the corpus
@@ -5118,30 +1186,7 @@ def trend_slope(spark, sf_dir):
 DRIFT_TOP = 30
 
 
-@q(
-    "drift_l1",
-    f"""
-    with w as (
-      select doc_id % 2 as half, unnest(string_split(text, ' ')) as word
-      from documents
-    ),
-    c as (
-      select word,
-             cast(count(*) filter (half = 0) as bigint) as c0,
-             cast(count(*) filter (half = 1) as bigint) as c1
-      from w group by word
-    ),
-    n as (
-      select cast(sum(c0) as bigint) as n0, cast(sum(c1) as bigint) as n1 from c
-    )
-    select word, c0, c1,
-           cast(abs(c0 * 1000000 // greatest(n0, 1)
-                    - c1 * 1000000 // greatest(n1, 1)) as bigint) as drift_ppm
-    from c cross join n
-    order by drift_ppm desc, word
-    limit {DRIFT_TOP}
-    """,
-)
+@q("drift_l1")
 def drift_l1(spark, sf_dir):
     """Distribution-DRIFT monitor between two corpus slices (here the
     deterministic doc_id-parity split; in production, yesterday's
@@ -5194,29 +1239,7 @@ def drift_l1(spark, sf_dir):
 HIST_BUCKETS = 20
 
 
-@q(
-    "hist_totalprice",
-    f"""
-    with c as (
-      select cast(floor(o_totalprice * 100) as bigint) as cents from orders
-    ),
-    b as (
-      select cast(min(cents) as bigint) as lo, cast(max(cents) as bigint) as hi
-      from c
-    )
-    select bucket,
-           cast(lo + (bucket * (hi - lo + 1)) // {HIST_BUCKETS} as bigint) as bucket_lo_c,
-           cast(lo + ((bucket + 1) * (hi - lo + 1)) // {HIST_BUCKETS} - 1 as bigint)
-             as bucket_hi_c,
-           cast(count(*) as bigint) as cnt
-    from (
-      select ((cents - lo) * {HIST_BUCKETS}) // (hi - lo + 1) as bucket, lo, hi
-      from c cross join b
-    )
-    group by bucket, lo, hi
-    order by bucket
-    """,
-)
+@q("hist_totalprice")
 def hist_totalprice(spark, sf_dir):
     """Equi-width HISTOGRAM of order totals — the column-profiling /
     zone-map primitive — computed with a hand-rolled integer bucket
@@ -5264,25 +1287,7 @@ def hist_totalprice(spark, sf_dir):
 # OHLC hourly rollup: order-statistics-by-key aggregation with a
 # deterministic integer ordering key (classic time-series compaction)
 # =====================================================================
-@q(
-    "ohlc_hourly",
-    """
-    with b as (
-      select cast(floor(epoch(ts)) as bigint) // 3600 as hour,
-             cast(floor(epoch(ts)) as bigint) * 100000 + event_id as k,
-             cast(floor(value * 100) as bigint) as cents
-      from events
-    )
-    select hour,
-           cast(arg_min(cents, k) as bigint) as open_c,
-           cast(max(cents) as bigint) as high_c,
-           cast(min(cents) as bigint) as low_c,
-           cast(arg_max(cents, k) as bigint) as close_c,
-           cast(count(*) as bigint) as n,
-           cast(sum(cents) as bigint) as vol_c
-    from b group by hour
-    """,
-)
+@q("ohlc_hourly")
 def ohlc_hourly(spark, sf_dir):
     """Hourly OHLC compaction of the event stream — the time-series
     rollup every metrics store and market-data pipeline runs. The
@@ -5317,125 +1322,6 @@ def ohlc_hourly(spark, sf_dir):
 
 
 # =====================================================================
-# ANN index-quality evaluation: recall@5 of the LSH index against the
-# exact brute-force top-5 — the metric that decides whether an
-# approximate index is shippable
-# =====================================================================
-_ANN_RECALL_SQL = f"""
-    with planes as (select tbl, j, w from read_parquet('{_LSH_PLANES_GLOB}')),
-    e as (
-      select vec_id, list_transform(embedding, x -> cast(x as double)) as v
-      from embeddings
-    ),
-    sigs as (
-      select e.vec_id as id, p.tbl as tbl,
-             cast(sum(case when list_sum(list_transform(range(1, 65),
-                               i -> e.v[i] * p.w[i])) > 0
-                      then cast(pow(2, p.j) as bigint) else 0 end) as bigint) as sig
-      from e cross join planes p
-      group by e.vec_id, p.tbl
-    ),
-    cand as (
-      select distinct q.id as qid, c.id as nid
-      from (select * from sigs where id < 20) q
-      join sigs c on q.tbl = c.tbl and q.sig = c.sig and c.id <> q.id
-    ),
-    allp as (
-      select q.vec_id as qid, c.vec_id as nid
-      from embeddings q join embeddings c
-        on q.vec_id < 20 and c.vec_id <> q.vec_id
-    ),
-    cos_cand as (
-      select a.qid, a.nid,
-             round(
-               list_sum(list_transform(range(1, 65), i -> eq.v[i] * ec.v[i]))
-               / sqrt(list_sum(list_transform(range(1, 65), i -> eq.v[i] * eq.v[i])))
-               / sqrt(list_sum(list_transform(range(1, 65), i -> ec.v[i] * ec.v[i])))
-             , 6) as s6
-      from cand a
-      join e eq on eq.vec_id = a.qid
-      join e ec on ec.vec_id = a.nid
-    ),
-    cos_all as (
-      select a.qid, a.nid,
-             round(
-               list_sum(list_transform(range(1, 65), i -> eq.v[i] * ec.v[i]))
-               / sqrt(list_sum(list_transform(range(1, 65), i -> eq.v[i] * eq.v[i])))
-               / sqrt(list_sum(list_transform(range(1, 65), i -> ec.v[i] * ec.v[i])))
-             , 6) as s6
-      from allp a
-      join e eq on eq.vec_id = a.qid
-      join e ec on ec.vec_id = a.nid
-    ),
-    lsh5 as (
-      select qid, nid from (
-        select qid, nid, row_number() over
-          (partition by qid order by s6 desc, nid) as rk
-        from cos_cand
-      ) where rk <= 5
-    ),
-    brute5 as (
-      select qid, nid from (
-        select qid, nid, row_number() over
-          (partition by qid order by s6 desc, nid) as rk
-        from cos_all
-      ) where rk <= 5
-    )
-    select q.vec_id as qid,
-           cast(coalesce(h.n_hits, 0) as bigint) as n_hits,
-           cast(coalesce(h.n_hits, 0) * 20 as bigint) as recall_pct
-    from (select vec_id from embeddings where vec_id < 20) q
-    left join (
-      select l.qid, count(*) as n_hits
-      from lsh5 l join brute5 b on l.qid = b.qid and l.nid = b.nid
-      group by l.qid
-    ) h on h.qid = q.vec_id
-    """
-
-
-@q("ann_recall_at5", _ANN_RECALL_SQL)
-def ann_recall_at5(spark, sf_dir):
-    """Index-quality EVALUATION: recall@5 of the production LSH index
-    (similarity.lsh_topk — the same seeded planes ann_lsh_top5 ships)
-    against the exact brute-force top-5 (similarity.cosine_topk, same
-    6dp-rounded deterministic ranking contract). This is the gate a
-    vector-search deployment runs before swapping an index in: the
-    approximate path is only shippable if recall against ground truth
-    clears a bar, and the metric itself must be reproducible — here
-    n_hits is an integer set-intersection size per query, so the
-    driver hash pins it exactly. Queries with NO LSH candidates
-    surface as n_hits=0 rows (left join from the query set — silent
-    misses are the failure mode an eval must never hide). At scale
-    the brute side runs on a SAMPLE of queries (here: the 20-query
-    panel) — ground truth for a panel is affordable even at 10^9
-    vectors while the index serves the full corpus."""
-    from . import similarity
-
-    e = t(spark, sf_dir, "embeddings")
-    _ensure_lsh_planes(spark, sf_dir)
-    corpus = e.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-    qset = corpus.filter(F.col("id") < 20)
-    lsh = similarity.lsh_topk(corpus, qset, k=5, n_planes=8, n_tables=4, dim=64).select(
-        F.col("query_id").alias("qid"), F.col("neighbor_id").alias("nid")
-    )
-    brute = similarity.cosine_topk(corpus, qset, k=5).select(
-        F.col("query_id").alias("qid"), F.col("neighbor_id").alias("nid")
-    )
-    hits = lsh.join(brute, ["qid", "nid"]).groupBy("qid").agg(
-        F.count("*").cast("long").alias("n_hits")
-    )
-    return (
-        qset.select(F.col("id").alias("qid"))
-        .join(hits, "qid", "left")
-        .select(
-            "qid",
-            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            (F.coalesce("n_hits", F.lit(0)) * 20).cast("long").alias("recall_pct"),
-        )
-    )
-
-
-# =====================================================================
 # Overlapping document chunking (RAG / context-window prep): pure
 # map-side explode, deterministic boundaries, content-certified chunks
 # =====================================================================
@@ -5443,31 +1329,7 @@ CHUNK_W = 50  # words per chunk
 CHUNK_S = 40  # stride (overlap = CHUNK_W - CHUNK_S)
 
 
-@q(
-    "chunk_overlap",
-    f"""
-    with d as (
-      select doc_id, string_split(text, ' ') as ws from documents
-    ),
-    b as (
-      select doc_id, ws, cast(len(ws) as bigint) as nw from d
-    ),
-    c as (
-      select doc_id, ws, nw,
-             unnest(range(0, case when nw <= {CHUNK_W} then 1
-                          else 1 + (nw - {CHUNK_W} + {CHUNK_S} - 1) // {CHUNK_S}
-                          end)) as ci
-      from b
-    )
-    select doc_id, cast(ci as bigint) as chunk_idx,
-           cast(len(list_slice(ws, ci * {CHUNK_S} + 1,
-                               ci * {CHUNK_S} + {CHUNK_W})) as bigint) as n_words,
-           md5(array_to_string(list_slice(ws, ci * {CHUNK_S} + 1,
-                                          ci * {CHUNK_S} + {CHUNK_W}), ' '))
-             as chunk_md5
-    from c
-    """,
-)
+@q("chunk_overlap")
 def chunk_overlap(spark, sf_dir):
     """Overlapping fixed-width CHUNKING of documents — the
     retrieval/context-window prep pass (chunk size CHUNK_W words,
@@ -5514,36 +1376,7 @@ PJ_TAU_NUM, PJ_TAU_DEN = 1, 2  # Jaccard threshold tau = 1/2
 PJ_SLICE = 3  # doc_id % PJ_SLICE == 0 keeps the driver compare fast
 
 
-@q(
-    "prefix_jaccard_pairs",
-    f"""
-    with tok as (
-      select distinct doc_id, lower(words[i] || ' ' || words[i+1]) as term
-      from (select doc_id, string_split(text, ' ') as words
-            from documents where doc_id % {PJ_SLICE} = 0),
-           lateral (select unnest(generate_series(1, len(words)-1)) as i)
-      where len(words) >= 2
-    ),
-    sz as (
-      select doc_id, cast(count(*) as bigint) as sz from tok group by doc_id
-    ),
-    inter as (
-      select a.doc_id as doc_a, b.doc_id as doc_b,
-             cast(count(*) as bigint) as inter_sz
-      from tok a join tok b on a.term = b.term and a.doc_id < b.doc_id
-      group by 1, 2
-    )
-    select doc_a, doc_b, inter_sz,
-           sa.sz as size_a, sb.sz as size_b,
-           cast(inter_sz * 1000000 // (sa.sz + sb.sz - inter_sz) as bigint)
-             as jac_ppm
-    from inter
-    join sz sa on inter.doc_a = sa.doc_id
-    join sz sb on inter.doc_b = sb.doc_id
-    where {PJ_TAU_DEN} * inter_sz
-          >= {PJ_TAU_NUM} * (sa.sz + sb.sz - inter_sz)
-    """,
-)
+@q("prefix_jaccard_pairs")
 def prefix_jaccard_pairs(spark, sf_dir):
     """EXACT Jaccard similarity join (bigram sets, tau = 1/2) via
     PREFIX FILTERING — the AllPairs/PPJoin family (Bayardo et al.
@@ -5564,7 +1397,7 @@ def prefix_jaccard_pairs(spark, sf_dir):
     green row proves the filter is lossless end to end, not merely
     self-consistent. At 100 TB: candidate volume is bounded by
     sum_t(prefix_df(t)^2) with df-ascending prefixes — the standard
-    web-scale exact-dedup shape; MinHash (minhash128_pairs) remains
+    web-scale exact-dedup shape; MinHash (minhash.candidate_pairs) remains
     the recall path when tau must go lower. Reference analogue: exact
     duplicate-question keying (question_merger.py:568-609) is the
     tau=1 degenerate case.
@@ -5691,28 +1524,9 @@ def prefix_jaccard_pairs(spark, sf_dir):
 # and their overlap — the physical-layout half of the 100-TB story
 # =====================================================================
 ZONE_N = 8
-_ZONES_GLOB = "/tmp/xtract_mat/sf0.01/zones/**/*.parquet"
 
 
-@q(
-    "zonemap_audit",
-    f"""
-    with z as (
-      select layout, cast(bucket as bigint) as bucket,
-             cast(count(*) as bigint) as n_rows,
-             cast(min(doc_id) as bigint) as min_id,
-             cast(max(doc_id) as bigint) as max_id
-      from read_parquet('{_ZONES_GLOB}', hive_partitioning = 1)
-      group by 1, 2
-    )
-    select a.layout, a.bucket, a.n_rows, a.min_id, a.max_id,
-           cast(count_if(b.bucket is not null) as bigint) as n_overlaps
-    from z a left join z b
-      on a.layout = b.layout and a.bucket <> b.bucket
-     and a.min_id <= b.max_id and b.min_id <= a.max_id
-    group by 1, 2, 3, 4, 5
-    """,
-)
+@q("zonemap_audit")
 def zonemap_audit(spark, sf_dir):
     """Physical-layout ZONE-MAP audit: materializes the same rows
     under two hive-partitioned layouts — 'range' (bucket =
@@ -5792,20 +1606,7 @@ def zonemap_audit(spark, sf_dir):
 # Forward-fill (last-observation-carried-forward) — the time-series
 # gap-fill window every event warehouse needs
 # =====================================================================
-@q(
-    "ffill_last_price",
-    """
-    select event_id, user_id,
-           last_value(case when event_type = 'purchase'
-                           then cast(floor(value * 100) as bigint) end
-                      ignore nulls)
-             over (partition by user_id order by ts, event_id
-                   rows between unbounded preceding and current row)
-             as last_price_c
-    from events
-    where user_id % 7 = 0
-    """,
-)
+@q("ffill_last_price")
 def ffill_last_price(spark, sf_dir):
     """Forward-fill / last-observation-carried-forward: every event
     carries the user's most recent observed purchase price (integer
@@ -5837,34 +1638,18 @@ def ffill_last_price(spark, sf_dir):
 # =====================================================================
 # Equal-frequency bucketing (ntile) — decile profile of a measure
 # =====================================================================
-@q(
-    "decile_stats",
-    """
-    with d as (
-      select ntile(10) over (order by n_chars, doc_id) as decile, n_chars
-      from documents
-    )
-    select cast(decile as bigint) as decile,
-           cast(count(*) as bigint) as n_docs,
-           cast(min(n_chars) as bigint) as min_chars,
-           cast(max(n_chars) as bigint) as max_chars,
-           cast(sum(n_chars) as bigint) as sum_chars
-    from d group by decile
-    """,
-)
+@q("decile_stats")
 def decile_stats(spark, sf_dir):
     """Equal-frequency bucketing: ntile(10) over (n_chars, doc_id) —
     the doc_id tie-break makes the bucket assignment a total order, so
     both engines split identical ties identically (ntile without a
     tie-break is nondeterministic under equal keys and would flap the
     hash). Per-decile count/min/max/sum profiles the length
-    distribution — the input-side twin of length_quantiles (which
-    reports cut points; this reports mass per bucket). NOTE the honest
+    distribution (mass per bucket rather than cut points). NOTE the honest
     scale caveat: a global ntile is a single-partition window; at
     100 TB you swap it for the two-phase global rank (range-partition
     sort + per-partition offsets from a broadcast partition-count
-    scan — the train_order_shards pattern) or the approx-quantile
-    bucketing twin (length_quantiles_approx). The decile AGGREGATE
+    scan) or approx-quantile bucketing. The decile AGGREGATE
     output is 10 rows either way."""
     d = t(spark, sf_dir, "documents").select(
         F.ntile(10)
@@ -5885,21 +1670,7 @@ def decile_stats(spark, sf_dir):
 # Inverted-index construction as aggregation: ordered posting lists,
 # content-certified by digest
 # =====================================================================
-@q(
-    "inverted_postings",
-    """
-    with tok as (
-      select distinct doc_id, lower(w) as term
-      from (select doc_id, unnest(string_split(text, ' ')) as w
-            from documents)
-      where w <> ''
-    )
-    select term, cast(count(*) as bigint) as df,
-           md5(string_agg(cast(doc_id as varchar), ',' order by doc_id))
-             as postings_md5
-    from tok group by term
-    """,
-)
+@q("inverted_postings")
 def inverted_postings(spark, sf_dir):
     """Inverted-index CONSTRUCTION as a pure aggregation: term →
     (document frequency, ordered posting list), with the posting list
@@ -5943,56 +1714,11 @@ def inverted_postings(spark, sf_dir):
 # =====================================================================
 BP_K = 5  # distinct-document threshold for "boilerplate"
 
-# deterministic lined corpus both engines derive independently from
-# `documents`: a per-source nav header + 10-word body chunks + a
-# per-source copyright footer. The header/footer repeat across every
-# doc of a source (real boilerplate, nd ~ docs-per-source); body
-# chunks mostly have nd = 1, with a handful of genuinely repeated
-# spans the rule also (correctly) catches.
-_BP_HDR = "'nav ' || source || ' home about contact'"
-_BP_FTR = "'copyright ' || source || ' all rights reserved'"
 
-
-@q(
-    "boilerplate_lines",
-    f"""
-    with w as (select doc_id, source, string_split(text, ' ') as ws
-               from documents),
-    l as (
-      select doc_id,
-             [{_BP_HDR}]
-             || list_transform(
-                  range(0, cast(ceil(len(ws)/{SPAN_WORDS}.0) as bigint)),
-                  i -> array_to_string(
-                         ws[(i*{SPAN_WORDS}+1):(i*{SPAN_WORDS}+{SPAN_WORDS})], ' '))
-             || [{_BP_FTR}] as ls
-      from w
-    ),
-    c as (
-      select doc_id, i as pos, ls[i+1] as line
-      from (select doc_id, ls,
-                   unnest(range(0, cast(len(ls) as bigint))) as i from l)
-    ),
-    bp as (
-      select line from c group by line
-      having count(distinct doc_id) >= {BP_K}
-    ),
-    f as (
-      select c.*, bp.line is not null as is_bp
-      from c left join bp using (line)
-    )
-    select doc_id,
-           cast(count(*) as bigint) as lines_total,
-           cast(count_if(not is_bp) as bigint) as lines_kept,
-           cast(count_if(is_bp) as bigint) as lines_removed,
-           md5(string_agg(line, chr(10) order by pos)
-               filter (not is_bp)) as clean_md5
-    from f group by doc_id
-    """,
-)
+@q("boilerplate_lines")
 def boilerplate_lines(spark, sf_dir):
     """Corpus-level boilerplate-LINE removal — the CCNet/RefinedWeb
-    rule that differs from span_dedup_corpus in kind: span dedup keeps
+    rule that differs from corpus span dedup in kind: span dedup keeps
     the FIRST occurrence of a repeated span, while the boilerplate
     rule drops EVERY occurrence of any line appearing in >= BP_K=5
     distinct documents (nav bars, cookie banners, copyright footers
@@ -6054,25 +1780,7 @@ def boilerplate_lines(spark, sf_dir):
 # Word-rank fluency score: a KenLM-perplexity-filter proxy that stays
 # exact-integer (mean corpus-frequency RANK of a document's tokens)
 # =====================================================================
-@q(
-    "word_rank_fluency",
-    """
-    with tok as (
-      select doc_id, lower(w) as word
-      from documents, unnest(string_split(text, ' ')) as u(w)
-      where w <> ''
-    ),
-    rk as (
-      select word, rank() over (order by cnt desc, word) as r
-      from (select word, count(*) as cnt from tok group by word)
-    )
-    select doc_id,
-           cast(count(*) as bigint) as n_toks,
-           cast((sum(r) * 1000) // count(*) as bigint) as mean_rank_milli
-    from tok join rk using (word)
-    group by doc_id
-    """,
-)
+@q("word_rank_fluency")
 def word_rank_fluency(spark, sf_dir):
     """Perplexity-filter PROXY that needs no float log-probs: every
     token is scored by its corpus frequency RANK (1 = most common;
@@ -6119,39 +1827,11 @@ DSIR_BUCKETS = 1024
 DSIR_TARGET_LANG = "en"
 
 
-@q(
-    "dsir_importance",
-    f"""
-    with tok as (
-      select doc_id, lang,
-             cast(('0x' || substr(md5(lower(w)), 1, 8)) as bigint)
-               % {DSIR_BUCKETS} as bkt
-      from documents, unnest(string_split(text, ' ')) as u(w)
-      where w <> ''
-    ),
-    feat as (
-      select bkt,
-             cast(count(*) as bigint) as raw_cnt,
-             cast(count_if(lang = '{DSIR_TARGET_LANG}') as bigint) as tgt_cnt
-      from tok group by bkt
-    ),
-    r as (
-      select bkt,
-             ((tgt_cnt + 1) * 1000000) // (raw_cnt + 1) as ratio_ppm
-      from feat
-    )
-    select doc_id,
-           cast(count(*) as bigint) as n_toks,
-           cast(sum(ratio_ppm) // count(*) as bigint) as imp_ppm
-    from tok join r using (bkt)
-    group by doc_id
-    """,
-)
+@q("dsir_importance")
 def dsir_importance(spark, sf_dir):
     """DSIR-style importance weights over hashed unigram features
     (Xie et al. 2023): bucket every token into 1024 hashed
-    feature bins (cross-engine md5-prefix hash, the split_train_val
-    idiom), estimate per-bucket target-vs-raw frequency ratios with
+    feature bins (cross-engine md5-prefix hash), estimate per-bucket target-vs-raw frequency ratios with
     add-one smoothing (target = lang='en' docs), and
     score each document by the mean ratio of its tokens — the
     integer-ppm monotone twin of DSIR's sum-of-log-ratios (we rank by
@@ -6216,61 +1896,16 @@ CMS_TOPK = 20
 
 
 def _cms_bucket_sql(word_expr: str, r: int, hexcast: str) -> str:
-    """Cross-engine md5-prefix bucket for CMS row ``r`` (the
-    split_train_val hash idiom, salted per row)."""
+    """Cross-engine md5-prefix bucket for CMS row ``r`` (salted per
+    row)."""
     return (
         f"cast({hexcast.format(h=f'md5({chr(39)}cms{r}#{chr(39)} || {word_expr})')} "
         f"as bigint) % {CMS_WIDTH}"
     )
-
-
-_CMS_DUCK_HEX = "('0x' || substr({h}, 1, 8))"
 _CMS_SPARK_HEX = "conv(substr({h}, 1, 8), 16, 10)"
 
 
-@q(
-    "cms_heavy_hitters",
-    f"""
-    with tok as (
-      select lower(w) as word
-      from documents, unnest(string_split(text, ' ')) as u(w)
-      where w <> ''
-    ),
-    tb as (
-      select word,
-             {", ".join(_cms_bucket_sql("word", r, _CMS_DUCK_HEX) + f" as b{r}" for r in range(CMS_DEPTH))}
-      from tok
-    ),
-    cells as (
-      select r, bkt, cast(count(*) as bigint) as cell
-      from (
-        {" union all ".join(f"select {r} as r, b{r} as bkt from tb" for r in range(CMS_DEPTH))}
-      ) group by r, bkt
-    ),
-    exact as (
-      select word, cast(count(*) as bigint) as exact_cnt,
-             min(b0) as b0, min(b1) as b1, min(b2) as b2, min(b3) as b3
-      from tb group by word
-    ),
-    top as (
-      select * from (
-        select *, row_number() over (order by exact_cnt desc, word) as rn
-        from exact
-      ) where rn <= {CMS_TOPK}
-    ),
-    est as (
-      select t.word, t.exact_cnt, min(c.cell) as cms_est
-      from (
-        {" union all ".join(f"select word, exact_cnt, {r} as r, b{r} as bkt from top" for r in range(CMS_DEPTH))}
-      ) t join cells c on t.r = c.r and t.bkt = c.bkt
-      group by t.word, t.exact_cnt
-    )
-    select word, exact_cnt, cms_est,
-           cast((cms_est - exact_cnt) * 1000000 // exact_cnt as bigint)
-             as over_ppm
-    from est
-    """,
-)
+@q("cms_heavy_hitters")
 def cms_heavy_hitters(spark, sf_dir):
     """Count-Min sketch (Cormode & Muthukrishnan 2005) built as a pure
     fixed-size aggregation, completing the sketch family (bloom =
@@ -6363,41 +1998,7 @@ def _zkey_expr(divop: str) -> str:
     return " + ".join(terms)
 
 
-@q(
-    "zorder_layout",
-    f"""
-    with e as (
-      select event_id, user_id as x,
-             cast(floor(value * 100) as bigint) as y
-      from events
-    ),
-    rk as (
-      select event_id, x, y,
-             ntile({1 << ZORD_BITS}) over (order by x, event_id) - 1 as rx,
-             ntile({1 << ZORD_BITS}) over (order by y, event_id) - 1 as ry
-      from e
-    ),
-    z as (
-      select *, {_zkey_expr('//')} as zkey from rk
-    ),
-    fil as (
-      select x, y,
-             ntile({ZORD_FILES}) over (order by x, event_id) as lin_f,
-             ntile({ZORD_FILES}) over (order by zkey, event_id) as z_f
-      from z
-    ),
-    both_layouts as (
-      select 'linear' as layout, lin_f as file_id, x, y from fil
-      union all
-      select 'zorder' as layout, z_f as file_id, x, y from fil
-    )
-    select layout, cast(file_id as bigint) as file_id,
-           cast(count(*) as bigint) as n_rows,
-           cast(min(x) as bigint) as x_min, cast(max(x) as bigint) as x_max,
-           cast(min(y) as bigint) as y_min, cast(max(y) as bigint) as y_max
-    from both_layouts group by layout, file_id
-    """,
-)
+@q("zorder_layout")
 def zorder_layout(spark, sf_dir):
     """Z-order / Morton-curve clustering (the public Delta Lake
     ``OPTIMIZE ZORDER BY`` / Iceberg sort-order technique), with the
@@ -6469,30 +2070,7 @@ def zorder_layout(spark, sf_dir):
 # Temperature-based mixture weights (multilingual pretraining sampling,
 # XLM-R-style alpha=0.5) — integer-exact via floor(sqrt())
 # =====================================================================
-@q(
-    "mixture_weights",
-    """
-    with l as (
-      select lang,
-             cast(count(*) as bigint) as n_docs,
-             cast(sum(len(string_split(text, ' '))) as bigint) as n_toks
-      from documents group by lang
-    ),
-    s as (
-      select *, cast(floor(sqrt(n_toks)) as bigint) as s_w from l
-    ),
-    tot as (
-      select cast(sum(s_w) as bigint) as ts,
-             cast(sum(n_toks) as bigint) as tt
-      from s
-    )
-    select lang, n_docs, n_toks, s_w,
-           cast((s_w * 1000000) // ts as bigint) as w_ppm,
-           cast((s_w * tt * 1000) // (ts * n_toks) as bigint)
-             as upsample_milli
-    from s, tot
-    """,
-)
+@q("mixture_weights")
 def mixture_weights(spark, sf_dir):
     """Temperature-based sampling weights for a multilingual training
     mixture (the public XLM-R / mT5 recipe, alpha = 0.5): each
@@ -6505,8 +2083,7 @@ def mixture_weights(spark, sf_dir):
     share relative to the language's natural token share, i.e. how
     many times over uniform each token is seen). Plan: one lang
     groupBy (5 rows out), totals as a broadcast 1-row cross join —
-    at 100 TB this is a metadata-sized job over any corpus, the same
-    shape balance_langs uses."""
+    at 100 TB this is a metadata-sized job over any corpus."""
     d = t(spark, sf_dir, "documents")
     l = d.groupBy("lang").agg(
         F.count("*").cast("long").alias("n_docs"),
@@ -6541,25 +2118,7 @@ def mixture_weights(spark, sf_dir):
 WS_K = 10
 
 
-@q(
-    "weighted_sample",
-    f"""
-    with p as (
-      select lang, doc_id, n_chars,
-             (cast(('0x' || substr(md5('ws#' || cast(doc_id as varchar)), 1, 8))
-                   as bigint) * 1048576)
-               // greatest(n_chars, 1) as pri
-      from documents
-    )
-    select lang, doc_id, cast(n_chars as bigint) as n_chars,
-           cast(pri as bigint) as pri
-    from (
-      select *, row_number() over (partition by lang
-                                   order by pri, doc_id) as rn
-      from p
-    ) where rn <= {WS_K}
-    """,
-)
+@q("weighted_sample")
 def weighted_sample(spark, sf_dir):
     """Deterministic weighted sampling per stratum — the
     Efraimidis-Spirakis priority-race idea with the RNG replaced by a
@@ -6599,7 +2158,7 @@ def weighted_sample(spark, sf_dir):
 # Schema-evolution read (mergeSchema / union_by_name): later write
 # batches add columns; one read reconciles them
 # =====================================================================
-@q("schema_evolution_read", None)  # oracle attached below (needs mat path)
+@q("schema_evolution_read")
 def schema_evolution_read(spark, sf_dir):
     """Schema-EVOLUTION source: a real lakehouse table is thousands of
     write batches, and later batches add columns (here batch v2 adds
@@ -6646,18 +2205,6 @@ def schema_evolution_read(spark, sf_dir):
     )
 
 
-ORACLE["schema_evolution_read"] = """
-    select batch,
-           cast(count(*) as bigint) as n_rows,
-           cast(count_if(quality is null) as bigint) as n_quality_null,
-           cast(coalesce(sum(quality), 0) as bigint) as sum_quality,
-           cast(sum(text_len) as bigint) as sum_text_len
-    from read_parquet('/tmp/xtract_mat/sf0.01/evolved/*/*.parquet',
-                      union_by_name = true, hive_partitioning = true)
-    group by batch
-"""
-
-
 # =====================================================================
 # Salted replication join under key skew — the manual skew-join shape
 # for when BOTH sides are too big to broadcast
@@ -6665,28 +2212,7 @@ ORACLE["schema_evolution_read"] = """
 SJ_SALT = 16
 
 
-@q(
-    "skew_salted_join",
-    """
-    with big as (
-      select case when event_id % 3 = 0 then 0 else user_id end as k,
-             cast(floor(value * 100) as bigint) as v_c
-      from events
-    ),
-    dim as (
-      select o_custkey as k, count(*) as n_orders,
-             cast(sum(cast(floor(o_totalprice * 100) as bigint)) as bigint)
-               as tot_c
-      from orders group by o_custkey
-    )
-    select b.k as k,
-           cast(count(*) as bigint) as n_events,
-           cast(sum(b.v_c) as bigint) as sum_v_c,
-           cast(max(d.tot_c) as bigint) as dim_tot_c
-    from big b join dim d on b.k = d.k
-    group by b.k
-    """,
-)
+@q("skew_salted_join")
 def skew_salted_join(spark, sf_dir):
     """Salted REPLICATION join under planted key skew — the manual
     form of AQE's skew-join split, for the case broadcast can't solve
@@ -6700,8 +2226,7 @@ def skew_salted_join(spark, sf_dir):
     salt solves — j5 covers the broadcast case). The oracle is the
     plain unsalted join, so the driver hash proves salting is
     semantics-preserving. At 100 TB you'd salt only keys above a
-    frequency threshold (two-level salt map, same as
-    skew_salted_stats' agg-side discipline) — the uniform salt here
+    frequency threshold (two-level salt map) — the uniform salt here
     keeps the demonstration plan readable."""
     ev = t(spark, sf_dir, "events")
     ords = t(spark, sf_dir, "orders")
@@ -6736,29 +2261,7 @@ def skew_salted_join(spark, sf_dir):
 BPE_TOP = 20
 
 
-@q(
-    "bpe_merge_round",
-    f"""
-    with words as (
-      select w, cast(count(*) as bigint) as wc
-      from (select unnest(regexp_extract_all(text, '[a-z0-9]+')) as w
-            from documents)
-      group by w
-    ),
-    pairs as (
-      select substr(w, i, 2) as pair, cast(sum(wc) as bigint) as cnt
-      from (select w, wc from words where len(w) >= 2),
-           lateral (select unnest(generate_series(1, len(w) - 1)) as i)
-      group by 1
-    )
-    select pair, cnt, rank from (
-      select pair, cnt,
-             cast(row_number() over (order by cnt desc, pair) as bigint)
-               as rank
-      from pairs
-    ) where rank <= {BPE_TOP}
-    """,
-)
+@q("bpe_merge_round")
 def bpe_merge_round(spark, sf_dir):
     """One round of BPE-style merge scoring: count adjacent
     character pairs within words, weighted by corpus word frequency,
@@ -6817,36 +2320,7 @@ BPE_MERGES = [
 ]
 
 
-def _bpe_oracle_expr() -> str:
-    """Nested-replace encode chain for the DuckDB oracle: chars are
-    bracketed '<c>' so merge patterns '<a><b>' can never overlap or
-    false-match inside an already-merged token '<a~b>'."""
-    e = "regexp_replace(w, '(.)', '<\\1>', 'g')"
-    for a, b in ((m[0], m[1]) for m in BPE_MERGES):
-        e = f"replace({e}, '<{a}><{b}>', '<{a}~{b}>')"
-    return e
-
-
-@q(
-    "bpe_encode",
-    f"""
-    with words as (
-      select w, cast(count(*) as bigint) as wc
-      from (select unnest(regexp_extract_all(text, '[a-z0-9]+')) as w
-            from documents)
-      group by w
-    ),
-    enc as (
-      select w, wc, {_bpe_oracle_expr()} as encoded
-      from words
-    )
-    select w, wc,
-           cast(len(encoded) - len(replace(encoded, '<', ''))
-                as bigint) as n_tokens,
-           encoded
-    from enc
-    """,
-)
+@q("bpe_encode")
 def bpe_encode(spark, sf_dir):
     """BPE ENCODING against a fixed 20-merge table — the inference
     side of tokenizer induction (bpe_merge_round learns merges; this
@@ -6888,25 +2362,7 @@ def bpe_encode(spark, sf_dir):
     )
 
 
-@q(
-    "bpe_doc_tokens",
-    f"""
-    with words as (
-      select doc_id, unnest(regexp_extract_all(text, '[a-z0-9]+')) as w
-      from documents
-    ),
-    enc as (
-      select doc_id,
-             {_bpe_oracle_expr()} as encoded
-      from words
-    )
-    select doc_id,
-           cast(count(*) as bigint) as n_words,
-           cast(sum(len(encoded) - len(replace(encoded, '<', '')))
-                as bigint) as n_bpe_tokens
-    from enc group by doc_id
-    """,
-)
+@q("bpe_doc_tokens")
 def bpe_doc_tokens(spark, sf_dir):
     """Per-DOCUMENT token counts under the BPE merge table — the
     budget number a packer/pricer needs per record. Demonstrates the
@@ -6932,48 +2388,5 @@ def bpe_doc_tokens(spark, sf_dir):
         .agg(
             F.count("*").cast("long").alias("n_words"),
             F.sum("n_tokens").cast("long").alias("n_bpe_tokens"),
-        )
-    )
-
-
-# =====================================================================
-# TPC-H Q5/Q9-family slice: per-nation supplier revenue (the star
-# pattern with the last unexercised driver table)
-# =====================================================================
-@q(
-    "supplier_nation_revenue",
-    """
-    select n.n_name,
-           cast(count(distinct s.s_suppkey) as bigint) as n_suppliers,
-           cast(sum(cast(floor(l.l_extendedprice
-                               * (1 - l.l_discount) * 100) as bigint))
-                as bigint) as revenue_c,
-           cast(count(*) as bigint) as n_lines
-    from lineitem l
-    join supplier s on l.l_suppkey = s.s_suppkey
-    join nation n on s.s_nationkey = n.n_nationkey
-    group by n.n_name
-    """,
-)
-def supplier_nation_revenue(spark, sf_dir):
-    """Per-nation supplier revenue (TPC-H Q5/Q9 family): the fact
-    table joins two dimensions that are metadata-sized at ANY corpus
-    scale (|suppliers| and |nations| grow with the business, not the
-    data), so both are BROADCAST — lineitem never shuffles for the
-    joins, and the only exchange is the final |nations|-key agg with
-    map-side partials. Revenue in integer cents (floor(x*100))
-    per the repo-wide money discipline."""
-    li = t(spark, sf_dir, "lineitem")
-    s = t(spark, sf_dir, "supplier")
-    n = t(spark, sf_dir, "nation")
-    rev = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    return (
-        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.countDistinct("s_suppkey").cast("long").alias("n_suppliers"),
-            F.sum(rev).cast("long").alias("revenue_c"),
-            F.count("*").cast("long").alias("n_lines"),
         )
     )

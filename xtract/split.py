@@ -5,7 +5,7 @@ Arrow UDF (detect.py); everything else — line lookup, positional
 estimate (G2), y-ordering (W2), lead-boundaries (W3/G3), char slicing
 (R11), sub-ids (G4) — is intra-row array logic: a block's matches
 live in ONE array cell, so "lead" is just the next array element and
-the stage is completely narrow (docs/PLANS.md asserts zero Exchange).
+the stage is completely narrow (tests/test_plans.py asserts zero Exchange).
 
 Each block yields a spans ARRAY (pass-through block → 1-element
 array; split → one element per located match; v1 quirk: zero located

@@ -594,45 +594,14 @@ def join_views_purchases(
     )
 
 
-def enrich_with_type_stats(events: DataFrame, stats: DataFrame) -> DataFrame:
-    """Stream-STATIC broadcast enrichment: each streaming event joins
-    a bounded dimension table (per-type reference statistics) and is
-    flagged against it — the lookup-table pattern every streaming
-    pipeline needs (feature stores, config tables, quota tables).
-    Unlike the stream-stream join there is NO state store and NO
-    watermark requirement: the static side is broadcast to every
-    task, the stream side stays append-mode, and Spark re-resolves
-    the static relation per micro-batch (so a refreshed dimension
-    takes effect on the next trigger — the documented semantics of
-    stream-static joins). Integer-cents arithmetic keeps the flag
-    exact cross-engine. At 10^12 events/day the stream side never
-    shuffles for this join — broadcast-only, like J5's batch
-    broadcast lookup."""
-    return (
-        events.select(
-            "event_id",
-            "event_type",
-            F.floor(F.col("value") * 100).cast("long").alias("v_cents"),
-        )
-        .join(F.broadcast(stats), "event_type")
-        .select(
-            "event_id",
-            "event_type",
-            "v_cents",
-            "type_avg_cents",
-            (F.col("v_cents") > F.col("type_avg_cents")).alias("above_avg"),
-        )
-    )
-
-
 def session_counts(
     events: DataFrame,
     gap: str = "8 hours",
     watermark: str = "0 seconds",
 ) -> DataFrame:
     """Streaming gap-timeout sessionization with the native
-    session_window aggregate — the streaming twin of
-    queries.session_events_native (same expression; under readStream
+    session_window aggregate — the streaming twin of a batch
+    session_window groupBy (same expression; under readStream
     the engine merges/extends open sessions in the state store and
     flushes a session only when the watermark passes its end, i.e.
     last event + gap). State is bounded: one open session per key at

@@ -103,13 +103,6 @@ def exam_info(blocks: DataFrame) -> DataFrame:
         F.col("block.block_label").alias("label"),
         F.coalesce(F.col("block.block_content"), F.lit("")).alias("content"),
     )
-    return exam_info_flat(b)
-
-
-def exam_info_flat(b: DataFrame) -> DataFrame:
-    """exam_info over the flat block projection (conv_id, turn_idx,
-    block_pos, label, content) — the shape the materialized-oracle
-    queries persist to parquet."""
     titles = (
         b.filter(F.col("label") == "doc_title")
         .groupBy("conv_id", "turn_idx")
@@ -201,16 +194,6 @@ def turn_counters(final_spans: DataFrame) -> DataFrame:
     )
 
 
-def qtype_histogram(final_spans: DataFrame) -> DataFrame:
-    """A3 (main_extraction.py:197-204)."""
-    return final_spans.groupBy("qtype").count().orderBy("qtype")
-
-
-def multi_image_questions(final_spans: DataFrame) -> DataFrame:
-    """A4 (main_extraction.py:207-215)."""
-    return final_spans.filter(F.col("image_count") > 1)
-
-
 def turn_audit(turns: DataFrame) -> DataFrame:
     """Turn-sequence integrity audit over a transcript table
     (conv_id, turn_idx, role, text, ts): per-conversation counters
@@ -297,7 +280,7 @@ def context_budget(turns: DataFrame, budget: int = CONTEXT_BUDGET) -> DataFrame:
     in turn order, reporting where each conversation first exceeds
     ``budget`` tokens (the truncation point a training-data packer
     needs) and how many turns fit. Tokens are the same [a-z0-9]+
-    extraction tok_count uses, so both engines count identically.
+    count conv_windows and loss_mask use.
     The running sum uses an explicit ROWS frame over the
     (conv_id ORDER BY turn_idx) window and the conv agg reuses that
     partitioning — one shuffle total."""
@@ -390,8 +373,8 @@ def conv_windows(turns: DataFrame, budget: int = CONTEXT_BUDGET) -> DataFrame:
     measured ~10x slower at 5k conversations purely on per-group
     pandas setup). A turn larger than the budget alone occupies its
     own window and is flagged oversize. Tokens are the shared
-    [a-z0-9]+ count, so the DuckDB oracle can replay the exact
-    recursion with a recursive CTE."""
+    [a-z0-9]+ count, so a pure-Python replay of the recursion can
+    check it exactly."""
     import pandas as pd
 
     out_schema = (
@@ -458,8 +441,7 @@ def loss_mask(turns: DataFrame) -> DataFrame:
     the previous row — a single conv_id shuffle, no join; at 10^12
     turns the output is exactly |turns| fixed-width rows and the
     window state per group is one long. Tokens are the shared
-    [a-z0-9]+ count (tok_count / context_budget discipline), so both
-    engines count identically."""
+    [a-z0-9]+ count conv_windows uses."""
     w = (
         Window.partitionBy("conv_id")
         .orderBy("turn_idx")
@@ -496,8 +478,8 @@ def turn_templates(turns: DataFrame, min_occ: int = 2) -> DataFrame:
     map-side combinable — at 10^12 turns the reduce side sees at most
     |distinct templates| rows per partition."""
     # explicit whitespace class: Java \s includes U+000B, RE2 \s does
-    # not — an explicit class keeps both engines' normalization
-    # byte-identical (DuckDB oracle uses the same class)
+    # not — an explicit class keeps the normalization identical to a
+    # Python replay with the same class
     norm = F.substring(
         F.trim(
             F.regexp_replace(
@@ -554,8 +536,8 @@ def window_assignments(turns: DataFrame, budget: int = CONTEXT_BUDGET) -> DataFr
                 if c != conv:
                     conv, win, cur = c, 1, 0
                 elif cur + toks > budget:
-                    # no cur>0 guard: conv_windows (and the recursive
-                    # -CTE oracle) open a new window whenever adding
+                    # no cur>0 guard: conv_windows opens a new window
+                    # whenever adding
                     # the turn would overflow, even off a zero-token
                     # turn after an oversized one — the folds must
                     # agree input-for-input
@@ -596,8 +578,8 @@ def window_supervision(turns: DataFrame, budget: int = CONTEXT_BUDGET) -> DataFr
     formally reuse it) and the agg exchange — but the second moves
     only the 5-field fixed-width assignment rows (never text) and is
     map-side combined to |windows| rows first. loss_ppm in integer
-    parts-per-million so the cross-engine contract is exact
-    (zero-token windows report null ppm in both engines)."""
+    parts-per-million so it compares exactly (zero-token windows
+    report null ppm)."""
     a = window_assignments(turns, budget)
     loss = F.sum(F.when(~F.col("masked"), F.col("toks")).otherwise(F.lit(0)))
     return a.groupBy("conv_id", "window_id").agg(
