@@ -145,6 +145,11 @@ def main(argv: list[str] | None = None) -> int:
     from xtract import catalog, gen, pipeline, session
 
     # validate flag combinations BEFORE any expensive work
+    # (0 would read as "off" and a negative modulus as "every turn")
+    for flag, value in (("--partitions", args.partitions),
+                        ("--parity-sample", args.parity_sample)):
+        if value is not None and value < 1:
+            ap.error(f"{flag} must be at least 1")
     if args.compact_target_mb is not None:
         if args.compact_target_mb <= 0:
             ap.error("--compact-target-mb must be a positive size")

@@ -70,3 +70,20 @@ def test_rank1_merge_rejects_fused_mode(tmp_path, monkeypatch):
         ["--input", "gen:10", "--output", out, "--merge", "rank1",
          "--checkpoint", str(tmp_path / "ck")]
     )
+
+
+def test_counts_below_one_are_usage_errors(tmp_path, monkeypatch):
+    """--parity-sample 0 used to skip the requested audit and exit 0,
+    a negative modulus audited every turn, and --partitions 0 was
+    silently replaced by the core count. Each must be a usage error,
+    raised before any session."""
+    from xtract import session
+
+    def no_session(*a, **k):
+        raise AssertionError("session built before the usage check")
+
+    monkeypatch.setattr(session, "build", no_session)
+    out = str(tmp_path / "spans")
+    for flag in ("--parity-sample", "--partitions"):
+        for value in ("0", "-3"):
+            _expect_usage_error(["--input", "gen:10", "--output", out, flag, value])

@@ -244,22 +244,6 @@ def test_weighted_sample_vs_python(spark):
         assert r.pri == pri[r.doc_id]
 
 
-def test_schema_evolution_accounting(spark):
-    rows = {r.batch: r for r in q.QUERIES["schema_evolution_read"](spark, SF).collect()}
-    assert set(rows) == {"v1", "v2"}
-    docs = q.t(spark, SF, "documents").select("doc_id", "n_chars").collect()
-    v1 = [d for d in docs if d.doc_id % 2 == 0]
-    v2 = [d for d in docs if d.doc_id % 2 == 1]
-    # v1 predates the column: every row must surface quality as NULL
-    assert rows["v1"].n_rows == len(v1)
-    assert rows["v1"].n_quality_null == len(v1)
-    assert rows["v1"].sum_quality == 0
-    assert rows["v2"].n_rows == len(v2)
-    assert rows["v2"].n_quality_null == 0
-    assert rows["v2"].sum_quality == sum(d.n_chars % 100 for d in v2)
-    assert rows["v2"].sum_text_len == sum(d.n_chars for d in v2)
-
-
 def test_salted_join_matches_plain_join(spark):
     import pyspark.sql.functions as F
 

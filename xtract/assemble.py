@@ -146,18 +146,15 @@ def merge_continuations_py(rows: list[dict[str, Any]]) -> list[dict[str, Any]]:
     return out
 
 
-def merge_continuations(spans: DataFrame) -> DataFrame:
-    """Distributed cross-turn assembly over schema.SPANS rows (bbox
-    optional — physical order falls back to seq without it)."""
-    from . import structure
-
-    has_bbox = "bbox" in spans.columns
+def _phys_rows(spans: DataFrame) -> DataFrame:
+    """The columns assembly reads, plus ``phys``: the span's top y
+    (bbox[1]) when it has a 4-element bbox, else its seq."""
     phys = (
         F.when(F.size(F.col("bbox")) == 4, F.col("bbox")[1]).otherwise(F.col("seq"))
-        if has_bbox
+        if "bbox" in spans.columns
         else F.col("seq")
     )
-    base = spans.select(
+    return spans.select(
         "conv_id",
         "turn_idx",
         "seq",
@@ -165,6 +162,12 @@ def merge_continuations(spans: DataFrame) -> DataFrame:
         "span_text",
         phys.cast("int").alias("phys"),
     )
+
+
+def _islands(rows: DataFrame) -> DataFrame:
+    """The continuation rule (module docstring) as one window over
+    ``_phys_rows`` columns: ``seg1`` is the 1-based running segment
+    number of each row within its conversation (gaps-and-islands)."""
     w = Window.partitionBy("conv_id").orderBy("turn_idx", "phys", "seq")
     prev_turn = F.lag("turn_idx").over(w)
     prev_text = F.lag("span_text").over(w)
@@ -176,7 +179,7 @@ def merge_continuations(spans: DataFrame) -> DataFrame:
         & (F.length(F.trim(prev_text)) > 0)
         & ~prev_text.rlike(f"[{TERMINAL}]\\s*$")
     )
-    flagged = base.select(
+    return rows.select(
         "conv_id",
         "turn_idx",
         "seq",
@@ -185,6 +188,14 @@ def merge_continuations(spans: DataFrame) -> DataFrame:
         "span_text",
         F.sum(F.when(continuation, 0).otherwise(1)).over(w).alias("seg1"),
     )
+
+
+def merge_continuations(spans: DataFrame) -> DataFrame:
+    """Distributed cross-turn assembly over schema.SPANS rows (bbox
+    optional — physical order falls back to seq without it)."""
+    from . import structure
+
+    flagged = _islands(_phys_rows(spans))
     parts = flagged.groupBy("conv_id", (F.col("seg1") - 1).alias("segment")).agg(
         F.min("turn_idx").alias("turn_first"),
         F.max("turn_idx").alias("turn_last"),
@@ -255,20 +266,7 @@ def merge_continuations_sparse(spans: DataFrame) -> DataFrame:
     span through the conv_id exchange."""
     from . import structure
 
-    has_bbox = "bbox" in spans.columns
-    phys = (
-        F.when(F.size(F.col("bbox")) == 4, F.col("bbox")[1]).otherwise(F.col("seq"))
-        if has_bbox
-        else F.col("seq")
-    )
-    base = spans.select(
-        "conv_id",
-        "turn_idx",
-        "seq",
-        "question_number",
-        "span_text",
-        phys.cast("int").alias("phys"),
-    )
+    base = _phys_rows(spans)
 
     span_struct = F.struct("phys", "seq", "question_number", "span_text")
     digest = base.groupBy("conv_id", "turn_idx").agg(
@@ -292,30 +290,11 @@ def merge_continuations_sparse(spans: DataFrame) -> DataFrame:
         F.col("s.phys").alias("phys"),
     )
 
-    # identical continuation/island logic as the dense path, over the
-    # boundary subset — middle spans can neither continue (their
-    # predecessor is same-turn) nor be continued into (a continuation's
-    # predecessor must be a turn-last span), so the segments agree
-    w = Window.partitionBy("conv_id").orderBy("turn_idx", "phys", "seq")
-    prev_turn = F.lag("turn_idx").over(w)
-    prev_text = F.lag("span_text").over(w)
-    continuation = (
-        prev_turn.isNotNull()
-        & F.col("question_number").isNull()
-        & (F.col("turn_idx") == prev_turn + 1)
-        & prev_text.isNotNull()
-        & (F.length(F.trim(prev_text)) > 0)
-        & ~prev_text.rlike(f"[{TERMINAL}]\\s*$")
-    )
-    flagged = boundary.select(
-        "conv_id",
-        "turn_idx",
-        "seq",
-        "phys",
-        "question_number",
-        "span_text",
-        F.sum(F.when(continuation, 0).otherwise(1)).over(w).alias("seg1"),
-    )
+    # the dense path's _islands, over the boundary subset — middle
+    # spans can neither continue (their predecessor is same-turn) nor
+    # be continued into (a continuation's predecessor must be a
+    # turn-last span), so the segments agree
+    flagged = _islands(boundary)
     parts = flagged.groupBy("conv_id", "seg1").agg(
         F.min("turn_idx").alias("turn_first"),
         F.max("turn_idx").alias("turn_last"),

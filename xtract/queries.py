@@ -1,9 +1,9 @@
 """Operator queries over the synthetic sf tables (SURVEY.md §2).
 
 No ``job.py`` path calls these. Each registered query is pinned by a
-property test in tests/test_session{4..8}_ops.py,
-tests/test_pipeline_ops.py or tests/test_longdoc.py, which recomputes
-its result independently in Python.
+property test in tests/test_session{4,6,7,8}_ops.py or
+tests/test_longdoc.py, which recomputes its result independently in
+Python.
 
 Determinism rules used throughout (so results compare exactly):
 - money/measures → integer cents via floor(x*100) (identical IEEE
@@ -46,45 +46,10 @@ def _epoch(col):
     return col.cast("timestamp").cast("long")
 
 
-@q("emb_cosine_top5")
-def emb_cosine_top5(spark, sf_dir):
-    """Brute-force cosine top-k ANN baseline over the embedding column
-    (F.aggregate/zip_with dot products; score rounded to 4dp so the
-    cross-engine float reduction order cannot flip the hash)."""
-    e = t(spark, sf_dir, "embeddings")
-    q_ = e.select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    ).filter(F.col("qid") < 20)
-    c = e.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("ce"))
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    pairs = q_.join(c, F.col("nid") != F.col("qid"))
-    # + 0.0 folds IEEE -0.0 to +0.0 so cross-engine value hashes agree
-    score = F.round(
-        dot(F.col("qe"), F.col("ce"))
-        / F.sqrt(dot(F.col("qe"), F.col("qe")))
-        / F.sqrt(dot(F.col("ce"), F.col("ce"))),
-        4,
-    ) + F.lit(0.0)
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), "nid")
-    return (
-        pairs.select("qid", "nid", score.alias("score"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("qid", "rk", "nid", "score")
-    )
-
-
 # =====================================================================
 # Long-document corpus: where capped and full-text dedup PROVABLY
 # disagree (the sf tables' docs are shorter than minhash.CAP at small
-# scales, so the capped/full twins above are indistinguishable on
+# scales, so capped and full-text kernels are indistinguishable on
 # them — this corpus is multi-KB by construction, with planted
 # near-dups whose shared content lies entirely beyond the cap)
 # =====================================================================
@@ -175,887 +140,6 @@ _SPAN_CHUNKS = (
 
 
 # =====================================================================
-# Bloom-pruned incremental exact dedup: the 100-TB membership pattern
-# (runtime bloom semi-join) with an EXACT final answer the driver's
-# hash gate can certify end-to-end
-# =====================================================================
-BLOOM_M = 1 << 16  # bits in the filter (sized for the test corpora;
-# at 100 TB m is sized per expected corpus cardinality and the bitmap
-# below stays m/64 rows REGARDLESS of corpus size)
-BLOOM_K = 4  # hash functions (seeded xxhash64)
-PFX_WORDS = 5  # membership fingerprint = md5 of the first 5 words —
-# the leading-boilerplate key (stand-in for a canonicalized URL or a
-# whole-text md5; this synthetic corpus has no cross-parity whole-text
-# duplicates, so the prefix key is what yields real membership hits)
-
-
-@q("bloom_dedup_exact")
-def bloom_dedup_exact(spark, sf_dir):
-    """Incremental EXACT dedup of an arriving batch (odd doc_ids)
-    against the standing corpus (even doc_ids), pruned by a
-    distributed Bloom filter built AS AN AGGREGATION: corpus
-    fingerprints hash to BLOOM_K bit positions (seeded xxhash64),
-    bits pack into 64-bit words via bit_or, and the resulting bitmap
-    table (m/64 rows — constant-size however large the corpus) is
-    BROADCAST to the new batch, which tests membership map-side and
-    only bloom-POSITIVE docs reach the exact-verify join. The final
-    answer is exact (the verify join removes bloom false positives),
-    so the oracle is a plain semi-join — the driver's hash gate
-    certifies the whole bloom path has no false negatives. This is
-    the shape of Spark's own runtime bloom-filter join
-    (spark.sql.optimizer.runtime.bloomFilter.enabled), made explicit
-    because the corpus side here is a table, not a join build side.
-    Reference analogue: used-image exclusion keeps a 'seen' set and
-    skips members (question_merger.py:90); at 10^12 keys that set is
-    exactly this sketch."""
-    d = t(spark, sf_dir, "documents").select(
-        "doc_id",
-        "source",
-        F.md5(
-            F.array_join(F.slice(F.split("text", " "), 1, PFX_WORDS), " ")
-        ).alias("fp"),
-    )
-    corpus = d.filter(F.col("doc_id") % 2 == 0)
-    new = d.filter(F.col("doc_id") % 2 == 1)
-
-    seeds = F.array(*[F.lit(i) for i in range(BLOOM_K)])
-
-    def with_bits(df):
-        return (
-            df.select("doc_id", "fp", F.explode(seeds).alias("si"))
-            .withColumn("bit", F.pmod(F.xxhash64("fp", "si"), F.lit(BLOOM_M)))
-            .withColumn("widx", F.expr("int(bit div 64)"))
-            .withColumn("mask", F.expr("shiftleft(1L, int(bit % 64))"))
-        )
-
-    bitmap = with_bits(corpus).groupBy("widx").agg(
-        F.bit_or("mask").alias("word")
-    )
-    positives = (
-        with_bits(new)
-        .join(F.broadcast(bitmap), "widx", "left")
-        .withColumn(
-            "hit",
-            F.coalesce(F.col("mask").bitwiseAND(F.col("word")) != 0, F.lit(False)),
-        )
-        .groupBy("doc_id")
-        .agg(F.min("hit").alias("all_hit"))
-        .filter(F.col("all_hit"))
-        .select("doc_id")
-    )
-    dup_ids = (
-        new.join(positives, "doc_id", "left_semi")  # bloom prune
-        .join(corpus.select("fp").distinct(), "fp", "left_semi")  # exact verify
-        .select("doc_id")
-        .withColumn("dup", F.lit(1))
-    )
-    return (
-        new.join(dup_ids, "doc_id", "left")
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("new_docs"),
-            F.count("dup").cast("long").alias("dup_of_corpus"),
-            (F.count("*") - F.count("dup")).cast("long").alias("admitted"),
-        )
-    )
-
-
-# =====================================================================
-# Domain-level quality gate (RefinedWeb-style): score whole SOURCES,
-# not documents — two-phase agg + broadcast scalar bar
-# =====================================================================
-@q("domain_quality_gate")
-def domain_quality_gate(spark, sf_dir):
-    """Source-level (domain-level) quality gating, the RefinedWeb /
-    CCNet move of scoring whole domains rather than documents: one
-    pass aggregates per-source totals (map-side combine; the result
-    is domain-cardinality, tiny at any corpus scale), a second
-    one-row aggregate over THAT table computes the corpus-wide bar
-    (mean chars-per-word, in exact integer millis via `div` — no
-    float division to diverge between engines), and the bar is
-    broadcast back as a scalar so the keep/drop flag costs no
-    shuffle. At 100 TB only the first agg touches the corpus; the
-    bar join is domain-table × 1 row."""
-    d = t(spark, sf_dir, "documents")
-    s = d.groupBy("source").agg(
-        F.count("*").cast("long").alias("docs"),
-        F.sum("n_chars").cast("long").alias("chars"),
-        F.sum(F.size(F.split("text", " "))).cast("long").alias("words"),
-    )
-    g = s.agg(F.expr("(1000 * sum(chars)) div sum(words)").alias("bar"))
-    return s.crossJoin(F.broadcast(g)).select(
-        "source",
-        "docs",
-        F.expr("(1000 * chars) div words").cast("long").alias("cpw_milli"),
-        F.expr("(1000 * chars) div words >= bar").alias("kept"),
-    )
-
-
-@q("cohort_retention")
-def cohort_retention(spark, sf_dir):
-    """Weekly cohort retention: users cohorted by the week of their
-    FIRST purchase, counted as active in every later week they emit
-    any event — the (cohort_week, week_offset, active_users) matrix
-    every growth dashboard draws. Plan: both the cohort table and
-    the distinct (user, week) activity table shuffle ONCE on
-    user_id, the join reuses that partitioning (no third exchange on
-    the big side), and the final matrix agg is cohort×offset —
-    weeks² rows, trivially small. The cohort table is one row per
-    purchasing user; at 100 TB it broadcast-joins if users fit,
-    else the co-partitioned sort-merge join here is already the
-    right shape."""
-    e = t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.floor(_epoch(F.col("ts")) / 604800).cast("long").alias("w"),
-    )
-    cohorts = (
-        e.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(F.min("w").alias("cw"))
-    )
-    active = e.select("user_id", "w").distinct()
-    return (
-        active.join(cohorts, "user_id")
-        .filter(F.col("w") >= F.col("cw"))
-        .groupBy(
-            F.col("cw").alias("cohort_week"),
-            (F.col("w") - F.col("cw")).cast("long").alias("week_offset"),
-        )
-        .agg(F.count_distinct("user_id").cast("long").alias("active_users"))
-    )
-
-
-# =====================================================================
-# Sparse TF-IDF document-pair similarity: the inverted-index pairwise
-# kernel (term-bucket equi-join, never all-pairs), with an
-# integer-exact contract
-# =====================================================================
-COS_DF_MAX = 40  # posting-list cap: a term in more than this many
-# docs is a stop-term for pairing (quadratic bucket guard — the same
-# role fingerprint.py's df cap plays for winnowing buckets)
-
-
-@q("tfidf_cosine_pairs")
-def tfidf_cosine_pairs(spark, sf_dir):
-    """Pairwise document similarity over SPARSE tf-idf vectors via the
-    inverted index: the term unit is the word BIGRAM (unigrams are
-    non-discriminative on this synthetic vocab — 30 distinct words,
-    each in ~78% of docs; bigrams give a 900-term Zipf-ish vocabulary),
-    weights live in (doc, term, w) posting lists, the
-    pair space is generated by a term-bucket self-equi-join (only docs
-    sharing a term ever meet — never an all-pairs product), and a
-    posting-list cap (df ≤ COS_DF_MAX) bounds every bucket, so the
-    worst-case join fan-out per term is COS_DF_MAX², independent of
-    corpus size — the same guard the winnowing index uses
-    (fingerprint.py df cap). The contract is integer-exact end to end:
-    weights are floor(tf·100·N/df) bigints, dot products and norms are
-    exact integer sums, and the only float — cos_milli — is a single
-    three-scalar expression floor(dot/sqrt(na·nb)·1000) with no
-    float-sum ordering anywhere (IEEE sqrt/div are correctly rounded,
-    so both engines floor the same double). The doc_id%5 slice keeps
-    the driver compare fast; the shape is corpus-size-free.
-    Reference analogue: pairwise span similarity for duplicate
-    questions (question_merger.py:568-609 md5 keying is the exact-dup
-    arm; this is the graded-similarity arm)."""
-    d = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    tok = (
-        d.select("doc_id", F.split("text", " ").alias("words"))
-        .filter(F.size("words") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(words)-1), i ->"
-                    " lower(concat(element_at(words, i), ' ',"
-                    " element_at(words, i+1))))"
-                )
-            ).alias("term"),
-        )
-    )
-    tf = tok.groupBy("doc_id", "term").agg(F.count("*").cast("long").alias("tf"))
-    df_ = tf.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    n_df = F.broadcast(d.agg(F.count("*").cast("long").alias("n_docs")))
-    w = (
-        tf.join(df_.filter((F.col("df") >= 2) & (F.col("df") <= COS_DF_MAX)), "term")
-        .crossJoin(n_df)
-        .select(
-            "doc_id",
-            "term",
-            F.expr("(tf * 100L * n_docs) div df").cast("long").alias("w"),
-        )
-    )
-    # norm2 rides ON the posting rows (doc-keyed window) so the term
-    # self-join carries both norms along and the posting subtree is
-    # referenced exactly twice (the self-join sides) — a norm-table
-    # formulation would re-derive it four times
-    wn = w.withColumn(
-        "norm2",
-        F.sum(F.col("w") * F.col("w"))
-        .over(Window.partitionBy("doc_id"))
-        .cast("long"),
-    )
-    a, b = wn.alias("a"), wn.alias("b")
-    dots = (
-        a.join(
-            b,
-            (F.col("a.term") == F.col("b.term"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(
-            F.count("*").cast("long").alias("shared_terms"),
-            F.sum(F.col("a.w") * F.col("b.w")).cast("long").alias("dot"),
-            F.max("a.norm2").cast("long").alias("norm2_a"),
-            F.max("b.norm2").cast("long").alias("norm2_b"),
-        )
-        .filter(F.col("shared_terms") >= 3)
-    )
-    return dots.select(
-        "doc_a",
-        "doc_b",
-        "shared_terms",
-        "dot",
-        "norm2_a",
-        "norm2_b",
-        F.floor(
-            F.col("dot")
-            / F.sqrt(F.col("norm2_a").cast("double") * F.col("norm2_b"))
-            * 1000
-        )
-        .cast("long")
-        .alias("cos_milli"),
-    )
-
-
-# =====================================================================
-# Robust JSONL ingestion with corrupt-record accounting: the
-# PERMISSIVE-reader contract a web-scale crawler feed needs
-# =====================================================================
-CORRUPT_EVERY = 37  # doc_id % CORRUPT_EVERY == 0 lines are truncated
-
-
-@q("jsonl_ingest_stats")
-def jsonl_ingest_stats(spark, sf_dir):
-    """End-to-end JSONL ingestion robustness: the corpus is serialized
-    to a JSON-lines text fixture with every CORRUPT_EVERY-th line
-    deterministically truncated mid-record (the torn-write / bad-crawl
-    case), read back through Spark's schema'd PERMISSIVE JSON reader
-    with a columnNameOfCorruptRecord accumulator, and reduced to
-    per-source admitted counts + round-tripped text length, with torn
-    lines quarantined under '__corrupt__'. The DuckDB oracle derives
-    the same accounting INDEPENDENTLY from the parquet table (it never
-    sees the fixture), so a green row certifies the whole loop:
-    JSON-escape → line write → malformed-record isolation → field
-    round-trip (chars_good only matches if every parsed text survives
-    byte-exactly). Scale shape: the reader is a line-splittable text
-    scan (parallel at any size); the agg is source-cardinality.
-    Corrupt rows carry partially-parsed fields in PERMISSIVE mode, so
-    quarantine keys on the _corrupt column, never on field nullness.
-    Reference analogue: ingest.load_result_json tolerates the
-    reference's envelope variants (ocr_result_process.py:34-77); this
-    is the same robustness contract at the line level."""
-    from . import mat
-
-    def build():
-        d = t(spark, sf_dir, "documents")
-        line = F.to_json(F.struct("doc_id", "source", "lang", "n_chars", "text"))
-        return d.select(
-            F.when(
-                F.col("doc_id") % CORRUPT_EVERY == 0,
-                F.expr(
-                    "substring(to_json(struct(doc_id, source, lang, n_chars,"
-                    " text)), 1, length(to_json(struct(doc_id, source, lang,"
-                    " n_chars, text))) - 5)"
-                ),
-            )
-            .otherwise(line)
-            .alias("value")
-        )
-
-    p = mat.materialize_text(spark, sf_dir, "docs_jsonl", build)
-    parsed = (
-        spark.read.schema(
-            "doc_id long, source string, lang string, n_chars long,"
-            " text string, _corrupt string"
-        )
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .json(p)
-    )
-    return (
-        parsed.select(
-            F.when(F.col("_corrupt").isNotNull(), "__corrupt__")
-            .otherwise(F.col("source"))
-            .alias("source"),
-            F.when(F.col("_corrupt").isNotNull(), F.lit(0))
-            .otherwise(F.length("text"))
-            .cast("long")
-            .alias("chars"),
-        )
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n_good"),
-            F.sum("chars").cast("long").alias("chars_good"),
-        )
-    )
-
-
-# =====================================================================
-# CDC compaction to SCD2 effective ranges: event stream → slowly-
-# changing-dimension history table (one row per state episode)
-# =====================================================================
-@q("scd2_user_state")
-def scd2_user_state(spark, sf_dir):
-    """Change-data-capture compaction: an append-only event stream is
-    compacted into an SCD-type-2 history table — one row per state
-    EPISODE with [valid_from, valid_to) effective ranges (open episode
-    → null valid_to) and a per-entity version counter. Runs of equal
-    consecutive states collapse via the lag-inequality predicate; the
-    range close is a lead over the surviving episode rows. All three
-    windows share the user_id partitioning key, so the whole compaction
-    costs ONE shuffle — the episode filter and the lead/row_number run
-    on the already-exchanged partitions (audit-asserted). At 10^12
-    events this is the standard log→dimension distillation: state
-    per-key is bounded by episode count, never raw event count, and no
-    join ever forms. The user_id%10 slice keeps the driver compare
-    small; ties break on event_id so both engines see one total order.
-    Reference analogue: per-conversation turn ordering before span
-    merge (the north rule's window-over-(conv_id, turn_idx) invariant)
-    — here the ordered-run compaction is the product, not a stage."""
-    e = t(spark, sf_dir, "events").filter(F.col("user_id") % 10 == 0).select(
-        "user_id", "event_id", "event_type", _epoch(F.col("ts")).alias("ts_s")
-    )
-    w_ord = Window.partitionBy("user_id").orderBy("ts_s", "event_id")
-    episodes = (
-        e.withColumn("prev", F.lag("event_type").over(w_ord))
-        .filter(F.col("prev").isNull() | (F.col("prev") != F.col("event_type")))
-        .select(
-            "user_id",
-            F.col("event_type").alias("state"),
-            F.col("ts_s").alias("valid_from"),
-        )
-    )
-    w_ep = Window.partitionBy("user_id").orderBy("valid_from")
-    return episodes.select(
-        "user_id",
-        "state",
-        F.row_number().over(w_ep).cast("long").alias("version"),
-        "valid_from",
-        F.lead("valid_from").over(w_ep).alias("valid_to"),
-    )
-
-
-# =====================================================================
-# Winsorized (outlier-trimmed) per-group statistics: exact integer-
-# rank bounds, broadcast back for the clamp — robust stats at scale
-# =====================================================================
-@q("winsorized_stats")
-def winsorized_stats(spark, sf_dir):
-    """Per-source winsorized mean of document length — the robust
-    aggregate a quality dashboard wants when a handful of megadocs
-    would otherwise own the mean. Bounds are EXACT integer ranks (the
-    5th/95th-percentile order statistics at positions (5·cnt) div 100
-    + 1 and cnt − (5·cnt) div 100 under a (value, doc_id) total order
-    — pure integer index math, no float quantile definition to
-    diverge between engines); values clamp to [lo, hi] and the mean
-    is integer millis. Plan: ONE shuffle ranks each source partition,
-    the bounds table collapses to source-cardinality rows and
-    broadcast-joins back for the clamp (audit-asserted — the big side
-    never re-shuffles for the join), and the final agg reuses the
-    source key. At 100 TB the rank window is the only corpus-sized
-    stage; swap it for approx_percentile when exactness can relax."""
-    d = t(spark, sf_dir, "documents").select("source", "doc_id", "n_chars")
-    w = Window.partitionBy("source").orderBy("n_chars", "doc_id")
-    r = d.select(
-        "source",
-        "n_chars",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(Window.partitionBy("source")).alias("cnt"),
-    )
-    b = r.groupBy("source").agg(
-        F.max("cnt").cast("long").alias("cnt"),
-        F.max(
-            F.when(F.col("rn") == F.expr("(5 * cnt) div 100") + 1, F.col("n_chars"))
-        )
-        .cast("long")
-        .alias("lo"),
-        F.max(
-            F.when(
-                F.col("rn") == F.col("cnt") - F.expr("(5 * cnt) div 100"),
-                F.col("n_chars"),
-            )
-        )
-        .cast("long")
-        .alias("hi"),
-    )
-    clamped = r.select("source", "n_chars").join(F.broadcast(b), "source").select(
-        "source",
-        "cnt",
-        "lo",
-        "hi",
-        F.least(F.greatest(F.col("n_chars"), F.col("lo")), F.col("hi")).alias(
-            "wv"
-        ),
-    )
-    return clamped.groupBy("source", "cnt", "lo", "hi").agg(
-        F.sum("wv").cast("long").alias("wins_sum"),
-        F.expr("(1000 * sum(wv)) div max(cnt)").cast("long").alias(
-            "wins_mean_milli"
-        ),
-    )
-
-
-# =====================================================================
-# Sweep-line peak concurrency: interval overlap maximum WITHOUT an
-# interval join — +1/-1 deltas and a peers-inclusive running sum
-# =====================================================================
-SESS_LEN_S = 1800  # each event opens a 30-min active interval
-
-
-@q("peak_concurrency")
-def peak_concurrency(spark, sf_dir):
-    """Peak concurrent active sessions per event type by SWEEP-LINE:
-    each event contributes a +1 delta at its timestamp and a -1 at
-    timestamp+SESS_LEN, and the live count is a running sum over the
-    per-type time order — no interval self-join (the naive overlap
-    join is O(n·k) pairs; the sweep is O(n log n) in one key shuffle).
-    Determinism under ties: the window's DEFAULT frame (RANGE
-    UNBOUNDED PRECEDING → CURRENT ROW) is peers-inclusive, so rows
-    equal on (t, delta) take one collective sum in both engines, and
-    delta ascending applies closes before opens at equal t (touching
-    intervals never count as concurrent). Output is the peak and the
-    first instant it is reached. At 10^12 events this is the standard
-    concurrency/occupancy analysis: per-key windows shuffle once;
-    no state beyond the running sum."""
-    e = t(spark, sf_dir, "events").select(
-        "event_type", _epoch(F.col("ts")).alias("t")
-    )
-    deltas = e.select(
-        "event_type", "t", F.lit(1).cast("long").alias("delta")
-    ).unionByName(
-        e.select(
-            "event_type",
-            (F.col("t") + SESS_LEN_S).alias("t"),
-            F.lit(-1).cast("long").alias("delta"),
-        )
-    )
-    w = Window.partitionBy("event_type").orderBy("t", "delta")
-    run = deltas.withColumn("live", F.sum("delta").over(w))
-    peak = run.withColumn(
-        "m", F.max("live").over(Window.partitionBy("event_type"))
-    )
-    return peak.groupBy("event_type").agg(
-        F.max("live").cast("long").alias("peak"),
-        F.min(F.when(F.col("live") == F.col("m"), F.col("t")))
-        .cast("long")
-        .alias("first_peak_t"),
-    )
-
-
-# =====================================================================
-# Referential-conformance audit: FK orphan counts across the star
-# schema in one report (anti-join per relation, dims broadcast)
-# =====================================================================
-@q("fk_orphan_audit")
-def fk_orphan_audit(spark, sf_dir):
-    """Data-conformance audit: foreign-key orphan counts for every
-    edge of the star schema in ONE report — the pre-flight check any
-    warehouse load runs before joins are trusted (an orphan row
-    silently vanishes from inner joins downstream). Each relation is
-    a left-anti join against the referenced key set; parent key sides
-    are dimension- or key-projection-sized and broadcast where small,
-    and each fact table is scanned with only its FK column (column
-    pruning — the audit never reads payload columns). Zero orphans is
-    the expected PASS state on this generator; the row exists so a
-    corrupted load shows up as a nonzero cell, not as silently
-    shrunken joins. Reference analogue: used-image/unassigned-content
-    repair keys on exactly this orphan set (question_merger.py
-    unassigned repair; SURVEY §2 J7)."""
-
-    def audit(fact, fk, parent, pk, label):
-        keys = parent.select(pk).distinct()
-        return (
-            fact.select(F.col(fk).alias("k"))
-            .join(F.broadcast(keys.withColumnRenamed(pk, "k")), "k", "left_anti")
-            .agg(F.count("*").cast("long").alias("orphans"))
-            .crossJoin(
-                F.broadcast(
-                    fact.agg(
-                        F.count("*").cast("long").alias("total_rows"),
-                        F.countDistinct(fk).cast("long").alias("distinct_keys"),
-                    )
-                )
-            )
-            .select(
-                F.lit(label).alias("relation"),
-                "total_rows",
-                "orphans",
-                "distinct_keys",
-            )
-        )
-
-    orders = t(spark, sf_dir, "orders")
-    lineitem = t(spark, sf_dir, "lineitem")
-    customer = t(spark, sf_dir, "customer")
-    part = t(spark, sf_dir, "part")
-    nation = t(spark, sf_dir, "nation")
-    return (
-        audit(orders, "o_custkey", customer, "c_custkey",
-              "orders.o_custkey->customer")
-        .unionByName(
-            audit(lineitem, "l_orderkey", orders, "o_orderkey",
-                  "lineitem.l_orderkey->orders")
-        )
-        .unionByName(
-            audit(lineitem, "l_partkey", part, "p_partkey",
-                  "lineitem.l_partkey->part")
-        )
-        .unionByName(
-            audit(customer, "c_nationkey", nation, "n_nationkey",
-                  "customer.c_nationkey->nation")
-        )
-    )
-
-
-# =====================================================================
-# Word co-occurrence association (PMI): corpus statistics in exact
-# integer arithmetic over the distinct-word/doc incidence table
-# =====================================================================
-PMI_MIN_CO = 5  # minimum co-occurring docs for a pair to be reported
-
-
-@q("word_pmi")
-def word_pmi(spark, sf_dir):
-    """Pointwise-mutual-information-style association scores for word
-    pairs: ratio = P(a,b)/(P(a)P(b)) over document incidence, held in
-    exact integer micros — floor(n_ab·N·1e6 / (n_a·n_b)) — so both
-    engines rank associations on identical arithmetic (log-PMI in
-    doubles diverges at libm boundaries; the log is monotone, so the
-    ratio carries the same ordering). The pair space is the per-doc
-    self-join over DISTINCT (doc, word) incidences — fan-out per doc
-    is bounded by the vocabulary (30 unigrams here; at web scale the
-    incidence table is pruned to a df-band first, the same posting-cap
-    discipline as tfidf_cosine_pairs). Unigram counts join back as
-    broadcast-able vocab-sized tables. This is the association-mining
-    kernel (FP-growth's first pass) every corpus-statistics suite
-    ships."""
-    d = t(spark, sf_dir, "documents")
-    wd = d.select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit("[a-z]{3,}"), 0)
-        ).alias("word"),
-    ).distinct()
-    wc = wd.groupBy("word").agg(F.count("*").cast("long").alias("n"))
-    n_df = F.broadcast(d.agg(F.count("*").cast("long").alias("n_docs")))
-    a, b = wd.alias("a"), wd.alias("b")
-    co = (
-        a.join(
-            b,
-            (F.col("a.doc_id") == F.col("b.doc_id"))
-            & (F.col("a.word") < F.col("b.word")),
-        )
-        .groupBy(F.col("a.word").alias("word_a"), F.col("b.word").alias("word_b"))
-        .agg(F.count("*").cast("long").alias("n_ab"))
-        .filter(F.col("n_ab") >= PMI_MIN_CO)
-    )
-    ca = F.broadcast(wc.select(F.col("word").alias("word_a"), F.col("n").alias("n_a")))
-    cb = F.broadcast(wc.select(F.col("word").alias("word_b"), F.col("n").alias("n_b")))
-    return (
-        co.join(ca, "word_a")
-        .join(cb, "word_b")
-        .crossJoin(n_df)
-        .select(
-            "word_a",
-            "word_b",
-            "n_ab",
-            "n_a",
-            "n_b",
-            F.expr("(n_ab * n_docs * 1000000L) div (n_a * n_b)")
-            .cast("long")
-            .alias("pmi_ratio_e6"),
-        )
-    )
-
-
-# =====================================================================
-# Exact integer 3-sigma outlier detection: cross-multiplied variance
-# (no sqrt, no float moments) — broadcast group stats, map-side flag
-# =====================================================================
-@q("outlier_3sigma")
-def outlier_3sigma(spark, sf_dir):
-    """Per-group 3σ outlier flags with EXACT integer arithmetic: the
-    test |x−μ| > 3σ is cross-multiplied into (c·x−s)² > 9(c·ss−s²)
-    (μ=s/c, σ²=(c·ss−s²)/c²), so there is no float mean, no float
-    variance accumulation order, and no sqrt — both engines evaluate
-    identical int64 expressions (μ/σ in doubles can flip a borderline
-    flag between engines; an exact inequality cannot). Plan: one
-    map-side-combinable moments agg produces a group-cardinality stats
-    table that BROADCASTS back, so flagging is map-side over the fact
-    scan — the corpus never shuffles. Value domain is floored to whole
-    units to keep every product within int64 through sf1-scale group
-    counts (bound documented: c·ss ≤ 9e17 at c≈9e5, v≤1e3); beyond
-    that, flip to per-partition compensated double moments — the
-    documented swap point."""
-    e = t(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.floor("value").cast("long").alias("v_units"),
-    )
-    s = e.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("c"),
-        F.sum("v_units").cast("long").alias("s"),
-        F.sum(F.col("v_units") * F.col("v_units")).cast("long").alias("ss"),
-    )
-    return (
-        e.join(F.broadcast(s), "event_type")
-        .filter(
-            (F.col("c") * F.col("v_units") - F.col("s"))
-            * (F.col("c") * F.col("v_units") - F.col("s"))
-            > 9 * (F.col("c") * F.col("ss") - F.col("s") * F.col("s"))
-        )
-        .select("event_id", "event_type", "v_units")
-    )
-
-
-# =====================================================================
-# Snapshot diff: added/removed/changed report between two corpus
-# versions — full-outer id join + content-hash compare
-# =====================================================================
-@q("snapshot_diff")
-def snapshot_diff(spark, sf_dir):
-    """Corpus version diff — the added/removed/changed report a data
-    registry publishes between snapshot releases. Two deterministic
-    versions are derived from the same table (v1 drops every 7th doc,
-    v2 drops every 5th and edits every 11th), then a single full-outer
-    join on doc_id with md5 content-hash comparison classifies each
-    divergent id; unchanged rows are filtered out so the report is
-    delta-sized, not corpus-sized. Plan: one co-partitioned join on
-    the id key (both sides shuffle once on doc_id), hashes computed
-    map-side in the scan projection — content bytes never transit the
-    shuffle, only 32-char digests. At 10^12 rows this is the
-    metadata-efficient diff shape: the join carries (id, digest)
-    pairs, and at petabyte scale the same plan runs over
-    per-partition digest files instead of raw text. Reference
-    analogue: the evaluator's ground-truth match join diffing
-    expected vs produced spans (SURVEY §2 J6)."""
-    d = t(spark, sf_dir, "documents")
-    v1 = d.filter(F.col("doc_id") % 7 != 0).select(
-        "doc_id", F.md5("text").alias("h1")
-    )
-    v2 = d.filter(F.col("doc_id") % 5 != 0).select(
-        "doc_id",
-        F.md5(
-            F.when(F.col("doc_id") % 11 == 0, F.upper("text")).otherwise(
-                F.col("text")
-            )
-        ).alias("h2"),
-    )
-    j = v1.join(v2, "doc_id", "full_outer")
-    return j.filter(
-        F.col("h1").isNull() | F.col("h2").isNull() | (F.col("h1") != F.col("h2"))
-    ).select(
-        "doc_id",
-        F.when(F.col("h1").isNull(), "added")
-        .when(F.col("h2").isNull(), "removed")
-        .otherwise("changed")
-        .alias("status"),
-    )
-
-
-# =====================================================================
-# k-anonymity audit: quasi-identifier group sizes — the privacy /
-# governance gate a training-data release runs before publishing
-# =====================================================================
-K_ANON = 5
-LEN_BUCKET = 100  # n_chars granularity in the quasi-identifier
-
-
-@q("k_anonymity_audit")
-def k_anonymity_audit(spark, sf_dir):
-    """k-anonymity audit over the release's quasi-identifier space
-    (lang × bucketed length): every equivalence class whose size is
-    below k is a re-identification risk — records in it are
-    distinguishable by attributes a release treats as harmless. One
-    map-side-combinable aggregation produces the class-size table
-    (quasi-space-cardinality rows, tiny at any corpus size) and the
-    flag is a pure comparison; the remediation step (suppress or
-    generalize at-risk classes) is then a broadcast semi-join of this
-    table against the corpus — the same shape as domain_quality_gate.
-    PII scrubbing removes direct identifiers; this audits the indirect
-    ones."""
-    d = t(spark, sf_dir, "documents")
-    g = d.groupBy(
-        "lang",
-        F.expr(f"n_chars div {LEN_BUCKET}").cast("long").alias("len_bucket"),
-    ).agg(F.count("*").cast("long").alias("n"))
-    return g.select(
-        "lang", "len_bucket", "n", (F.col("n") < K_ANON).alias("at_risk")
-    )
-
-
-# =====================================================================
-# Time-decayed engagement score: exponential decay with EXACT integer
-# arithmetic (power-of-two half-life via right-shift, no float pow)
-# =====================================================================
-DECAY_WEEK_S = 604800
-
-
-@q("decayed_engagement")
-def decayed_engagement(spark, sf_dir):
-    """Recency-weighted engagement per user with a one-week half-life,
-    in EXACT integer arithmetic: weight = 2^-age_weeks implemented as
-    a right-shift (v >> age_weeks), so there is no float pow/exp whose
-    last-ulp could flip a sum between engines — the decay ladder is
-    bit-exact by construction (shifts ≥ 63 clamp to zero; Java's
-    shift-count masking would otherwise wrap them). The reference
-    instant is the corpus max timestamp — a 1-row broadcast scalar —
-    so scoring is one map-side pass plus the user-keyed agg. This is
-    the feature-store recency feature (decayed clicks/spend) every
-    ranking pipeline maintains; at 10^12 events the same expression
-    runs incrementally by decaying yesterday's aggregate one notch
-    and adding today's partial."""
-    e = t(spark, sf_dir, "events").select(
-        "user_id",
-        F.floor("value").cast("long").alias("v"),
-        _epoch(F.col("ts")).alias("t"),
-    )
-    m = F.broadcast(e.agg(F.max("t").cast("long").alias("mt")))
-    return (
-        e.crossJoin(m)
-        .withColumn("age_w", F.expr(f"(mt - t) div {DECAY_WEEK_S}"))
-        .groupBy("user_id")
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.sum(
-                F.when(
-                    F.col("age_w") < 63,
-                    F.expr("shiftright(v, cast(age_w as int))"),
-                ).otherwise(F.lit(0))
-            )
-            .cast("long")
-            .alias("decayed_units"),
-        )
-    )
-
-
-# =====================================================================
-# int8-quantized embedding retrieval: per-vector symmetric
-# quantization + EXACT integer dot products — the 4x memory/bandwidth
-# scale path for vector search
-# =====================================================================
-@q("int8_ann_top3")
-def int8_ann_top3(spark, sf_dir):
-    """Vector retrieval over int8-QUANTIZED embeddings — the memory/
-    bandwidth scale path (4x smaller vectors than f32, SIMD int dot):
-    each vector is symmetrically quantized to q_i = floor(x_i·127 /
-    max|x|) map-side, and candidate scoring is a pure INTEGER dot
-    product, so the ranking contract is bit-exact across engines (the
-    only floats are the per-element quantize expressions, each a
-    fixed-shape IEEE mul/div/floor with no accumulation order — both
-    engines produce identical ints). The brute top-3 here is the
-    exactness baseline over the quantized space; composing with the
-    IVF/LSH bucketing gives quantized ANN, which is
-    precisely the IVF-PQ-family layout vector stores run at billions
-    of vectors. Zero-vector guard: scale clamps at 1e-12 (identical
-    literal both engines)."""
-    e = t(spark, sf_dir, "embeddings")
-    mx = F.greatest(
-        F.array_max(F.transform("embedding", lambda y: F.abs(y.cast("double")))),
-        F.lit(1e-12),
-    )
-    q8 = (
-        e.select("vec_id", "embedding", mx.alias("mx"))
-        .select(
-            "vec_id",
-            F.transform(
-                "embedding",
-                lambda x: F.floor(x.cast("double") * 127.0 / F.col("mx")).cast(
-                    "long"
-                ),
-            ).alias("qv"),
-        )
-    )
-    q_ = q8.select(F.col("vec_id").alias("qid"), F.col("qv").alias("qa")).filter(
-        F.col("qid") < 10
-    )
-    c = q8.select(F.col("vec_id").alias("nid"), F.col("qv").alias("ca"))
-    idot = F.aggregate(
-        F.zip_with("qa", "ca", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    pairs = q_.join(c, F.col("nid") != F.col("qid")).select(
-        "qid", "nid", idot.cast("long").alias("idot")
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("idot").desc(), "nid")
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("qid", F.col("rk").cast("long"), "nid", "idot")
-    )
-
-
-# =====================================================================
-# Integer PageRank over the near-dup candidate graph: iterative graph
-# analytics beyond CC, bit-exact via unrolled integer iterations
-# =====================================================================
-PR_ITERS = 5
-PR_R0 = 1_000_000  # initial rank mass per node (micros)
-
-
-@q("pagerank_dupgraph")
-def pagerank_dupgraph(spark, sf_dir):
-    """PageRank centrality over the production near-dup candidate
-    graph (the 128-perm banded pairs of minhash.candidate_pairs) —
-    which documents sit at the CENTER of duplication neighborhoods,
-    the signal a crawl-frontier or canonical-selection policy ranks
-    by. The contract is bit-exact through all PR_ITERS iterations
-    because the update is pure integer arithmetic: r' = 150000 +
-    (85·Σ(r div deg)) div 100 (damping 0.85 in percent, mass in
-    micros, remainders dropped identically in both engines — a float
-    PageRank could never hash-match). Spark runs the canonical
-    edges-join-ranks loop (degree joined once; each iteration is one
-    shuffle on dst — the GraphX/Pregel shape in plain DataFrames);
-    DuckDB restates it as PR_ITERS unrolled CTEs over the SAME
-    candidate-edge CTE the other dedup oracles share. Unlike cc.py's
-    O(log n)-round star contraction, rounds here are fixed-count —
-    no convergence check, so no driver .first() per round; at 10^12
-    edges each iteration is a co-partitioned join + agg, and
-    checkpointing every k rounds caps lineage exactly as cc.py does.
-    Reference analogue: rank-1 canonical election (J4) picks ONE
-    winner; this scores the whole neighborhood."""
-    from . import minhash as mh
-
-    d = t(spark, sf_dir, "documents")
-    pairs = mh.candidate_pairs(
-        d.select("doc_id", "text"), max_bucket=50
-    ).select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    edges = pairs.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    ).distinct()
-    deg = edges.groupBy("src").agg(F.count("*").cast("long").alias("d"))
-    ewd = edges.join(deg, "src")  # degree rides on the edge list
-    r = deg.select(F.col("src").alias("node"), F.lit(PR_R0).cast("long").alias("r"))
-    for _ in range(PR_ITERS):
-        r = (
-            ewd.join(r, ewd["src"] == r["node"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg(
-                F.expr("cast(150000 + (85 * sum(r div d)) div 100 as long)").alias(
-                    "r"
-                )
-            )
-        )
-    return r.select(F.col("node").alias("doc_id"), F.col("r").alias("rank_e6"))
-
-
-# =====================================================================
 # Edit-distance verification of near-dup candidates: the PRECISION
 # stage after MinHash recall, exact and integer end-to-end
 # =====================================================================
@@ -1112,8 +196,8 @@ def triangle_support(spark, sf_dir):
     candidate graph — the local-density signal that separates a tight
     duplication clique (template spam, mirrored boilerplate) from a
     chain of borderline pairs: cliques are triangle-rich, chains are
-    triangle-free. Same edge set as pagerank_dupgraph (the 128-perm
-    banded pairs), so the two graph views certify each other. The id-oriented edge list (a<b) counts each triangle
+    triangle-free. The edges are the 128-perm banded pairs. The
+    id-oriented edge list (a<b) counts each triangle
     exactly once as (x<y<z): wedge join on the middle node, then a
     closing join on (x,z) — two shuffles on node id, no node ever
     enumerates its full neighborhood in one task. At 10^12-doc scale
@@ -1157,9 +241,7 @@ def trend_slope(spark, sf_dir):
     x ≤ 719; even a 10-year window is x ≤ 9e4, Σx² per user ≤ 1e9·n)
     and makes the slope unit interpretable (value units per hour).
     One shuffle: the user_id agg; the min-ts subquery is a 1-row
-    broadcast. This is the feature-store trend feature next to
-    decayed_engagement's recency feature — same scan, same shuffle
-    key, so at 10^12 events the two compute in one pass."""
+    broadcast."""
     e = t(spark, sf_dir, "events").select(
         "user_id", _epoch(F.col("ts")).alias("t"), F.floor("value").cast("long").alias("y")
     )
@@ -1365,345 +447,6 @@ def chunk_overlap(spark, sf_dir):
         F.col("ci").cast("long").alias("chunk_idx"),
         F.size(chunk).cast("long").alias("n_words"),
         F.md5(F.array_join(chunk, " ")).alias("chunk_md5"),
-    )
-
-
-# =====================================================================
-# Exact set-similarity join via prefix filtering (AllPairs / PPJoin
-# family): the deterministic exact complement to MinHash banding
-# =====================================================================
-PJ_TAU_NUM, PJ_TAU_DEN = 1, 2  # Jaccard threshold tau = 1/2
-PJ_SLICE = 3  # doc_id % PJ_SLICE == 0 keeps the driver compare fast
-
-
-@q("prefix_jaccard_pairs")
-def prefix_jaccard_pairs(spark, sf_dir):
-    """EXACT Jaccard similarity join (bigram sets, tau = 1/2) via
-    PREFIX FILTERING — the AllPairs/PPJoin family (Bayardo et al.
-    WWW'07, Xiao et al. WWW'08), the deterministic exact complement to
-    the probabilistic MinHash band join. Tokens get a global total
-    order by ascending document frequency (rarest first, term string
-    as tie-break); each doc keeps only its prefix of
-    p = |s| − ceil(tau·|s|) + 1 rarest tokens, and the candidate join
-    runs on prefix tokens only — the prefix-filter theorem guarantees
-    any pair with Jaccard ≥ tau shares a prefix token, so no true pair
-    is lost, while the rarest-first order makes candidate buckets the
-    SMALLEST possible (df-ascending prefixes are the whole point: a
-    stopword never generates candidates). Verification is one
-    array_intersect per candidate over the per-doc sorted token
-    arrays — no second shuffle explosion. The threshold test is exact
-    integer arithmetic (den·i ≥ num·(sa+sb−i)); jac_ppm is an integer
-    floor-division. The ORACLE is the brute-force all-pairs join, so a
-    green row proves the filter is lossless end to end, not merely
-    self-consistent. At 100 TB: candidate volume is bounded by
-    sum_t(prefix_df(t)^2) with df-ascending prefixes — the standard
-    web-scale exact-dedup shape; MinHash (minhash.candidate_pairs) remains
-    the recall path when tau must go lower. Reference analogue: exact
-    duplicate-question keying (question_merger.py:568-609) is the
-    tau=1 degenerate case.
-
-    Two further lossless components of the same canon keep the dense
-    worst case (this synthetic corpus: ~930 bigrams over 1.7k docs,
-    prefix filter nearly saturated) cheap: the AllPairs LENGTH filter
-    (J >= tau forces den*|b| >= num*|a| and den*|a| >= num*|b|, so
-    size-incompatible pairs never become candidates) and a dense
-    integer TERM DICTIONARY in (df, term) order, so prefix membership
-    becomes a tid comparison and verification intersects sorted int
-    arrays instead of strings. The dictionary window is
-    VOCABULARY-scale (|terms| rows — the classic dictionary build),
-    never corpus-scale; the bijection term<->tid leaves every output
-    column bit-identical."""
-    d = t(spark, sf_dir, "documents").filter(F.col("doc_id") % PJ_SLICE == 0)
-    tok = (
-        d.select("doc_id", F.split("text", " ").alias("words"))
-        .filter(F.size("words") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(words)-1), i ->"
-                    " lower(concat(element_at(words, i), ' ',"
-                    " element_at(words, i+1))))"
-                )
-            ).alias("term"),
-        )
-        .distinct()
-    )
-    # dictionary-scale window (constant partition key silences the
-    # single-partition warning; the input is |vocab| rows by design)
-    tdict = (
-        tok.groupBy("term")
-        .agg(F.count("*").cast("long").alias("df"))
-        .withColumn(
-            "tid",
-            F.row_number()
-            .over(Window.partitionBy(F.lit(0)).orderBy("df", "term"))
-            .cast("long"),
-        )
-    )
-    ranked = tok.join(F.broadcast(tdict.select("term", "tid")), "term").select(
-        "doc_id", "tid"
-    )
-    # prefix length p = s - ceil(tau*s) + 1, all-integer; df-ascending
-    # order == tid order by construction
-    ceil_tau_s = F.expr(
-        f"(({PJ_TAU_NUM} * sz) + {PJ_TAU_DEN} - 1) div {PJ_TAU_DEN}"
-    )
-    sized = ranked.withColumn(
-        "pos",
-        F.row_number().over(Window.partitionBy("doc_id").orderBy("tid")),
-    ).withColumn(
-        "sz",
-        F.count("*").over(Window.partitionBy("doc_id")).cast("long"),
-    )
-    pref = sized.filter(
-        F.col("pos") <= F.col("sz") - ceil_tau_s + 1
-    ).select("doc_id", "tid", "sz")
-    cand = (
-        pref.alias("pa")
-        .join(
-            pref.alias("pb"),
-            (F.col("pa.tid") == F.col("pb.tid"))
-            & (F.col("pa.doc_id") < F.col("pb.doc_id"))
-            # AllPairs length filter: den*|b| >= num*|a| and vice versa
-            & (PJ_TAU_DEN * F.col("pb.sz") >= PJ_TAU_NUM * F.col("pa.sz"))
-            & (PJ_TAU_DEN * F.col("pa.sz") >= PJ_TAU_NUM * F.col("pb.sz")),
-        )
-        .select(
-            F.col("pa.doc_id").alias("doc_a"),
-            F.col("pb.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    arrs = ranked.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("tid")).alias("terms"),
-        F.count("*").cast("long").alias("sz"),
-    )
-    joined = (
-        cand.join(
-            arrs.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("terms").alias("terms_a"),
-                F.col("sz").alias("size_a"),
-            ),
-            "doc_a",
-        )
-        .join(
-            arrs.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("terms").alias("terms_b"),
-                F.col("sz").alias("size_b"),
-            ),
-            "doc_b",
-        )
-        .withColumn(
-            "inter_sz",
-            F.size(F.array_intersect("terms_a", "terms_b")).cast("long"),
-        )
-    )
-    return (
-        joined.filter(
-            PJ_TAU_DEN * F.col("inter_sz")
-            >= PJ_TAU_NUM * (F.col("size_a") + F.col("size_b") - F.col("inter_sz"))
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "inter_sz",
-            "size_a",
-            "size_b",
-            F.expr(
-                "(inter_sz * 1000000) div (size_a + size_b - inter_sz)"
-            ).alias("jac_ppm"),
-        )
-    )
-
-
-# =====================================================================
-# Zone-map / file-skipping layout audit: per-partition min-max ranges
-# and their overlap — the physical-layout half of the 100-TB story
-# =====================================================================
-ZONE_N = 8
-
-
-@q("zonemap_audit")
-def zonemap_audit(spark, sf_dir):
-    """Physical-layout ZONE-MAP audit: materializes the same rows
-    under two hive-partitioned layouts — 'range' (bucket =
-    doc_id div ceil((max+1)/N), contiguous key ranges) and 'mod'
-    (bucket = doc_id % N, round-robin scatter) — then reports each
-    partition's min/max key and how many sibling partitions its
-    range OVERLAPS. min/max-per-file is exactly what parquet zone
-    maps / Iceberg manifests / partition pruning consult: with the
-    range layout a point or range predicate on doc_id prunes to 1
-    file (n_overlaps = 0 certifies pairwise-disjoint ranges); with
-    the mod layout every file spans the whole key domain
-    (n_overlaps = N−1) and NO file is ever skippable. At 100 TB this
-    difference is the scan bill: clustering the write (range
-    partition / sort) buys predicate-driven file skipping for free,
-    and this audit is the job you run to prove a table's layout
-    still has it. Both engines read the same partitioned bytes
-    (Spark partition discovery vs DuckDB hive_partitioning), so the
-    hash also certifies the hive round-trip. The overlap self-join
-    runs on the N-row summary, never on data rows — audit cost is
-    O(files), not O(rows)."""
-    from . import mat
-
-    def build():
-        d = t(spark, sf_dir, "documents").select("doc_id")
-        mx = d.agg(F.max("doc_id").alias("mx"))
-        rng = (
-            d.crossJoin(F.broadcast(mx))
-            .select(
-                "doc_id",
-                F.lit("range").alias("layout"),
-                F.expr(f"doc_id div ((mx + {ZONE_N}) div {ZONE_N})")
-                .cast("long")
-                .alias("bucket"),
-            )
-        )
-        mod = d.select(
-            "doc_id",
-            F.lit("mod").alias("layout"),
-            (F.col("doc_id") % ZONE_N).cast("long").alias("bucket"),
-        )
-        return rng.unionByName(mod)
-
-    z = mat.materialize_partitioned(
-        spark, sf_dir, "zones", ["layout", "bucket"], build
-    )
-    agg = z.groupBy("layout", F.col("bucket").cast("long").alias("bucket")).agg(
-        F.count("*").cast("long").alias("n_rows"),
-        F.min("doc_id").cast("long").alias("min_id"),
-        F.max("doc_id").cast("long").alias("max_id"),
-    )
-    a, b = agg.alias("a"), agg.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.layout") == F.col("b.layout"))
-            & (F.col("a.bucket") != F.col("b.bucket"))
-            & (F.col("a.min_id") <= F.col("b.max_id"))
-            & (F.col("b.min_id") <= F.col("a.max_id")),
-            "left",
-        )
-        .groupBy(
-            F.col("a.layout").alias("layout"),
-            F.col("a.bucket").alias("bucket"),
-            F.col("a.n_rows").alias("n_rows"),
-            F.col("a.min_id").alias("min_id"),
-            F.col("a.max_id").alias("max_id"),
-        )
-        .agg(
-            F.count_if(F.col("b.bucket").isNotNull())
-            .cast("long")
-            .alias("n_overlaps")
-        )
-    )
-
-
-# =====================================================================
-# Forward-fill (last-observation-carried-forward) — the time-series
-# gap-fill window every event warehouse needs
-# =====================================================================
-@q("ffill_last_price")
-def ffill_last_price(spark, sf_dir):
-    """Forward-fill / last-observation-carried-forward: every event
-    carries the user's most recent observed purchase price (integer
-    cents), NULL until the first purchase — the canonical time-series
-    gap-fill. One window over ONE user_id exchange, ordered by
-    (ts, event_id) so ties are deterministic in both engines; rows
-    before any observation stay NULL (an honest fill never invents a
-    leading value). Spark F.last(expr, ignorenulls=True) vs DuckDB
-    last_value(... ignore nulls) — the per-event output (not an agg)
-    pins the full window semantics row by row on the hash gate. At
-    100 TB: partition by user, running-state window — the same
-    single-shuffle shape as sessionization; no join, no second
-    exchange. The user_id % 7 slice keeps the driver compare small;
-    the shape is corpus-size-free."""
-    ev = t(spark, sf_dir, "events").filter(F.col("user_id") % 7 == 0)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    obs = F.when(F.col("event_type") == "purchase", _cents(F.col("value")))
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.last(obs, ignorenulls=True).over(w).alias("last_price_c"),
-    )
-
-
-# =====================================================================
-# Equal-frequency bucketing (ntile) — decile profile of a measure
-# =====================================================================
-@q("decile_stats")
-def decile_stats(spark, sf_dir):
-    """Equal-frequency bucketing: ntile(10) over (n_chars, doc_id) —
-    the doc_id tie-break makes the bucket assignment a total order, so
-    both engines split identical ties identically (ntile without a
-    tie-break is nondeterministic under equal keys and would flap the
-    hash). Per-decile count/min/max/sum profiles the length
-    distribution (mass per bucket rather than cut points). NOTE the honest
-    scale caveat: a global ntile is a single-partition window; at
-    100 TB you swap it for the two-phase global rank (range-partition
-    sort + per-partition offsets from a broadcast partition-count
-    scan) or approx-quantile bucketing. The decile AGGREGATE
-    output is 10 rows either way."""
-    d = t(spark, sf_dir, "documents").select(
-        F.ntile(10)
-        .over(Window.orderBy("n_chars", "doc_id"))
-        .cast("long")
-        .alias("decile"),
-        "n_chars",
-    )
-    return d.groupBy("decile").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.min("n_chars").cast("long").alias("min_chars"),
-        F.max("n_chars").cast("long").alias("max_chars"),
-        F.sum("n_chars").cast("long").alias("sum_chars"),
-    )
-
-
-# =====================================================================
-# Inverted-index construction as aggregation: ordered posting lists,
-# content-certified by digest
-# =====================================================================
-@q("inverted_postings")
-def inverted_postings(spark, sf_dir):
-    """Inverted-index CONSTRUCTION as a pure aggregation: term →
-    (document frequency, ordered posting list), with the posting list
-    certified by md5 over the comma-joined ascending doc_ids so the
-    driver hash pins every posting without shipping the list. One
-    tokenize-explode-distinct map stage and ONE term-keyed exchange —
-    index building is exactly a groupBy, which is why it scales: each
-    reducer owns a term shard and emits its postings independently
-    (this is the shuffle Lucene/ES segment building does with extra
-    steps). At 100 TB the collect_list per term is bounded by df — the
-    df-cap discipline the winnowing index and tfidf_cosine_pairs
-    already use applies verbatim (cap hot terms or segment their
-    postings); the synthetic 30-word vocab keeps every list small
-    here. sort_array(collect_list) vs string_agg(... order by) makes
-    the order contract explicit in both engines."""
-    tok = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(F.split("text", " ")).alias("w"))
-        .filter(F.col("w") != "")
-        .select("doc_id", F.lower("w").alias("term"))
-        .distinct()
-    )
-    return tok.groupBy("term").agg(
-        F.count("*").cast("long").alias("df"),
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.sort_array(F.collect_list("doc_id")),
-                    lambda x: x.cast("string"),
-                ),
-                ",",
-            )
-        ).alias("postings_md5"),
     )
 
 
@@ -2017,9 +760,7 @@ def zorder_layout(spark, sf_dir):
     oracle is exact; at 100 TB you'd swap ntile for a broadcast
     boundary table from approxQuantile (256 boundaries per dimension,
     O(1) state) and the write becomes repartitionByRange(zkey) — the
-    zone-map math and the audit stay identical. Complements
-    zonemap_audit (which certifies 1-D range vs scatter layouts on
-    real hive-partitioned bytes)."""
+    zone-map math and the audit stay identical."""
     e = t(spark, sf_dir, "events").select(
         "event_id",
         F.col("user_id").alias("x"),
@@ -2151,57 +892,6 @@ def weighted_sample(spark, sf_dir):
         p.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= WS_K)
         .select("lang", "doc_id", "n_chars", "pri")
-    )
-
-
-# =====================================================================
-# Schema-evolution read (mergeSchema / union_by_name): later write
-# batches add columns; one read reconciles them
-# =====================================================================
-@q("schema_evolution_read")
-def schema_evolution_read(spark, sf_dir):
-    """Schema-EVOLUTION source: a real lakehouse table is thousands of
-    write batches, and later batches add columns (here batch v2 adds
-    `quality`). The query materializes two batches with genuinely
-    different parquet schemas under one root (hive dir batch=v1 /
-    batch=v2), reads them back with Spark's mergeSchema + partition
-    discovery, and accounts for the evolved column per batch — v1
-    rows must surface quality as NULL (never a default, never an
-    error). DuckDB reads the same bytes with union_by_name +
-    hive_partitioning, so the driver hash certifies both engines
-    reconcile the evolved schema identically. At 100 TB mergeSchema's
-    footer-sampling cost is the documented caveat — production pins
-    the merged schema in the catalog (Iceberg/Delta do exactly this)
-    and this query is the audit that the data still conforms."""
-    from . import mat
-
-    def v1():
-        return (
-            t(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 2 == 0)
-            .select("doc_id", F.col("n_chars").cast("long").alias("text_len"))
-        )
-
-    def v2():
-        return (
-            t(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 2 == 1)
-            .select(
-                "doc_id",
-                F.col("n_chars").cast("long").alias("text_len"),
-                (F.col("n_chars") % 100).cast("long").alias("quality"),
-            )
-        )
-
-    root = mat.materialize_multi(
-        spark, sf_dir, "evolved", {"batch=v1": v1, "batch=v2": v2}
-    )
-    df = spark.read.option("mergeSchema", "true").parquet(root)
-    return df.groupBy("batch").agg(
-        F.count("*").cast("long").alias("n_rows"),
-        F.count_if(F.col("quality").isNull()).cast("long").alias("n_quality_null"),
-        F.coalesce(F.sum("quality"), F.lit(0)).cast("long").alias("sum_quality"),
-        F.sum("text_len").cast("long").alias("sum_text_len"),
     )
 
 

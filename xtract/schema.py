@@ -65,25 +65,6 @@ PAYLOAD = T.StructType(
     ]
 )
 
-# ------------------------------------------------- detection (UDF output)
-# One entry per validated question-number match
-# (question_splitter.py:97-113 + located geometry :266-306).
-MATCH = T.StructType(
-    [
-        T.StructField("number", T.IntegerType(), False),
-        T.StructField("position", T.IntegerType(), False),
-        T.StructField("matched_len", T.IntegerType(), False),
-        T.StructField("pattern_idx", T.IntegerType(), False),
-        # top y of the located question-number line (absolute page
-        # coords); null if the line lookup failed in v1 mode.
-        T.StructField("top_y", T.IntegerType(), True),
-        T.StructField("confidence", T.DoubleType(), False),
-        T.StructField("estimated", T.BooleanType(), False),
-    ]
-)
-
-MATCHES = T.ArrayType(MATCH)
-
 # ---------------------------------------------------------------- output
 # One row per extracted question span per turn (FIXTURES.md §4, plus a
 # per-turn ``seq`` capturing the reference's post-sort list order so
