@@ -177,6 +177,9 @@ def main(argv: list[str] | None = None) -> int:
     # rank1 exists only in the relational plan
     if args.merge == "rank1" and args.mode != "relational":
         ap.error("--merge rank1 requires --mode relational")
+    # only the jsonl arm has malformed lines to quarantine
+    if args.quarantine and not args.input.startswith("jsonl:"):
+        ap.error("--quarantine requires --input jsonl:")
 
     spark = session.build(app="xtract-job", shuffle_partitions=args.partitions)
     t0 = time.monotonic()
@@ -279,10 +282,17 @@ def main(argv: list[str] | None = None) -> int:
     if args.export_jsonl:
         import pyspark.sql.functions as F
 
-        # one JSON object per span; text sink keeps the export a pure
-        # map over the written parquet (no shuffle)
+        from xtract import schema
+
+        # one JSON object per span, with exactly the span columns (a
+        # checkpointed read also carries the bucket column pk) and
+        # nulls kept, so every object has the same keys; text sink
+        # keeps the export a pure map over the written parquet
+        cols = F.struct(*schema.SPANS.fieldNames())
         (
-            written.select(F.to_json(F.struct("*")).alias("value"))
+            written.select(
+                F.to_json(cols, {"ignoreNullFields": "false"}).alias("value")
+            )
             .write.mode("overwrite")
             .text(args.export_jsonl)
         )

@@ -87,3 +87,21 @@ def test_counts_below_one_are_usage_errors(tmp_path, monkeypatch):
     for flag in ("--parity-sample", "--partitions"):
         for value in ("0", "-3"):
             _expect_usage_error(["--input", "gen:10", "--output", out, flag, value])
+
+
+def test_quarantine_requires_jsonl_input(tmp_path, monkeypatch):
+    """Only the jsonl: arm has malformed lines to quarantine, so
+    --quarantine with any other input used to run, write no sink and
+    exit 0. It must be a usage error, raised before any session."""
+    from xtract import session
+
+    def no_session(*a, **k):
+        raise AssertionError("session built before the usage check")
+
+    monkeypatch.setattr(session, "build", no_session)
+    quar = tmp_path / "quarantine"
+    _expect_usage_error(
+        ["--input", "gen:10", "--output", str(tmp_path / "spans"),
+         "--quarantine", str(quar)]
+    )
+    assert not os.path.exists(quar)

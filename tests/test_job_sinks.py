@@ -15,7 +15,7 @@ from pathlib import Path
 import duckdb
 import pytest
 
-from xtract import fingerprint, gen, oracle
+from xtract import fingerprint, gen, oracle, schema
 
 ROOT = Path(__file__).resolve().parents[1]
 N_CONVS = 40
@@ -196,6 +196,20 @@ def test_export_round_trips(job):
     assert sorted(exported) == sorted(
         _rows(f"select conv_id, turn_idx, seq from {_spans_sql(paths)}")
     )
+
+
+def test_export_keys_are_span_columns(job):
+    """The run is checkpointed, so the written table reads back with
+    the bucket column pk; the export must still carry exactly the span
+    columns, in every object."""
+    _, paths = job
+    want = set(schema.SPANS.fieldNames())
+    n = 0
+    for f in Path(paths["export-jsonl"]).glob("part-*"):
+        for ln in f.read_text(encoding="utf-8").splitlines():
+            assert set(json.loads(ln)) == want
+            n += 1
+    assert n > 0
 
 
 # the dense assembly restated in SQL: physical order → lag continuation

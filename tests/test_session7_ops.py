@@ -12,9 +12,6 @@ import pyspark.sql.functions as F
 
 from xtract import structure
 
-SF = "/root/testdata/sf0.001"
-
-
 
 def test_role_transitions_vs_python(derived_transcripts):
     turns = derived_transcripts
@@ -187,29 +184,6 @@ def test_conv_windows_partition_turns_exactly(derived_transcripts):
             assert r.oversize == (r.window_toks > structure.CONTEXT_BUDGET)
             if r.oversize:
                 assert r.n_turns == 1
-
-
-def test_bpe_merge_round_vs_python(spark):
-    import re
-    from collections import Counter
-
-    from xtract import queries as q
-
-    docs = q.t(spark, SF, "documents").select("text").collect()
-    wc = Counter()
-    for d in docs:
-        for w in re.findall(r"[a-z0-9]+", d.text):
-            wc[w] += 1
-    pc = Counter()
-    for w, c in wc.items():
-        for i in range(len(w) - 1):
-            pc[w[i : i + 2]] += c
-    want = sorted(pc.items(), key=lambda kv: (-kv[1], kv[0]))[: q.BPE_TOP]
-    got = sorted(
-        ((r.pair, r.cnt) for r in q.QUERIES["bpe_merge_round"](spark, SF).collect()),
-        key=lambda kv: (-kv[1], kv[0]),
-    )
-    assert got == want
 
 
 def test_conv_windows_mega_conversation(spark):

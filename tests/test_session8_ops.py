@@ -1,18 +1,14 @@
 """Property tests for the session-8 operators: SFT loss-mask spans
-(offset reconstruction vs an exact Python replay of the running sum),
-turn-template detection (vs a pure-Python normalize+count model), and
-BPE encoding against the fixed merge table (vs a pure-Python referee
-implementing the same delimiter-complete replace contract, plus the
-overlap edge cases that motivated the bracketed-token string form).
+(offset reconstruction vs an exact Python replay of the running sum)
+and turn-template detection (vs a pure-Python normalize+count model).
 window_assignments (the per-turn form of the --windows fold) is the
 second reference for conv_windows."""
 import re
 from collections import Counter, defaultdict
 
-from xtract import queries as q
-from xtract import structure
+import pyspark.sql.functions as F
 
-SF = "/root/testdata/sf0.001"
+from xtract import structure
 
 
 def _toks(text):
@@ -56,10 +52,10 @@ def test_loss_mask_spans_tile(derived_transcripts):
         r.conv_id: r.total
         for r in turns.groupBy("conv_id")
         .agg(
-            q.F.sum(
-                q.F.size(
-                    q.F.regexp_extract_all(
-                        q.F.col("text"), q.F.lit("[a-z0-9]+"), 0
+            F.sum(
+                F.size(
+                    F.regexp_extract_all(
+                        F.col("text"), F.lit("[a-z0-9]+"), 0
                     )
                 )
             ).alias("total")
@@ -107,53 +103,6 @@ def test_turn_templates_vs_python(derived_transcripts):
     for (role, norm), v in want.items():
         key = hashlib.md5(norm.encode()).hexdigest()
         assert got[(role, key)] == v
-
-
-def _bpe_ref(word):
-    """Pure-Python referee for the encode contract: bracket each char,
-    then for each merge in rank order do ONE left-to-right
-    non-overlapping replace pass (Python str.replace semantics —
-    the exact contract both engines implement)."""
-    s = "".join(f"<{c}>" for c in word)
-    for m in q.BPE_MERGES:
-        s = s.replace(f"<{m[0]}><{m[1]}>", f"<{m[0]}~{m[1]}>")
-    return s
-
-
-def test_bpe_encode_vs_python(spark):
-    out = {r.w: (r.wc, r.n_tokens, r.encoded) for r in
-           q.QUERIES["bpe_encode"](spark, SF).collect()}
-    docs = q.t(spark, SF, "documents").select("text").collect()
-    freq = Counter(
-        w for r in docs for w in re.findall(r"[a-z0-9]+", r.text)
-    )
-    assert set(out) == set(freq)
-    for w, wc in freq.items():
-        enc = _bpe_ref(w)
-        assert out[w] == (wc, enc.count("<"), enc), w
-
-
-def test_bpe_encode_overlap_edges(spark, tmp_path):
-    """The delimiter-complete bracketed form makes the left-to-right
-    non-overlapping replace unambiguous: runs like 'ananan' (merge
-    'an') must merge greedily left-to-right without a merged token
-    ever re-matching, and a merged token must not false-match a later
-    merge that shares a character."""
-    import pandas as pd
-
-    words = ["ananan", "aanan", "thth", "tthhe", "thee", "errere"]
-    df = spark.createDataFrame(pd.DataFrame({"text": [" ".join(words)]}))
-    import os
-    d = str(tmp_path)
-    # reuse the query against a one-doc corpus written as documents
-    df.write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
-    got = {r.w: r.encoded for r in
-           q.QUERIES["bpe_encode"](spark, d).collect()}
-    for w in words:
-        assert got[w] == _bpe_ref(w), w
-    # spot-pin the two interesting shapes explicitly
-    assert got["ananan"] == "<a~n><a~n><a~n>"
-    assert got["thth"] == "<t~h><t~h>"
 
 
 def test_window_assignments_match_conv_windows(derived_transcripts):
@@ -213,25 +162,6 @@ def test_window_supervision_vs_python(derived_transcripts):
     # the metric finds what it exists to find: not every window is
     # fully supervised
     assert any(v[3] is not None and v[3] < 1_000_000 for v in got.values())
-
-
-def test_bpe_doc_tokens_vs_python(spark):
-    """Occurrence-level recount: per doc, sum of referee token counts
-    over every word occurrence must equal the broadcast-joinback
-    result."""
-    docs = q.t(spark, SF, "documents").select("doc_id", "text").collect()
-    want = {}
-    for r in docs:
-        ws = re.findall(r"[a-z0-9]+", r.text)
-        want[r.doc_id] = (
-            len(ws),
-            sum(_bpe_ref(w).count("<") for w in ws),
-        )
-    got = {
-        r.doc_id: (r.n_words, r.n_bpe_tokens)
-        for r in q.QUERIES["bpe_doc_tokens"](spark, SF).collect()
-    }
-    assert got == want
 
 
 def test_window_folds_agree_on_zero_token_turns(spark):

@@ -168,8 +168,8 @@ def signatures(
     ).mapInPandas(kernel, schema=SIG_SCHEMA)
 
 
-MAX_BUCKET = 50  # default band-bucket skew cap (shared: candidate_pairs,
-# and the queries that call it)
+MAX_BUCKET = 50  # default band-bucket skew cap (capped_band_keys and
+# candidate_pairs; only tests call this module)
 
 
 def capped_band_keys(

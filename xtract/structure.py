@@ -194,58 +194,6 @@ def turn_counters(final_spans: DataFrame) -> DataFrame:
     )
 
 
-def turn_audit(turns: DataFrame) -> DataFrame:
-    """Turn-sequence integrity audit over a transcript table
-    (conv_id, turn_idx, role, text, ts): per-conversation counters
-    for duplicate turn_idx, largest index gap, consecutive same-role
-    runs, empty turns, and timestamp regressions. One window pass
-    over (conv_id ORDER BY turn_idx) feeding a conv_id agg that
-    reuses the window's partitioning — a single shuffle, on the same
-    key every downstream extraction stage uses. Precondition check
-    for the stable-turn-ordering guarantee the span/merge stages
-    (assemble.py, split.py) assume."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    f = turns.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "text",
-        "ts",
-        F.lag("turn_idx").over(w).alias("pidx"),
-        F.lag("role").over(w).alias("prole"),
-        F.lag("ts").over(w).alias("pts"),
-    )
-    return f.groupBy("conv_id").agg(
-        F.count("*").cast("long").alias("n_turns"),
-        (F.count("*") - F.countDistinct("turn_idx")).cast("long").alias("n_dup_idx"),
-        F.coalesce(
-            F.max(
-                F.when(
-                    F.col("pidx").isNotNull()
-                    & (F.col("turn_idx") - F.col("pidx") - 1 > 0),
-                    F.col("turn_idx") - F.col("pidx") - 1,
-                ).otherwise(F.lit(0))
-            ),
-            F.lit(0),
-        ).cast("long").alias("max_gap"),
-        F.sum(
-            F.when(
-                F.col("prole").isNotNull() & (F.col("role") == F.col("prole")), 1
-            ).otherwise(0)
-        ).cast("long").alias("n_role_repeat"),
-        F.sum(
-            F.when(
-                F.col("text").isNull() | (F.length(F.trim("text")) == 0), 1
-            ).otherwise(0)
-        ).cast("long").alias("n_empty"),
-        F.sum(
-            F.when(
-                F.col("pts").isNotNull() & (F.col("ts") < F.col("pts")), 1
-            ).otherwise(0)
-        ).cast("long").alias("n_ts_regress"),
-    )
-
-
 # ---------------------------------------------------------------------
 # Transcript-level analytics over (conv_id, turn_idx, role, text, tool,
 # ts) — the input-hint table. Each op keys on conv_id, the same
