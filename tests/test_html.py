@@ -1,9 +1,10 @@
-"""HTML main-content extraction: DOM parse kernel + native jusText-style
-classification recover exactly the planted article paragraphs."""
+"""HTML main-content extraction: the parse-and-classify kernel recovers
+exactly the planted article paragraphs and equals the relational
+reference (DOM block rows classified in SQL, aggregated per turn)."""
 import pyspark.sql.functions as F
 import pytest
 
-from xtract import gen, html
+from xtract import gen, html, schema
 
 N = 40
 
@@ -60,27 +61,93 @@ def test_classification_boilerplate_rates(spark, pages):
 
 
 def test_malformed_html(spark):
-    import pandas as pd
-
-    from xtract import schema
-
+    """The parser tolerates garbage: an unclosed ``<p>`` and a stray
+    ``<<<`` give two short blocks, both boilerplate."""
     df = spark.createDataFrame(
-        pd.DataFrame(
-            [
-                {
-                    "conv_id": "x",
-                    "turn_idx": 0,
-                    "role": "tool",
-                    "text": "<p>unclosed <div><<< & rubbish",
-                    "tool": None,
-                    "ts": pd.Timestamp("2026-01-01"),
-                }
-            ]
-        ),
+        [("x", 0, "tool", "<p>unclosed <div><<< & rubbish", None, None)],
         schema=schema.TRANSCRIPTS,
     )
-    rows = html.dom_blocks(df).collect()
-    assert isinstance(rows, list)  # parser tolerates garbage, no crash
+    blocks = [
+        (r.block_ord, r.tag, r.text, r.n_chars, r.n_tokens, r.in_chrome)
+        for r in html.dom_blocks(df).collect()
+    ]
+    assert blocks == [
+        (0, "p", "unclosed", 8, 1, False),
+        (1, "div", "<<< & rubbish", 13, 1, False),
+    ]
+    assert [tuple(r) for r in html.extract_main_content(df).collect()] == [
+        ("x", 0, "", 2, 0, 0, 21)
+    ]
+
+
+def reference_main_content(transcripts):
+    """The relational form: SQL-classified block rows aggregated per
+    turn (good blocks' text in ``block_ord`` order)."""
+    good = F.col("label") == "good"
+    blocks = html.classify(html.dom_blocks(transcripts))
+    return blocks.groupBy("conv_id", "turn_idx").agg(
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(F.when(good, F.struct("block_ord", "text")))),
+                lambda s: s["text"],
+            ),
+            "\n",
+        ).alias("main_text"),
+        F.count("*").alias("blocks_total"),
+        F.count_if(good).cast("long").alias("blocks_good"),
+        F.sum(F.when(good, F.col("n_chars")).otherwise(0)).cast("long").alias("chars_good"),
+        F.sum("n_chars").cast("long").alias("chars_total"),
+    )
+
+
+def _p(text):
+    return f"<p>{text}</p>"
+
+
+def _linked(k, rest):
+    return f"<p><a href='#'>{'x' * k}</a>{'y' * rest}</p>"
+
+
+# Each threshold page holds a block exactly on the threshold (good)
+# followed by one just past it (boilerplate).
+EDGE_PAGES = {
+    "chrome": "<nav>" + "the cat sat on the mat and " * 10 + "</nav>"
+    "<footer><a href='#'>Terms</a></footer>",
+    "empty": "",
+    "null": None,
+    "tags_only": "<div><p></p></div>",
+    "cjk": _p("求下列方程的解并写出完整的求解过程与验算步骤"),
+    "link_0.4": _linked(80, 120) + _linked(81, 119),
+    "len_20": _p("题" * 20) + _p("题" * 19),
+    "cjk_0.5": _p("题" * 20 + "z" * 20) + _p("题" * 19 + "z" * 21),
+    "len_80": _p("the " + "q" * 76) + _p("the " + "q" * 75),
+    "stop_0.25": _p("the " + " ".join(["w" * 25] * 3)) + _p("the " + " ".join(["w" * 19] * 4)),
+    "len_200": _p("z" * 200) + _p("z" * 199),
+}
+
+
+def test_main_content_equals_relational_reference(spark, pages):
+    edges = spark.createDataFrame(
+        [(cid, 0, "tool", text, None, None) for cid, text in EDGE_PAGES.items()],
+        schema=schema.TRANSCRIPTS,
+    )
+    df = pages.unionByName(edges)
+    got = html.extract_main_content(df).cache()
+    ref = reference_main_content(df)
+    assert got.count() == N + len(EDGE_PAGES) - 3
+    assert got.exceptAll(ref).count() == 0
+    assert ref.exceptAll(got).count() == 0
+
+    rows = {r.conv_id: r for r in got.filter(~F.col("conv_id").startswith("page")).collect()}
+    got.unpersist()
+    assert set(EDGE_PAGES) - set(rows) == {"empty", "null", "tags_only"}
+    assert (rows["chrome"].main_text, rows["chrome"].blocks_good) == ("", 0)
+    assert rows["chrome"].blocks_total == 2
+    assert rows["cjk"].main_text == "求下列方程的解并写出完整的求解过程与验算步骤"
+    for cid in ("link_0.4", "len_20", "cjk_0.5", "len_80", "stop_0.25", "len_200"):
+        r = rows[cid]
+        assert (r.blocks_total, r.blocks_good) == (2, 1), cid
+        assert r.main_text == html.parse_blocks_py(EDGE_PAGES[cid])[0]["text"], cid
 
 
 def test_read_html_directory_chains_into_extraction(spark, tmp_path):
@@ -120,3 +187,13 @@ def test_read_html_directory_chains_into_extraction(spark, tmp_path):
     assert nums == [1, 2]
     assert all(r.conv_id != "chrome.html" or r.question_number is None
                for r in spans.collect())
+
+
+def test_read_html_keeps_file_names(spark, tmp_path):
+    """conv_id is the file's own name, not its URI-escaped form."""
+    names = ["my exam.html", "a+b.html", "100%.html", "x%20y.html"]
+    for name in names:
+        (tmp_path / name).write_text(_p("z" * 200), encoding="utf-8")
+    rows = html.read_html(spark, str(tmp_path)).collect()
+    assert sorted(r.conv_id for r in rows) == sorted(names)
+    assert {r.text for r in rows} == {"z" * 200}

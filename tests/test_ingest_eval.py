@@ -1,5 +1,7 @@
 """Envelope ingestion (S1) on the reference's own input sample, and
 the evaluation metrics job (A5/G6/J6)."""
+import json
+
 import pyspark.sql.functions as F
 
 from xtract import evaluator, gen, ingest, pipeline
@@ -24,6 +26,18 @@ def test_envelope_ingest_runs_pipeline(spark):
     assert info.subject == ""
     assert info.time_limit == "60分钟"
     assert info.total_score == "100"
+
+
+def test_envelope_conv_id_is_file_name(spark, tmp_path):
+    """conv_id is the file's own name, not its URI-escaped form."""
+    names = ["my exam.json", "a+b.json", "100%.json", "x%20y.json"]
+    env = {"layoutParsingResults": [{"prunedResult": {
+        "width": 100, "height": 200, "parsing_res_list": []}}]}
+    for name in names:
+        (tmp_path / name).write_text(json.dumps(env), encoding="utf-8")
+    rows = ingest.read_envelopes(spark, str(tmp_path / "*.json")).collect()
+    assert sorted(r.conv_id for r in rows) == sorted(names)
+    assert all(json.loads(r.text)["page"] == {"width": 100, "height": 200} for r in rows)
 
 
 def test_envelope_relational_agrees(spark):

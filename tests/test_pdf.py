@@ -207,6 +207,16 @@ def test_read_pdfs_binary_source(spark, tmp_path):
     ]
 
 
+def test_read_pdfs_keeps_file_names(spark, tmp_path):
+    """conv_id is the file's own stem, unescaped: a space, ``+`` and
+    ``%`` survive."""
+    page = pdf.make_pdf([b for b in BLOCKS if b["block_label"] != "image"], 2000, 2800)
+    for name in ["my exam_p2.pdf", "a+b 100%.pdf", "x%20y_p1.pdf"]:
+        (tmp_path / name).write_bytes(page)
+    got = sorted((r.conv_id, r.turn_idx) for r in pdf.read_pdfs(spark, str(tmp_path)).collect())
+    assert got == [("a+b 100%.pdf", 0), ("my exam", 2), ("x%20y", 1)]
+
+
 def test_mutation_fuzz_never_raises():
     """Byte-level mutation fuzz: corrupt valid PDFs at random offsets
     (seeded) — the parser must return None or a well-formed payload,

@@ -9,7 +9,7 @@ from contextlib import redirect_stdout
 import pyspark.sql.functions as F
 import pytest
 
-from xtract import assemble, fingerprint, gen, parity, pdf, pipeline, sources, split, structure
+from xtract import assemble, fingerprint, gen, html, parity, pdf, pipeline, sources, split, structure
 
 
 def plan_of(df, mode: str = "formatted") -> str:
@@ -63,6 +63,11 @@ def test_pdf_path_is_narrow(spark):
         pdf.pdf_to_transcripts(pdf.gen_pdf_turns(spark, 8, partitions=2)), mode="fused"
     )
     assert "Exchange" not in plan_of(spans)
+
+
+def test_html_main_content_is_narrow(spark):
+    main = html.extract_main_content(gen.html_transcripts(spark, 8, partitions=2))
+    assert "Exchange" not in plan_of(main)
 
 
 def test_fingerprint_kernel_is_narrow_and_pruned(spark, tr, tmp_path):

@@ -1,19 +1,18 @@
 """HTML main-content extraction (north rule: "HTML boilerplate strip,
 PDF/layout parse, DOM heuristics").
 
-Two-stage Spark design:
+One narrow kernel (Arrow ``mapInPandas``, zero exchanges, the same
+shape as ``pdf.extract_pdf_turns``): per turn, the stdlib
+``html.parser`` tokenizes the document into DOM block elements with
+raw features (tag, text, char counts, link chars, ancestor flags) —
+byte-stream tokenization is inherently sequential per document — and
+jusText-style context-free rules (structural-tag veto, link density,
+length gates, CJK and stopword density) label each block, so only the
+per-turn main text and retention counts cross back to the JVM.
 
-1. **DOM parse** (Arrow ``mapInPandas`` kernel, stdlib
-   ``html.parser`` — byte-stream tokenization is inherently
-   sequential per document): one row per DOM block element with raw
-   features (tag, text, char counts, link chars, ancestor flags).
-2. **Boilerplate classification** (native Spark SQL): jusText-style
-   context-free rules — link density, stopword density, length gates,
-   structural-tag vetoes — as a when-chain over the feature columns,
-   so Catalyst sees and can reorder/prune them.
-
-The per-block feature extraction is deterministic, so the same
-classification is expressible in any SQL engine.
+``dom_blocks`` + ``classify`` state the same rules relationally (one
+row per block, the when-chain as native SQL); they are the reference
+the kernel is tested against, not a second path of the engine.
 """
 from __future__ import annotations
 
@@ -25,6 +24,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
+
+from .sources import read_files
 
 BLOCK_TAGS = {
     "p",
@@ -183,8 +184,8 @@ BLOCKS_SCHEMA = T.StructType(
 
 
 def dom_blocks(transcripts: DataFrame) -> DataFrame:
-    """Stage 1: turn HTML payloads → one row per DOM block with raw
-    features. Narrow (mapInPandas), zero shuffles."""
+    """Reference form, stage 1: turn HTML payloads → one row per DOM
+    block with raw features. Narrow (mapInPandas), zero shuffles."""
     names = [f.name for f in BLOCKS_SCHEMA.fields]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -207,8 +208,9 @@ def dom_blocks(transcripts: DataFrame) -> DataFrame:
 
 
 def classify(blocks: DataFrame) -> DataFrame:
-    """Stage 2: jusText-style context-free classification as native
-    SQL (the when-chain order is the rule priority)."""
+    """Reference form, stage 2: jusText-style context-free
+    classification as native SQL (the when-chain order is the rule
+    priority; ``is_good`` restates it for the kernel)."""
     link_density = F.col("link_chars") / F.greatest(F.col("n_chars"), F.lit(1))
     stop_density = F.col("stop_hits") / F.greatest(F.col("n_tokens"), F.lit(1))
     cjk_density = F.col("cjk_chars") / F.greatest(F.col("n_chars"), F.lit(1))
@@ -239,16 +241,12 @@ def read_html(spark, path: str) -> DataFrame:
     name, turn_idx = 0). Chains into pipeline.extract: a scraped exam
     page goes HTML → clean text → question spans (payload kind (a),
     raw merged text)."""
-    raw = (
-        spark.read.text(path + "/*.html", wholetext=True)
-        .select(
-            F.element_at(F.split(F.input_file_name(), "/"), -1).alias("conv_id"),
-            F.lit(0).alias("turn_idx"),
-            F.col("value").alias("text"),
-        )
+    raw = read_files(spark, path + "/*.html").select(
+        F.col("name").alias("conv_id"),
+        F.lit(0).alias("turn_idx"),
+        F.col("content").cast("string").alias("text"),
     )
-    main = extract_main_content(raw)
-    return main.select(
+    return extract_main_content(raw).select(
         "conv_id",
         "turn_idx",
         F.lit("tool").alias("role"),
@@ -258,30 +256,70 @@ def read_html(spark, path: str) -> DataFrame:
     )
 
 
+MAIN_CONTENT = T.StructType(
+    [
+        T.StructField("conv_id", T.StringType(), False),
+        T.StructField("turn_idx", T.IntegerType(), False),
+        T.StructField("main_text", T.StringType(), False),
+        T.StructField("blocks_total", T.LongType(), False),
+        T.StructField("blocks_good", T.LongType(), False),
+        T.StructField("chars_good", T.LongType(), False),
+        T.StructField("chars_total", T.LongType(), False),
+    ]
+)
+
+
+def is_good(b: dict) -> bool:
+    """``classify``'s when-chain over one ``parse_blocks_py`` block:
+    same constants, same order."""
+    n = b["n_chars"]
+    if b["in_chrome"]:  # DOM-structural veto
+        return False
+    if b["link_chars"] / max(n, 1) > MAX_LINK_DENSITY:
+        return False
+    if n < MIN_LEN_SHORT:
+        return False
+    if b["cjk_chars"] / max(n, 1) >= GOOD_CJK_DENSITY:
+        return True
+    if b["stop_hits"] / max(b["n_tokens"], 1) >= GOOD_STOPWORD_DENSITY and n >= GOOD_MIN_LEN:
+        return True
+    return n >= LONG_GOOD_LEN
+
+
 def extract_main_content(transcripts: DataFrame) -> DataFrame:
-    """End-to-end: per turn, the ordered concatenation of good blocks
-    (the extracted main content) plus retention stats. One shuffle
-    (the per-turn agg)."""
-    good = classify(dom_blocks(transcripts))
-    return good.groupBy("conv_id", "turn_idx").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            F.col("label") == "good",
-                            F.struct("block_ord", "text"),
-                        )
-                    )
-                ),
-                lambda s: s["text"],
-            ),
-            "\n",
-        ).alias("main_text"),
-        F.count("*").cast("long").alias("blocks_total"),
-        F.count_if(F.col("label") == "good").cast("long").alias("blocks_good"),
-        F.sum(F.when(F.col("label") == "good", F.col("n_chars")).otherwise(0))
-        .cast("long")
-        .alias("chars_good"),
-        F.sum("n_chars").cast("long").alias("chars_total"),
+    """Per turn, the good blocks' text joined by ``"\\n"`` in document
+    order (the extracted main content) plus retention stats, as ONE
+    narrow kernel: parse, classify and per-turn aggregation run in the
+    Python worker, so block rows never reach the JVM and the plan has
+    no exchange. A turn with no blocks (empty, null or tag-only text)
+    gives no row; an all-boilerplate turn gives ``main_text = ""``.
+
+    Equal to ``classify(dom_blocks(...))`` grouped per
+    ``(conv_id, turn_idx)`` (tests/test_html.py), except that two input
+    rows with the same ``(conv_id, turn_idx)`` give two output rows,
+    not one merged row; ``read_html`` never produces such rows."""
+    names = MAIN_CONTENT.fieldNames()
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            cols: dict[str, list] = {k: [] for k in names}
+            for conv_id, turn_idx, text in zip(
+                pdf["conv_id"], pdf["turn_idx"], pdf["text"]
+            ):
+                blocks = parse_blocks_py(text)
+                if not blocks:
+                    continue
+                good = [b for b in blocks if is_good(b)]
+                cols["conv_id"].append(conv_id)
+                cols["turn_idx"].append(int(turn_idx))
+                cols["main_text"].append("\n".join(b["text"] for b in good))
+                cols["blocks_total"].append(len(blocks))
+                cols["blocks_good"].append(len(good))
+                cols["chars_good"].append(sum(b["n_chars"] for b in good))
+                cols["chars_total"].append(sum(b["n_chars"] for b in blocks))
+            if cols["conv_id"]:
+                yield pd.DataFrame(cols, columns=names)
+
+    return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
+        kernel, schema=MAIN_CONTENT
     )

@@ -15,6 +15,7 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from . import schema
+from .sources import read_files
 
 ENVELOPE = T.StructType(
     [
@@ -64,13 +65,9 @@ def read_envelopes(spark: SparkSession, path: str) -> DataFrame:
     """Directory/glob of envelope JSON files → transcripts-shaped rows
     (conv_id = file name, turn_idx = 0) whose ``text`` is the
     re-serialized payload, ready for pipeline.extract/analyze."""
-    raw = spark.read.text(path, wholetext=True).select(
-        F.element_at(F.split(F.input_file_name(), "/"), -1).alias("conv_id"),
-        F.col("value"),
-    )
-    payload = envelope_to_payload(F.col("value"))
-    return raw.select(
-        "conv_id",
+    payload = envelope_to_payload(F.col("content").cast("string"))
+    return read_files(spark, path).select(
+        F.col("name").alias("conv_id"),
         F.lit(0).alias("turn_idx"),
         F.lit("tool").alias("role"),
         F.to_json(payload).alias("text"),

@@ -46,6 +46,7 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from . import schema
+from .sources import read_files
 
 # ------------------------------------------------------------------ lexer
 
@@ -725,17 +726,12 @@ def read_pdfs(spark: SparkSession, path: str) -> DataFrame:
     AND the cross-turn assembler (assemble.merge_continuations) as one
     ordered conversation. Files without the suffix get their own
     single-turn conversation (conv_id = file name, turn_idx = 0)."""
-    fname = F.element_at(F.split(F.col("path"), "/"), -1)
+    fname = F.col("name")
     page_no = F.regexp_extract(fname, r"^(.+)_p(\d+)\.pdf$", 2)
     stem = F.regexp_extract(fname, r"^(.+)_p(\d+)\.pdf$", 1)
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
-        .select(
-            F.when(page_no != "", stem).otherwise(fname).alias("conv_id"),
-            F.when(page_no != "", page_no.cast("int")).otherwise(0).alias("turn_idx"),
-            F.col("content").alias("payload"),
-        )
+    raw = read_files(spark, path, "*.pdf").select(
+        F.when(page_no != "", stem).otherwise(fname).alias("conv_id"),
+        F.when(page_no != "", page_no.cast("int")).otherwise(0).alias("turn_idx"),
+        F.col("content").alias("payload"),
     )
     return pdf_to_transcripts(raw)

@@ -19,6 +19,21 @@ from . import schema
 from .config import RAW_LINE_HEIGHT, RAW_PAGE_WIDTH
 
 
+def read_files(spark, path: str, glob_filter: str | None = None) -> DataFrame:
+    """Files at ``path`` (a file, directory or glob) → (name, content:
+    binary), ``name`` being the file's own name. binaryFile's ``path``
+    column keeps names as written; ``input_file_name()`` and
+    ``_metadata.file_name`` are URI-escaped (``my exam.html`` →
+    ``my%20exam.html``), and ``url_decode`` would turn ``+`` into a
+    space."""
+    reader = spark.read.format("binaryFile")
+    if glob_filter:
+        reader = reader.option("pathGlobFilter", glob_filter)
+    return reader.load(path).select(
+        F.element_at(F.split("path", "/"), -1).alias("name"), "content"
+    )
+
+
 def parse_payloads(transcripts: DataFrame) -> DataFrame:
     """transcripts → (conv_id, turn_idx, role, tool, ts, blocks, lines).
 
