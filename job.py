@@ -11,7 +11,7 @@ Generate 100 synthetic conversations and extract::
 Extract from an existing transcripts table (parquet dir)::
 
     spark-submit --py-files xtract.zip job.py \
-        --input /data/transcripts --output /data/spans --mode fused
+        --input /data/transcripts --output /data/spans
 """
 from __future__ import annotations
 
@@ -49,18 +49,6 @@ def main(argv: list[str] | None = None) -> int:
         "--output",
         required=True,
         help="span sink: parquet path or table:<catalog.db.name>",
-    )
-    ap.add_argument(
-        "--mode",
-        default="fused",
-        choices=["fused", "relational"],
-        help="execution strategy (fused = zero-shuffle Arrow kernel)",
-    )
-    ap.add_argument(
-        "--merge",
-        default="greedy",
-        choices=["greedy", "rank1"],
-        help="image-assignment strategy for --mode relational",
     )
     ap.add_argument("--partitions", type=int, default=None, help="shuffle partitions")
     ap.add_argument(
@@ -173,10 +161,6 @@ def main(argv: list[str] | None = None) -> int:
             "is the table analogue)"
         )
 
-    # the fused kernel has one image-assignment strategy (greedy);
-    # rank1 exists only in the relational plan
-    if args.merge == "rank1" and args.mode != "relational":
-        ap.error("--merge rank1 requires --mode relational")
     # only the jsonl arm has malformed lines to quarantine
     if args.quarantine and not args.input.startswith("jsonl:"):
         ap.error("--quarantine requires --input jsonl:")
@@ -224,17 +208,10 @@ def main(argv: list[str] | None = None) -> int:
         from xtract import ckpt
 
         result = ckpt.run_with_checkpoint(
-            spark,
-            df,
-            args.output,
-            args.checkpoint,
-            run_id=args.run_id,
-            mode=args.mode,
-            merge=args.merge,
+            spark, df, args.output, args.checkpoint, run_id=args.run_id
         )
     else:
-        spans = pipeline.extract(df, mode=args.mode, merge=args.merge)
-        catalog.write_ref(spans, args.output)
+        catalog.write_ref(pipeline.extract(df), args.output)
         result = {"partitions_done": None}
 
     if args.compact_target_mb:
@@ -360,7 +337,6 @@ def main(argv: list[str] | None = None) -> int:
             {
                 "turns": n_turns,
                 "spans": n_spans,
-                "mode": args.mode,
                 "sec": round(wall, 2),
                 "turns_per_sec": round(n_turns / wall, 1),
                 **(

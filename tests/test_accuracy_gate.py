@@ -223,7 +223,7 @@ def test_relational_plan_same_metrics(spark, corpus):
     makes this near-redundant, but the gate is cheap and pins the
     quality floor to BOTH physical strategies)."""
     tr, gt = corpus
-    spans = pipeline.extract(tr, mode="relational", merge="greedy")
+    spans = pipeline.extract(tr, mode="relational")
     m = evaluator.evaluate(spans, gt).collect()[0].asDict()
     assert m["detection_f1"] >= 0.95, m
     assert m["bbox_iou_mean"] >= 0.85, m

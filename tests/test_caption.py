@@ -1,7 +1,7 @@
 """R10 caption-join override (docs/试卷切题问题分析与优化方案.md:118-133):
 an image whose caption names its question (第N题图) binds to question N
 even when a different question is spatially closer — in the oracle,
-the fused kernel, the relational-greedy plan, AND the rank1 plan."""
+the fused kernel AND the relational plan."""
 import json
 
 import pandas as pd
@@ -94,10 +94,9 @@ def test_oracle_caption_without_target_falls_back():
 def test_caption_parity_all_plans(spark):
     tr = _one_turn_df(spark, _payload_caption_override())
     exp = {1: (9,), 2: ()}
-    for mode, merge in (("fused", None), ("relational", "greedy"), ("relational", "rank1")):
-        kw = {"merge": merge} if merge else {}
-        rows = [r.asDict() for r in pipeline.extract(tr, mode=mode, **kw).collect()]
-        assert _assignment(rows) == exp, (mode, merge)
+    for mode in ("fused", "relational"):
+        rows = [r.asDict() for r in pipeline.extract(tr, mode=mode).collect()]
+        assert _assignment(rows) == exp, mode
 
 
 def test_caption_leads_image_id_order(spark):
@@ -139,10 +138,9 @@ def test_caption_leads_image_id_order(spark):
     rows = oracle.extract_turn(payload)
     assert {r["question_number"]: tuple(r["image_ids"]) for r in rows} == exp
     tr = _one_turn_df(spark, payload)
-    for mode, merge in (("fused", None), ("relational", "greedy"), ("relational", "rank1")):
-        kw = {"merge": merge} if merge else {}
-        got = [r.asDict() for r in pipeline.extract(tr, mode=mode, **kw).collect()]
-        assert _assignment(got) == exp, (mode, merge)
+    for mode in ("fused", "relational"):
+        got = [r.asDict() for r in pipeline.extract(tr, mode=mode).collect()]
+        assert _assignment(got) == exp, mode
 
 
 def test_fullwidth_digit_caption_binds_all_plans(spark):
@@ -159,7 +157,6 @@ def test_fullwidth_digit_caption_binds_all_plans(spark):
     exp = {r["question_number"]: tuple(r["image_ids"]) for r in rows}
     assert exp == {1: (9,), 2: ()}  # caption override wins
     tr = _one_turn_df(spark, text)
-    for mode, merge in (("fused", None), ("relational", "greedy"), ("relational", "rank1")):
-        kw = {"merge": merge} if merge else {}
-        got = [r.asDict() for r in pipeline.extract(tr, mode=mode, **kw).collect()]
-        assert _assignment(got) == exp, (mode, merge)
+    for mode in ("fused", "relational"):
+        got = [r.asDict() for r in pipeline.extract(tr, mode=mode).collect()]
+        assert _assignment(got) == exp, mode

@@ -1,12 +1,10 @@
-"""Full-text (cap=None) fingerprint/minhash kernels: chunked-kernel
-exactness against the pure-Python oracles on multi-KB docs, and the
-planted mid-document-duplicate recall that the capped kernels MISS —
+"""Full-text (cap=None) winnowing fingerprint kernel: chunked-kernel
+exactness against the pure-Python oracle on multi-KB docs, and the
+planted mid-document-duplicate recall that the capped kernel MISSES —
 the r2 semantic gap (prefix-only similarity) closed and pinned."""
-import numpy as np
 import pytest
 
 from xtract import fingerprint as fp
-from xtract import minhash as mh
 
 
 def _doc(seed: int, n: int) -> str:
@@ -41,38 +39,10 @@ def test_fingerprints_chunked_equals_single_pass(monkeypatch):
     monkeypatch.undo()
 
 
-@pytest.mark.parametrize("n", [10, 400, 2500])
-def test_signature_uncapped_matches_naive(n):
-    t = _doc(3, n)
-    got = mh.signature_np(t, cap=None)
-    want = mh.signature_naive(t, cap=None)
-    if want is None:
-        assert got is None
-    else:
-        assert got.tolist() == want
-
-
-def test_signature_chunked_equals_single_pass(monkeypatch):
-    t = _doc(5, 4000)
-    want = mh.signature_np(t, cap=None).tolist()
-    for chunk in (128, 333, 3999):
-        monkeypatch.setattr(mh, "CHUNK", chunk)
-        assert mh.signature_np(t, cap=None).tolist() == want, chunk
-    monkeypatch.undo()
-
-
-def test_shingle_stream_chunked_contiguous(monkeypatch):
-    t = _doc(9, 2000)
-    want = mh.shingle_hashes_np(t, cap=None).tolist()
-    monkeypatch.setattr(mh, "CHUNK", 100)
-    assert mh.shingle_hashes_np(t, cap=None).tolist() == want
-    monkeypatch.undo()
-
-
 # ------------------------------------------------- planted recall gap
 def _mid_dup_corpus():
-    """Two 6 KB docs: distinct prefixes (so capped kernels see nothing
-    shared) but an identical 1.5 KB block planted at char ~3000."""
+    """Two 6 KB docs: distinct prefixes (so the capped kernel sees
+    nothing shared) but an identical 1.5 KB block planted at char ~3000."""
     shared = _doc(42, 1500)
     a = _doc(1, 3000) + shared + _doc(2, 1500)
     b = _doc(3, 3000) + shared + _doc(4, 1500)
@@ -91,38 +61,3 @@ def test_winnow_mid_document_dup_needs_full_text():
     # winnowing guarantee: a >= K+W-1 char match shares a fingerprint;
     # a 1.5 KB planted block shares many
     assert len(full) >= 50
-
-
-def test_minhash_mid_document_dup_needs_full_text():
-    a, b = _mid_dup_corpus()
-    sa, sb = mh.signature_np(a, cap=mh.CAP), mh.signature_np(b, cap=mh.CAP)
-    est_capped = mh.estimated_jaccard(sa.tolist(), sb.tolist())
-    fa, fb = mh.signature_np(a, cap=None), mh.signature_np(b, cap=None)
-    est_full = mh.estimated_jaccard(fa.tolist(), fb.tolist())
-    # prefixes are unrelated -> capped estimate ~0; full text sees the
-    # planted quarter-document overlap
-    assert est_capped <= 0.05
-    assert est_full >= 0.12
-
-
-def test_spark_full_pairs_find_planted_mid_dup(spark):
-    """End-to-end over the Spark kernels: candidate_pairs(cap=None)
-    surfaces the planted pair; the capped kernel does not. The shared
-    block dominates (Jaccard ≈ 0.77, far above the 32×4 S-curve
-    midpoint ~0.42) so banding fires; the distinct 600-char prefixes
-    exceed CAP=400, so the capped kernel sees only unrelated text."""
-    shared = _doc(77, 4000)
-    a = _doc(1, 600) + shared
-    b = _doc(3, 600) + shared
-    rows = [(1, a), (2, b)] + [(10 + i, _doc(100 + i, 4000)) for i in range(6)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    full = {
-        (r["doc_a"], r["doc_b"])
-        for r in mh.candidate_pairs(docs, cap=None).collect()
-    }
-    capped = {
-        (r["doc_a"], r["doc_b"])
-        for r in mh.candidate_pairs(docs, cap=mh.CAP).collect()
-    }
-    assert (1, 2) in full
-    assert (1, 2) not in capped

@@ -7,6 +7,7 @@ overwrite and would otherwise treat the ref as a literal directory
 name, then crash at the final span-count readback after doing all the
 work (review finding)."""
 import os
+import re
 
 import pytest
 
@@ -54,24 +55,6 @@ def test_compact_rejects_btable_ref():
     )
 
 
-def test_rank1_merge_rejects_fused_mode(tmp_path, monkeypatch):
-    """The fused kernel always assigns images greedily, so --merge
-    rank1 without --mode relational used to run and silently ignore
-    the flag. It must be a usage error, raised before any session."""
-    from xtract import session
-
-    def no_session(*a, **k):
-        raise AssertionError("session built before the usage check")
-
-    monkeypatch.setattr(session, "build", no_session)
-    out = str(tmp_path / "spans")
-    _expect_usage_error(["--input", "gen:10", "--output", out, "--merge", "rank1"])
-    _expect_usage_error(
-        ["--input", "gen:10", "--output", out, "--merge", "rank1",
-         "--checkpoint", str(tmp_path / "ck")]
-    )
-
-
 def test_counts_below_one_are_usage_errors(tmp_path, monkeypatch):
     """--parity-sample 0 used to skip the requested audit and exit 0,
     a negative modulus audited every turn, and --partitions 0 was
@@ -105,3 +88,23 @@ def test_quarantine_requires_jsonl_input(tmp_path, monkeypatch):
          "--quarantine", str(quar)]
     )
     assert not os.path.exists(quar)
+
+
+def test_option_surface(capsys):
+    """The job's option surface is pinned: adding or removing an
+    option must show up as an edit to this list. --mode and --merge
+    are gone (the fused kernel is the one extraction plan), so they
+    are usage errors like any unknown option."""
+    with pytest.raises(SystemExit) as exc:
+        job.main(["--help"])
+    assert exc.value.code == 0
+    flags = set(re.findall(r"(?<![\w-])--[a-z][a-z0-9-]*", capsys.readouterr().out))
+    assert flags - {"--help"} == {
+        "--input", "--quarantine", "--output", "--partitions",
+        "--exam-info", "--stats", "--assembled", "--assembled-mode",
+        "--groups", "--dup-pairs", "--dup-clusters", "--compact-target-mb",
+        "--windows", "--loss-mask", "--export-jsonl", "--parity-sample",
+        "--checkpoint", "--run-id",
+    }
+    _expect_usage_error(["--input", "gen:10", "--output", "o", "--mode", "relational"])
+    _expect_usage_error(["--input", "gen:10", "--output", "o", "--merge", "rank1"])

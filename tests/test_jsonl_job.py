@@ -1,8 +1,10 @@
 """Production-surface JSONL ingestion: `job.py --input jsonl:` parses
 transcript deliveries with PERMISSIVE quarantine, extracts from the
 good rows, reports the quarantined count on the job's JSON line, and
-writes the raw malformed lines to the --quarantine sink. Run via
-subprocess because job.main owns (and stops) its SparkSession."""
+writes the raw malformed lines to the --quarantine sink. A good line
+without a text field reaches the --windows and --loss-mask sinks as
+a 0-token turn. Run via subprocess because job.main owns (and stops)
+its SparkSession."""
 import json
 import os
 import subprocess
@@ -35,12 +37,22 @@ def test_jsonl_input_arm(tmp_path):
     torn.insert(2, "")
     torn.append("   ")
     n_torn = n_torn_json + 2
+    # a good line with no text field (text is NULL) in the slot of the
+    # torn line 3, so it sits between two normal turns of its
+    # conversation
+    assert json.loads(lines[3])["turn_idx"] == 3
+    torn.append(json.dumps(
+        {"conv_id": "conv00000000", "turn_idx": 3, "role": "assistant"}
+    ))
+    n_good = len(lines) - n_torn_json + 1
     src = tmp_path / "delivery.jsonl"
     src.write_text("\n".join(torn) + "\n")
 
     out = str(tmp_path / "spans")
     quar = str(tmp_path / "quarantine")
     export = str(tmp_path / "export")
+    windows = str(tmp_path / "windows")
+    loss_mask = str(tmp_path / "loss_mask")
     proc = subprocess.run(
         [
             sys.executable,
@@ -49,6 +61,8 @@ def test_jsonl_input_arm(tmp_path):
             "--output", out,
             "--quarantine", quar,
             "--export-jsonl", export,
+            "--windows", windows,
+            "--loss-mask", loss_mask,
             "--partitions", "8",
         ],
         capture_output=True,
@@ -59,7 +73,7 @@ def test_jsonl_input_arm(tmp_path):
     assert proc.returncode == 0, proc.stderr[-2000:]
     line = json.loads(proc.stdout.strip().splitlines()[-1])
     assert line["quarantined"] == n_torn
-    assert line["turns"] == len(lines) - n_torn_json
+    assert line["turns"] == n_good
     assert line["spans"] > 0
 
     # quarantine sink holds exactly the torn raw lines
@@ -85,3 +99,24 @@ def test_jsonl_input_arm(tmp_path):
         f"select count(*), count(distinct conv_id), sum(seq) from '{out}/*.parquet'"
     ).fetchone()
     assert exp == par
+
+    # every good turn, the text-less one included, lands in one window
+    assert duckdb.sql(
+        f"select sum(n_turns) from '{windows}/*.parquet'"
+    ).fetchone()[0] == n_good
+    # loss-mask spans: one per good turn, no null offsets, and each
+    # conversation's spans tile its token stream from 0
+    lm = f"'{loss_mask}/*.parquet'"
+    assert duckdb.sql(
+        f"select count(*), count(end_tok) from {lm}"
+    ).fetchone() == (n_good, n_good)
+    assert duckdb.sql(
+        "select end_tok - start_tok from " + lm
+        + " where conv_id = 'conv00000000' and turn_idx = 3"
+    ).fetchone() == (0,)
+    gaps = duckdb.sql(
+        "select count(*) from (select start_tok, end_tok, coalesce(lag(end_tok)"
+        " over (partition by conv_id order by turn_idx), 0) as prev_end"
+        f" from {lm}) where start_tok <> prev_end or end_tok < start_tok"
+    ).fetchone()[0]
+    assert gaps == 0

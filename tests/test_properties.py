@@ -158,18 +158,6 @@ def test_fingerprints_chunk_invariance_any_text(text, chunk):
         fp.CHUNK = orig
 
 
-@given(_any_text)
-@settings(max_examples=60, deadline=None)
-def test_minhash_signature_matches_naive_any_text(text):
-    from xtract import minhash as mh
-
-    got = mh.signature_np(text, cap=None)
-    want = mh.signature_naive(text, cap=None)
-    assert (got is None) == (want is None)
-    if want is not None:
-        assert got.tolist() == want
-
-
 @given(
     st.lists(
         st.tuples(st.integers(0, 30), st.integers(0, 30)),

@@ -1,133 +1,6 @@
-"""Property tests for the session-7 transcript analytics: dialogue
-transition matrix (vs a pure-Python adjacency recount), context-window
-accounting (running-sum/overflow invariants vs an exact Python model),
-and conversation-level minhash dedup (distributivity of the min-md5
-signature, clone recovery, and identical-conversation full-band
-agreement); plus the job.py --windows fold (conv_windows) against a
-pure-Python greedy replay."""
-import hashlib
-from collections import Counter, defaultdict
-
-import pyspark.sql.functions as F
-
+"""The job.py --windows fold (conv_windows) against a pure-Python
+greedy replay, plus its tiling and mega-conversation invariants."""
 from xtract import structure
-
-
-def test_role_transitions_vs_python(derived_transcripts):
-    turns = derived_transcripts
-    rows = sorted(
-        turns.select("conv_id", "turn_idx", "role").collect(),
-        key=lambda r: (r.conv_id, r.turn_idx),
-    )
-    want_n = Counter()
-    want_convs = defaultdict(set)
-    prev = {}
-    for r in rows:
-        if r.conv_id in prev:
-            k = (prev[r.conv_id], r.role)
-            want_n[k] += 1
-            want_convs[k].add(r.conv_id)
-        prev[r.conv_id] = r.role
-    got = {
-        (r.prev_role, r.role): (r.n_transitions, r.n_convs)
-        for r in structure.role_transitions(turns).collect()
-    }
-    assert got == {k: (n, len(want_convs[k])) for k, n in want_n.items()}
-    # every turn except each conversation's head is counted exactly once
-    n_convs = turns.select("conv_id").distinct().count()
-    assert sum(n for n, _ in got.values()) == len(rows) - n_convs
-
-
-def test_context_budget_vs_python(derived_transcripts):
-    import re
-
-    turns = derived_transcripts
-    budget = structure.CONTEXT_BUDGET
-    rows = sorted(
-        turns.select("conv_id", "turn_idx", "text").collect(),
-        key=lambda r: (r.conv_id, r.turn_idx),
-    )
-    cum = Counter()
-    want = {}
-    for r in rows:
-        t = len(re.findall(r"[a-z0-9]+", r.text))
-        cum[r.conv_id] += t
-        n, tot, ovf, within = want.get(r.conv_id, (0, 0, None, 0))
-        want[r.conv_id] = (
-            n + 1,
-            tot + t,
-            ovf if ovf is not None else (r.turn_idx if cum[r.conv_id] > budget else None),
-            within + (1 if cum[r.conv_id] <= budget else 0),
-        )
-    got = {
-        r.conv_id: (r.n_turns, r.total_toks, r.overflow_turn, r.turns_within)
-        for r in structure.context_budget(turns).collect()
-    }
-    assert got == want
-    for n, tot, ovf, within in got.values():
-        assert within <= n
-        assert (ovf is None) == (tot <= budget)
-
-
-def test_conv_signature_is_distributive(derived_transcripts):
-    """Computing signatures over two arbitrary halves of a
-    conversation and taking the component-wise min must equal the
-    one-pass signature — the property that lets the agg combine
-    map-side at 10^12 turns."""
-    turns = derived_transcripts.select("conv_id", "turn_idx", "text")
-    whole = {
-        r.conv_id: [r[f"s{p}"] for p in range(structure.CONV_PERMS)]
-        for r in structure.conv_signatures(turns).collect()
-    }
-    lo = structure.conv_signatures(turns.filter(F.col("turn_idx") % 2 == 0))
-    hi = structure.conv_signatures(turns.filter(F.col("turn_idx") % 2 == 1))
-    parts = defaultdict(list)
-    for r in list(lo.collect()) + list(hi.collect()):
-        parts[r.conv_id].append([r[f"s{p}"] for p in range(structure.CONV_PERMS)])
-    merged = {
-        c: [min(s[p] for s in sigs) for p in range(structure.CONV_PERMS)]
-        for c, sigs in parts.items()
-    }
-    assert merged == whole
-
-
-def test_conv_signature_matches_python_md5(derived_transcripts):
-    turns = derived_transcripts.select("conv_id", "text")
-    texts = defaultdict(list)
-    for r in turns.collect():
-        texts[r.conv_id].append(r.text)
-    want = {
-        c: [
-            min(
-                hashlib.md5(f"{p}|{t}".encode()).hexdigest() for t in ts
-            )
-            for p in range(structure.CONV_PERMS)
-        ]
-        for c, ts in texts.items()
-    }
-    got = {
-        r.conv_id: [r[f"s{p}"] for p in range(structure.CONV_PERMS)]
-        for r in structure.conv_signatures(turns).collect()
-    }
-    assert got == want
-
-
-def test_conv_dedup_recovers_exact_clones_on_all_bands(derived_transcripts):
-    """An unperturbed clone must agree on all 4 bands; the pair list
-    must contain exactly the planted pairs (no cross-conversation
-    accidents on this corpus)."""
-    turns = derived_transcripts.select("conv_id", "text")
-    clones = turns.select(
-        F.concat("conv_id", F.lit("~exact")).alias("conv_id"), "text"
-    )
-    pairs = structure.conv_dedup_pairs(
-        structure.conv_signatures(turns.unionByName(clones))
-    ).collect()
-    n_convs = turns.select("conv_id").distinct().count()
-    assert len(pairs) == n_convs
-    for r in pairs:
-        assert r.conv_b == r.conv_a + "~exact"
-        assert r.n_bands == structure.CONV_BANDS
 
 
 def test_conv_windows_vs_python_greedy(derived_transcripts):

@@ -1,10 +1,9 @@
-"""Property tests for the session-8 operators: SFT loss-mask spans
-(offset reconstruction vs an exact Python replay of the running sum)
-and turn-template detection (vs a pure-Python normalize+count model).
-window_assignments (the per-turn form of the --windows fold) is the
-second reference for conv_windows."""
+"""Property tests for the job.py --loss-mask sink (SFT loss-mask
+spans: offset reconstruction vs an exact Python replay of the running
+sum) and the --windows fold. window_assignments (the per-turn form of
+the --windows fold) is the second reference for conv_windows."""
 import re
-from collections import Counter, defaultdict
+from collections import defaultdict
 
 import pyspark.sql.functions as F
 
@@ -74,37 +73,6 @@ def test_loss_mask_spans_tile(derived_transcripts):
     assert any(not r.masked for rows in by_conv.values() for r in rows)
 
 
-def _norm(text):
-    # explicit class: Python \s is Unicode-aware (NBSP, U+000B, ...)
-    # while the engine contract pins exactly [ \t\n\f\r]
-    s = re.sub(r"[0-9]+", "#", text.lower())
-    s = re.sub(r"[ \t\n\f\r]+", " ", s).strip(" ")
-    return s[:80]
-
-
-def test_turn_templates_vs_python(derived_transcripts):
-    turns = derived_transcripts
-    rows = turns.select("conv_id", "role", "text").collect()
-    n_turns = Counter()
-    convs = defaultdict(set)
-    for r in rows:
-        k = (r.role, _norm(r.text))
-        n_turns[k] += 1
-        convs[k].add(r.conv_id)
-    want = {
-        k: (n, len(convs[k])) for k, n in n_turns.items() if n >= 2
-    }
-    got = {}
-    import hashlib
-
-    for r in structure.turn_templates(turns).collect():
-        got[(r.role, r.tkey)] = (r.n_turns, r.n_convs)
-    assert len(got) == len(want)
-    for (role, norm), v in want.items():
-        key = hashlib.md5(norm.encode()).hexdigest()
-        assert got[(role, key)] == v
-
-
 def test_window_assignments_match_conv_windows(derived_transcripts):
     """The per-turn assignment fold and the per-window fold are the
     same greedy recursion: aggregating assignments by (conv, window)
@@ -121,47 +89,6 @@ def test_window_assignments_match_conv_windows(derived_transcripts):
         for r in structure.conv_windows(turns).collect()
     }
     assert dict(agg) == want
-
-
-def test_window_supervision_vs_python(derived_transcripts):
-    """Pure-Python replay of the greedy fold + loss accounting."""
-    turns = derived_transcripts
-    rows = sorted(
-        turns.select("conv_id", "turn_idx", "role", "text").collect(),
-        key=lambda r: (r.conv_id, r.turn_idx),
-    )
-    want = {}
-    conv, win, cur = None, 1, 0
-    for r in rows:
-        toks = _toks(r.text)
-        if r.conv_id != conv:
-            conv, win, cur = r.conv_id, 1, 0
-        elif cur + toks > structure.CONTEXT_BUDGET:
-            win, cur = win + 1, 0
-        cur += toks
-        k = (conv, win)
-        n, tot, loss = want.get(k, (0, 0, 0))
-        want[k] = (
-            n + 1,
-            tot + toks,
-            loss + (toks if r.role == "assistant" else 0),
-        )
-    got = {
-        (r.conv_id, r.window_id): (
-            r.n_turns,
-            r.window_toks,
-            r.loss_toks,
-            r.loss_ppm,
-        )
-        for r in structure.window_supervision(turns).collect()
-    }
-    assert set(got) == set(want)
-    for k, (n, tot, loss) in want.items():
-        ppm = loss * 1_000_000 // tot if tot > 0 else None
-        assert got[k] == (n, tot, loss, ppm), k
-    # the metric finds what it exists to find: not every window is
-    # fully supervised
-    assert any(v[3] is not None and v[3] < 1_000_000 for v in got.values())
 
 
 def test_window_folds_agree_on_zero_token_turns(spark):
@@ -260,9 +187,9 @@ def test_null_role_masks_deterministically(spark):
     """Regression (r4 ADVICE, structure.py null-role hole): a NULL
     role — legal on real deliveries like the jsonl: arm, where role is
     nullable — must be MASKED (zero loss), not a null boolean that the
-    pandas fold reads as False (loss-carrying). loss_mask,
-    window_assignments and window_supervision must all agree with the
-    oracle convention (loss only when role = 'assistant')."""
+    pandas fold reads as False (loss-carrying). loss_mask and
+    window_assignments must both agree with the oracle convention
+    (loss only when role = 'assistant')."""
     import datetime as dt
 
     rows = [
@@ -281,9 +208,35 @@ def test_null_role_masks_deterministically(spark):
         for r in structure.window_assignments(turns).collect()
     }
     assert wa == {0: True, 1: True, 2: False}
-    sup = structure.window_supervision(turns).collect()
-    assert len(sup) == 1
-    # only the 2 assistant tokens carry loss; the null-role turn's 3
-    # tokens are context
-    assert sup[0].loss_toks == 2
-    assert sup[0].window_toks == 7
+
+
+def test_null_text_counts_zero_tokens(spark):
+    """Regression: a turn whose text is NULL (a jsonl: line without
+    the field is a good row) counts 0 tokens. Under ANSI,
+    size(regexp_extract_all(NULL, ...)) is NULL: the window folds
+    crashed converting it to int, and loss_mask wrote end_tok = NULL,
+    so the conversation's spans no longer tiled."""
+    rows = [
+        ("c", 0, "user", "alpha beta"),
+        ("c", 1, "assistant", None),
+        ("c", 2, "user", "gamma delta epsilon"),
+    ]
+    turns = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string"
+    )
+    lm = {
+        r.turn_idx: (r.start_tok, r.end_tok, r.masked)
+        for r in structure.loss_mask(turns).collect()
+    }
+    assert lm == {0: (0, 2, True), 1: (2, 2, False), 2: (2, 5, True)}
+    windows = [
+        (r.window_id, r.start_turn, r.end_turn, r.n_turns, r.window_toks,
+         r.oversize)
+        for r in structure.conv_windows(turns).collect()
+    ]
+    assert windows == [(1, 0, 2, 3, 5, False)]
+    assigns = {
+        r.turn_idx: (r.window_id, r.toks)
+        for r in structure.window_assignments(turns).collect()
+    }
+    assert assigns == {0: (1, 2), 1: (1, 0), 2: (1, 3)}

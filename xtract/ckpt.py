@@ -64,8 +64,6 @@ def run_with_checkpoint(
     output_dir: str,
     ckpt_dir: str,
     run_id: str = "run0",
-    mode: str = "fused",
-    merge: str = "greedy",
     n_buckets: int = 64,
 ) -> dict:
     done = set(completed_buckets(spark, ckpt_dir, run_id))
@@ -76,7 +74,7 @@ def run_with_checkpoint(
     src = transcripts.withColumn("pk", bucket_of(F.col("conv_id"), n_buckets))
     todo = src.filter(F.col("pk").isin(pending))
 
-    spans = pipeline.extract(todo.drop("pk"), mode=mode, merge=merge).withColumn(
+    spans = pipeline.extract(todo.drop("pk")).withColumn(
         "pk", bucket_of(F.col("conv_id"), n_buckets)
     )
 

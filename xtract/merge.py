@@ -1,20 +1,12 @@
 """Merge stage: text spans ↔ image blocks (SURVEY.md §2.5 J1-J7).
 
-Two interchangeable strategies, same output schema:
-
-- ``merge_greedy`` — exact reference parity. The reference walks text
-  blocks in list order and lets each claim its verified images
-  exclusively, first-text-wins (question_merger.py:56-104). That
-  sequential dependency is real, so each side packs per turn via
-  collect_list (one shuffle each on the turn key) and the walk runs
-  over many turns per Arrow batch in a single mapInPandas,
-  numpy-vectorized over the image side.
-
-- ``merge_rank1`` — Spark-native approximation: spatial theta-join on
-  the turn equi-key, per-text top-8 by distance (W5), per-image rank-1
-  by text order (J4 as a window). Diverges from greedy only when an
-  earlier text would claim an image that a later text also wants
-  within its own top-8 — tests measure the divergence.
+``merge_greedy`` keeps exact reference parity. The reference walks
+text blocks in list order and lets each claim its verified images
+exclusively, first-text-wins (question_merger.py:56-104). That
+sequential dependency is real, so each side packs per turn via
+collect_list (one shuffle each on the turn key) and the walk runs over
+many turns per Arrow batch in a single mapInPandas, numpy-vectorized
+over the image side.
 
 VL verification (X2/X3) is replaced by the deterministic rule: spatial
 confidence ≥ 0.85 (config.py:36; SURVEY.md §2.9).
@@ -24,7 +16,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from .config import LIMITS
 
@@ -280,188 +272,3 @@ def merge_greedy(spans: DataFrame, images: DataFrame) -> DataFrame:
                 yield pd.DataFrame(cols, columns=out_cols)
 
     return packed.mapInPandas(kernel, schema=MERGED_SCHEMA)
-
-
-# ------------------------------------------------------------- rank1 path
-def merge_rank1(spans: DataFrame, images: DataFrame) -> DataFrame:
-    """Join-based fast path. One equi-key (turn) + theta predicate join,
-    two windows, one aggregation — all AQE/skew-join eligible.
-
-    R10 caption binding runs as a separate EQUI join (turn +
-    question_number — the explicit key parsed from 第N题图 captions)
-    whose claims are anti-joined out of the spatial candidate pool;
-    caption rows enter the final per-text aggregation with sort key
-    distance=-1 so they lead the image_ids list, matching the greedy
-    walk's caption-first order."""
-    t = spans.select(
-        "conv_id",
-        "turn_idx",
-        "block_pos",
-        "span_ord",
-        "question_number",
-        "span_text",
-        "bbox",
-        "split_from_merged",
-        "source_block_id",
-        F.col("bbox")[0].alias("tx1"),
-        F.col("bbox")[1].alias("ty1"),
-        F.col("bbox")[2].alias("tx2"),
-        F.col("bbox")[3].alias("ty2"),
-    )
-    # R10: first span per (turn, question_number) is the caption target
-    first_w = Window.partitionBy("conv_id", "turn_idx", "question_number").orderBy(
-        "block_pos", "span_ord"
-    )
-    first_span = (
-        t.filter(F.col("question_number").isNotNull())
-        .withColumn("frk", F.row_number().over(first_w))
-        .filter(F.col("frk") == 1)
-        .select("conv_id", "turn_idx", "question_number", "block_pos", "span_ord")
-    )
-    cap_assign = (
-        images.filter(F.col("cap_qn").isNotNull())
-        .alias("img")
-        .join(
-            first_span.alias("fs"),
-            (F.col("img.conv_id") == F.col("fs.conv_id"))
-            & (F.col("img.turn_idx") == F.col("fs.turn_idx"))
-            & (F.col("img.cap_qn") == F.col("fs.question_number")),
-        )
-        .select(
-            F.col("img.conv_id").alias("conv_id"),
-            F.col("img.turn_idx").alias("turn_idx"),
-            F.col("fs.block_pos").alias("block_pos"),
-            F.col("fs.span_ord").alias("span_ord"),
-            "img_pos",
-            "img_id",
-            "ix1",
-            "iy1",
-            "ix2",
-            "iy2",
-            F.lit(-1).alias("distance"),
-        )
-    )
-    i = images.join(
-        cap_assign.select("conv_id", "turn_idx", "img_id"),
-        ["conv_id", "turn_idx", "img_id"],
-        "left_anti",
-    )
-
-    tcx = (F.col("tx1") + F.col("tx2")) / 2
-    tcy = (F.col("ty1") + F.col("ty2")) / 2
-    icx = (F.col("ix1") + F.col("ix2")) / 2
-    icy = (F.col("iy1") + F.col("iy2")) / 2
-
-    above = F.col("iy1") < F.col("ty2")
-    hd = F.col("ix1") - F.col("tx2")
-    right_ok = above & (hd > 0) & (hd < LIMITS.max_horizontal_distance)
-
-    vd = F.col("iy1") - F.col("ty2")
-    horiz = (
-        ((F.col("tx1") <= icx) & (icx <= F.col("tx2")))
-        | ((F.col("ix1") <= tcx) & (tcx <= F.col("ix2")))
-        | ((F.col("ix1") <= F.col("tx2")) & (F.col("ix2") >= F.col("tx1")))
-        | (F.abs(icx - tcx) < LIMITS.max_horizontal_distance)
-    )
-    below_ok = (~above) & (vd <= LIMITS.max_vertical_distance) & horiz
-
-    ds_right = F.greatest(F.lit(0.0), 1 - hd / LIMITS.max_horizontal_distance)
-    al_right = F.greatest(
-        F.lit(0.0), 1 - F.abs(tcy - icy) / (F.col("ty2") - F.col("ty1"))
-    )
-    ds_below = F.greatest(F.lit(0.0), 1 - vd / LIMITS.max_vertical_distance)
-    al_below = F.greatest(
-        F.lit(0.0), 1 - F.abs(tcx - icx) / (F.col("tx2") - F.col("tx1"))
-    )
-    conf = F.when(
-        right_ok,
-        LIMITS.conf_weight_distance * ds_right
-        + LIMITS.conf_weight_alignment * al_right,
-    ).otherwise(
-        LIMITS.conf_weight_distance * ds_below
-        + LIMITS.conf_weight_alignment * al_below,
-    )
-
-    cand = (
-        t.join(i, ["conv_id", "turn_idx"])
-        .where(right_ok | below_ok)
-        .select(
-            "conv_id",
-            "turn_idx",
-            "block_pos",
-            "span_ord",
-            "img_pos",
-            "img_id",
-            "ix1",
-            "iy1",
-            "ix2",
-            "iy2",
-            F.when(right_ok, hd).otherwise(vd).alias("distance"),
-            conf.alias("conf"),
-        )
-    )
-
-    per_text = Window.partitionBy(
-        "conv_id", "turn_idx", "block_pos", "span_ord"
-    ).orderBy("distance", "img_pos")
-    topk = cand.withColumn("rk", F.row_number().over(per_text)).where(
-        (F.col("rk") <= LIMITS.max_images_per_question)
-        & (F.col("conf") >= LIMITS.spatial_confidence_threshold)
-    )
-
-    per_img = Window.partitionBy("conv_id", "turn_idx", "img_id").orderBy(
-        "block_pos", "span_ord", "distance"
-    )
-    won = topk.withColumn("irk", F.row_number().over(per_img)).where(
-        F.col("irk") == 1
-    )
-
-    claim_cols = [
-        "conv_id", "turn_idx", "block_pos", "span_ord",
-        "img_pos", "img_id", "ix1", "iy1", "ix2", "iy2", "distance",
-    ]
-    claims = won.select(*claim_cols).unionByName(cap_assign.select(*claim_cols))
-
-    assigned = claims.groupBy("conv_id", "turn_idx", "block_pos", "span_ord").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct("distance", "img_pos", "img_id", "ix1", "iy1", "ix2", "iy2")
-                )
-            ),
-            lambda s: s["img_id"],
-        ).alias("image_ids"),
-        F.min("ix1").alias("mix1"),
-        F.min("iy1").alias("miy1"),
-        F.max("ix2").alias("mix2"),
-        F.max("iy2").alias("miy2"),
-    )
-
-    joined = t.join(assigned, ["conv_id", "turn_idx", "block_pos", "span_ord"], "left")
-    has = F.col("image_ids").isNotNull() & (F.size("image_ids") > 0)
-    merged_bbox = F.when(
-        has,
-        F.array(
-            F.least("tx1", "mix1").cast("int"),
-            F.least("ty1", "miy1").cast("int"),
-            F.greatest("tx2", "mix2").cast("int"),
-            F.greatest("ty2", "miy2").cast("int"),
-        ),
-    ).otherwise(F.col("bbox"))
-
-    turn_order = Window.partitionBy("conv_id", "turn_idx").orderBy(
-        "block_pos", "span_ord"
-    )
-    return joined.select(
-        "conv_id",
-        "turn_idx",
-        "question_number",
-        "span_text",
-        merged_bbox.alias("bbox"),
-        has.alias("has_image"),
-        F.coalesce("image_ids", F.array().cast("array<int>")).alias("image_ids"),
-        F.coalesce(F.size("image_ids"), F.lit(0)).alias("image_count"),
-        "split_from_merged",
-        "source_block_id",
-        (F.row_number().over(turn_order) - 1).alias("text_order"),
-    )

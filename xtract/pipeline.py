@@ -1,22 +1,24 @@
-"""End-to-end extraction pipeline with two execution strategies.
+"""End-to-end extraction pipeline: one production plan and one
+independent check of it.
 
-- ``mode='fused'`` (default, the 100-TB path): the whole per-turn
-  extraction — payload parse, detect, split, merge, structure — runs
-  as ONE Arrow-batched ``mapInPandas`` kernel. Per-turn extraction is
-  embarrassingly parallel, so this plan has ZERO shuffles: scan →
-  narrow map → sink. This is exactly the architecture the north star
-  prescribes ("each turn's text payload is parsed via vectorized
-  pandas/Arrow UDFs ... to emit extracted main-content spans per
-  turn"); stable turn ordering is a property of the (conv_id,
-  turn_idx) keys carried on every row, not of physical row order.
+- ``mode='fused'`` (default, the plan ``job.py`` runs): the whole
+  per-turn extraction — payload parse, detect, split, merge, structure
+  — runs as ONE Arrow-batched ``mapInPandas`` kernel. Per-turn
+  extraction is embarrassingly parallel, so this plan has ZERO
+  shuffles: scan → narrow map → sink. This is exactly the
+  architecture the north star prescribes ("each turn's text payload
+  is parsed via vectorized pandas/Arrow UDFs ... to emit extracted
+  main-content spans per turn"); stable turn ordering is a property of
+  the (conv_id, turn_idx) keys carried on every row, not of physical
+  row order.
 
-- ``mode='relational'`` (the operator-demonstration path): each
+- ``mode='relational'`` (the operator-by-operator restatement): each
   reference operator is expressed as its Spark-native mapping
   (SURVEY.md §2 tables): from_json scan → posexplode → detection UDF →
-  window lead-boundaries → theta join / cogrouped greedy → native
-  structuring. Costs shuffles (split window, merge by turn key,
-  final seq window) but exposes every operator to Catalyst
-  individually. Tests assert both modes agree row-for-row.
+  window lead-boundaries → cogrouped greedy merge → native
+  structuring. Costs shuffles (split window, merge by turn key) but
+  shares no per-turn code with the fused kernel, so the tests that
+  assert both plans agree row-for-row check the extraction logic.
 
 Skew note: every keyed operation here partitions by (conv_id,
 turn_idx) or finer — never by conv_id alone — so mega-conversations
@@ -34,11 +36,7 @@ from . import merge as merge_mod
 from . import oracle, schema, sources, split, structure
 
 
-def extract(
-    transcripts: DataFrame,
-    mode: str = "fused",
-    merge: str = "greedy",
-) -> DataFrame:
+def extract(transcripts: DataFrame, mode: str = "fused") -> DataFrame:
     """transcripts → one row per extracted question span (schema.SPANS)."""
     if mode == "fused":
         return _extract_fused(transcripts)
@@ -48,20 +46,14 @@ def extract(
     parsed = sources.parse_payloads(transcripts)
     blocks = sources.exploded_blocks(parsed)
     spans = split.split_spans(blocks, mode="v1")
-    images = merge_mod.image_blocks(blocks)
-    if merge == "greedy":
-        merged = merge_mod.merge_greedy(spans, images)
-    elif merge == "rank1":
-        merged = merge_mod.merge_rank1(spans, images)
-    else:
-        raise ValueError(f"unknown merge strategy: {merge}")
+    merged = merge_mod.merge_greedy(spans, merge_mod.image_blocks(blocks))
     return structure.structure(merged)
 
 
 def _extract_fused(transcripts: DataFrame) -> DataFrame:
-    """Single-kernel strategy. The kernel is the same per-turn logic the
+    """Single-kernel plan. The kernel is the same per-turn logic the
     relational plan spells out operator-by-operator; tests cross-check
-    the two strategies and the pure-Python oracle against each other."""
+    the two plans and the pure-Python oracle against each other."""
 
     field_names = [f.name for f in schema.SPANS.fields]
 

@@ -22,7 +22,7 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from . import pipeline, schema
+from . import pipeline, schema, structure
 
 
 def read_transcript_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -659,8 +659,6 @@ _WIN_COLS = [f.name for f in WINDOWS_STREAM.fields]
 
 
 def _win_fn(key, pdfs, state: GroupState):
-    from . import structure
-
     budget = structure.CONTEXT_BUDGET
     conv_id = key[0]
     if state.exists:
@@ -690,15 +688,16 @@ def _win_fn(key, pdfs, state: GroupState):
 
 def windows_stream(transcripts: DataFrame) -> DataFrame:
     """Greedy SFT-window segmentation over a streaming transcripts DF.
-    Tokenization ([a-z0-9]+ count, the engine-wide token rule) runs
-    JVM-side on the stream; the stateful kernel folds integers only.
+    Tokenization (structure.token_count, the engine-wide token rule)
+    runs JVM-side on the stream; the stateful kernel folds integers only.
     At cluster scale the state store shards by conv_id — the same
     partitioning every other stage uses — and per-conversation state
     is a constant 5 longs regardless of conversation length, strictly
     smaller than the assembly tail."""
-    toks = F.size(F.regexp_extract_all(F.col("text"), F.lit("[a-z0-9]+"), 0))
     keyed = transcripts.select(
-        "conv_id", "turn_idx", toks.cast("long").alias("toks")
+        "conv_id",
+        "turn_idx",
+        structure.token_count(F.col("text")).cast("long").alias("toks"),
     )
     return keyed.groupBy("conv_id").applyInPandasWithState(
         _win_fn,

@@ -1,6 +1,7 @@
 """Structuring stage (SURVEY.md §2.3 R6-R8, §2.6 A2-A4, §2.7 W4).
 
-Everything here is native Spark SQL — when/rlike chains,
+Everything here except the two greedy window folds (conv_windows,
+window_assignments) is native Spark SQL — when/rlike chains,
 regexp_extract, windows — so it stays inside whole-stage codegen.
 """
 from __future__ import annotations
@@ -53,27 +54,14 @@ def score_col(content) -> F.Column:
 
 
 def structure(merged: DataFrame) -> DataFrame:
-    """merged span rows (merge.MERGED_SCHEMA) → final output, with the
-    sentinel-999 ordering (extractor.py:211-214: ``or 999``, so 0 and
-    NULL both sort as 999) and a per-turn ``seq`` for exact list
-    comparisons."""
-    if "seq" in merged.columns:
-        # the greedy kernel already assigned the per-turn sentinel
-        # order — the whole structuring stage stays narrow
-        seq_col = F.col("seq")
-    else:
-        sentinel = F.when(
-            F.col("question_number").isNull() | (F.col("question_number") == 0),
-            LIMITS.missing_number_sentinel,
-        ).otherwise(F.col("question_number"))
-        w = Window.partitionBy("conv_id", "turn_idx").orderBy(
-            sentinel, "text_order"
-        )
-        seq_col = F.row_number().over(w) - 1
+    """merged span rows (merge.MERGED_SCHEMA) → final output. The greedy
+    kernel already assigned each turn's ``seq`` in the sentinel-999
+    order (extractor.py:211-214: ``or 999``, so 0 and NULL both sort
+    as 999), so the whole structuring stage stays narrow."""
     return merged.select(
         "conv_id",
         "turn_idx",
-        seq_col.cast("int").alias("seq"),
+        "seq",
         "question_number",
         qtype_col(F.col("span_text")).alias("qtype"),
         score_col(F.col("span_text")).alias("score"),
@@ -195,113 +183,22 @@ def turn_counters(final_spans: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------
-# Transcript-level analytics over (conv_id, turn_idx, role, text, tool,
-# ts) — the input-hint table. Each op keys on conv_id, the same
-# partitioning every extraction stage shuffles on, so at 10^12 turns
-# they ride the pipeline's existing exchange instead of adding one.
+# Training-data sinks over (conv_id, turn_idx, role, text): job.py's
+# --windows (conv_windows) and --loss-mask (loss_mask). Both key on
+# conv_id and count tokens with the one rule in token_count.
 # ---------------------------------------------------------------------
 
 CONTEXT_BUDGET = 1024  # tokens per conversation context window
-CONV_PERMS = 8  # minhash components per conversation signature
-CONV_BANDS = 4  # LSH bands (2 components per band)
 
 
-def role_transitions(turns: DataFrame) -> DataFrame:
-    """Dialogue-act transition matrix: for every adjacent turn pair
-    within a conversation, count (prev_role -> role) transitions and
-    the conversations exhibiting each. One lag() over the
-    (conv_id ORDER BY turn_idx) window feeding a 9-row agg — a single
-    conv_id shuffle; the transition agg is map-side combinable over
-    at most |roles|^2 keys."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    f = turns.select(
-        "conv_id", "role", F.lag("role").over(w).alias("prev_role")
-    ).filter(F.col("prev_role").isNotNull())
-    return f.groupBy("prev_role", "role").agg(
-        F.count("*").cast("long").alias("n_transitions"),
-        F.countDistinct("conv_id").cast("long").alias("n_convs"),
-    )
-
-
-def context_budget(turns: DataFrame, budget: int = CONTEXT_BUDGET) -> DataFrame:
-    """Context-window accounting: running token sum per conversation
-    in turn order, reporting where each conversation first exceeds
-    ``budget`` tokens (the truncation point a training-data packer
-    needs) and how many turns fit. Tokens are the same [a-z0-9]+
-    count conv_windows and loss_mask use.
-    The running sum uses an explicit ROWS frame over the
-    (conv_id ORDER BY turn_idx) window and the conv agg reuses that
-    partitioning — one shuffle total."""
-    w = (
-        Window.partitionBy("conv_id")
-        .orderBy("turn_idx")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    toks = F.size(F.regexp_extract_all(F.col("text"), F.lit("[a-z0-9]+"), 0))
-    f = turns.select("conv_id", "turn_idx", toks.alias("toks")).withColumn(
-        "cum", F.sum("toks").over(w)
-    )
-    return f.groupBy("conv_id").agg(
-        F.count("*").cast("long").alias("n_turns"),
-        F.sum("toks").cast("long").alias("total_toks"),
-        F.min(F.when(F.col("cum") > budget, F.col("turn_idx")))
-        .cast("long")
-        .alias("overflow_turn"),
-        F.count(F.when(F.col("cum") <= budget, 1))
-        .cast("long")
-        .alias("turns_within"),
-    )
-
-
-def conv_signatures(turns: DataFrame) -> DataFrame:
-    """Conversation-level minhash signature WITHOUT concatenating
-    turn text: component p is min over the conversation's turns of
-    md5(p || '|' || turn_text). min() is associative and commutative,
-    so every component combines map-side and the only shuffle is the
-    conv_id groupBy — at 10^12 turns the signature table is |convs|
-    rows and no executor ever holds a whole conversation's text.
-    md5 hex is lowercase in both engines, so lexicographic min agrees
-    bit-exactly cross-engine."""
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{p}|"), F.col("text")))).alias(f"s{p}")
-        for p in range(CONV_PERMS)
-    ]
-    return turns.groupBy("conv_id").agg(*aggs)
-
-
-def conv_dedup_pairs(sigs: DataFrame, min_bands: int = 2) -> DataFrame:
-    """LSH banding over conversation signatures: 4 bands of 2
-    components; conversations sharing >= ``min_bands`` band keys are
-    near-duplicate candidates. Band keys are md5 of the concatenated
-    components, the join is a band+key equi-join over the tiny
-    conv-level table (never the turns), and the pair agg counts
-    agreeing bands."""
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(F.concat(F.col(f"s{2 * b}"), F.col(f"s{2 * b + 1}"))).alias(
-                "bkey"
-            ),
-        )
-        for b in range(CONV_BANDS)
-    ]
-    m = sigs.select("conv_id", F.explode(F.array(*bands)).alias("x")).select(
-        "conv_id", F.col("x.band").alias("band"), F.col("x.bkey").alias("bkey")
-    )
-    a, b = m.alias("a"), m.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.conv_id") < F.col("b.conv_id")),
-        )
-        .groupBy(
-            F.col("a.conv_id").alias("conv_a"),
-            F.col("b.conv_id").alias("conv_b"),
-        )
-        .agg(F.count("*").cast("long").alias("n_bands"))
-        .filter(F.col("n_bands") >= min_bands)
+def token_count(text) -> F.Column:
+    """The engine-wide token rule: the number of [a-z0-9]+ runs in a
+    turn's text. A NULL text (a jsonl: line without the field) counts
+    0 tokens: under ANSI, size(regexp_extract_all(NULL, ...)) is NULL,
+    which the window folds cannot convert and which breaks the
+    loss-mask tiling."""
+    return F.size(
+        F.regexp_extract_all(F.coalesce(text, F.lit("")), F.lit("[a-z0-9]+"), 0)
     )
 
 
@@ -320,9 +217,9 @@ def conv_windows(turns: DataFrame, budget: int = CONTEXT_BUDGET) -> DataFrame:
     overhead (a groupBy().applyInPandas formulation of the same fold
     measured ~10x slower at 5k conversations purely on per-group
     pandas setup). A turn larger than the budget alone occupies its
-    own window and is flagged oversize. Tokens are the shared
-    [a-z0-9]+ count, so a pure-Python replay of the recursion can
-    check it exactly."""
+    own window and is flagged oversize. Tokens are token_count's
+    [a-z0-9]+ rule, so a pure-Python replay of the recursion can check
+    it exactly."""
     import pandas as pd
 
     out_schema = (
@@ -368,7 +265,7 @@ def conv_windows(turns: DataFrame, budget: int = CONTEXT_BUDGET) -> DataFrame:
         if out:
             yield pd.DataFrame(out, columns=cols)
 
-    toks = F.size(F.regexp_extract_all(F.col("text"), F.lit("[a-z0-9]+"), 0))
+    toks = token_count(F.col("text"))
     return (
         turns.select("conv_id", "turn_idx", toks.alias("toks"))
         .repartition("conv_id")
@@ -388,14 +285,14 @@ def loss_mask(turns: DataFrame) -> DataFrame:
     (conv_id ORDER BY turn_idx) with an explicit ROWS frame ending at
     the previous row — a single conv_id shuffle, no join; at 10^12
     turns the output is exactly |turns| fixed-width rows and the
-    window state per group is one long. Tokens are the shared
-    [a-z0-9]+ count conv_windows uses."""
+    window state per group is one long. Tokens are token_count's, as
+    in conv_windows."""
     w = (
         Window.partitionBy("conv_id")
         .orderBy("turn_idx")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    toks = F.size(F.regexp_extract_all(F.col("text"), F.lit("[a-z0-9]+"), 0))
+    toks = token_count(F.col("text"))
     f = turns.select("conv_id", "turn_idx", "role", toks.alias("toks"))
     start = F.coalesce(F.sum("toks").over(w), F.lit(0))
     return f.select(
@@ -413,55 +310,16 @@ def loss_mask(turns: DataFrame) -> DataFrame:
     )
 
 
-def turn_templates(turns: DataFrame, min_occ: int = 2) -> DataFrame:
-    """Template / canned-reply detection: normalize each turn's text
-    (lowercase, digit runs collapsed to '#', whitespace collapsed,
-    first 80 chars) and count occurrences + distinct conversations
-    per (role, template) class — the per-turn analogue of document
-    dedup that catches boilerplate assistant replies repeated across
-    conversations (the SlimPajama/RefinedWeb motivation for
-    response-level dedup in chat corpora). The normalization is pure
-    string expressions (whole-stage codegen); the agg keys on a
-    32-byte md5 so no template text transits the shuffle, and it is
-    map-side combinable — at 10^12 turns the reduce side sees at most
-    |distinct templates| rows per partition."""
-    # explicit whitespace class: Java \s includes U+000B, RE2 \s does
-    # not — an explicit class keeps the normalization identical to a
-    # Python replay with the same class
-    norm = F.substring(
-        F.trim(
-            F.regexp_replace(
-                F.regexp_replace(F.lower(F.col("text")), "[0-9]+", "#"),
-                "[ \t\n\f\r]+",
-                " ",
-            )
-        ),
-        1,
-        80,
-    )
-    f = turns.select("conv_id", "role", F.md5(norm).alias("tkey"))
-    return (
-        f.groupBy("role", "tkey")
-        .agg(
-            F.count("*").cast("long").alias("n_turns"),
-            F.countDistinct("conv_id").cast("long").alias("n_convs"),
-        )
-        .filter(F.col("n_turns") >= min_occ)
-    )
-
-
 def window_assignments(turns: DataFrame, budget: int = CONTEXT_BUDGET) -> DataFrame:
     """Per-TURN training-window assignment: the same greedy
     capacitated fold conv_windows runs, but emitting one row per turn
     (conv_id, turn_idx, window_id, toks, masked) instead of one row
-    per window — the join-free way to compose window segmentation
-    with per-turn annotations. A (windows BETWEEN-join turns)
-    formulation would pair every window with every turn of its
-    conversation before filtering, which goes quadratic on
-    mega-conversations; assigning the window id inside the linear
-    fold keeps the composition skew-safe at any conversation size.
-    Same secondary-sort shape as conv_windows: ONE conv_id exchange,
-    in-partition sort, one sequential pass with constant state."""
+    per window. No program composes it; it is the second fold the
+    tests compare conv_windows against (aggregated by window, the two
+    must agree input-for-input), written as a separate loop so a bug
+    in one fold does not hide in the other. Same secondary-sort shape
+    as conv_windows: ONE conv_id exchange, in-partition sort, one
+    sequential pass with constant state."""
     import pandas as pd
 
     out_schema = (
@@ -485,10 +343,9 @@ def window_assignments(turns: DataFrame, budget: int = CONTEXT_BUDGET) -> DataFr
                     conv, win, cur = c, 1, 0
                 elif cur + toks > budget:
                     # no cur>0 guard: conv_windows opens a new window
-                    # whenever adding
-                    # the turn would overflow, even off a zero-token
-                    # turn after an oversized one — the folds must
-                    # agree input-for-input
+                    # whenever adding the turn would overflow, even off
+                    # a zero-token turn after an oversized one — the
+                    # folds must agree input-for-input
                     win, cur = win + 1, 0
                 cur += toks
                 out.append((conv, t_idx, win, toks, bool(masked)))
@@ -496,7 +353,7 @@ def window_assignments(turns: DataFrame, budget: int = CONTEXT_BUDGET) -> DataFr
                 yield pd.DataFrame(out, columns=cols)
                 out = []
 
-    toks = F.size(F.regexp_extract_all(F.col("text"), F.lit("[a-z0-9]+"), 0))
+    toks = token_count(F.col("text"))
     return (
         turns.select(
             "conv_id",
@@ -512,33 +369,4 @@ def window_assignments(turns: DataFrame, budget: int = CONTEXT_BUDGET) -> DataFr
         .repartition("conv_id")
         .sortWithinPartitions("conv_id", "turn_idx")
         .mapInPandas(assign, schema=out_schema)
-    )
-
-
-def window_supervision(turns: DataFrame, budget: int = CONTEXT_BUDGET) -> DataFrame:
-    """Supervision density per training window: for every greedy
-    context window, how many of its tokens actually carry loss
-    (assistant turns) — the metric that finds worthless all-context
-    windows before they burn training compute. Linear fold (per-turn
-    window assignment) + one (conv_id, window_id) hash agg. Two
-    exchanges total: the fold's conv_id repartition (MapInPandas
-    output partitioning is opaque to Catalyst, so the agg cannot
-    formally reuse it) and the agg exchange — but the second moves
-    only the 5-field fixed-width assignment rows (never text) and is
-    map-side combined to |windows| rows first. loss_ppm in integer
-    parts-per-million so it compares exactly (zero-token windows
-    report null ppm)."""
-    a = window_assignments(turns, budget)
-    loss = F.sum(F.when(~F.col("masked"), F.col("toks")).otherwise(F.lit(0)))
-    return a.groupBy("conv_id", "window_id").agg(
-        F.count("*").cast("long").alias("n_turns"),
-        F.sum("toks").cast("long").alias("window_toks"),
-        loss.cast("long").alias("loss_toks"),
-        F.expr(
-            "case when sum(toks) > 0 then"
-            " sum(case when not masked then toks else 0 end) * 1000000"
-            " div sum(toks) end"
-        )
-        .cast("long")
-        .alias("loss_ppm"),
     )
