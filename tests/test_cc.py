@@ -97,12 +97,3 @@ def test_cc_persisted_storage_bounded(spark):
     # only the FINAL generation may remain (labels read it lazily);
     # generation 0 and every intermediate must have been released
     assert after - baseline <= 1, (baseline, after, rounds)
-
-
-def test_components_summary_sizes(spark):
-    pairs = [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (20, 21)]
-    got = {
-        (r["rep"], r["members"])
-        for r in cc.components_summary(_edges_df(spark, pairs)).collect()
-    }
-    assert got == {(1, 3), (10, 3), (20, 2)}

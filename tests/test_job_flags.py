@@ -5,13 +5,21 @@ table ref forms — table: (Iceberg) and btable: (Spark bucketed) —
 because the resume path writes parquet with dynamic partition
 overwrite and would otherwise treat the ref as a literal directory
 name, then crash at the final span-count readback after doing all the
-work (review finding)."""
+work (review finding). The option list, the set of xtract modules the
+job and the benchmark import, and the launcher's --master under
+spark-submit are pinned here too."""
+import ast
 import os
 import re
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 
 import job
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def _expect_usage_error(argv):
@@ -108,3 +116,65 @@ def test_option_surface(capsys):
     }
     _expect_usage_error(["--input", "gen:10", "--output", "o", "--mode", "relational"])
     _expect_usage_error(["--input", "gen:10", "--output", "o", "--merge", "rank1"])
+
+
+def _xtract_imports(path):
+    """The xtract modules one file imports: ``from xtract import m``,
+    ``from . import m``, ``from .m import ...``, ``import xtract.m``
+    and ``from xtract.m import ...``."""
+    found = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.startswith("xtract."):
+                    found.add(a.name.split(".")[1])
+        elif isinstance(node, ast.ImportFrom):
+            pkg = node.level > 0 or (node.module or "").split(".")[0] == "xtract"
+            if not pkg:
+                continue
+            mod = (node.module or "").removeprefix("xtract").lstrip(".")
+            if mod:
+                found.add(mod.split(".")[0])
+            else:
+                found.update(a.name for a in node.names)
+    return found
+
+
+def test_module_surface():
+    """Every xtract module is on a program path: reachable by imports
+    from job.py or from perfbench's non-test sources. A module nothing
+    runs must be deleted (git keeps it) rather than kept alive by its
+    own tests. The one exception is evaluator, the accuracy gate's
+    metric (test_accuracy_gate, test_ingest_eval)."""
+    todo = [ROOT / "job.py", *(ROOT / "perfbench").glob("*.py")]
+    seen: set[str] = set()
+    while todo:
+        for m in _xtract_imports(todo.pop()) - seen:
+            seen.add(m)
+            todo.append(ROOT / "xtract" / f"{m}.py")
+    unreached = {f.stem for f in (ROOT / "xtract").glob("*.py")} - seen
+    assert unreached == {"__init__", "evaluator"}
+
+
+def test_spark_submit_master_wins(spark, tmp_path):
+    """Under spark-submit, session.build must leave the launcher's
+    --master alone; a plain Python driver (this test session) still
+    gets local[cores]."""
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        "from xtract import session\n"
+        "s = session.build()\n"
+        "print('master=' + s.sparkContext.master)\n"
+        "s.stop()\n"
+    )
+    env = dict(
+        os.environ, PYTHONPATH=str(ROOT),
+        PYSPARK_PYTHON=sys.executable, PYSPARK_DRIVER_PYTHON=sys.executable,
+    )
+    p = subprocess.run(
+        ["spark-submit", "--master", "local[2]", str(probe)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert p.returncode == 0, p.stderr[-4000:]
+    assert "master=local[2]" in p.stdout.splitlines()
+    assert spark.sparkContext.master == "local[8]"

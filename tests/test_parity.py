@@ -108,32 +108,6 @@ def test_exam_info_matches_oracle(spark, transcripts):
         ), key
 
 
-def test_turn_counters_match_oracle(spark, transcripts):
-    from xtract import structure
-
-    spans = pipeline.extract(transcripts, mode="fused")
-    got = {
-        (r.conv_id, r.turn_idx): (
-            r.total_questions,
-            r.with_images,
-            r.total_images,
-            r.split_count,
-        )
-        for r in structure.turn_counters(spans).collect()
-    }
-    for row in gen.gen_local(N_CONVS):
-        rows = oracle.extract_turn(row["text"])
-        if not rows:
-            continue
-        c = oracle.turn_counters(rows)
-        assert got[(row["conv_id"], row["turn_idx"])] == (
-            c["total_questions"],
-            c["with_images"],
-            c["total_images"],
-            c["split_count"],
-        )
-
-
 def test_duplicate_question_numbers_parity(spark):
     """Reference quirk faithfully reproduced: slicing looks up spans by
     NUMBER (first match wins, question_splitter.py:357-376), so a

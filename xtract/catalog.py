@@ -152,10 +152,10 @@ def compact_parquet(
     spark: SparkSession, path: str, target_mb: int = 256
 ) -> dict:
     """Small-file compaction for a parquet directory — the operational
-    counterpart of streaming/checkpointed ingestion, which naturally
-    leaves one file per micro-batch/partition task. Sizes the output
-    by actual bytes (ceil(total/target)), rewrites to a sibling temp
-    dir, then swaps. On Iceberg deployments the same maintenance is
+    counterpart of checkpointed ingestion, which naturally leaves one
+    file per partition task. Sizes the output by actual bytes
+    (ceil(total/target)), rewrites to a sibling temp dir, then swaps.
+    On Iceberg deployments the same maintenance is
     `rewrite_data_files`; this is the parquet-path arm. Returns
     {files_before, files_after, bytes}."""
     import glob as _glob

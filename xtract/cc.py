@@ -159,13 +159,3 @@ def connected_components(
     labels = cur.select(F.col("a").alias("node"), F.col("b").alias("rep"))
     roots = labels.select(F.col("rep").alias("node"), F.col("rep")).distinct()
     return labels.union(roots), rounds
-
-
-def components_summary(edges: DataFrame) -> DataFrame:
-    """(rep, members) for every non-singleton component."""
-    labels, _ = connected_components(edges)
-    return (
-        labels.groupBy("rep")
-        .agg(F.count("*").cast("long").alias("members"))
-        .where(F.col("members") > 1)
-    )

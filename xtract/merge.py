@@ -24,7 +24,7 @@ MERGED_SCHEMA = (
     "conv_id string, turn_idx int, question_number int, span_text string, "
     "bbox array<int>, has_image boolean, image_ids array<int>, "
     "image_count int, split_from_merged boolean, source_block_id int, "
-    "text_order int, seq int"
+    "seq int"
 )
 
 
@@ -188,17 +188,17 @@ def _greedy_lists(sp_rows, im_rows) -> list[dict]:
                 "image_count": len(ids),
                 "split_from_merged": bool(row["split_from_merged"]),
                 "source_block_id": row["source_block_id"],
-                "text_order": order,
             }
         )
 
     # final per-turn order (sentinel-999 sort, extractor.py:211-214)
-    # computed here so downstream structuring stays shuffle-free
+    # computed here so downstream structuring stays shuffle-free; ties
+    # keep text order, which is each row's index in out_rows
     order = sorted(
         range(len(out_rows)),
         key=lambda j: (
             out_rows[j]["question_number"] or LIMITS.missing_number_sentinel,
-            out_rows[j]["text_order"],
+            j,
         ),
     )
     for seq, j in enumerate(order):

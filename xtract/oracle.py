@@ -658,16 +658,6 @@ def turn_exam_info(text: str) -> dict[str, str]:
     return exam_info(parse_payload(text)["blocks"])
 
 
-def turn_counters(rows: list[dict[str, Any]]) -> dict[str, int]:
-    """extractor.py:117-121 metadata counters."""
-    return {
-        "total_questions": len(rows),
-        "with_images": sum(1 for r in rows if r["has_image"]),
-        "total_images": sum(r["image_count"] for r in rows),
-        "split_count": sum(1 for r in rows if r["split_from_merged"]),
-    }
-
-
 # ----------------------------------------------------- v2 analyzer path
 def analyze_turn(text: str) -> list[dict[str, Any]]:
     """The v2 analyzer flow with the deterministic X4 replacement

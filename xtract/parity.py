@@ -44,15 +44,6 @@ from pyspark.sql import DataFrame
 _FSEP = "\x1f"  # between fields of one span
 _SSEP = "\x1e"  # between spans of one turn
 
-_REPORT = T.StructType(
-    [
-        T.StructField("n_turns", T.LongType(), False),
-        T.StructField("n_match", T.LongType(), False),
-        T.StructField("n_mismatch", T.LongType(), False),
-        T.StructField("pass_rate_ppm", T.LongType(), True),
-    ]
-)
-
 
 def _canon_val(v: Any) -> str:
     """Every span field is a (nullable) int, bool, string, or int

@@ -6,6 +6,8 @@ partitioning (SURVEY.md §4).
 """
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
 
 from .catalog import DEFAULT_BUCKETS
@@ -44,8 +46,13 @@ def build(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
+    # spark-submit starts the Python driver with PYSPARK_GATEWAY_PORT
+    # set (pyspark attaches to the launcher's JVM by it); builder
+    # options would override the launcher's --master, so leave it be
     if master:
         b = b.master(master)
-    elif not SparkSession.getActiveSession():
+    elif not (
+        SparkSession.getActiveSession() or "PYSPARK_GATEWAY_PORT" in os.environ
+    ):
         b = b.master(f"local[{cores}]")
     return b.getOrCreate()

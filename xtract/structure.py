@@ -170,18 +170,6 @@ def exam_info(blocks: DataFrame) -> DataFrame:
     )
 
 
-def turn_counters(final_spans: DataFrame) -> DataFrame:
-    """A2 metadata counters per turn (extractor.py:117-121): partial
-    (map-side) aggregation applies — one shuffle of pre-aggregated
-    rows."""
-    return final_spans.groupBy("conv_id", "turn_idx").agg(
-        F.count("*").cast("long").alias("total_questions"),
-        F.count_if("has_image").cast("long").alias("with_images"),
-        F.sum("image_count").cast("long").alias("total_images"),
-        F.count_if("split_from_merged").cast("long").alias("split_count"),
-    )
-
-
 # ---------------------------------------------------------------------
 # Training-data sinks over (conv_id, turn_idx, role, text): job.py's
 # --windows (conv_windows) and --loss-mask (loss_mask). Both key on
