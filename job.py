@@ -12,6 +12,25 @@ Extract from an existing transcripts table (parquet dir)::
 
     spark-submit --py-files xtract.zip job.py \
         --input /data/transcripts --output /data/spans
+
+Under ``spark-submit`` the launcher starts the driver JVM before this
+script runs, so the session takes the launcher's master, heap and JVM
+options: pass ``--driver-memory 8g`` for the heap a plain ``python``
+driver gets, and for a warm JVM start, the class-data-sharing archive
+that ``xtract.session`` keeps once a plain ``python`` driver has
+started twice on the machine (its docstring), e.g.::
+
+    SPARK_CONF_DIR=~/.cache/xtract/cds/conf spark-submit \
+        --driver-memory 8g \
+        --driver-java-options "-XX:SharedArchiveFile=$(ls ~/.cache/xtract/cds/*.jsa) \
+            -XX:+VerifySharedSpaces -Xlog:cds=off,cds+dynamic=off" \
+        --py-files xtract.zip job.py --input gen:100 --output /tmp/spans
+
+Without ``--partitions``, a launcher's ``--conf
+spark.sql.shuffle.partitions`` holds; else ``--master local[n]`` (or a
+launcher's ``spark.default.parallelism``) gives ``n`` shuffle
+partitions, and a cluster master keeps Spark's default (200, which AQE
+coalesces).
 """
 from __future__ import annotations
 
@@ -50,7 +69,13 @@ def main(argv: list[str] | None = None) -> int:
         required=True,
         help="span sink: parquet path or table:<catalog.db.name>",
     )
-    ap.add_argument("--partitions", type=int, default=None, help="shuffle partitions")
+    ap.add_argument(
+        "--partitions",
+        type=int,
+        default=None,
+        help="shuffle partitions (default: the launcher's, else n under a "
+        "local[n] master, else Spark's)",
+    )
     ap.add_argument(
         "--exam-info", default=None, help="optional output path for per-turn exam metadata"
     )

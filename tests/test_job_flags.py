@@ -6,8 +6,8 @@ because the resume path writes parquet with dynamic partition
 overwrite and would otherwise treat the ref as a literal directory
 name, then crash at the final span-count readback after doing all the
 work (review finding). The option list, the set of xtract modules the
-job and the benchmark import, and the launcher's --master under
-spark-submit are pinned here too."""
+job and the benchmark import, and the launcher's --master, driver
+memory and parallelism under spark-submit are pinned here too."""
 import ast
 import os
 import re
@@ -156,25 +156,52 @@ def test_module_surface():
     assert unreached == {"__init__", "evaluator"}
 
 
-def test_spark_submit_master_wins(spark, tmp_path):
-    """Under spark-submit, session.build must leave the launcher's
-    --master alone; a plain Python driver (this test session) still
-    gets local[cores]."""
+def _submit(tmp_path, body: str, *launcher_args: str) -> list[str]:
+    """stdout lines of a probe script run by spark-submit."""
     probe = tmp_path / "probe.py"
-    probe.write_text(
-        "from xtract import session\n"
-        "s = session.build()\n"
-        "print('master=' + s.sparkContext.master)\n"
-        "s.stop()\n"
-    )
+    probe.write_text("from xtract import session\ns = session.build()\n" + body + "s.stop()\n")
     env = dict(
         os.environ, PYTHONPATH=str(ROOT),
         PYSPARK_PYTHON=sys.executable, PYSPARK_DRIVER_PYTHON=sys.executable,
     )
     p = subprocess.run(
-        ["spark-submit", "--master", "local[2]", str(probe)],
+        ["spark-submit", *launcher_args, str(probe)],
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
     )
     assert p.returncode == 0, p.stderr[-4000:]
-    assert "master=local[2]" in p.stdout.splitlines()
+    return p.stdout.splitlines()
+
+
+def test_spark_submit_master_wins(spark, tmp_path):
+    """Under spark-submit, session.build must leave the launcher's
+    --master alone; a plain Python driver (this test session) still
+    gets local[cores]."""
+    out = _submit(
+        tmp_path, "print('master=' + s.sparkContext.master)\n", "--master", "local[2]"
+    )
+    assert "master=local[2]" in out
     assert spark.sparkContext.master == "local[8]"
+
+
+def test_spark_submit_driver_conf(tmp_path):
+    """Under spark-submit the driver JVM is the launcher's: the session
+    reports its --driver-memory (a builder value would be a no-op on a
+    running JVM), sizes shuffles by its --master's parallelism unless
+    the launcher set a count, and asks for no class-data-sharing
+    option."""
+    body = (
+        "c = s.sparkContext.getConf()\n"
+        "print('memory=' + c.get('spark.driver.memory', ''))\n"
+        "print('shuffle=' + s.conf.get('spark.sql.shuffle.partitions'))\n"
+        "print('opts=' + c.get('spark.driver.extraJavaOptions', ''))\n"
+    )
+    out = _submit(tmp_path, body, "--master", "local[2]", "--driver-memory", "1g")
+    assert "memory=1g" in out
+    assert "shuffle=2" in out
+    (opts,) = [ln for ln in out if ln.startswith("opts=")]
+    assert "SharedArchiveFile" not in opts and "ArchiveClassesAtExit" not in opts
+    out = _submit(
+        tmp_path, body, "--master", "local[2]",
+        "--conf", "spark.sql.shuffle.partitions=7",
+    )
+    assert "shuffle=7" in out
