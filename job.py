@@ -40,7 +40,9 @@ import sys
 import time
 
 
-def main(argv: list[str] | None = None) -> int:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    """The job's options, with every usage check (exit 2) done before
+    any session is built or any sink writes."""
     ap = argparse.ArgumentParser(description="xtract: per-turn main-content extraction")
     ap.add_argument(
         "--input",
@@ -155,7 +157,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--run-id", default="run0", help="run id recorded in lineage rows")
     args = ap.parse_args(argv)
 
-    from xtract import catalog, gen, pipeline, session
+    from xtract import catalog
 
     # validate flag combinations BEFORE any expensive work
     # (0 would read as "off" and a negative modulus as "every turn")
@@ -189,8 +191,14 @@ def main(argv: list[str] | None = None) -> int:
     # only the jsonl arm has malformed lines to quarantine
     if args.quarantine and not args.input.startswith("jsonl:"):
         ap.error("--quarantine requires --input jsonl:")
+    return args
 
-    spark = session.build(app="xtract-job", shuffle_partitions=args.partitions)
+
+def run(spark, args: argparse.Namespace) -> dict:
+    """Read the input, write every requested sink and return the job's
+    JSON line as a dict; the session stays open."""
+    from xtract import catalog, gen, pipeline
+
     t0 = time.monotonic()
 
     jsonl_obs = None
@@ -333,48 +341,40 @@ def main(argv: list[str] | None = None) -> int:
                 bucket_col=None,
             )
 
-    parity_failed = False
     if args.parity_sample:
-        import pyspark.sql.functions as F
-
         from xtract import parity
 
         # audit the WRITTEN spans (the actual output bytes), not a
         # re-extraction — read_ref of the sink vs the executor-side
         # pure-Python oracle over the same (hash-sampled) turns
-        pt, ps = df, written
-        if args.parity_sample > 1:
-            cond = (
-                F.pmod(F.xxhash64("conv_id"), F.lit(args.parity_sample)) == 0
-            )
-            pt, ps = pt.filter(cond), ps.filter(cond)
-        prow = parity.parity_report(pt, ps).collect()[0]
+        prow = parity.parity_report(df, written, args.parity_sample).collect()[0]
         result["parity"] = {
             "turns_audited": int(prow.n_turns),
             "mismatch": int(prow.n_mismatch),
             "pass_rate_ppm": int(prow.pass_rate_ppm),
         }
-        parity_failed = prow.n_mismatch > 0
 
     wall = time.monotonic() - t0
-    print(
-        json.dumps(
-            {
-                "turns": n_turns,
-                "spans": n_spans,
-                "sec": round(wall, 2),
-                "turns_per_sec": round(n_turns / wall, 1),
-                **(
-                    {"quarantined": n_quarantined}
-                    if n_quarantined is not None
-                    else {}
-                ),
-                **{k: v for k, v in result.items() if v is not None},
-            }
-        )
-    )
+    return {
+        "turns": n_turns,
+        "spans": n_spans,
+        "sec": round(wall, 2),
+        "turns_per_sec": round(n_turns / wall, 1),
+        **({"quarantined": n_quarantined} if n_quarantined is not None else {}),
+        **{k: v for k, v in result.items() if v is not None},
+    }
+
+
+def main(argv: list[str] | None = None) -> int:
+    args = parse_args(argv)
+
+    from xtract import session
+
+    spark = session.build(app="xtract-job", shuffle_partitions=args.partitions)
+    line = run(spark, args)
+    print(json.dumps(line))
     spark.stop()
-    return 1 if parity_failed else 0
+    return 1 if line.get("parity", {}).get("mismatch") else 0
 
 
 if __name__ == "__main__":

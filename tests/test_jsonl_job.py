@@ -1,9 +1,9 @@
 """Production-surface JSONL ingestion: `job.py --input jsonl:` parses
 transcript deliveries with PERMISSIVE quarantine, extracts from the
 good rows, reports the quarantined count on the job's JSON line, and
-writes the raw malformed lines to the --quarantine sink. A good line
-without a text field reaches the --windows and --loss-mask sinks as
-a 0-token turn. Run via subprocess because job.main owns (and stops)
+writes the raw malformed or keyless lines to the --quarantine sink. A
+good line without a text field reaches the --windows and --loss-mask
+sinks as a 0-token turn. Run via subprocess because job.main owns (and stops)
 its SparkSession."""
 import json
 import os
@@ -45,6 +45,15 @@ def test_jsonl_input_arm(tmp_path):
         {"conv_id": "conv00000000", "turn_idx": 3, "role": "assistant"}
     ))
     n_good = len(lines) - n_torn_json + 1
+    # valid JSON lines lacking a key column: schema.TRANSCRIPTS
+    # declares conv_id and turn_idx non-null, so they are quarantined
+    # (they used to reach the fused kernel and crash the job)
+    keyless = [
+        json.dumps({"turn_idx": 0, "role": "user", "text": "1. 没有会话的题目内容"}),
+        json.dumps({"conv_id": "conv00000001", "role": "user", "text": "1. 没有轮次的题目内容"}),
+    ]
+    torn.extend(keyless)
+    n_torn += 2
     src = tmp_path / "delivery.jsonl"
     src.write_text("\n".join(torn) + "\n")
 
@@ -76,12 +85,14 @@ def test_jsonl_input_arm(tmp_path):
     assert line["turns"] == n_good
     assert line["spans"] > 0
 
-    # quarantine sink holds exactly the torn raw lines
+    # quarantine sink holds exactly the bad raw lines
     qrows = duckdb.sql(f"select raw from '{quar}/*.parquet'").fetchall()
     assert len(qrows) == n_torn
-    # torn lines lost their closing brace; blank/ws lines strip empty
-    assert all(not r[0].strip().endswith("}") for r in qrows)
-    assert sum(1 for r in qrows if not r[0].strip()) == 2
+    # torn lines lost their closing brace; blank/ws lines kept as read
+    assert sorted(r[0] for r in qrows) == sorted(
+        [ln[:-5] for i, ln in enumerate(lines) if i % 7 == 3]
+        + ["", "   "] + keyless
+    )
 
     # extraction over the good rows produced a well-formed span table
     n_spans = duckdb.sql(

@@ -96,16 +96,6 @@ def detect_numbers_v1(texts: pd.Series) -> pd.Series:
     return texts.map(lambda t: _scan(t, "v1"))
 
 
-@pandas_udf(MATCHES_TYPE)
-def detect_numbers_v2_strict(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: _scan(t, "v2-strict"))
-
-
-@pandas_udf(MATCHES_TYPE)
-def detect_numbers_v2_loose(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: _scan(t, "v2-loose"))
-
-
 _BOUNDARY_BEFORE = set("。？！；?!;.)）")
 
 
@@ -150,8 +140,6 @@ def with_matches(df, content_col: str = "block.block_content", mode: str = "v1")
     no digits out of the Arrow round-trip entirely."""
     udf = {
         "v1": detect_numbers_v1,
-        "v2-strict": detect_numbers_v2_strict,
-        "v2-loose": detect_numbers_v2_loose,
         "v2-arb": detect_numbers_v2_arb,
     }[mode]
     c = F.col(content_col)

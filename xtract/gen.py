@@ -2,7 +2,7 @@
 
 Every row is a pure function of ``(seed, conv_id, turn_idx)`` — no
 global RNG state, no wall-clock — so generation runs distributed via
-``mapInPandas`` over a conversation range and any partition produces
+``sources.map_rows`` over a conversation range and any partition produces
 identical bytes on every run (TESTDATA.md seed=42 convention).
 
 Payload mix per FIXTURES.md §2: ~50% raw merged exam text (kind a),
@@ -281,26 +281,17 @@ def gen_local(n_convs: int, mega_every: int = 0) -> list[dict[str, Any]]:
 
 def transcripts(spark, n_convs: int, mega_every: int = 0, partitions: int | None = None):
     """Distributed generation: one input row per conversation ordinal,
-    fanned out to turns inside mapInPandas (no driver materialization,
-    no shuffle)."""
-    import pandas as pd
-
+    fanned out to turns inside one map_rows kernel (no driver
+    materialization, no shuffle). ``ts`` stays UTC-aware, which Arrow
+    stores as the same instant whatever the session time zone."""
     from . import schema
+    from .sources import map_rows
 
     parts = partitions or spark.sparkContext.defaultParallelism
-
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for conv_ord in pdf["id"]:
-                rows.extend(conv_rows(int(conv_ord), mega_every))
-            if rows:
-                out = pd.DataFrame(rows)
-                out["ts"] = pd.to_datetime(out["ts"], utc=True).dt.tz_localize(None)
-                yield out
-
     base = spark.range(0, n_convs, numPartitions=parts)
-    return base.mapInPandas(emit, schema=schema.TRANSCRIPTS)
+    return map_rows(
+        base, ["id"], lambda conv_ord: conv_rows(conv_ord, mega_every), schema.TRANSCRIPTS
+    )
 
 
 # ------------------------------------------------------------- HTML pages
@@ -344,33 +335,20 @@ def html_page(r: random.Random) -> tuple[str, list[str]]:
 
 def html_transcripts(spark, n_pages: int, partitions: int | None = None):
     """Deterministic HTML-payload transcripts (conv per page)."""
-    import pandas as pd
-
     from . import schema
+    from .sources import map_rows
+
+    def emit(i: int) -> Iterator[dict[str, Any]]:
+        html, _ = html_page(_rng(f"html{i}", 0))
+        yield {
+            "conv_id": f"page{i:06d}",
+            "turn_idx": 0,
+            "role": "tool",
+            "text": html,
+            "tool": "crawler",
+            "ts": EPOCH + dt.timedelta(seconds=i),
+        }
 
     parts = partitions or spark.sparkContext.defaultParallelism
-
-    def emit(batches):
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                r = _rng(f"html{i}", 0)
-                html, _ = html_page(r)
-                rows.append(
-                    {
-                        "conv_id": f"page{i:06d}",
-                        "turn_idx": 0,
-                        "role": "tool",
-                        "text": html,
-                        "tool": "crawler",
-                        "ts": EPOCH + dt.timedelta(seconds=i),
-                    }
-                )
-            out = pd.DataFrame(rows)
-            out["ts"] = pd.to_datetime(out["ts"], utc=True).dt.tz_localize(None)
-            yield out
-
-    return spark.range(0, n_pages, numPartitions=parts).mapInPandas(
-        emit, schema=schema.TRANSCRIPTS
-    )
+    base = spark.range(0, n_pages, numPartitions=parts)
+    return map_rows(base, ["id"], emit, schema.TRANSCRIPTS)

@@ -1,7 +1,7 @@
 """HTML main-content extraction (north rule: "HTML boilerplate strip,
 PDF/layout parse, DOM heuristics").
 
-One narrow kernel (Arrow ``mapInPandas``, zero exchanges, the same
+One narrow kernel (``sources.map_rows``, zero exchanges, the same
 shape as ``pdf.extract_pdf_turns``): per turn, the stdlib
 ``html.parser`` tokenizes the document into DOM block elements with
 raw features (tag, text, char counts, link chars, ancestor flags) —
@@ -20,12 +20,11 @@ import re
 from html.parser import HTMLParser
 from typing import Iterator
 
-import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
-from .sources import read_files
+from .sources import map_rows, read_files
 
 BLOCK_TAGS = {
     "p",
@@ -185,25 +184,14 @@ BLOCKS_SCHEMA = T.StructType(
 
 def dom_blocks(transcripts: DataFrame) -> DataFrame:
     """Reference form, stage 1: turn HTML payloads → one row per DOM
-    block with raw features. Narrow (mapInPandas), zero shuffles."""
-    names = [f.name for f in BLOCKS_SCHEMA.fields]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {k: [] for k in names}
-            for conv_id, turn_idx, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"]
-            ):
-                for b in parse_blocks_py(text):
-                    cols["conv_id"].append(conv_id)
-                    cols["turn_idx"].append(int(turn_idx))
-                    for k, v in b.items():
-                        cols[k].append(v)
-            if cols["conv_id"]:
-                yield pd.DataFrame(cols, columns=names)
-
-    return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        kernel, schema=BLOCKS_SCHEMA
+    block with raw features. Narrow (``map_rows``), zero shuffles."""
+    return map_rows(
+        transcripts,
+        ["conv_id", "turn_idx", "text"],
+        lambda c, t, text: (
+            {"conv_id": c, "turn_idx": t, **b} for b in parse_blocks_py(text)
+        ),
+        BLOCKS_SCHEMA,
     )
 
 
@@ -298,28 +286,22 @@ def extract_main_content(transcripts: DataFrame) -> DataFrame:
     ``(conv_id, turn_idx)`` (tests/test_html.py), except that two input
     rows with the same ``(conv_id, turn_idx)`` give two output rows,
     not one merged row; ``read_html`` never produces such rows."""
-    names = MAIN_CONTENT.fieldNames()
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {k: [] for k in names}
-            for conv_id, turn_idx, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"]
-            ):
-                blocks = parse_blocks_py(text)
-                if not blocks:
-                    continue
-                good = [b for b in blocks if is_good(b)]
-                cols["conv_id"].append(conv_id)
-                cols["turn_idx"].append(int(turn_idx))
-                cols["main_text"].append("\n".join(b["text"] for b in good))
-                cols["blocks_total"].append(len(blocks))
-                cols["blocks_good"].append(len(good))
-                cols["chars_good"].append(sum(b["n_chars"] for b in good))
-                cols["chars_total"].append(sum(b["n_chars"] for b in blocks))
-            if cols["conv_id"]:
-                yield pd.DataFrame(cols, columns=names)
-
-    return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        kernel, schema=MAIN_CONTENT
+    return map_rows(
+        transcripts, ["conv_id", "turn_idx", "text"], _main_content, MAIN_CONTENT
     )
+
+
+def _main_content(conv_id: str, turn_idx: int, text: str | None) -> Iterator[dict]:
+    blocks = parse_blocks_py(text)
+    if not blocks:
+        return
+    good = [b for b in blocks if is_good(b)]
+    yield {
+        "conv_id": conv_id,
+        "turn_idx": turn_idx,
+        "main_text": "\n".join(b["text"] for b in good),
+        "blocks_total": len(blocks),
+        "blocks_good": len(good),
+        "chars_good": sum(b["n_chars"] for b in good),
+        "chars_total": sum(b["n_chars"] for b in blocks),
+    }

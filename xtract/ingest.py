@@ -99,7 +99,9 @@ def read_jsonl_transcripts(spark: SparkSession, path: str) -> DataFrame:
     for malformed JSON — but a NULL struct outright for blank /
     whitespace-only lines — so the split keys on BOTH: a row is bad
     when the struct is NULL or the declared _corrupt field is
-    populated (``is_bad``); never on field nullness. Returns
+    populated (``is_bad``). Of the fields, only the key columns
+    schema.TRANSCRIPTS declares non-null (conv_id, turn_idx) make a
+    row bad when NULL; a NULL text or role stays a good row. Returns
     (raw string, r struct) rows; split with good_rows /
     corrupt_rows."""
     return spark.read.text(path).select(
@@ -113,9 +115,15 @@ def read_jsonl_transcripts(spark: SparkSession, path: str) -> DataFrame:
 
 
 def is_bad() -> F.Column:
-    """NULL struct (blank/whitespace-only line) or populated
-    _corrupt (torn/malformed JSON)."""
-    return F.col("r").isNull() | F.col("r._corrupt").isNotNull()
+    """NULL struct (blank/whitespace-only line), populated _corrupt
+    (torn/malformed JSON), or a valid JSON line lacking a key column
+    (NULL conv_id or turn_idx)."""
+    return (
+        F.col("r").isNull()
+        | F.col("r._corrupt").isNotNull()
+        | F.col("r.conv_id").isNull()
+        | F.col("r.turn_idx").isNull()
+    )
 
 
 def good_rows(parsed: DataFrame) -> DataFrame:

@@ -13,7 +13,7 @@ measures that equality AT CORPUS SCALE, fully distributed — no
   vectorized Arrow UDF and digested per turn (md5 over the
   seq-ordered span list) behind one (conv_id, turn_idx) shuffle of
   canon strings;
-- the pure-Python oracle runs INSIDE mapInPandas on the executors,
+- the pure-Python oracle runs INSIDE a map_rows kernel on the executors,
   emitting the same per-turn digest for every turn (the empty-span
   digest for turns that extract nothing), so the oracle pass scales
   with the cluster exactly like the kernel does;
@@ -40,6 +40,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
+
+from .sources import map_rows
 
 _FSEP = "\x1f"  # between fields of one span
 _SSEP = "\x1e"  # between spans of one turn
@@ -120,7 +122,7 @@ def spark_digests(spans: DataFrame) -> DataFrame:
 
 def oracle_digests(turns: DataFrame) -> DataFrame:
     """(conv_id, turn_idx, digest) from the pure-Python oracle,
-    executed ON THE EXECUTORS via mapInPandas — the reference
+    executed ON THE EXECUTORS via map_rows — the reference
     semantics sweep the corpus at cluster parallelism, one digest row
     per input turn (empty-list digest when the oracle extracts
     nothing), no shuffle at all."""
@@ -134,37 +136,28 @@ def oracle_digests(turns: DataFrame) -> DataFrame:
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            digs = []
-            for text in pdf["text"]:
-                rows = oracle.extract_turn(text)
-                digs.append(
-                    turn_digest(
-                        [_canon_span(i, r) for i, r in enumerate(rows)]
-                    )
-                )
-            # build from plain arrays — never pandas Series — so index
-            # alignment can't drop or mispair rows
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"].to_numpy(),
-                    "turn_idx": pdf["turn_idx"].to_numpy().astype("int32"),
-                    "digest": digs,
-                }
-            )
+    def emit(conv_id: str, turn_idx: int, text: str | None) -> Iterator[dict]:
+        rows = oracle.extract_turn(text)
+        canon = [_canon_span(i, r) for i, r in enumerate(rows)]
+        yield {"conv_id": conv_id, "turn_idx": turn_idx, "digest": turn_digest(canon)}
 
-    return turns.select("conv_id", "turn_idx", "text").mapInPandas(
-        run, schema=out_schema
-    )
+    return map_rows(turns, ["conv_id", "turn_idx", "text"], emit, out_schema)
 
 
-def parity_report(turns: DataFrame, spans: DataFrame) -> DataFrame:
+def parity_report(
+    turns: DataFrame, spans: DataFrame, sample_mod: int = 1
+) -> DataFrame:
     """One-row report: full-outer join of the two digest tables on
     (conv_id, turn_idx) — digest rows only, never span text — with
     kernel-silent turns scored against the empty digest, then a
     global count agg. pass_rate_ppm is integer parts-per-million so
-    the number is exact."""
+    the number is exact. ``sample_mod`` > 1 audits only the
+    conversations with ``xxhash64(conv_id) % sample_mod == 0``, on both
+    sides, so whole conversations survive the sample and turn ordering
+    within each is never broken."""
+    if sample_mod > 1:
+        keep = F.pmod(F.xxhash64("conv_id"), F.lit(sample_mod)) == 0
+        turns, spans = turns.filter(keep), spans.filter(keep)
     o = oracle_digests(turns).withColumnRenamed("digest", "od")
     s = spark_digests(spans).withColumnRenamed("digest", "sd")
     j = o.join(s, ["conv_id", "turn_idx"], "full_outer")
@@ -184,14 +177,8 @@ def parity_report(turns: DataFrame, spans: DataFrame) -> DataFrame:
 
 
 def sweep(turns: DataFrame, mode: str = "fused", sample_mod: int = 1) -> DataFrame:
-    """Run the kernel and the oracle over the (optionally
-    hash-sampled) corpus and report per-turn equality. Sampling keys
-    on conv_id so whole conversations survive — turn ordering within
-    a conversation is never broken by the sample."""
+    """Run the kernel over the corpus and report per-turn equality
+    with the oracle on the (optionally hash-sampled) conversations."""
     from . import pipeline
 
-    if sample_mod > 1:
-        turns = turns.filter(
-            F.pmod(F.xxhash64("conv_id"), F.lit(sample_mod)) == 0
-        )
-    return parity_report(turns, pipeline.extract(turns, mode=mode))
+    return parity_report(turns, pipeline.extract(turns, mode=mode), sample_mod)

@@ -6,8 +6,8 @@ carry born-digital PDFs whose text layout is recoverable WITHOUT any
 model call by interpreting the page content stream. This module is a
 deterministic, stdlib-only (``zlib``) PDF text-layout parser:
 
-1. **Byte-stream tokenization** (per-document sequential → Arrow
-   ``mapInPandas`` kernel, same shape as html.dom_blocks): find page
+1. **Byte-stream tokenization** (per-document sequential → one
+   ``sources.map_rows`` kernel, same shape as html.dom_blocks): find page
    ``stream…endstream`` segments (FlateDecode supported), tokenize the
    content stream (literal/hex strings with full escape handling,
    numbers, names, operators), and run the PDF text-state machine —
@@ -40,13 +40,13 @@ import re
 import zlib
 from typing import Any, Iterator
 
-import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from . import schema
-from .sources import read_files
+from .pipeline import span_rows
+from .sources import map_rows, read_files
 
 # ------------------------------------------------------------------ lexer
 
@@ -388,10 +388,10 @@ def _reading_order(blocks: list[dict], page_w: float) -> list[dict]:
     )
 
 
-def parse_pdf_py(buf: bytes) -> dict | None:
+def parse_pdf_py(buf: bytes | None) -> dict | None:
     """One PDF → payload dict (page/blocks/lines, top-left pixel
-    coords) or None if nothing parseable. Pure function shared by the
-    Spark kernel and tests."""
+    coords) or None if nothing parseable (None and empty input
+    too). Pure function shared by the Spark kernel and tests."""
     if not buf or not buf.startswith(b"%PDF"):
         return None
     m = _MEDIABOX.search(buf)
@@ -618,67 +618,46 @@ def gen_pdf_turns(spark: SparkSession, n: int, partitions: int | None = None) ->
     every 5th with per-line BT objects)."""
     from . import gen
 
+    def emit(i: int) -> Iterator[dict]:
+        conv = f"pdfconv-{i // 4:05d}"
+        payload = json.loads(gen._payload_b(gen._rng(conv, i)))
+        yield {
+            "conv_id": conv,
+            "turn_idx": i,
+            "payload": make_pdf(
+                payload["blocks"],
+                payload["page"]["width"],
+                payload["page"]["height"],
+                compress=(i % 3 == 0),
+                bt_per_line=(i % 5 == 0),
+            ),
+        }
+
     base = spark.range(n, numPartitions=partitions).select(
         F.col("id").cast("int").alias("id")
     )
-
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                conv = f"pdfconv-{i // 4:05d}"
-                r = gen._rng(conv, i)
-                payload = json.loads(gen._payload_b(r))
-                rows.append(
-                    {
-                        "conv_id": conv,
-                        "turn_idx": i,
-                        "payload": make_pdf(
-                            payload["blocks"],
-                            payload["page"]["width"],
-                            payload["page"]["height"],
-                            compress=(i % 3 == 0),
-                            bt_per_line=(i % 5 == 0),
-                        ),
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows, columns=["conv_id", "turn_idx", "payload"])
-
-    return base.mapInPandas(emit, schema=PDF_TURNS)
+    return map_rows(base, ["id"], emit, PDF_TURNS)
 
 
 def pdf_to_transcripts(pdfs: DataFrame) -> DataFrame:
     """(conv_id, turn_idx, payload:binary) → transcripts-shaped rows
     whose ``text`` is the parsed schema.PAYLOAD JSON. Narrow
-    (mapInPandas, zero shuffles); unparseable documents are dropped —
+    (``map_rows``, zero shuffles); unparseable documents are dropped —
     the adversarial-payload contract (tests/test_edge_payloads.py)."""
-    names = [f.name for f in schema.TRANSCRIPTS.fields]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, buf in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["payload"]
-            ):
-                payload = parse_pdf_py(bytes(buf) if buf is not None else b"")
-                if payload is None:
-                    continue
-                rows.append(
-                    {
-                        "conv_id": conv_id,
-                        "turn_idx": int(turn_idx),
-                        "role": "tool",
-                        "text": json.dumps(payload, ensure_ascii=False),
-                        "tool": "pdf",
-                        "ts": None,
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows, columns=names)
+    def emit(conv_id: str, turn_idx: int, buf: bytes | None) -> Iterator[dict]:
+        payload = parse_pdf_py(buf)
+        if payload is not None:
+            yield {
+                "conv_id": conv_id,
+                "turn_idx": turn_idx,
+                "role": "tool",
+                "text": json.dumps(payload, ensure_ascii=False),
+                "tool": "pdf",
+                "ts": None,
+            }
 
-    return pdfs.mapInPandas(kernel, schema=schema.TRANSCRIPTS)
+    return map_rows(pdfs, ["conv_id", "turn_idx", "payload"], emit, schema.TRANSCRIPTS)
 
 
 def extract_pdf_turns(pdfs: DataFrame) -> DataFrame:
@@ -688,32 +667,12 @@ def extract_pdf_turns(pdfs: DataFrame) -> DataFrame:
     stage instead of two). Same results as
     ``pipeline.extract(pdf_to_transcripts(pdfs))`` — pinned by
     tests/test_pdf.py — at roughly half the per-page overhead."""
-    from . import oracle, schema as schema_mod
 
-    field_names = [f.name for f in schema_mod.SPANS.fields]
+    def emit(conv_id: str, turn_idx: int, buf: bytes | None) -> Iterator[dict]:
+        payload = parse_pdf_py(buf)
+        return () if payload is None else span_rows(conv_id, turn_idx, payload)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            cols: dict[str, list] = {name: [] for name in field_names}
-            for conv_id, turn_idx, buf in zip(
-                pdf_batch["conv_id"], pdf_batch["turn_idx"], pdf_batch["payload"]
-            ):
-                payload = parse_pdf_py(bytes(buf) if buf is not None else b"")
-                if payload is None:
-                    continue
-                turn_idx = int(turn_idx)
-                for seq, row in enumerate(oracle.extract_payload(payload)):
-                    cols["conv_id"].append(conv_id)
-                    cols["turn_idx"].append(turn_idx)
-                    cols["seq"].append(seq)
-                    for k, v in row.items():
-                        cols[k].append(v)
-            if cols["conv_id"]:
-                yield pd.DataFrame(cols, columns=field_names)
-
-    return pdfs.select("conv_id", "turn_idx", "payload").mapInPandas(
-        kernel, schema=schema_mod.SPANS
-    )
+    return map_rows(pdfs, ["conv_id", "turn_idx", "payload"], emit, schema.SPANS)
 
 
 def read_pdfs(spark: SparkSession, path: str) -> DataFrame:

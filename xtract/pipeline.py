@@ -3,7 +3,8 @@ independent check of it.
 
 - ``mode='fused'`` (default, the plan ``job.py`` runs): the whole
   per-turn extraction — payload parse, detect, split, merge, structure
-  — runs as ONE Arrow-batched ``mapInPandas`` kernel. Per-turn
+  — runs as ONE Arrow-batched kernel (``sources.map_rows`` over
+  ``span_rows``, which ``pdf.extract_pdf_turns`` shares). Per-turn
   extraction is embarrassingly parallel, so this plan has ZERO
   shuffles: scan → narrow map → sink. This is exactly the
   architecture the north star prescribes ("each turn's text payload
@@ -28,7 +29,8 @@ aggregation (map-side combine), which is skew-safe for counters.
 """
 from __future__ import annotations
 
-import pandas as pd
+from collections.abc import Iterator
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -45,38 +47,27 @@ def extract(transcripts: DataFrame, mode: str = "fused") -> DataFrame:
 
     parsed = sources.parse_payloads(transcripts)
     blocks = sources.exploded_blocks(parsed)
-    spans = split.split_spans(blocks, mode="v1")
+    spans = split.split_spans(blocks)
     merged = merge_mod.merge_greedy(spans, merge_mod.image_blocks(blocks))
     return structure.structure(merged)
+
+
+def span_rows(conv_id: str, turn_idx: int, payload: dict) -> Iterator[dict]:
+    """One turn's parsed payload → its schema.SPANS rows, ``seq``
+    numbering them in extraction order."""
+    for seq, row in enumerate(oracle.extract_payload(payload)):
+        yield {"conv_id": conv_id, "turn_idx": turn_idx, "seq": seq, **row}
 
 
 def _extract_fused(transcripts: DataFrame) -> DataFrame:
     """Single-kernel plan. The kernel is the same per-turn logic the
     relational plan spells out operator-by-operator; tests cross-check
     the two plans and the pure-Python oracle against each other."""
-
-    field_names = [f.name for f in schema.SPANS.fields]
-
-    def kernel(batches):
-        for pdf in batches:
-            # columnar accumulation: one list per output column (much
-            # cheaper than list-of-dicts → DataFrame at Arrow scale)
-            cols = {name: [] for name in field_names}
-            for conv_id, turn_idx, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"]
-            ):
-                turn_idx = int(turn_idx)
-                for seq, row in enumerate(oracle.extract_turn(text)):
-                    cols["conv_id"].append(conv_id)
-                    cols["turn_idx"].append(turn_idx)
-                    cols["seq"].append(seq)
-                    for k, v in row.items():
-                        cols[k].append(v)
-            if cols["conv_id"]:
-                yield pd.DataFrame(cols, columns=field_names)
-
-    return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        kernel, schema=schema.SPANS
+    return sources.map_rows(
+        transcripts,
+        ["conv_id", "turn_idx", "text"],
+        lambda c, t, text: span_rows(c, t, oracle.parse_payload(text)),
+        schema.SPANS,
     )
 
 
@@ -142,19 +133,11 @@ def analyze(transcripts: DataFrame, mode: str = "fused") -> DataFrame:
         ]
     )
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"]
-            ):
-                for g in oracle.analyze_turn(text):
-                    rows.append(
-                        {"conv_id": conv_id, "turn_idx": int(turn_idx), **g}
-                    )
-            if rows:
-                yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-
-    return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        kernel, schema=out_schema
+    return sources.map_rows(
+        transcripts,
+        ["conv_id", "turn_idx", "text"],
+        lambda c, t, text: (
+            {"conv_id": c, "turn_idx": t, **g} for g in oracle.analyze_turn(text)
+        ),
+        out_schema,
     )

@@ -1,4 +1,6 @@
-"""Payload ingestion: turn text → typed layout blocks + OCR lines.
+"""Payload ingestion: turn text → typed layout blocks + OCR lines, and
+``map_rows``, the one driver for the engine's stateless per-row Python
+kernels.
 
 Spark-first restatement of the reference's JSON scan
 (extractor.py:62-74 loads ``parsing_res_list``): here the layout parse
@@ -9,10 +11,22 @@ stage, so Catalyst keeps column pruning / predicate pushdown across it.
 Raw (non-JSON) payloads become a single synthetic ``text`` block with
 the deterministic geometry shared with the oracle
 (config.RAW_PAGE_WIDTH / RAW_LINE_HEIGHT).
+
+``map_rows`` owns the Arrow batch loop every per-row kernel (the fused
+extraction and analyzer kernels, the html, pdf and parity kernels, the
+synthetic generators) would otherwise restate: a row's output depends
+on that row alone, so the plan is one narrow ``mapInPandas`` with no
+exchange. The order-dependent folds (structure.conv_windows,
+structure.window_assignments), merge.merge_greedy's packed kernel and
+fingerprint.fingerprints' numpy kernel batch their own way.
 """
 from __future__ import annotations
 
+from collections.abc import Callable, Iterable, Iterator
+
+import pandas as pd
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
 from . import schema
@@ -32,6 +46,31 @@ def read_files(spark, path: str, glob_filter: str | None = None) -> DataFrame:
     return reader.load(path).select(
         F.element_at(F.split("path", "/"), -1).alias("name"), "content"
     )
+
+
+def map_rows(
+    df: DataFrame,
+    cols: list[str],
+    fn: Callable[..., Iterable[dict]],
+    out_schema: T.StructType,
+) -> DataFrame:
+    """``fn(*values)`` over the ``cols`` values of every row of ``df``;
+    each dict it yields, keyed by ``out_schema``'s fields, is one output
+    row. Values arrive as plain Python objects (``tolist``): ints as
+    ``int``, nulls as ``None``, except that an int column with a null
+    in the batch arrives as floats, NaN for the null. A batch that
+    yields no rows yields no frame."""
+    names = out_schema.fieldNames()
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                r for vals in zip(*(pdf[c].tolist() for c in cols)) for r in fn(*vals)
+            ]
+            if rows:
+                yield pd.DataFrame({n: [r[n] for r in rows] for n in names})
+
+    return df.select(*cols).mapInPandas(kernel, schema=out_schema)
 
 
 def parse_payloads(transcripts: DataFrame) -> DataFrame:

@@ -74,10 +74,9 @@ def _finalize(tb: DataFrame, spans_arr) -> DataFrame:
     )
 
 
-def split_spans(blocks: DataFrame, mode: str = "v1") -> DataFrame:
-    """exploded text blocks (sources.exploded_blocks) → span rows."""
-    if mode != "v1":
-        raise ValueError("use split_spans_v2 for v2 semantics")
+def split_spans(blocks: DataFrame) -> DataFrame:
+    """exploded text blocks (sources.exploded_blocks) → span rows (v1
+    semantics; split_spans_v2 for v2)."""
     tb = blocks.filter(F.col("block.block_label") == "text")
     tb = with_matches(tb, "block.block_content", "v1")
 
