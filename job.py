@@ -116,13 +116,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         "large-star/small-star connected components)",
     )
     ap.add_argument(
-        "--compact-target-mb",
-        type=int,
-        default=None,
-        help="after writing, compact the span output directory to "
-        "files of ~this size (parquet paths only)",
-    )
-    ap.add_argument(
         "--windows",
         default=None,
         help="optional sink for greedy context-budget training windows "
@@ -165,17 +158,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                         ("--parity-sample", args.parity_sample)):
         if value is not None and value < 1:
             ap.error(f"{flag} must be at least 1")
-    if args.compact_target_mb is not None:
-        if args.compact_target_mb <= 0:
-            ap.error("--compact-target-mb must be a positive size")
-        if catalog.is_table_ref(args.output) or catalog.is_btable_ref(args.output):
-            ap.error("--compact-target-mb applies to parquet outputs only")
-        if args.checkpoint:
-            ap.error(
-                "--compact-target-mb would flatten the bucket-partition "
-                "layout the checkpoint resume logic keys on; compact "
-                "after the run is fully complete instead"
-            )
     # depends only on args, so it runs BEFORE the input dispatch: a
     # usage error must never leave a partial side effect (the jsonl
     # arm's --quarantine sink writes during dispatch)
@@ -246,11 +228,6 @@ def run(spark, args: argparse.Namespace) -> dict:
     else:
         catalog.write_ref(pipeline.extract(df), args.output)
         result = {"partitions_done": None}
-
-    if args.compact_target_mb:
-        result["compaction"] = catalog.compact_parquet(
-            spark, args.output, target_mb=args.compact_target_mb
-        )
 
     # the span table as written, read once for every consumer below
     written = catalog.read_ref(spark, args.output)

@@ -1,6 +1,6 @@
-"""Table IO abstraction (xtract/catalog.py): ref parsing, runtime
-Iceberg capability probe, parquet fallback round-trip, and the
-spark-submit surface accepting pdf:/table: refs."""
+"""Table IO abstraction (xtract/catalog.py): ref parsing, parquet
+fallback round-trip, a clean failure for table: refs without a
+catalog, and the bucketed btable: layout."""
 from __future__ import annotations
 
 import pytest
@@ -17,28 +17,6 @@ def test_ref_parsing():
         catalog.table_name("/data/spans")
     with pytest.raises(ValueError):
         catalog.table_name("table:")
-
-
-def test_iceberg_probe_is_honest(spark):
-    """This container ships no Iceberg runtime jar: the probe must say
-    so (and must not raise). On a deployment with the jar, the same
-    probe flips the engine to catalog tables with no code change."""
-    assert catalog.iceberg_available(spark) is False
-
-
-def test_configure_iceberg_sets_catalog_confs():
-    captured: dict = {}
-
-    class FakeBuilder:
-        def config(self, k, v):
-            captured[k] = v
-            return self
-
-    catalog.configure_iceberg(FakeBuilder(), catalog="prod", warehouse="/wh")
-    assert captured["spark.sql.catalog.prod"] == catalog.ICEBERG_CATALOG_CLASS
-    assert captured["spark.sql.catalog.prod.type"] == "hadoop"
-    assert captured["spark.sql.catalog.prod.warehouse"] == "/wh"
-    assert "IcebergSparkSessionExtensions" in captured["spark.sql.extensions"]
 
 
 def test_parquet_fallback_roundtrip(spark, tmp_path):
@@ -126,44 +104,3 @@ def test_dense_assembly_over_btable_is_shuffle_free(spark):
     got = assemble.merge_continuations(back).count()
     assert got == assemble.merge_continuations(spans).count() > 0
     spark.sql("drop table if exists bt_asm_test")
-
-
-def test_compact_parquet_reduces_files(spark, tmp_path):
-    """Compaction: a 32-file micro-batch-shaped directory rewrites to
-    byte-sized file count with identical rows."""
-    from xtract import catalog, gen
-
-    path = str(tmp_path / "spans")
-    tr = gen.transcripts(spark, 8, partitions=32)
-    tr.write.parquet(path)
-    before = {(r.conv_id, r.turn_idx) for r in spark.read.parquet(path).collect()}
-    stats = catalog.compact_parquet(spark, path, target_mb=256)
-    after = {(r.conv_id, r.turn_idx) for r in spark.read.parquet(path).collect()}
-    assert after == before
-    assert stats["files_after"] < stats["files_before"]
-    assert stats["files_after"] == 1  # tiny corpus fits one target file
-
-
-def test_compact_parquet_refuses_partitioned_and_recovers(spark, tmp_path):
-    import os
-
-    import pyspark.sql.functions as F
-    import pytest as _pytest
-
-    from xtract import catalog, gen
-
-    ppath = str(tmp_path / "part")
-    gen.transcripts(spark, 4).withColumn(
-        "pb", (F.col("turn_idx") % 2).cast("int")
-    ).write.partitionBy("pb").parquet(ppath)
-    with _pytest.raises(ValueError, match="hive-partitioned"):
-        catalog.compact_parquet(spark, ppath, target_mb=64)
-
-    # crash-window recovery: data stranded at .__old__ is restored
-    flat = str(tmp_path / "flat")
-    gen.transcripts(spark, 4, partitions=8).write.parquet(flat)
-    n = spark.read.parquet(flat).count()
-    os.rename(flat, flat + ".__old__")  # simulate kill between renames
-    stats = catalog.compact_parquet(spark, flat, target_mb=64)
-    assert spark.read.parquet(flat).count() == n
-    assert stats["files_after"] >= 1

@@ -46,7 +46,7 @@ def test_spark_fingerprints_and_pairs(spark):
 
     docs_pd = pd.DataFrame(
         {
-            "doc_id": [1, 2, 3, 4],
+            "doc_id": ["1", "2", "3", "4"],
             "text": [
                 "the quick brown fox jumps over the lazy dog again and again",
                 "prefix// the quick brown fox jumps over the lazy dog //suffix",
@@ -67,8 +67,8 @@ def test_spark_fingerprints_and_pairs(spark):
         assert sorted(by_doc.get(row["doc_id"], [])) == want
     # docs 1↔2 share a long substring → a pair; 3 and 4 pair with no one
     pairs = {(r.doc_a, r.doc_b): r.n_shared for r in fpm.shared_pairs(fps, min_shared=2).collect()}
-    assert (1, 2) in pairs and pairs[(1, 2)] >= 2
-    assert all(a in (1, 2) and b in (1, 2) for a, b in pairs)
+    assert ("1", "2") in pairs and pairs[("1", "2")] >= 2
+    assert all(a in ("1", "2") and b in ("1", "2") for a, b in pairs)
 
 
 def test_max_df_drops_stop_grams(spark):
@@ -79,7 +79,10 @@ def test_max_df_drops_stop_grams(spark):
     boiler = "standard footer text appended to every document body"
     docs = spark.createDataFrame(
         pd.DataFrame(
-            {"doc_id": [1, 2, 3, 4], "text": [f"unique{i}{'x' * i} {boiler}" for i in (1, 2, 3, 4)]}
+            {
+                "doc_id": ["1", "2", "3", "4"],
+                "text": [f"unique{i}{'x' * i} {boiler}" for i in (1, 2, 3, 4)],
+            }
         )
     )
     fps = fpm.fingerprints(docs)

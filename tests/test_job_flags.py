@@ -56,13 +56,6 @@ def test_usage_error_leaves_no_quarantine_side_effect(tmp_path):
     assert not os.path.exists(quar)
 
 
-def test_compact_rejects_btable_ref():
-    _expect_usage_error(
-        ["--input", "gen:10", "--output", "btable:spans",
-         "--compact-target-mb", "64"]
-    )
-
-
 def test_counts_below_one_are_usage_errors(tmp_path, monkeypatch):
     """--parity-sample 0 used to skip the requested audit and exit 0,
     a negative modulus audited every turn, and --partitions 0 was
@@ -101,8 +94,9 @@ def test_quarantine_requires_jsonl_input(tmp_path, monkeypatch):
 def test_option_surface(capsys):
     """The job's option surface is pinned: adding or removing an
     option must show up as an edit to this list. --mode and --merge
-    are gone (the fused kernel is the one extraction plan), so they
-    are usage errors like any unknown option."""
+    (the fused kernel is the one extraction plan) and
+    --compact-target-mb are gone, so they are usage errors like any
+    unknown option."""
     with pytest.raises(SystemExit) as exc:
         job.main(["--help"])
     assert exc.value.code == 0
@@ -110,12 +104,13 @@ def test_option_surface(capsys):
     assert flags - {"--help"} == {
         "--input", "--quarantine", "--output", "--partitions",
         "--exam-info", "--stats", "--assembled", "--assembled-mode",
-        "--groups", "--dup-pairs", "--dup-clusters", "--compact-target-mb",
-        "--windows", "--loss-mask", "--export-jsonl", "--parity-sample",
+        "--groups", "--dup-pairs", "--dup-clusters", "--windows",
+        "--loss-mask", "--export-jsonl", "--parity-sample",
         "--checkpoint", "--run-id",
     }
     _expect_usage_error(["--input", "gen:10", "--output", "o", "--mode", "relational"])
     _expect_usage_error(["--input", "gen:10", "--output", "o", "--merge", "rank1"])
+    _expect_usage_error(["--input", "gen:10", "--output", "o", "--compact-target-mb", "64"])
 
 
 def _xtract_imports(path):

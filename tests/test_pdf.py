@@ -217,6 +217,17 @@ def test_read_pdfs_keeps_file_names(spark, tmp_path):
     assert got == [("a+b 100%.pdf", 0), ("my exam", 2), ("x%20y", 1)]
 
 
+def test_read_pdfs_oversized_page_suffix(spark, tmp_path):
+    """A ``_p<N>`` suffix whose N does not fit an int is no page number:
+    that file is its own single-turn conversation, and the rest of the
+    directory still reads."""
+    page = pdf.make_pdf([b for b in BLOCKS if b["block_label"] != "image"], 2000, 2800)
+    for name in ["ok_p1.pdf", "big_p99999999999.pdf"]:
+        (tmp_path / name).write_bytes(page)
+    got = sorted((r.conv_id, r.turn_idx) for r in pdf.read_pdfs(spark, str(tmp_path)).collect())
+    assert got == [("big_p99999999999.pdf", 0), ("ok", 1)]
+
+
 def test_mutation_fuzz_never_raises():
     """Byte-level mutation fuzz: corrupt valid PDFs at random offsets
     (seeded) — the parser must return None or a well-formed payload,

@@ -40,7 +40,6 @@ class Limits:
     spatial_confidence_threshold: float = 0.85  # config.py:36
     min_question_height: int = 50           # config.py:47
     max_images_per_question: int = 8        # config.py:57
-    same_row_threshold: int = 50            # config.py:59
     dedup_gap: int = 5                      # question_splitter.py:124-127
     min_following_chars: int = 5            # question_splitter.py:156-159
     following_window: int = 100             # question_splitter.py:156

@@ -33,9 +33,9 @@ K = 8  # k-gram length (chars)
 W = 4  # winnowing window (hashes)
 B = 131  # polynomial base
 M = 1_000_000_007  # modulus (fits intermediate math in int64/BIGINT)
-# Default chars hashed per doc (the naive restatement applies the same
-# cap). Every kernel also takes
-# ``cap`` explicitly; cap=None winnows the WHOLE document via the
+# Chars hashed per doc (the Spark kernel and the naive restatement
+# apply the same cap). ``fingerprints_np`` and ``fingerprints_naive``
+# take ``cap``; cap=None winnows the WHOLE document via the
 # chunked kernel below — the 100-TB semantics (two 100 KB docs that
 # differ only after char 2000 must NOT be fingerprint-identical).
 CAP = 2000
@@ -114,52 +114,33 @@ def fingerprints_np(text: str, cap: int | None = CAP) -> np.ndarray:
 
 FP_SCHEMA = T.StructType(
     [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("fp", T.LongType(), False),
-    ]
-)
-
-FP_SCHEMA_STR = T.StructType(
-    [
         T.StructField("doc_id", T.StringType(), False),
         T.StructField("fp", T.LongType(), False),
     ]
 )
 
 
-def fingerprints(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    cap: int | None = CAP,
-) -> DataFrame:
-    """(id, text) → one row per distinct winnowed fingerprint. Narrow
-    kernel, no shuffle; column pruning pushes to the scan. String ids
-    pass through unchanged (restatable cross-engine, unlike a hashed
-    key); everything else folds to long. ``cap=None`` winnows whole
-    documents (chunked kernel)."""
-    is_str = dict(docs.dtypes)[id_col] == "string"
-    out_schema = FP_SCHEMA_STR if is_str else FP_SCHEMA
-    id_expr = F.col(id_col) if is_str else F.col(id_col).cast("long")
+def fingerprints(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) → one row per distinct winnowed fingerprint of
+    the first ``CAP`` chars. Narrow kernel, no shuffle; column pruning
+    pushes to the scan. The string ``doc_id`` passes through unchanged
+    (restatable cross-engine, unlike a hashed key)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids: list[np.ndarray] = []
             fps: list[np.ndarray] = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                f = fingerprints_np(text, cap=cap)
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                f = fingerprints_np(text)
                 if len(f):
-                    key = doc_id if is_str else int(doc_id)
-                    ids.append(np.full(len(f), key, dtype=object if is_str else np.int64))
+                    ids.append(np.full(len(f), doc_id, dtype=object))
                     fps.append(f)
             if ids:
                 yield pd.DataFrame(
                     {"doc_id": np.concatenate(ids), "fp": np.concatenate(fps)}
                 )
 
-    return docs.select(id_expr.alias(id_col), F.col(text_col).alias(text_col)).mapInPandas(
-        kernel, schema=out_schema
-    )
+    return docs.select("doc_id", "text").mapInPandas(kernel, schema=FP_SCHEMA)
 
 
 def span_key():

@@ -683,14 +683,15 @@ def read_pdfs(spark: SparkSession, path: str) -> DataFrame:
     such files share ``conv_id = <stem>`` with ``turn_idx = N``, so a
     scanned document split into per-page PDFs flows through extraction
     AND the cross-turn assembler (assemble.merge_continuations) as one
-    ordered conversation. Files without the suffix get their own
-    single-turn conversation (conv_id = file name, turn_idx = 0)."""
+    ordered conversation. Files without the suffix, or whose N does not
+    fit an int, get their own single-turn conversation (conv_id = file
+    name, turn_idx = 0)."""
     fname = F.col("name")
-    page_no = F.regexp_extract(fname, r"^(.+)_p(\d+)\.pdf$", 2)
+    page_no = F.regexp_extract(fname, r"^(.+)_p(\d+)\.pdf$", 2).try_cast("int")
     stem = F.regexp_extract(fname, r"^(.+)_p(\d+)\.pdf$", 1)
     raw = read_files(spark, path, "*.pdf").select(
-        F.when(page_no != "", stem).otherwise(fname).alias("conv_id"),
-        F.when(page_no != "", page_no.cast("int")).otherwise(0).alias("turn_idx"),
+        F.when(page_no.isNotNull(), stem).otherwise(fname).alias("conv_id"),
+        F.coalesce(page_no, F.lit(0)).alias("turn_idx"),
         F.col("content").alias("payload"),
     )
     return pdf_to_transcripts(raw)

@@ -72,7 +72,7 @@ def _extract_fused(transcripts: DataFrame) -> DataFrame:
 
 
 def exam_info(transcripts: DataFrame) -> DataFrame:
-    """Per-turn exam metadata (schema.EXAM_INFO)."""
+    """Per-turn exam metadata (structure.exam_info)."""
     parsed = sources.parse_payloads(transcripts)
     return structure.exam_info(sources.exploded_blocks(parsed))
 

@@ -87,19 +87,6 @@ SPANS = T.StructType(
     ]
 )
 
-# Per-turn exam metadata (extractor.py:138-193 + :117-121).
-EXAM_INFO = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("title", T.StringType(), False),
-        T.StructField("subject", T.StringType(), False),
-        T.StructField("grade", T.StringType(), False),
-        T.StructField("time_limit", T.StringType(), False),
-        T.StructField("total_score", T.StringType(), False),
-    ]
-)
-
 # Sidecar lineage/checkpoint rows (FIXTURES.md §4).
 LINEAGE = T.StructType(
     [

@@ -104,7 +104,6 @@ _seq = itertools.count()
 
 def build(
     app: str = "xtract",
-    master: str | None = None,
     cores: int = 32,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
@@ -114,8 +113,8 @@ def build(
     # set (pyspark attaches to the launcher's JVM by it); builder
     # options would override the launcher's --master, so leave it be
     submitted = "PYSPARK_GATEWAY_PORT" in os.environ
-    if not master and not (submitted or SparkSession.getActiveSession()):
-        master = f"local[{cores}]"
+    local = not (submitted or SparkSession.getActiveSession())
+    master = f"local[{cores}]" if local else None
 
     def get(conf: dict) -> SparkSession:
         b = SparkSession.builder.appName(app).config(map=conf)
