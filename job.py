@@ -16,13 +16,16 @@ Extract from an existing transcripts table (parquet dir)::
 Under ``spark-submit`` the launcher starts the driver JVM before this
 script runs, so the session takes the launcher's master, heap and JVM
 options: pass ``--driver-memory 8g`` for the heap a plain ``python``
-driver gets, and for a warm JVM start, the class-data-sharing archive
+driver gets; for a warm JVM start, the class-data-sharing archive
 that ``xtract.session`` keeps once a plain ``python`` driver has
-started twice on the machine (its docstring), e.g.::
+started twice on the machine; and under a local master, the one C2
+compiler thread a plain ``python`` driver's JVM runs (both in
+``xtract.session``'s docstring), e.g.::
 
     SPARK_CONF_DIR=~/.cache/xtract/cds/conf spark-submit \
-        --driver-memory 8g \
-        --driver-java-options "-XX:SharedArchiveFile=$(ls ~/.cache/xtract/cds/*.jsa) \
+        --master 'local[*]' --driver-memory 8g \
+        --driver-java-options "-XX:CICompilerCount=2 \
+            -XX:SharedArchiveFile=$(ls ~/.cache/xtract/cds/*.jsa) \
             -XX:+VerifySharedSpaces -Xlog:cds=off,cds+dynamic=off" \
         --py-files xtract.zip job.py --input gen:100 --output /tmp/spans
 
@@ -326,9 +329,10 @@ def run(spark, args: argparse.Namespace) -> dict:
         # pure-Python oracle over the same (hash-sampled) turns
         prow = parity.parity_report(df, written, args.parity_sample).collect()[0]
         result["parity"] = {
-            "turns_audited": int(prow.n_turns),
-            "mismatch": int(prow.n_mismatch),
-            "pass_rate_ppm": int(prow.pass_rate_ppm),
+            "turns_audited": prow.n_turns,
+            "mismatch": prow.n_mismatch,
+            # None for an empty sample
+            "pass_rate_ppm": prow.pass_rate_ppm,
         }
 
     wall = time.monotonic() - t0

@@ -159,3 +159,18 @@ def test_read_of_bucketed_output_runs_one_job(spark, dirs, count_jobs):
     assert n_dirs > 32  # above Spark's default parallel-listing threshold
     _, jobs = count_jobs(lambda: catalog.read_ref(spark, out))
     assert jobs == 1
+
+
+def test_checkpointed_run_leaves_session_conf(spark, dirs):
+    """Dynamic partition overwrite is the span write's own option: the
+    caller's session keeps the overwrite mode it had."""
+    out, ck = dirs
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")
+    try:
+        ckpt.run_with_checkpoint(
+            spark, gen.transcripts(spark, 4), out, ck, n_buckets=N_BUCKETS
+        )
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.unset(key)

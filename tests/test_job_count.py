@@ -4,7 +4,7 @@ planning and running small jobs, so the count may fall but must not
 rise; lower ``MAX_JOBS`` with each change that cuts jobs."""
 import job
 
-MAX_JOBS = 55
+MAX_JOBS = 29
 
 
 def test_job_run_spark_jobs_ceiling(spark, count_jobs, tmp_path):

@@ -182,8 +182,8 @@ def test_spark_submit_driver_conf(tmp_path):
     """Under spark-submit the driver JVM is the launcher's: the session
     reports its --driver-memory (a builder value would be a no-op on a
     running JVM), sizes shuffles by its --master's parallelism unless
-    the launcher set a count, and asks for no class-data-sharing
-    option."""
+    the launcher set a count, and asks for no driver JVM option: no
+    class-data-sharing archive and no compiler thread count."""
     body = (
         "c = s.sparkContext.getConf()\n"
         "print('memory=' + c.get('spark.driver.memory', ''))\n"
@@ -194,7 +194,8 @@ def test_spark_submit_driver_conf(tmp_path):
     assert "memory=1g" in out
     assert "shuffle=2" in out
     (opts,) = [ln for ln in out if ln.startswith("opts=")]
-    assert "SharedArchiveFile" not in opts and "ArchiveClassesAtExit" not in opts
+    for option in ("SharedArchiveFile", "ArchiveClassesAtExit", "CICompilerCount"):
+        assert option not in opts, opts
     out = _submit(
         tmp_path, body, "--master", "local[2]",
         "--conf", "spark.sql.shuffle.partitions=7",

@@ -91,3 +91,17 @@ def test_canon_val_widening_invariance():
 
     assert parity._canon_val(np.int32(7)) == "7"
     assert parity._canon_val(np.array([3, 4], dtype="int32")) == "3,4"
+
+
+def test_empty_sample_reports_zero_turns(spark, tmp_path):
+    """A sample that holds no conversation audits 0 turns with 0
+    mismatches and no pass rate: the sums over zero rows used to be
+    NULL, and job.py raised after every sink was written."""
+    import job
+
+    args = job.parse_args(
+        ["--input", "gen:1", "--output", str(tmp_path / "spans"),
+         "--parity-sample", "1000003"]
+    )
+    line = job.run(spark, args)
+    assert line["parity"] == {"turns_audited": 0, "mismatch": 0, "pass_rate_ppm": None}

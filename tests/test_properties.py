@@ -168,7 +168,9 @@ def test_fingerprints_chunk_invariance_any_text(text, chunk):
 @settings(max_examples=30, deadline=None)
 def test_cc_labels_match_union_find_random_graphs(pairs):
     """Star CC equals union-find for arbitrary small graphs (self-loops
-    and duplicates included). Uses a shared module session."""
+    and duplicates included); the star rounds are forced, since graphs
+    this small are otherwise labelled on the driver. Uses a shared
+    module session."""
     import pyspark.sql.functions as F
 
     from xtract import cc, session
@@ -178,8 +180,13 @@ def test_cc_labels_match_union_find_random_graphs(pairs):
         return
     spark = session.build(cores=8, shuffle_partitions=8)
     df = spark.createDataFrame(real, "a long, b long")
-    labels, _ = cc.connected_components(df)
-    got = {r["node"]: r["rep"] for r in labels.collect()}
+    orig = cc.SMALL_EDGES
+    try:
+        cc.SMALL_EDGES = 0
+        labels, _ = cc.connected_components(df)
+        got = {r["node"]: r["rep"] for r in labels.collect()}
+    finally:
+        cc.SMALL_EDGES = orig
 
     parent = {}
 

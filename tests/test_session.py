@@ -1,7 +1,9 @@
-"""``xtract/session.py``: the default shuffle partition count, and the
-driver JVM's class-data-sharing archive: its key, that a HOME used for
-one run never writes one, and that a damaged archive in the cache, or a
-JVM that refuses the archive options, never costs a working session.
+"""``xtract/session.py``: the default shuffle partition count, the
+driver JVM's one C2 compiler thread with and without the archive, and
+the driver JVM's class-data-sharing archive: its key, that a HOME used
+for one run never writes one, and that a damaged archive in the cache,
+or a JVM that refuses the archive options, never costs a working
+session.
 Every JVM here runs in a plain ``python`` subprocess (so
 ``session.build`` launches it) with HOME at a temporary directory, so
 the archive cache it reads and writes is the test's own."""
@@ -19,12 +21,26 @@ from xtract import session
 
 ROOT = Path(__file__).resolve().parents[1]
 CDS = Path(".cache", "xtract", "cds")
+# the driver JVM's own reading of a VM option: value and where it came
+# from (VM_CREATION for a command-line flag)
+VM_OPTION = (
+    "def vm_option(s, name):\n"
+    "    jvm = s.sparkContext._jvm\n"
+    "    mx = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(\n"
+    "        jvm.java.lang.Class.forName('com.sun.management.HotSpotDiagnosticMXBean'))\n"
+    "    o = mx.getVMOption(name)\n"
+    "    return '%s/%s' % (o.getValue(), o.getOrigin())\n"
+)
 PROBE = (
     "from xtract import session\n"
-    "s = session.build(cores=2)\n"
+    + VM_OPTION
+    + "s = session.build(cores=2)\n"
     "print('count=%d' % s.range(5).count())\n"
+    "print('jit=' + vm_option(s, 'CICompilerCount'))\n"
+    "print('cds=' + vm_option(s, 'SharedArchiveFile'))\n"
     "s.stop()\n"
 )
+JIT = "jit=2/VM_CREATION"  # one C1 + one C2 thread, from build's options
 
 
 def _run(home: Path, argv: list[str], **env) -> subprocess.CompletedProcess:
@@ -98,6 +114,18 @@ def test_archive_key_tracks_jdk_and_classpath():
         assert session.archive_key(*other) != key, other
 
 
+def test_archive_launch_keeps_jit_option(cache):
+    """A launch that maps the archive runs one C2 compiler thread: the
+    archive options are added to build's JIT option, not put in its
+    place."""
+    home, archive = _reset(cache)
+    p = _run(home, ["-c", PROBE])
+    assert p.returncode == 0, p.stderr[-4000:]
+    out = p.stdout.splitlines()
+    assert f"cds={archive}/VM_CREATION" in out
+    assert JIT in out
+
+
 def test_truncated_archive_is_replaced(cache):
     """JDK 17 dies of SIGBUS mapping a truncated archive (it writes an
     hs_err file); the size in the name keeps build from mapping it, and
@@ -147,6 +175,7 @@ def test_refused_archive_options_still_start(cache):
     p = _run(home, ["-c", PROBE], _JAVA_OPTIONS="-Xshare:off")
     assert p.returncode == 0, p.stderr[-4000:]
     assert "count=5" in p.stdout.splitlines()
+    assert JIT in p.stdout.splitlines()
     assert not _archives(home)
     assert not list((home / CDS).glob("*.tmp"))
 

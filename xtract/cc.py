@@ -26,13 +26,25 @@ wrong at scale):
   out-edge, no parent is also a child). A converged edge set stops
   there, without paying a further round to see that nothing changed.
 
+A graph of at most ``SMALL_EDGES`` distinct edges skips the rounds
+and the check: generation 0 is checkpointed lazily, the job that
+collects up to ``SMALL_EDGES + 1`` of its edges materializes it, and
+a graph that fits is labelled by union-find on the driver. A near-dup
+pair graph is usually that small, and every round and check costs
+several Spark jobs; a larger graph goes on to the rounds from the
+checkpoint the probe filled.
+
 Semantics: input is an undirected edge list (any orientation, dups
 fine); output maps every non-isolated node to its component minimum.
 """
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame
+
+# largest distinct-edge count labelled on the driver
+SMALL_EDGES = 1 << 16
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -115,6 +127,25 @@ def _is_star_forest(edges: DataFrame) -> bool:
     return per_node.agg(F.count_if(bad).alias("bad")).first()["bad"] == 0
 
 
+def _union_find(edges: list) -> dict:
+    """node → component minimum over (a, b) pairs, on the driver. The
+    minimum agrees with Spark's ordering: Python orders ints by value
+    and str by code point, which is the byte order of their UTF-8."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
 def connected_components(
     edges: DataFrame, max_rounds: int = 50
 ) -> tuple[DataFrame, int]:
@@ -126,7 +157,9 @@ def connected_components(
     input that is already a star forest (each pair points at its
     component minimum) takes 0. Every generation is checked for the
     star-forest shape on its materialized edges before the next round
-    is planned, so no round is run only to confirm convergence."""
+    is planned, so no round is run only to confirm convergence. A
+    graph of at most ``SMALL_EDGES`` distinct edges is labelled on
+    the driver in 0 rounds (module docstring)."""
     sc = edges.sparkSession.sparkContext
     before = _persistent_ids(sc)
     # generation 0: oriented larger → smaller and deduplicated, the
@@ -135,12 +168,21 @@ def connected_components(
         edges.select(F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b"))
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     # generation 0 participates in the rotation like every other
     # generation — otherwise it stays pinned in executor storage for
     # the life of the application
     held = _persistent_ids(sc) - before
+    # the probe's job also fills generation 0's checkpoint
+    small = cur.limit(SMALL_EDGES + 1).collect()
+    if len(small) <= SMALL_EDGES:
+        typ = cur.schema["a"].dataType
+        _unpersist_ids(sc, held)
+        return edges.sparkSession.createDataFrame(
+            list(_union_find(small).items()),
+            T.StructType([T.StructField("node", typ), T.StructField("rep", typ)]),
+        ), 0
     rounds = 0
     while not _is_star_forest(cur):
         if rounds == max_rounds:

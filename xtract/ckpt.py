@@ -80,9 +80,14 @@ def run_with_checkpoint(
 
     # dynamic overwrite: only the partitions present in `spans` are
     # replaced — a crashed bucket's partial files are overwritten
-    # whole on retry, never appended to
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    spans.write.mode("overwrite").partitionBy("pk").parquet(output_dir)
+    # whole on retry, never appended to. A write option, so the
+    # caller's session conf is left as it was.
+    (
+        spans.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("pk")
+        .parquet(output_dir)
+    )
 
     # per-bucket lineage in one groupBy("pk") over three row kinds: one
     # marker per pending bucket (so empty buckets get a row too — else

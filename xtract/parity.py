@@ -151,7 +151,8 @@ def parity_report(
     (conv_id, turn_idx) — digest rows only, never span text — with
     kernel-silent turns scored against the empty digest, then a
     global count agg. pass_rate_ppm is integer parts-per-million so
-    the number is exact. ``sample_mod`` > 1 audits only the
+    the number is exact; an empty sample audits 0 turns with 0
+    mismatches and a NULL pass rate. ``sample_mod`` > 1 audits only the
     conversations with ``xxhash64(conv_id) % sample_mod == 0``, on both
     sides, so whole conversations survive the sample and turn ordering
     within each is never broken."""
@@ -166,13 +167,15 @@ def parity_report(
     )
     return j.agg(
         F.count("*").cast("long").alias("n_turns"),
-        F.sum(match.cast("long")).cast("long").alias("n_match"),
-        F.sum((~match).cast("long")).cast("long").alias("n_mismatch"),
+        F.count_if(match).alias("n_match"),
+        F.count_if(~match).alias("n_mismatch"),
     ).select(
         "n_turns",
         "n_match",
         "n_mismatch",
-        F.expr("n_match * 1000000 div n_turns").alias("pass_rate_ppm"),
+        F.when(
+            F.col("n_turns") > 0, F.expr("n_match * 1000000 div n_turns")
+        ).alias("pass_rate_ppm"),
     )
 
 

@@ -16,6 +16,14 @@ Who owns the driver JVM decides what ``build`` may set:
   (JEP 350): the classes a Spark session loads are mapped from the
   archive instead of being parsed and verified again, which cuts
   session start-up CPU by about a third.
+- That JVM also runs one C2 compiler thread (``-XX:CICompilerCount=2``:
+  one C1 and one C2, where JDK 17 gives a 4-core host two C2). A
+  ``job.py``-sized run is tens of short Spark jobs whose compiled code
+  goes cold before the run ends, and under ``local[n]`` the compiler
+  threads compete with the n task threads for the cores. C2 stays on,
+  so hot code still reaches full optimisation, only later;
+  ``-XX:TieredStopAtLevel=1`` (no C2) slowed a warm job by a quarter.
+  Measured in docs/SCALE.md §5.
 
 The archive is a machine-wide cache under ``~/.cache/xtract/cds/``,
 named by the ``java -version`` string, the driver classpath's jar list
@@ -87,6 +95,9 @@ CONF = {
     "spark.ui.showConsoleProgress": "false",
 }
 
+# one C1 + one C2 compiler thread in a driver JVM build starts
+# (module docstring)
+JIT_OPTIONS = "-XX:CICompilerCount=2"
 CDS_DIR = Path.home() / ".cache" / "xtract" / "cds"
 # launcher inputs that put more directories on the driver classpath
 _CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
@@ -123,7 +134,14 @@ def build(
     if submitted or SparkContext._gateway is not None:
         spark = get(CONF)
     else:
-        spark = _launch(get, {**CONF, "spark.driver.memory": "8g"})
+        spark = _launch(
+            get,
+            {
+                **CONF,
+                "spark.driver.memory": "8g",
+                "spark.driver.extraJavaOptions": JIT_OPTIONS,
+            },
+        )
     n = shuffle_partitions or _default_partitions(spark.sparkContext)
     if n:
         spark.conf.set("spark.sql.shuffle.partitions", str(n))
@@ -150,7 +168,8 @@ def _default_partitions(sc) -> int | None:
 
 def _launch(get, conf: dict) -> SparkSession:
     """Start the driver JVM warm from the class-data-sharing archive
-    when one applies (module docstring)."""
+    when one applies (module docstring); the archive options are added
+    to ``conf``'s driver JVM options, which every launch keeps."""
     cds = _cds_launch()
     if cds is None:
         return get(conf)
@@ -158,7 +177,8 @@ def _launch(get, conf: dict) -> SparkSession:
     saved = os.environ.get("SPARK_CONF_DIR")
     os.environ["SPARK_CONF_DIR"] = conf_dir
     try:
-        spark = get({**conf, "spark.driver.extraJavaOptions": java_opts})
+        opts = f'{conf["spark.driver.extraJavaOptions"]} {java_opts}'
+        spark = get({**conf, "spark.driver.extraJavaOptions": opts})
     except PySparkRuntimeError as e:
         if e.getCondition() != "JAVA_GATEWAY_EXITED":
             raise
