@@ -181,10 +181,14 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
 
 def run(spark, args: argparse.Namespace) -> dict:
     """Read the input, write every requested sink and return the job's
-    JSON line as a dict; the session stays open."""
-    from xtract import catalog, gen, pipeline
+    JSON line as a dict; the session stays open, holding no RDD the run
+    persisted."""
+    from xtract import catalog, cc, gen, pipeline
 
     t0 = time.monotonic()
+    # a sink may leave RDDs persisted for its lazy reads (cc's last
+    # edge generation); they are released once every sink is written
+    held = cc.persistent_ids(spark.sparkContext)
 
     jsonl_obs = None
     if args.input.startswith("gen:"):
@@ -253,7 +257,7 @@ def run(spark, args: argparse.Namespace) -> dict:
         catalog.write_ref(pipeline.exam_info(df), args.exam_info)
     if args.groups:
         catalog.write_ref(
-            pipeline.flatten_groups(pipeline.analyze(df, mode="fused")),
+            pipeline.flatten_groups(pipeline.analyze(df)),
             args.groups,
         )
     if args.stats:
@@ -307,8 +311,6 @@ def run(spark, args: argparse.Namespace) -> dict:
         if args.dup_clusters:
             import pyspark.sql.functions as F
 
-            from xtract import cc
-
             edges = pairs.select(
                 F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
             )
@@ -335,6 +337,7 @@ def run(spark, args: argparse.Namespace) -> dict:
             "pass_rate_ppm": prow.pass_rate_ppm,
         }
 
+    cc.unpersist_ids(spark.sparkContext, cc.persistent_ids(spark.sparkContext) - held)
     wall = time.monotonic() - t0
     return {
         "turns": n_turns,

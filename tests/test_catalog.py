@@ -34,7 +34,7 @@ def test_table_ref_without_catalog_fails_cleanly(spark):
         catalog.write_ref(df, "table:nosuch.db.t")
 
 
-def test_btable_bucketed_roundtrip_and_exchange_free_agg(spark, tmp_path):
+def test_btable_bucketed_roundtrip_and_exchange_free_agg(spark, tmp_path, monkeypatch):
     """btable: refs land as Spark-managed BUCKETED tables — conv_id
     aggregations and self-joins over the table run WITHOUT an Exchange
     (the bucketing layout substitutes for the shuffle), which is the
@@ -47,7 +47,8 @@ def test_btable_bucketed_roundtrip_and_exchange_free_agg(spark, tmp_path):
     from xtract import gen, pipeline
 
     spans = pipeline.extract(gen.transcripts(spark, 12, partitions=4), mode="fused")
-    catalog.write_ref(spans, "btable:bt_spans_test", n_buckets=8)
+    monkeypatch.setattr(catalog, "DEFAULT_BUCKETS", 8)
+    catalog.write_ref(spans, "btable:bt_spans_test")
     back = catalog.read_ref(spark, "btable:bt_spans_test")
     assert back.count() == spans.count()
     assert sorted(back.columns) == sorted(spans.columns)
@@ -81,7 +82,7 @@ def test_btable_bucketed_roundtrip_and_exchange_free_agg(spark, tmp_path):
     spark.sql("drop table if exists bt_spans_test")
 
 
-def test_dense_assembly_over_btable_is_shuffle_free(spark):
+def test_dense_assembly_over_btable_is_shuffle_free(spark, monkeypatch):
     """The round-1 scale trade-off, eliminated by storage layout: the
     DENSE continuation assembly (per-conv windows + rollup) over a
     conv_id-bucketed table plans with ZERO shuffle exchanges — the
@@ -93,7 +94,8 @@ def test_dense_assembly_over_btable_is_shuffle_free(spark):
     from xtract import assemble, gen, pipeline
 
     spans = pipeline.extract(gen.transcripts(spark, 12, partitions=4), mode="fused")
-    catalog.write_ref(spans, "btable:bt_asm_test", n_buckets=8)
+    monkeypatch.setattr(catalog, "DEFAULT_BUCKETS", 8)
+    catalog.write_ref(spans, "btable:bt_asm_test")
     back = catalog.read_ref(spark, "btable:bt_asm_test")
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):

@@ -99,11 +99,11 @@ def test_cc_persisted_storage_bounded(spark, star_rounds):
     point: after convergence the persistent-RDD count returns to
     baseline + a constant, independent of round count."""
     sc = spark.sparkContext
-    baseline = len(cc._persistent_ids(sc))
+    baseline = len(cc.persistent_ids(sc))
     chain = _edges_df(spark, [(i, i + 1) for i in range(128)])
     labels, rounds = cc.connected_components(chain)
     labels.count()
-    after = len(cc._persistent_ids(sc))
+    after = len(cc.persistent_ids(sc))
     assert rounds >= 3  # enough iterations for growth to show if leaked
     # only the FINAL generation may remain (labels read it lazily);
     # generation 0 and every intermediate must have been released
@@ -116,7 +116,7 @@ def test_cc_small_graph_on_driver(spark, count_jobs):
     number of jobs, the labels keep the key type, and generation 0
     leaves executor storage."""
     sc = spark.sparkContext
-    baseline = len(cc._persistent_ids(sc))
+    baseline = len(cc.persistent_ids(sc))
     pairs = [(f"s{i:03d}", f"s{i + 1:03d}") for i in range(64)]
     edges = spark.createDataFrame(pairs, "a string, b string")
     (labels, rounds), jobs = count_jobs(lambda: cc.connected_components(edges))
@@ -124,4 +124,4 @@ def test_cc_small_graph_on_driver(spark, count_jobs):
     assert jobs <= 2, jobs
     assert labels.schema.simpleString() == "struct<node:string,rep:string>"
     assert {r.node: r.rep for r in labels.collect()} == _union_find(pairs)
-    assert len(cc._persistent_ids(sc)) == baseline
+    assert len(cc.persistent_ids(sc)) == baseline

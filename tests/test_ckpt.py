@@ -18,6 +18,11 @@ def dirs(tmp_path):
     return str(tmp_path / "out"), str(tmp_path / "ckpt")
 
 
+@pytest.fixture()
+def few_buckets(monkeypatch):
+    monkeypatch.setattr(ckpt, "N_BUCKETS", N_BUCKETS)
+
+
 def _spans(spark, out):
     return sorted(
         (r.conv_id, r.turn_idx, r.seq, r.span_text)
@@ -25,10 +30,10 @@ def _spans(spark, out):
     )
 
 
-def test_checkpoint_full_then_noop(spark, dirs):
+def test_checkpoint_full_then_noop(spark, dirs, few_buckets):
     out, ck = dirs
     tr = gen.transcripts(spark, 10).cache()
-    r1 = ckpt.run_with_checkpoint(spark, tr, out, ck, n_buckets=N_BUCKETS)
+    r1 = ckpt.run_with_checkpoint(spark, tr, out, ck)
     assert r1 == {"partitions_done": N_BUCKETS, "partitions_skipped": 0}
     first = _spans(spark, out)
     assert len(first) > 0
@@ -39,15 +44,15 @@ def test_checkpoint_full_then_noop(spark, dirs):
     assert lin.agg(F.sum("rows_in")).collect()[0][0] == tr.count()
 
     # rerun: everything already committed → no work, no output change
-    r2 = ckpt.run_with_checkpoint(spark, tr, out, ck, n_buckets=N_BUCKETS)
+    r2 = ckpt.run_with_checkpoint(spark, tr, out, ck)
     assert r2 == {"partitions_done": 0, "partitions_skipped": N_BUCKETS}
     assert _spans(spark, out) == first
 
 
-def test_checkpoint_resume_recomputes_only_missing(spark, dirs):
+def test_checkpoint_resume_recomputes_only_missing(spark, dirs, few_buckets):
     out, ck = dirs
     tr = gen.transcripts(spark, 10).cache()
-    ckpt.run_with_checkpoint(spark, tr, out, ck, n_buckets=N_BUCKETS)
+    ckpt.run_with_checkpoint(spark, tr, out, ck)
     full = _spans(spark, out)
 
     # simulate a mid-run crash: drop lineage for 3 buckets and corrupt
@@ -60,7 +65,7 @@ def test_checkpoint_resume_recomputes_only_missing(spark, dirs):
     for b in (1, 2, 5):
         shutil.rmtree(f"{out}/pk={b}", ignore_errors=True)
 
-    r = ckpt.run_with_checkpoint(spark, tr, out, ck, n_buckets=N_BUCKETS)
+    r = ckpt.run_with_checkpoint(spark, tr, out, ck)
     assert r == {"partitions_done": 3, "partitions_skipped": N_BUCKETS - 3}
     assert _spans(spark, out) == full
 
@@ -75,14 +80,15 @@ def test_checkpoint_resume_recomputes_only_missing(spark, dirs):
         assert sums[k] == v
 
 
-def test_lineage_matches_independent_computation(spark, dirs):
+def test_lineage_matches_independent_computation(spark, dirs, monkeypatch):
     """Every bucket's lineage row against counts taken without ckpt's
     code: pyarrow over the hive-partitioned span files, a separate count
     of the input, and a checksum query over each pk= directory."""
     out, ck = dirs
     n_buckets = 16
+    monkeypatch.setattr(ckpt, "N_BUCKETS", n_buckets)
     tr = gen.transcripts(spark, 6).cache()
-    ckpt.run_with_checkpoint(spark, tr, out, ck, n_buckets=n_buckets)
+    ckpt.run_with_checkpoint(spark, tr, out, ck)
 
     lin = spark.read.parquet(ck)
     assert [(f.name, f.dataType) for f in lin.schema] == [
@@ -161,16 +167,14 @@ def test_read_of_bucketed_output_runs_one_job(spark, dirs, count_jobs):
     assert jobs == 1
 
 
-def test_checkpointed_run_leaves_session_conf(spark, dirs):
+def test_checkpointed_run_leaves_session_conf(spark, dirs, few_buckets):
     """Dynamic partition overwrite is the span write's own option: the
     caller's session keeps the overwrite mode it had."""
     out, ck = dirs
     key = "spark.sql.sources.partitionOverwriteMode"
     spark.conf.set(key, "static")
     try:
-        ckpt.run_with_checkpoint(
-            spark, gen.transcripts(spark, 4), out, ck, n_buckets=N_BUCKETS
-        )
+        ckpt.run_with_checkpoint(spark, gen.transcripts(spark, 4), out, ck)
         assert spark.conf.get(key) == "static"
     finally:
         spark.conf.unset(key)

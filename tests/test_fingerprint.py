@@ -5,7 +5,34 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from xtract import fingerprint as fpm
+
+
+def _doc(seed: int, n: int) -> str:
+    """Deterministic pseudo-text (mixed ASCII/CJK, no RNG state)."""
+    out = []
+    x = (seed * 2654435761 + 99991) % (1 << 61)
+    for _ in range(n):
+        # LCG low bits are short-period — draw from the high bits only
+        x = (x * 6364136223846793005 + 1442695040888963407) % (1 << 61)
+        r = (x >> 40) % 64
+        out.append(chr(0x4E00 + ((x >> 20) % 512)) if r < 20 else chr(32 + r))
+    return "".join(out)
+
+
+def _spans(spark, texts):
+    """One span per {conv_id: text} item, at turn 0, seq 0."""
+    import pandas as pd
+
+    rows = [
+        {"conv_id": str(c), "turn_idx": 0, "seq": 0, "span_text": t}
+        for c, t in texts.items()
+    ]
+    return spark.createDataFrame(
+        pd.DataFrame(rows), schema="conv_id string, turn_idx int, seq int, span_text string"
+    )
 
 
 def test_kernel_matches_naive_oracle():
@@ -25,6 +52,28 @@ def test_short_and_empty_docs_have_no_fingerprint():
 def test_cap_is_applied():
     long = "abcdefghij" * 1000
     assert fpm.fingerprints_naive(long) == fpm.fingerprints_naive(long[: fpm.CAP])
+
+
+@pytest.mark.parametrize("n", [40, 500, 3000])
+def test_kernel_matches_naive_on_generated_docs(n):
+    """Past ``CAP`` both sides winnow the same prefix."""
+    t = _doc(7, n)
+    got = fpm.fingerprints_np(t).tolist()
+    assert got == fpm.fingerprints_naive(t)
+    assert got == fpm.fingerprints_naive(t[: fpm.CAP])
+
+
+def test_mid_document_dup_past_cap_is_missed():
+    """The prefix cap's blind spot, pinned: a 1.5 KB block shared at
+    char 3000 of two docs gives no shared fingerprint, while the same
+    block inside the cap gives many."""
+    shared = _doc(42, 1500)
+    late = [set(fpm.fingerprints_np(_doc(s, 3000) + shared)) for s in (1, 3)]
+    early = [set(fpm.fingerprints_np(_doc(s, 300) + shared)) for s in (1, 3)]
+    assert len(late[0] & late[1]) == 0
+    # winnowing guarantee: a >= K+W-1 char match shares a fingerprint;
+    # a 1.5 KB planted block shares many
+    assert len(early[0] & early[1]) >= 50
 
 
 def test_winnowing_guarantee():
@@ -66,30 +115,23 @@ def test_spark_fingerprints_and_pairs(spark):
         want = fpm.fingerprints_naive(row["text"])
         assert sorted(by_doc.get(row["doc_id"], [])) == want
     # docs 1↔2 share a long substring → a pair; 3 and 4 pair with no one
-    pairs = {(r.doc_a, r.doc_b): r.n_shared for r in fpm.shared_pairs(fps, min_shared=2).collect()}
-    assert ("1", "2") in pairs and pairs[("1", "2")] >= 2
-    assert all(a in ("1", "2") and b in ("1", "2") for a, b in pairs)
+    spans = _spans(spark, dict(zip(docs_pd["doc_id"], docs_pd["text"])))
+    pairs = {(r.doc_a, r.doc_b): r.n_shared for r in fpm.dup_spans(spans).collect()}
+    assert list(pairs) == [("1#0#0", "2#0#0")]
+    assert pairs[("1#0#0", "2#0#0")] >= fpm.MIN_SHARED
 
 
 def test_max_df_drops_stop_grams(spark):
-    import pandas as pd
-
-    # one boilerplate sentence in every doc: with max_df=2 the shared
-    # fingerprints are stop-grams and no pair survives
+    """One boilerplate sentence in every span: in ``MAX_DF`` spans its
+    fingerprints pair every two of them, in one span more they are
+    stop-grams and no pair survives."""
     boiler = "standard footer text appended to every document body"
-    docs = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": ["1", "2", "3", "4"],
-                "text": [f"unique{i}{'x' * i} {boiler}" for i in (1, 2, 3, 4)],
-            }
-        )
-    )
-    fps = fpm.fingerprints(docs)
-    with_cap = fpm.shared_pairs(fps, min_shared=1, max_df=2).collect()
-    without_cap = fpm.shared_pairs(fps, min_shared=1).collect()
-    assert len(without_cap) > 0
-    assert len(with_cap) == 0
+    texts = [f"unique{i:03d} {boiler}" for i in range(fpm.MAX_DF + 1)]
+    a, b = (set(fpm.fingerprints_naive(t)) for t in texts[:2])
+    assert len(a & b) >= fpm.MIN_SHARED
+    n = fpm.MAX_DF
+    assert fpm.dup_spans(_spans(spark, dict(enumerate(texts[:n])))).count() == n * (n - 1) // 2
+    assert fpm.dup_spans(_spans(spark, dict(enumerate(texts)))).count() == 0
 
 
 def test_dup_spans_finds_repeated_questions(spark):
@@ -109,7 +151,7 @@ def test_dup_spans_finds_repeated_questions(spark):
     spans = spark.createDataFrame(
         pd.DataFrame(rows), schema="conv_id string, turn_idx int, seq int, span_text string"
     )
-    pairs = fpm.dup_spans(spans, min_shared=2, max_df=10).collect()
+    pairs = fpm.dup_spans(spans).collect()
     assert len(pairs) == 1
     # keys are the natural span key folded to a string (restatable in
     # the DuckDB oracle, unlike a hashed key)

@@ -36,7 +36,7 @@ def transcripts(spark):
 @pytest.fixture(scope="module")
 def expected():
     exp = {}
-    for row in gen.gen_local(N):
+    for row in (r for c in range(N) for r in gen.conv_rows(c)):
         gs = oracle.analyze_turn(row["text"])
         if gs:
             exp[(row["conv_id"], row["turn_idx"])] = sorted(
@@ -53,7 +53,7 @@ def expected():
 
 
 def test_analyze_fused_matches_oracle(spark, transcripts, expected):
-    got = _norm(pipeline.analyze(transcripts, "fused").collect())
+    got = _norm(pipeline.analyze(transcripts).collect())
     assert got == expected
 
 

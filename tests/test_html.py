@@ -189,6 +189,13 @@ def test_read_html_directory_chains_into_extraction(spark, tmp_path):
                for r in spans.collect())
 
 
+def test_read_html_empty_directory_reads_no_rows(spark, tmp_path):
+    """html:<dir> on a directory without .html files gives no turns,
+    as pdf:<dir> does, instead of a PATH_NOT_FOUND error."""
+    (tmp_path / "notes.txt").write_text("not a page", encoding="utf-8")
+    assert html.read_html(spark, str(tmp_path)).count() == 0
+
+
 def test_read_html_keeps_file_names(spark, tmp_path):
     """conv_id is the file's own name, not its URI-escaped form."""
     names = ["my exam.html", "a+b.html", "100%.html", "x%20y.html"]

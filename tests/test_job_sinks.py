@@ -27,9 +27,9 @@ SINKS = [
 
 
 @pytest.fixture(scope="module")
-def job(tmp_path_factory):
-    """Run job.py once with every sink on gen:40; yield the JSON line
-    and the output paths."""
+def submit(tmp_path_factory):
+    """Run job.py once with every sink on gen:40; yield the finished
+    process and the output paths."""
     d = tmp_path_factory.mktemp("job_sinks")
     pkg = d / "xtract.zip"
     with zipfile.ZipFile(pkg, "w") as z:
@@ -47,13 +47,19 @@ def job(tmp_path_factory):
     env = dict(os.environ, PYSPARK_PYTHON=sys.executable, PYSPARK_DRIVER_PYTHON=sys.executable)
     p = subprocess.run(argv, cwd=d, env=env, capture_output=True, text=True, timeout=900)
     assert p.returncode == 0, p.stderr[-4000:]
-    line = json.loads(p.stdout.strip().splitlines()[-1])
-    yield line, paths
+    yield p, paths
+
+
+@pytest.fixture(scope="module")
+def job(submit):
+    """The job's JSON line and the output paths."""
+    p, paths = submit
+    return json.loads(p.stdout.strip().splitlines()[-1]), paths
 
 
 @pytest.fixture(scope="module")
 def turns():
-    return gen.gen_local(N_CONVS)
+    return [r for c in range(N_CONVS) for r in gen.conv_rows(c)]
 
 
 def _spans_sql(paths):
@@ -72,6 +78,14 @@ def test_span_and_turn_counts(job, turns):
     assert line["turns"] == len(turns)
     assert line["spans"] == n_spans
     assert n_spans == sum(len(oracle.extract_turn(t["text"])) for t in turns)
+
+
+def test_first_checkpointed_run_logs_no_sidecar_warning(submit):
+    """The first run finds no lineage sidecar without a read that fails:
+    Spark's FileStreamSink logs a WARN with a Java stack trace for a
+    read of a missing path."""
+    p, _ = submit
+    assert "FileStreamSink" not in p.stderr
 
 
 def test_checkpoint_lineage(job, turns):
@@ -108,7 +122,7 @@ def test_exam_info(job, turns):
     }
     want = {}
     for t in turns:
-        info = oracle.turn_exam_info(t["text"])
+        info = oracle.exam_info(oracle.parse_payload(t["text"])["blocks"])
         want[(t["conv_id"], t["turn_idx"])] = tuple(
             info[k] for k in ("title", "subject", "grade", "time_limit", "total_score")
         )

@@ -13,6 +13,11 @@ from xtract import gen, oracle, pipeline
 N_CONVS = 12
 
 
+def _local_rows():
+    """The generator's rows, built on the driver."""
+    return [r for c in range(N_CONVS) for r in gen.conv_rows(c)]
+
+
 def _norm_spark(rows):
     out = {}
     for r in rows:
@@ -48,7 +53,7 @@ def transcripts(spark):
 @pytest.fixture(scope="module")
 def expected():
     exp = {}
-    for row in gen.gen_local(N_CONVS):
+    for row in _local_rows():
         rows = oracle.extract_turn(row["text"])
         if rows:
             exp[(row["conv_id"], row["turn_idx"])] = sorted(
@@ -76,7 +81,7 @@ def test_generator_distributed_equals_local(spark, transcripts):
     )
     exp = sorted(
         (r["conv_id"], r["turn_idx"], r["role"], r["text"], r["tool"])
-        for r in gen.gen_local(N_CONVS)
+        for r in _local_rows()
     )
     assert got == exp
 
@@ -96,8 +101,8 @@ def test_exam_info_matches_oracle(spark, transcripts):
         (r.conv_id, r.turn_idx): (r.title, r.subject, r.grade, r.time_limit, r.total_score)
         for r in pipeline.exam_info(transcripts).collect()
     }
-    for row in gen.gen_local(N_CONVS):
-        info = oracle.turn_exam_info(row["text"])
+    for row in _local_rows():
+        info = oracle.exam_info(oracle.parse_payload(row["text"])["blocks"])
         key = (row["conv_id"], row["turn_idx"])
         assert got[key] == (
             info["title"],

@@ -21,8 +21,13 @@ def transcripts(spark):
     df.unpersist()
 
 
+def _sweep(turns, mode="fused", sample_mod=1):
+    """Extract with one plan and audit the spans against the oracle."""
+    return parity.parity_report(turns, pipeline.extract(turns, mode), sample_mod)
+
+
 def test_sweep_full_pass(spark, transcripts):
-    r = parity.sweep(transcripts).collect()[0]
+    r = _sweep(transcripts).collect()[0]
     assert r.n_turns == transcripts.count()  # every turn scored
     assert r.n_mismatch == 0
     assert r.n_match == r.n_turns
@@ -63,7 +68,7 @@ def test_sweep_detects_corrupted_text(spark, transcripts):
 
 
 def test_sampled_sweep_keeps_whole_conversations(spark, transcripts):
-    r = parity.sweep(transcripts, sample_mod=4).collect()[0]
+    r = _sweep(transcripts, sample_mod=4).collect()[0]
     assert 0 < r.n_turns < transcripts.count()
     assert r.n_mismatch == 0
     # the sample is exactly the turns of the selected conversations —
@@ -76,7 +81,7 @@ def test_sampled_sweep_keeps_whole_conversations(spark, transcripts):
 
 
 def test_relational_mode_sweeps_clean(spark, transcripts):
-    r = parity.sweep(transcripts, mode="relational").collect()[0]
+    r = _sweep(transcripts, mode="relational").collect()[0]
     assert r.n_mismatch == 0
 
 

@@ -94,7 +94,7 @@ def test_conv_windows_is_one_secondary_sort(tr):
 
 
 def test_parity_sweep_joins_digests(tr):
-    p = plan_of(parity.sweep(tr))
+    p = plan_of(parity.parity_report(tr, pipeline.extract(tr)))
     assert "MapInPandas" in p  # the oracle runs on the executors
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
     assert "collect_list" in p  # digests aggregate before the join

@@ -3,13 +3,14 @@ extraction with the same results as the oracle."""
 import pyspark.sql.functions as F
 import pytest
 
-from xtract import gen, pipeline
+from xtract import gen, pipeline, schema
 
 
 @pytest.fixture(scope="module")
 def mega(spark):
     # conv 0 and 3 become ~100x mega-conversations
-    df = gen.transcripts(spark, 6, mega_every=3).cache()
+    rows = [r for c in range(6) for r in gen.conv_rows(c, 3)]
+    df = spark.createDataFrame(rows, schema.TRANSCRIPTS).cache()
     df.count()
     yield df
     df.unpersist()

@@ -52,19 +52,15 @@ def read_ref(spark: SparkSession, ref: str) -> DataFrame:
     return spark.read.parquet(ref)
 
 
-def write_ref(
-    df: DataFrame,
-    ref: str,
-    bucket_col: str | None = "conv_id",
-    n_buckets: int = DEFAULT_BUCKETS,
-) -> None:
+def write_ref(df: DataFrame, ref: str, bucket_col: str | None = "conv_id") -> None:
     """Overwrite ``ref``: a ``table:`` ref → Iceberg ``writeTo``
     (createOrReplace with conv_id bucketing); a ``btable:`` ref → a
     bucketed managed table; else a parquet path.
 
     Bucketing by conv_id is the scale contract: spans and transcripts
     co-partition, so per-conversation joins and ordered-window stages
-    read co-located buckets instead of shuffling 10^12 rows.
+    read co-located buckets instead of shuffling 10^12 rows. The
+    bucket count is ``DEFAULT_BUCKETS`` at the time of the call.
     """
     if is_btable_ref(ref):
         # Spark-managed bucketed parquet table: the bucketing metadata
@@ -102,7 +98,7 @@ def write_ref(
         w = df.write.mode("overwrite").format("parquet")
         if bucket_col is not None and bucket_col in df.columns:
             order_col = "turn_idx" if "turn_idx" in df.columns else bucket_col
-            w = w.bucketBy(n_buckets, bucket_col).sortBy(bucket_col, order_col)
+            w = w.bucketBy(DEFAULT_BUCKETS, bucket_col).sortBy(bucket_col, order_col)
         w.saveAsTable(name)
         return
     if not is_table_ref(ref):
@@ -112,5 +108,5 @@ def write_ref(
     if bucket_col is not None and bucket_col in df.columns:
         from pyspark.sql.functions import partitioning
 
-        w = w.partitionedBy(partitioning.bucket(n_buckets, bucket_col))
+        w = w.partitionedBy(partitioning.bucket(DEFAULT_BUCKETS, bucket_col))
     w.createOrReplace()

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 
 # largest distinct-edge count labelled on the driver
 SMALL_EDGES = 1 << 16
+MAX_ROUNDS = 50  # star rounds before a non-converging input raises
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -92,7 +93,8 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return nbr.union(center).where(F.col("a") != F.col("b")).distinct()
 
 
-def _persistent_ids(sc) -> set[int]:
+def persistent_ids(sc) -> set[int]:
+    """Ids of the RDDs the SparkContext holds persisted."""
     jmap = sc._jsc.getPersistentRDDs()  # noqa: SLF001 — storage audit
     ids: set[int] = set()
     it = jmap.keySet().iterator()
@@ -101,7 +103,8 @@ def _persistent_ids(sc) -> set[int]:
     return ids
 
 
-def _unpersist_ids(sc, ids: set[int]) -> None:
+def unpersist_ids(sc, ids: set[int]) -> None:
+    """Unpersist the RDDs of ``ids`` that are still persisted."""
     jmap = sc._jsc.getPersistentRDDs()  # noqa: SLF001
     it = jmap.entrySet().iterator()
     while it.hasNext():
@@ -146,9 +149,7 @@ def _union_find(edges: list) -> dict:
     return {x: find(x) for x in parent}
 
 
-def connected_components(
-    edges: DataFrame, max_rounds: int = 50
-) -> tuple[DataFrame, int]:
+def connected_components(edges: DataFrame) -> tuple[DataFrame, int]:
     """Undirected edge list (a, b) → ((node, rep), rounds) where rep is
     the component minimum. Isolated nodes (no edges) don't appear —
     callers treat absence as a singleton.
@@ -161,7 +162,7 @@ def connected_components(
     graph of at most ``SMALL_EDGES`` distinct edges is labelled on
     the driver in 0 rounds (module docstring)."""
     sc = edges.sparkSession.sparkContext
-    before = _persistent_ids(sc)
+    before = persistent_ids(sc)
     # generation 0: oriented larger → smaller and deduplicated, the
     # shape every later generation has (_large_star symmetrizes anyway)
     cur = (
@@ -173,31 +174,32 @@ def connected_components(
     # generation 0 participates in the rotation like every other
     # generation — otherwise it stays pinned in executor storage for
     # the life of the application
-    held = _persistent_ids(sc) - before
+    held = persistent_ids(sc) - before
     # the probe's job also fills generation 0's checkpoint
     small = cur.limit(SMALL_EDGES + 1).collect()
     if len(small) <= SMALL_EDGES:
         typ = cur.schema["a"].dataType
-        _unpersist_ids(sc, held)
+        unpersist_ids(sc, held)
         return edges.sparkSession.createDataFrame(
             list(_union_find(small).items()),
             T.StructType([T.StructField("node", typ), T.StructField("rep", typ)]),
         ), 0
     rounds = 0
     while not _is_star_forest(cur):
-        if rounds == max_rounds:
-            raise RuntimeError(f"star CC did not converge in {max_rounds} rounds")
-        before = _persistent_ids(sc)
+        if rounds == MAX_ROUNDS:
+            raise RuntimeError(f"star CC did not converge in {MAX_ROUNDS} rounds")
+        before = persistent_ids(sc)
         cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         rounds += 1
         # release generation n-1 now that n is materialized
-        _unpersist_ids(sc, held)
-        held = _persistent_ids(sc) - before
+        unpersist_ids(sc, held)
+        held = persistent_ids(sc) - before
 
     # a star forest maps each child to its root; the roots carry no
     # out-edge, so add them back from the parent side. Children are
     # unique and never roots, so the union holds no duplicates. The
-    # last generation stays persisted for the caller's lazy reads.
+    # last generation stays persisted for the caller's lazy reads;
+    # job.run releases it after its last sink.
     labels = cur.select(F.col("a").alias("node"), F.col("b").alias("rep"))
     roots = labels.select(F.col("rep").alias("node"), F.col("rep")).distinct()
     return labels.union(roots), rounds

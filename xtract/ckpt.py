@@ -2,7 +2,7 @@
 the Spark-scale generalization of the reference's md5-keyed result
 cache, question_merger.py:568-609).
 
-The input is bucketed by ``pmod(xxhash64(conv_id), n_buckets)``; each
+The input is bucketed by ``pmod(xxhash64(conv_id), N_BUCKETS)``; each
 bucket is a resumable unit. Completed buckets append a lineage row
 (run_id, partition_key, status, row counts, order-free checksum) to a
 sidecar parquet table; span output is written with dynamic partition
@@ -18,17 +18,18 @@ aggregation and no schema inference. Its rows follow
 is missing means nothing is done yet, one that cannot be read raises.
 
 At cluster scale each bucket maps to many tasks (it is a logical
-commit unit, not a physical partition); n_buckets trades resume
+commit unit, not a physical partition); N_BUCKETS trades resume
 granularity against lineage-table size.
 """
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from . import pipeline, schema
+
+N_BUCKETS = 64  # resumable units of one checkpointed run
 
 # the span table as written: schema.SPANS plus the bucket partition column
 _SPANS_PK = T.StructType(
@@ -36,17 +37,17 @@ _SPANS_PK = T.StructType(
 )
 
 
-def bucket_of(col, n_buckets: int):
-    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
+def bucket_of(col):
+    return F.pmod(F.xxhash64(col), F.lit(N_BUCKETS)).cast("int")
 
 
 def completed_buckets(spark: SparkSession, ckpt_dir: str, run_id: str) -> list[int]:
-    try:
-        lin = spark.read.schema(schema.LINEAGE).parquet(ckpt_dir)
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
+    # asked of the session's FileSystem first: a read of a missing path
+    # logs a WARN with a Java stack trace before it raises
+    path = spark._jvm.org.apache.hadoop.fs.Path(ckpt_dir)  # noqa: SLF001
+    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):  # noqa: SLF001
         return []  # first run: no sidecar yet
+    lin = spark.read.schema(schema.LINEAGE).parquet(ckpt_dir)
     return [
         int(r.partition_key)
         for r in lin.filter(
@@ -64,18 +65,17 @@ def run_with_checkpoint(
     output_dir: str,
     ckpt_dir: str,
     run_id: str = "run0",
-    n_buckets: int = 64,
 ) -> dict:
     done = set(completed_buckets(spark, ckpt_dir, run_id))
-    pending = [b for b in range(n_buckets) if b not in done]
+    pending = [b for b in range(N_BUCKETS) if b not in done]
     if not pending:
         return {"partitions_done": 0, "partitions_skipped": len(done)}
 
-    src = transcripts.withColumn("pk", bucket_of(F.col("conv_id"), n_buckets))
+    src = transcripts.withColumn("pk", bucket_of(F.col("conv_id")))
     todo = src.filter(F.col("pk").isin(pending))
 
     spans = pipeline.extract(todo.drop("pk")).withColumn(
-        "pk", bucket_of(F.col("conv_id"), n_buckets)
+        "pk", bucket_of(F.col("conv_id"))
     )
 
     # dynamic overwrite: only the partitions present in `spans` are

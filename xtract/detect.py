@@ -135,14 +135,11 @@ def detect_numbers_v2_arb(texts: pd.Series) -> pd.Series:
     return texts.map(_arbitrate)
 
 
-def with_matches(df, content_col: str = "block.block_content", mode: str = "v1"):
-    """Attach a ``matches`` column; the rlike pre-filter keeps rows with
-    no digits out of the Arrow round-trip entirely."""
-    udf = {
-        "v1": detect_numbers_v1,
-        "v2-arb": detect_numbers_v2_arb,
-    }[mode]
-    c = F.col(content_col)
+def with_matches(df, udf):
+    """Attach a ``matches`` column: ``udf`` (one of the detectors above)
+    over each block's content; the rlike pre-filter keeps rows with no
+    digits out of the Arrow round-trip entirely."""
+    c = F.col("block.block_content")
     return df.withColumn(
         "matches",
         F.when(c.rlike(PREFILTER), udf(c)).otherwise(

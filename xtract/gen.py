@@ -253,15 +253,18 @@ def turn_row(conv_id: str, turn_idx: int, conv_ord: int) -> dict[str, Any]:
     }
 
 
-def n_turns_for(conv_ord: int, mega_every: int = 0, mega_factor: int = 100) -> int:
+MEGA_FACTOR = 100  # a mega-conversation's turns over its base count
+
+
+def n_turns_for(conv_ord: int, mega_every: int = 0) -> int:
     """Deterministic turn count; every ``mega_every``-th conversation is
-    a mega-conversation (skew fixture, FIXTURES.md §1)."""
+    a ``MEGA_FACTOR``× mega-conversation (skew fixture, FIXTURES.md §1)."""
     r = random.Random(
         int.from_bytes(hashlib.md5(f"{SEED}:n:{conv_ord}".encode()).digest()[:8], "big")
     )
     base = r.randint(4, 16)
     if mega_every and conv_ord % mega_every == 0:
-        return base * mega_factor
+        return base * MEGA_FACTOR
     return base
 
 
@@ -271,15 +274,7 @@ def conv_rows(conv_ord: int, mega_every: int = 0) -> Iterator[dict[str, Any]]:
         yield turn_row(conv_id, t, conv_ord)
 
 
-def gen_local(n_convs: int, mega_every: int = 0) -> list[dict[str, Any]]:
-    """Driver-side generation (tests / oracle)."""
-    out: list[dict[str, Any]] = []
-    for c in range(n_convs):
-        out.extend(conv_rows(c, mega_every))
-    return out
-
-
-def transcripts(spark, n_convs: int, mega_every: int = 0, partitions: int | None = None):
+def transcripts(spark, n_convs: int, partitions: int | None = None):
     """Distributed generation: one input row per conversation ordinal,
     fanned out to turns inside one map_rows kernel (no driver
     materialization, no shuffle). ``ts`` stays UTC-aware, which Arrow
@@ -289,9 +284,7 @@ def transcripts(spark, n_convs: int, mega_every: int = 0, partitions: int | None
 
     parts = partitions or spark.sparkContext.defaultParallelism
     base = spark.range(0, n_convs, numPartitions=parts)
-    return map_rows(
-        base, ["id"], lambda conv_ord: conv_rows(conv_ord, mega_every), schema.TRANSCRIPTS
-    )
+    return map_rows(base, ["id"], conv_rows, schema.TRANSCRIPTS)
 
 
 # ------------------------------------------------------------- HTML pages

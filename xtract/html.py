@@ -229,7 +229,7 @@ def read_html(spark, path: str) -> DataFrame:
     name, turn_idx = 0). Chains into pipeline.extract: a scraped exam
     page goes HTML → clean text → question spans (payload kind (a),
     raw merged text)."""
-    raw = read_files(spark, path + "/*.html").select(
+    raw = read_files(spark, path, "*.html").select(
         F.col("name").alias("conv_id"),
         F.lit(0).alias("turn_idx"),
         F.col("content").cast("string").alias("text"),

@@ -654,10 +654,6 @@ def extract_payload(payload: dict[str, Any]) -> list[dict[str, Any]]:
     return rows
 
 
-def turn_exam_info(text: str) -> dict[str, str]:
-    return exam_info(parse_payload(text)["blocks"])
-
-
 # ----------------------------------------------------- v2 analyzer path
 def analyze_turn(text: str) -> list[dict[str, Any]]:
     """The v2 analyzer flow with the deterministic X4 replacement

@@ -9,8 +9,8 @@ question_splitter.py / question_merger.py semantics). This module
 measures that equality AT CORPUS SCALE, fully distributed — no
 `.collect()` of spans anywhere:
 
-- the production kernel's spans are canonicalized per span by a
-  vectorized Arrow UDF and digested per turn (md5 over the
+- the production kernel's spans are canonicalized per span in a
+  map_rows kernel and digested per turn (md5 over the
   seq-ordered span list) behind one (conv_id, turn_idx) shuffle of
   canon strings;
 - the pure-Python oracle runs INSIDE a map_rows kernel on the executors,
@@ -36,7 +36,6 @@ import math
 from collections.abc import Iterator
 from typing import Any
 
-import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
@@ -91,26 +90,33 @@ def turn_digest(canon_spans: list[str]) -> str:
 EMPTY_DIGEST = turn_digest([])
 
 
+DIGEST = T.StructType(
+    [
+        T.StructField("conv_id", T.StringType(), False),
+        T.StructField("turn_idx", T.IntegerType(), False),
+        T.StructField("digest", T.StringType(), False),
+    ]
+)
+
+
 def spark_digests(spans: DataFrame) -> DataFrame:
     """(conv_id, turn_idx, digest) from the kernel's span table: canon
-    per span via a vectorized Arrow UDF, then ONE (conv_id, turn_idx)
+    per span in a map_rows kernel, then ONE (conv_id, turn_idx)
     shuffle of canon strings into an md5-of-sorted-list agg. Spark's
     md5(array_join(array_sort(...))) bit-matches the Python
     ``turn_digest`` because the canon strings are built by the same
     helper on both sides."""
+    canon_schema = T.StructType(
+        DIGEST.fields[:2] + [T.StructField("canon", T.StringType(), False)]
+    )
 
-    @F.pandas_udf(T.StringType())
-    def canon(*cols: pd.Series) -> pd.Series:
-        seq = cols[0]
-        rows = []
-        for i in range(len(seq)):
-            d = {f: cols[j + 1].iloc[i] for j, f in enumerate(_FIELDS)}
-            rows.append(_canon_span(seq.iloc[i], d))
-        return pd.Series(rows)
+    def emit(conv_id: str, turn_idx: int, seq: int, *vals: Any) -> Iterator[dict]:
+        canon = _canon_span(seq, dict(zip(_FIELDS, vals)))
+        yield {"conv_id": conv_id, "turn_idx": turn_idx, "canon": canon}
 
-    c = canon(F.col("seq"), *[F.col(f) for f in _FIELDS])
+    cols = ["conv_id", "turn_idx", "seq", *_FIELDS]
     return (
-        spans.select("conv_id", "turn_idx", c.alias("canon"))
+        map_rows(spans, cols, emit, canon_schema)
         .groupBy("conv_id", "turn_idx")
         .agg(
             F.md5(
@@ -128,20 +134,12 @@ def oracle_digests(turns: DataFrame) -> DataFrame:
     nothing), no shuffle at all."""
     from . import oracle
 
-    out_schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType(), False),
-            T.StructField("turn_idx", T.IntegerType(), False),
-            T.StructField("digest", T.StringType(), False),
-        ]
-    )
-
     def emit(conv_id: str, turn_idx: int, text: str | None) -> Iterator[dict]:
         rows = oracle.extract_turn(text)
         canon = [_canon_span(i, r) for i, r in enumerate(rows)]
         yield {"conv_id": conv_id, "turn_idx": turn_idx, "digest": turn_digest(canon)}
 
-    return map_rows(turns, ["conv_id", "turn_idx", "text"], emit, out_schema)
+    return map_rows(turns, ["conv_id", "turn_idx", "text"], emit, DIGEST)
 
 
 def parity_report(
@@ -178,10 +176,3 @@ def parity_report(
         ).alias("pass_rate_ppm"),
     )
 
-
-def sweep(turns: DataFrame, mode: str = "fused", sample_mod: int = 1) -> DataFrame:
-    """Run the kernel over the corpus and report per-turn equality
-    with the oracle on the (optionally hash-sampled) conversations."""
-    from . import pipeline
-
-    return parity_report(turns, pipeline.extract(turns, mode=mode), sample_mod)

@@ -519,29 +519,31 @@ def _esc(text: str) -> bytes:
     return raw.replace(b"\\", b"\\\\").replace(b"(", b"\\(").replace(b")", b"\\)")
 
 
+LINE_HEIGHT = 45.0  # make_pdf's leading (TL), in page units
+FONT_SIZE = 36.0  # make_pdf's body font size
+TITLE_SCALE = 1.6  # make_pdf's title size over FONT_SIZE
+
+
 def make_pdf(
     blocks: list[dict],
     page_w: int,
     page_h: int,
     *,
-    line_height: float = 45.0,
-    font_size: float = 36.0,
     compress: bool = False,
     bt_per_line: bool = False,
-    title_scale: float = 1.6,
 ) -> bytes:
     """Deterministic single-page PDF from schema.BLOCK-shaped dicts
     (top-left pixel coords). Text blocks emit one BT with TL/T* lines
     (or one BT per line when ``bt_per_line`` — exercises the merge
-    rule); title blocks render at ``title_scale``× so the parser's
+    rule); title blocks render at ``TITLE_SCALE``× so the parser's
     font-size label heuristic can recover them; image blocks emit
     ``q cm /Im1 Do Q``."""
     ops: list[bytes] = []
     for b in blocks:
         bx1, by1, _, _ = b["block_bbox"]
-        fs = font_size
+        fs = FONT_SIZE
         if b["block_label"] in ("doc_title", "paragraph_title"):
-            fs = font_size * title_scale
+            fs = FONT_SIZE * TITLE_SCALE
         if b["block_label"] == "image":
             x1, y1, x2, y2 = b["block_bbox"]
             ops.append(
@@ -555,17 +557,17 @@ def make_pdf(
         lines = content.split("\n")
         if bt_per_line:
             for i, ln in enumerate(lines):
-                base = page_h - (by1 + fs + line_height * i)
+                base = page_h - (by1 + fs + LINE_HEIGHT * i)
                 ops.append(
                     b"BT /F1 %.1f Tf %.1f TL %.1f %.1f Td (%s) Tj ET"
-                    % (fs, line_height, float(bx1), base, _esc(ln))
+                    % (fs, LINE_HEIGHT, float(bx1), base, _esc(ln))
                 )
         else:
             base = page_h - (by1 + fs)
             body = b" T* ".join(b"(%s) Tj" % _esc(ln) for ln in lines)
             ops.append(
                 b"BT /F1 %.1f Tf %.1f TL %.1f %.1f Td %s ET"
-                % (fs, line_height, float(bx1), base, body)
+                % (fs, LINE_HEIGHT, float(bx1), base, body)
             )
     content = b"\n".join(ops)
     filt = b""

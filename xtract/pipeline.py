@@ -113,7 +113,8 @@ def flatten_groups(groups: DataFrame) -> DataFrame:
 
 def analyze(transcripts: DataFrame, mode: str = "fused") -> DataFrame:
     """v2-analyzer groups output (groups.GROUP_COLS): fused single
-    kernel, or the relational plan in groups.py."""
+    kernel (the plan ``job.py`` runs), or the relational plan in
+    groups.py, which the tests compare it with."""
     if mode == "relational":
         from . import groups
 

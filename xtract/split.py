@@ -37,7 +37,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from .config import LIMITS
-from .detect import with_matches
+from .detect import detect_numbers_v1, detect_numbers_v2_arb, with_matches
 
 SPAN_COLS = [
     "conv_id",
@@ -78,7 +78,7 @@ def split_spans(blocks: DataFrame) -> DataFrame:
     """exploded text blocks (sources.exploded_blocks) → span rows (v1
     semantics; split_spans_v2 for v2)."""
     tb = blocks.filter(F.col("block.block_label") == "text")
-    tb = with_matches(tb, "block.block_content", "v1")
+    tb = with_matches(tb, detect_numbers_v1)
 
     content = F.coalesce(F.col("block.block_content"), F.lit(""))
     bbox = F.col("block.block_bbox")
@@ -191,7 +191,7 @@ def split_spans_v2(blocks: DataFrame) -> DataFrame:
     """v2 split; ``source_block_id`` carries the v2 id (parent*100+i
     for splits) — the group-assembly key of groups.py."""
     tb = blocks.filter(F.col("block.block_label") == "text")
-    tb = with_matches(tb, "block.block_content", "v2-arb")
+    tb = with_matches(tb, detect_numbers_v2_arb)
 
     content = F.coalesce(F.col("block.block_content"), F.lit(""))
     bbox = F.col("block.block_bbox")

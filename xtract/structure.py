@@ -190,10 +190,10 @@ def token_count(text) -> F.Column:
     )
 
 
-def conv_windows(turns: DataFrame, budget: int = CONTEXT_BUDGET) -> DataFrame:
+def conv_windows(turns: DataFrame) -> DataFrame:
     """GREEDY capacitated segmentation: split each conversation into
     training windows of consecutive turns whose token sums stay
-    within ``budget`` — the sliding-context construction an SFT
+    within ``CONTEXT_BUDGET`` — the sliding-context construction an SFT
     pipeline feeds to fixed-context models. The greedy reset (a new
     window starts exactly when adding the next turn would overflow)
     is order-dependent state that no closed-form window function
@@ -226,7 +226,7 @@ def conv_windows(turns: DataFrame, budget: int = CONTEXT_BUDGET) -> DataFrame:
 
         def flush():
             if conv is not None and n > 0:
-                out.append((conv, win, start, last, n, cur, cur > budget))
+                out.append((conv, win, start, last, n, cur, cur > CONTEXT_BUDGET))
 
         for pdf in batches:
             for c, t_idx, toks in zip(
@@ -238,7 +238,7 @@ def conv_windows(turns: DataFrame, budget: int = CONTEXT_BUDGET) -> DataFrame:
                 if c != conv:
                     flush()
                     conv, win, cur, start, n = c, 1, 0, None, 0
-                elif cur + toks > budget:
+                elif cur + toks > CONTEXT_BUDGET:
                     flush()
                     win, cur, start, n = win + 1, 0, None, 0
                 if n == 0:
@@ -298,7 +298,7 @@ def loss_mask(turns: DataFrame) -> DataFrame:
     )
 
 
-def window_assignments(turns: DataFrame, budget: int = CONTEXT_BUDGET) -> DataFrame:
+def window_assignments(turns: DataFrame) -> DataFrame:
     """Per-TURN training-window assignment: the same greedy
     capacitated fold conv_windows runs, but emitting one row per turn
     (conv_id, turn_idx, window_id, toks, masked) instead of one row
@@ -329,7 +329,7 @@ def window_assignments(turns: DataFrame, budget: int = CONTEXT_BUDGET) -> DataFr
                 t_idx, toks = int(t_idx), int(toks)
                 if c != conv:
                     conv, win, cur = c, 1, 0
-                elif cur + toks > budget:
+                elif cur + toks > CONTEXT_BUDGET:
                     # no cur>0 guard: conv_windows opens a new window
                     # whenever adding the turn would overflow, even off
                     # a zero-token turn after an oversized one — the
