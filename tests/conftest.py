@@ -1,9 +1,13 @@
+import datetime as dt
 import itertools
+import json
 import os
 
+import pyspark.sql.functions as F
+import pyspark.sql.types as T
 import pytest
 
-from xtract import schema, session
+from xtract import gen, pdf, schema, session, sources
 
 _groups = itertools.count()
 # the read-only synthetic tables described in TESTDATA.md
@@ -80,3 +84,66 @@ def count_jobs(spark):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture(scope="session")
+def html_pages(spark):
+    """``html_pages(n, partitions=None)`` → n deterministic
+    HTML-payload transcripts, one conversation per ``gen.html_page``."""
+
+    def build(n, partitions=None):
+        def emit(i):
+            html, _ = gen.html_page(gen._rng(f"html{i}", 0))
+            yield {
+                "conv_id": f"page{i:06d}",
+                "turn_idx": 0,
+                "role": "tool",
+                "text": html,
+                "tool": "crawler",
+                "ts": gen.EPOCH + dt.timedelta(seconds=i),
+            }
+
+        base = spark.range(n, numPartitions=partitions)
+        return sources.map_rows(base, ["id"], emit, schema.TRANSCRIPTS)
+
+    return build
+
+
+PDF_PAGES = T.StructType(
+    [
+        T.StructField("conv_id", T.StringType(), False),
+        T.StructField("turn_idx", T.IntegerType(), False),
+        T.StructField("payload", T.BinaryType(), True),
+    ]
+)
+
+
+@pytest.fixture(scope="session")
+def pdf_pages(spark):
+    """``pdf_pages(n, partitions)`` → n deterministic (conv_id,
+    turn_idx, payload) PDF pages, four per conversation: the seeded
+    ``gen._payload_b`` layouts rendered by ``pdf.make_pdf``, every 3rd
+    compressed and every 5th with per-line BT objects."""
+
+    def build(n, partitions):
+        def emit(i):
+            conv = f"pdfconv-{i // 4:05d}"
+            payload = json.loads(gen._payload_b(gen._rng(conv, i)))
+            yield {
+                "conv_id": conv,
+                "turn_idx": i,
+                "payload": pdf.make_pdf(
+                    payload["blocks"],
+                    payload["page"]["width"],
+                    payload["page"]["height"],
+                    compress=(i % 3 == 0),
+                    bt_per_line=(i % 5 == 0),
+                ),
+            }
+
+        base = spark.range(n, numPartitions=partitions).select(
+            F.col("id").cast("int").alias("id")
+        )
+        return sources.map_rows(base, ["id"], emit, PDF_PAGES)
+
+    return build

@@ -108,6 +108,39 @@ def test_extraction_pipeline_composition(spark):
     assert want_rows == sum(len(v) for v in got.values()) > 0
 
 
+def test_job_run_dense_assembly_matches_oracle(spark, tmp_path):
+    """``job.py``'s default ``--assembled`` form end to end: one
+    in-process ``job.run`` with ``--assembled-mode dense``; the written
+    segments equal the per-conversation oracle over the written spans."""
+    import duckdb
+
+    import job
+
+    out = {s: str(tmp_path / s) for s in ("spans", "assembled")}
+    line = job.run(spark, job.parse_args([
+        "--input", "gen:12", "--output", out["spans"],
+        "--assembled", out["assembled"], "--assembled-mode", "dense",
+    ]))
+    cols = [f.name for f in assemble.ASSEMBLED.fields]
+    by_conv: dict = {}
+    for conv, turn, seq, bbox, qn, text in duckdb.sql(
+        "select conv_id, turn_idx, seq, bbox, question_number, span_text"
+        f" from '{out['spans']}/*.parquet'"
+    ).fetchall():
+        by_conv.setdefault(conv, []).append(
+            {"turn_idx": turn, "seq": seq, "bbox": bbox, "question_number": qn, "span_text": text}
+        )
+    got: dict = {}
+    for r in duckdb.sql(f"select {', '.join(cols)} from '{out['assembled']}/*.parquet'").fetchall():
+        got.setdefault(r[0], []).append(r[1:])
+    assert sum(len(v) for v in by_conv.values()) == line["spans"] > 0
+    assert set(got) == set(by_conv)
+    assert any(r[-1] > 1 for segs in got.values() for r in segs)  # a continuation
+    for conv, rows in by_conv.items():
+        want = [tuple(o[c] for c in cols[1:]) for o in assemble.merge_continuations_py(rows)]
+        assert sorted(got[conv]) == sorted(want), conv
+
+
 @pytest.mark.parametrize("n_turns", [1, 2])
 def test_single_turn_conversations_pass_through(spark, n_turns):
     spans = {"solo": [span(t, s, s + 1, f"{s+1}、题目完整。（2分）") for t in range(n_turns) for s in range(2)]}

@@ -10,8 +10,8 @@ N = 40
 
 
 @pytest.fixture(scope="module")
-def pages(spark):
-    df = gen.html_transcripts(spark, N).cache()
+def pages(html_pages):
+    df = html_pages(N).cache()
     df.count()
     yield df
     df.unpersist()
@@ -204,3 +204,13 @@ def test_read_html_keeps_file_names(spark, tmp_path):
     rows = html.read_html(spark, str(tmp_path)).collect()
     assert sorted(r.conv_id for r in rows) == sorted(names)
     assert {r.text for r in rows} == {"z" * 200}
+
+
+def test_read_html_any_case_html_and_htm(spark, tmp_path):
+    """``.html`` and ``.htm`` pages are read whatever the case of the
+    extension, each under its own file name; other files are not."""
+    names = ["c.html", "e.htm", "f.HTML", "g.Htm"]
+    for name in names + ["notes.txt", "h.xhtml"]:
+        (tmp_path / name).write_text(_p("z" * 200), encoding="utf-8")
+    rows = html.read_html(spark, str(tmp_path)).collect()
+    assert sorted(r.conv_id for r in rows) == sorted(names)

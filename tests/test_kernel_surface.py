@@ -3,14 +3,16 @@
 The batching decision stays in one module: every stateless per-row
 Python kernel goes through ``sources.map_rows``, so a ``mapInPandas``
 call anywhere else in ``xtract`` is a kernel that restates the Arrow
-batch loop. The named exceptions batch their own way: the two
-order-dependent folds in structure, merge_greedy's packed kernel and
-fingerprints' numpy kernel. A scalar ``pandas_udf`` is the same
+batch loop. The named exceptions batch their own way: the
+order-dependent fold structure.conv_windows and fingerprints' numpy
+kernel. A scalar ``pandas_udf`` is the same
 per-row loop by other means; only detect's two detectors, which run
 behind an ``rlike`` prefilter inside an expression, are one.
 
 The settable values of the public functions are pinned too: a new
-parameter with a default needs a deliberate edit to ``KNOBS``.
+parameter with a default needs a deliberate edit to ``KNOBS``. So are
+the public functions that only tests call: a new reference or dead
+function needs a deliberate edit to ``TEST_ONLY``.
 """
 import ast
 from pathlib import Path
@@ -20,8 +22,6 @@ ROOT = Path(__file__).resolve().parents[1]
 OWN_BATCHING = {
     ("sources", "map_rows"),
     ("structure", "conv_windows"),
-    ("structure", "window_assignments"),
-    ("merge", "merge_greedy"),
     ("fingerprint", "fingerprints"),
 }
 
@@ -86,12 +86,10 @@ KNOBS = {
     ("gen.n_turns_for", "mega_every"),
     ("gen.conv_rows", "mega_every"),
     ("gen.transcripts", "partitions"),
-    ("gen.html_transcripts", "partitions"),
     ("oracle.detect", "mode"),
     ("parity.parity_report", "sample_mod"),
     ("pdf.make_pdf", "compress"),
     ("pdf.make_pdf", "bt_per_line"),
-    ("pdf.gen_pdf_turns", "partitions"),
     ("pipeline.extract", "mode"),
     ("pipeline.analyze", "mode"),
     ("session.build", "app"),
@@ -121,3 +119,45 @@ def test_settable_surface():
     for path in (ROOT / "xtract").glob("*.py"):
         found |= _knobs(path)
     assert found == KNOBS
+
+
+# module.function -> why it stays, for every public top-level xtract
+# function that job.py, perfbench/*.py and the xtract modules never
+# name: each is a reference that only tests call.
+TEST_ONLY = {
+    "assemble.merge_continuations_py": "single-conversation assembly oracle both plans are checked against",
+    "evaluator.evaluate": "the accuracy gate's metric",
+    "fingerprint.fingerprints_naive": "the per-character winnowing the numpy kernel is checked against",
+    "html.dom_blocks": "reference form, stage 1: the DOM blocks the fused html kernel is checked against",
+    "html.classify": "reference form, stage 2: the SQL when-chain html.is_good restates",
+}
+
+
+def _names(path):
+    """Every identifier one file names: variables, attributes and
+    imported names."""
+    found = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Name):
+            found.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            found.add(node.attr)
+        elif isinstance(node, ast.alias):
+            found.add(node.name.split(".")[-1])
+    return found
+
+
+def test_test_only_functions():
+    modules = sorted((ROOT / "xtract").glob("*.py"))
+    programs = [ROOT / "job.py", *sorted((ROOT / "perfbench").glob("*.py"))]
+    named = set().union(*(_names(p) for p in programs + modules))
+    found = set()
+    for path in modules:
+        for top in ast.parse(path.read_text()).body:
+            if (
+                isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and not top.name.startswith("_")
+                and top.name not in named
+            ):
+                found.add(f"{path.stem}.{top.name}")
+    assert found == set(TEST_ONLY)

@@ -126,7 +126,7 @@ def test_truncated_real_pdf_is_safe():
         assert out is None or isinstance(out, dict)
 
 
-def test_spark_pdf_path_matches_oracle(spark):
+def test_spark_pdf_path_matches_oracle(pdf_pages):
     """North-rule invariant over the PDF source: the distributed
     relational plan fed by rendered PDFs equals the single-node oracle
     run on the same parsed payloads, span for span, per turn. (The
@@ -140,7 +140,7 @@ def test_spark_pdf_path_matches_oracle(spark):
     from xtract import oracle, pipeline
 
     n = 24
-    pdf_turns = pdf.gen_pdf_turns(spark, n, partitions=4)
+    pdf_turns = pdf_pages(n, 4)
     transcripts = pdf.pdf_to_transcripts(pdf_turns)
     via_spark = pipeline.extract(transcripts, mode="relational")
 
@@ -170,12 +170,12 @@ def test_spark_pdf_path_matches_oracle(spark):
         assert got[key] == want[key], f"turn {key}"
 
 
-def test_fused_pdf_kernel_matches_two_stage(spark):
+def test_fused_pdf_kernel_matches_two_stage(pdf_pages):
     """extract_pdf_turns (single kernel, no JSON round-trip) is
     row-identical to pipeline.extract(pdf_to_transcripts(...))."""
     from xtract import pipeline
 
-    turns = pdf.gen_pdf_turns(spark, 16, partitions=4)
+    turns = pdf_pages(16, 4)
 
     def key(df):
         return sorted(
@@ -226,6 +226,17 @@ def test_read_pdfs_oversized_page_suffix(spark, tmp_path):
         (tmp_path / name).write_bytes(page)
     got = sorted((r.conv_id, r.turn_idx) for r in pdf.read_pdfs(spark, str(tmp_path)).collect())
     assert got == [("big_p99999999999.pdf", 0), ("ok", 1)]
+
+
+def test_read_pdfs_any_case_extension(spark, tmp_path):
+    """A page is a PDF whatever the case of its ``.pdf`` extension: no
+    file is skipped, the ``_p<N>`` convention holds and conv_id keeps
+    the file's own name."""
+    page = pdf.make_pdf([b for b in BLOCKS if b["block_label"] != "image"], 2000, 2800)
+    for name in ["a_p1.pdf", "a_p2.PDF", "b.Pdf", "notes.txt"]:
+        (tmp_path / name).write_bytes(page)
+    got = sorted((r.conv_id, r.turn_idx) for r in pdf.read_pdfs(spark, str(tmp_path)).collect())
+    assert got == [("a", 1), ("a", 2), ("b.Pdf", 0)]
 
 
 def test_mutation_fuzz_never_raises():

@@ -58,15 +58,15 @@ def test_relational_split_is_narrow(tr):
     assert "WholeStageCodegen" in plan_of(spans, "codegen")
 
 
-def test_pdf_path_is_narrow(spark):
+def test_pdf_path_is_narrow(pdf_pages):
     spans = pipeline.extract(
-        pdf.pdf_to_transcripts(pdf.gen_pdf_turns(spark, 8, partitions=2)), mode="fused"
+        pdf.pdf_to_transcripts(pdf_pages(8, 2)), mode="fused"
     )
     assert "Exchange" not in plan_of(spans)
 
 
-def test_html_main_content_is_narrow(spark):
-    main = html.extract_main_content(gen.html_transcripts(spark, 8, partitions=2))
+def test_html_main_content_is_narrow(html_pages):
+    main = html.extract_main_content(html_pages(8, 2))
     assert "Exchange" not in plan_of(main)
 
 

@@ -1,7 +1,7 @@
 """Property tests for the job.py --loss-mask sink (SFT loss-mask
 spans: offset reconstruction vs an exact Python replay of the running
-sum) and the --windows fold. window_assignments (the per-turn form of
-the --windows fold) is the second reference for conv_windows."""
+sum) and the --windows fold (conv_windows vs a pure-Python replay of
+the greedy recursion)."""
 import re
 from collections import defaultdict
 
@@ -73,29 +73,10 @@ def test_loss_mask_spans_tile(derived_transcripts):
     assert any(not r.masked for rows in by_conv.values() for r in rows)
 
 
-def test_window_assignments_match_conv_windows(derived_transcripts):
-    """The per-turn assignment fold and the per-window fold are the
-    same greedy recursion: aggregating assignments by (conv, window)
-    must reproduce conv_windows' (n_turns, window_toks) exactly —
-    including window ids around oversize turns."""
-    turns = derived_transcripts
-    agg = defaultdict(lambda: [0, 0])
-    for r in structure.window_assignments(turns).collect():
-        a = agg[(r.conv_id, r.window_id)]
-        a[0] += 1
-        a[1] += r.toks
-    want = {
-        (r.conv_id, r.window_id): [r.n_turns, r.window_toks]
-        for r in structure.conv_windows(turns).collect()
-    }
-    assert dict(agg) == want
-
-
 def test_window_folds_agree_on_zero_token_turns(spark):
-    """Regression (review finding): a zero-token turn (all-CJK /
-    punctuation text, no [a-z0-9]+ match) right after an oversized
-    turn must open a new window in BOTH folds — an 'and cur > 0'
-    guard in the assignment fold silently packed the next oversized
+    """Regression: a zero-token turn (all-CJK / punctuation text, no
+    [a-z0-9]+ match) right after an oversized turn opens a new window
+    — an 'and cur > 0' guard would silently pack the next oversized
     turn into an unflagged over-budget window."""
     import pandas as pd
 
@@ -108,15 +89,10 @@ def test_window_folds_agree_on_zero_token_turns(spark):
     turns = spark.createDataFrame(
         pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text"])
     )
-    assigns = {
-        r.turn_idx: r.window_id
-        for r in structure.window_assignments(turns).collect()
-    }
     windows = {
         r.window_id: (r.n_turns, r.window_toks, r.oversize)
         for r in structure.conv_windows(turns).collect()
     }
-    assert assigns == {0: 1, 1: 2, 2: 3}
     assert windows == {
         1: (1, structure.CONTEXT_BUDGET + 1, True),
         2: (1, 0, False),
@@ -149,8 +125,7 @@ from hypothesis import strategies as hst
 )
 def test_window_folds_agree_generatively(spark, convs):
     """Generative net over the greedy-fold family: for RANDOM token
-    sequences (zeros, oversize, budget-exact), the per-window fold
-    (conv_windows), the per-turn fold (window_assignments) and a
+    sequences (zeros, oversize, budget-exact), conv_windows and a
     pure-Python replay of the recursion must agree window-for-window."""
     import pandas as pd
 
@@ -161,7 +136,7 @@ def test_window_folds_agree_generatively(spark, convs):
     turns = spark.createDataFrame(
         pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text"])
     )
-    # python replay (the recursion both engines implement)
+    # python replay of the recursion
     want = {}
     for ci, toks_list in enumerate(convs):
         win, cur = 1, 0
@@ -175,21 +150,15 @@ def test_window_folds_agree_generatively(spark, convs):
         (r.conv_id, r.window_id): (r.n_turns, r.window_toks)
         for r in structure.conv_windows(turns).collect()
     }
-    agg = {}
-    for r in structure.window_assignments(turns).collect():
-        n, tot = agg.get((r.conv_id, r.window_id), (0, 0))
-        agg[(r.conv_id, r.window_id)] = (n + 1, tot + r.toks)
     assert got_w == want
-    assert agg == want
 
 
 def test_null_role_masks_deterministically(spark):
     """Regression (r4 ADVICE, structure.py null-role hole): a NULL
     role — legal on real deliveries like the jsonl: arm, where role is
     nullable — must be MASKED (zero loss), not a null boolean that the
-    pandas fold reads as False (loss-carrying). loss_mask and
-    window_assignments must both agree with the oracle convention
-    (loss only when role = 'assistant')."""
+    pandas fold reads as False (loss-carrying). loss_mask must agree
+    with the oracle convention (loss only when role = 'assistant')."""
     import datetime as dt
 
     rows = [
@@ -203,17 +172,12 @@ def test_null_role_masks_deterministically(spark):
     )
     lm = {r.turn_idx: r.masked for r in structure.loss_mask(turns).collect()}
     assert lm == {0: True, 1: True, 2: False}
-    wa = {
-        r.turn_idx: r.masked
-        for r in structure.window_assignments(turns).collect()
-    }
-    assert wa == {0: True, 1: True, 2: False}
 
 
 def test_null_text_counts_zero_tokens(spark):
     """Regression: a turn whose text is NULL (a jsonl: line without
     the field is a good row) counts 0 tokens. Under ANSI,
-    size(regexp_extract_all(NULL, ...)) is NULL: the window folds
+    size(regexp_extract_all(NULL, ...)) is NULL: the window fold
     crashed converting it to int, and loss_mask wrote end_tok = NULL,
     so the conversation's spans no longer tiled."""
     rows = [
@@ -235,8 +199,3 @@ def test_null_text_counts_zero_tokens(spark):
         for r in structure.conv_windows(turns).collect()
     ]
     assert windows == [(1, 0, 2, 3, 5, False)]
-    assigns = {
-        r.turn_idx: (r.window_id, r.toks)
-        for r in structure.window_assignments(turns).collect()
-    }
-    assert assigns == {0: (1, 2), 1: (1, 0), 2: (1, 3)}

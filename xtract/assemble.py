@@ -72,6 +72,8 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, Window
 
+from . import structure
+
 TERMINAL = "。？！；?!;.）)】\\]"
 _TERMINAL_RE = re.compile(r"[。？！；?!;.）)】\]]\s*$")
 
@@ -190,13 +192,11 @@ def _islands(rows: DataFrame) -> DataFrame:
     )
 
 
-def merge_continuations(spans: DataFrame) -> DataFrame:
-    """Distributed cross-turn assembly over schema.SPANS rows (bbox
-    optional — physical order falls back to seq without it)."""
-    from . import structure
-
-    flagged = _islands(_phys_rows(spans))
-    parts = flagged.groupBy("conv_id", (F.col("seg1") - 1).alias("segment")).agg(
+def _segments(flagged: DataFrame, key) -> DataFrame:
+    """One row per (conv_id, ``key``) island of ``_islands`` rows: its
+    first and last turn, its part count and its parts ``ps`` in
+    physical order."""
+    return flagged.groupBy("conv_id", key).agg(
         F.min("turn_idx").alias("turn_first"),
         F.max("turn_idx").alias("turn_last"),
         F.count("*").cast("int").alias("n_parts"),
@@ -205,6 +205,24 @@ def merge_continuations(spans: DataFrame) -> DataFrame:
                 F.struct("turn_idx", "phys", "seq", "span_text", "question_number")
             )
         ).alias("ps"),
+    )
+
+
+def _typed(merged: DataFrame, out: T.StructType) -> DataFrame:
+    """``merged`` projected onto ``out``'s fields, qtype and score
+    re-derived from the merged text."""
+    safe = F.coalesce(F.col("span_text"), F.lit(""))
+    derived = {"qtype": structure.qtype_col(safe), "score": structure.score_col(safe)}
+    return merged.select(
+        [derived[n].alias(n) if n in derived else n for n in out.fieldNames()]
+    )
+
+
+def merge_continuations(spans: DataFrame) -> DataFrame:
+    """Distributed cross-turn assembly over schema.SPANS rows (bbox
+    optional — physical order falls back to seq without it)."""
+    parts = _segments(
+        _islands(_phys_rows(spans)), (F.col("seg1") - 1).alias("segment")
     )
     text = F.when(
         F.col("n_parts") > 1,
@@ -222,18 +240,7 @@ def merge_continuations(spans: DataFrame) -> DataFrame:
         text.alias("span_text"),
         "n_parts",
     )
-    safe = F.coalesce(F.col("span_text"), F.lit(""))
-    return merged.select(
-        "conv_id",
-        "segment",
-        "turn_first",
-        "turn_last",
-        "question_number",
-        structure.qtype_col(safe).alias("qtype"),
-        structure.score_col(safe).alias("score"),
-        "span_text",
-        "n_parts",
-    ).select([f.name for f in ASSEMBLED.fields])
+    return _typed(merged, ASSEMBLED)
 
 
 # segment key = head-span identity instead of the dense ordinal
@@ -264,8 +271,6 @@ def merge_continuations_sparse(spans: DataFrame) -> DataFrame:
     identity — instead of the dense per-conversation ordinal, which is
     the one thing the dense plan cannot compute without moving every
     span through the conv_id exchange."""
-    from . import structure
-
     base = _phys_rows(spans)
 
     span_struct = F.struct("phys", "seq", "question_number", "span_text")
@@ -294,18 +299,7 @@ def merge_continuations_sparse(spans: DataFrame) -> DataFrame:
     # spans can neither continue (their predecessor is same-turn) nor
     # be continued into (a continuation's predecessor must be a
     # turn-last span), so the segments agree
-    flagged = _islands(boundary)
-    parts = flagged.groupBy("conv_id", "seg1").agg(
-        F.min("turn_idx").alias("turn_first"),
-        F.max("turn_idx").alias("turn_last"),
-        F.count("*").cast("int").alias("n_parts"),
-        F.array_sort(
-            F.collect_list(
-                F.struct("turn_idx", "phys", "seq", "span_text", "question_number")
-            )
-        ).alias("ps"),
-    )
-    multi = parts.filter(F.col("n_parts") > 1)
+    multi = _segments(_islands(boundary), "seg1").filter(F.col("n_parts") > 1)
 
     head = F.element_at(F.col("ps"), 1)
     multi_out = multi.select(
@@ -350,17 +344,4 @@ def merge_continuations_sparse(spans: DataFrame) -> DataFrame:
         F.lit(1).alias("n_parts"),
     )
 
-    merged = multi_out.unionByName(singles)
-    safe = F.coalesce(F.col("span_text"), F.lit(""))
-    return merged.select(
-        "conv_id",
-        "head_turn",
-        "head_seq",
-        "turn_first",
-        "turn_last",
-        "question_number",
-        structure.qtype_col(safe).alias("qtype"),
-        structure.score_col(safe).alias("score"),
-        "span_text",
-        "n_parts",
-    ).select([f.name for f in ASSEMBLED_SPARSE.fields])
+    return _typed(multi_out.unionByName(singles), ASSEMBLED_SPARSE)

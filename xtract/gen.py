@@ -324,24 +324,3 @@ def html_page(r: random.Random) -> tuple[str, list[str]]:
         "</body></html>"
     )
     return html, paras
-
-
-def html_transcripts(spark, n_pages: int, partitions: int | None = None):
-    """Deterministic HTML-payload transcripts (conv per page)."""
-    from . import schema
-    from .sources import map_rows
-
-    def emit(i: int) -> Iterator[dict[str, Any]]:
-        html, _ = html_page(_rng(f"html{i}", 0))
-        yield {
-            "conv_id": f"page{i:06d}",
-            "turn_idx": 0,
-            "role": "tool",
-            "text": html,
-            "tool": "crawler",
-            "ts": EPOCH + dt.timedelta(seconds=i),
-        }
-
-    parts = partitions or spark.sparkContext.defaultParallelism
-    base = spark.range(0, n_pages, numPartitions=parts)
-    return map_rows(base, ["id"], emit, schema.TRANSCRIPTS)

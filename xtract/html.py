@@ -69,7 +69,6 @@ class _Collector(HTMLParser):
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
         self.blocks: list[dict] = []
-        self._stack: list[str] = []
         self._chrome_depth = 0
         self._skip_depth = 0
         self._cur_text: list[str] = []
@@ -224,12 +223,12 @@ def classify(blocks: DataFrame) -> DataFrame:
 
 
 def read_html(spark, path: str) -> DataFrame:
-    """Directory/glob of .html files → transcripts-shaped rows whose
-    ``text`` is the boilerplate-stripped main content (conv_id = file
-    name, turn_idx = 0). Chains into pipeline.extract: a scraped exam
-    page goes HTML → clean text → question spans (payload kind (a),
-    raw merged text)."""
-    raw = read_files(spark, path, "*.html").select(
+    """Directory/glob of .html and .htm files (the extension in any
+    case) → transcripts-shaped rows whose ``text`` is the
+    boilerplate-stripped main content (conv_id = file name, turn_idx =
+    0). Chains into pipeline.extract: a scraped exam page goes HTML →
+    clean text → question spans (payload kind (a), raw merged text)."""
+    raw = read_files(spark, path, "*.{[hH][tT][mM],[hH][tT][mM][lL]}").select(
         F.col("name").alias("conv_id"),
         F.lit(0).alias("turn_idx"),
         F.col("content").cast("string").alias("text"),

@@ -4,9 +4,9 @@
 text blocks in list order and lets each claim its verified images
 exclusively, first-text-wins (question_merger.py:56-104). That
 sequential dependency is real, so each side packs per turn via
-collect_list (one shuffle each on the turn key) and the walk runs over
-many turns per Arrow batch in a single mapInPandas, numpy-vectorized
-over the image side.
+collect_list (one shuffle on the turn key) and the walk runs once per
+packed turn row on ``sources.map_rows`` (many turns per Arrow batch),
+numpy-vectorized over the image side.
 
 VL verification (X2/X3) is replaced by the deterministic rule: spatial
 confidence ≥ 0.85 (config.py:36; SURVEY.md §2.9).
@@ -14,17 +14,19 @@ confidence ≥ 0.85 (config.py:36; SURVEY.md §2.9).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
+from . import schema
 from .config import LIMITS
+from .sources import map_rows
 
-MERGED_SCHEMA = (
-    "conv_id string, turn_idx int, question_number int, span_text string, "
-    "bbox array<int>, has_image boolean, image_ids array<int>, "
-    "image_count int, split_from_merged boolean, source_block_id int, "
-    "seq int"
+# the greedy walk's rows: schema.SPANS less the qtype and score that
+# structure.structure adds, every field nullable
+MERGED_SCHEMA = T.StructType(
+    [T.StructField(f.name, f.dataType) for f in schema.SPANS.fields
+     if f.name not in ("qtype", "score")]
 )
 
 
@@ -210,7 +212,8 @@ def merge_greedy(spans: DataFrame, images: DataFrame) -> DataFrame:
     """Pack each turn's spans and images into single rows with ONE
     shuffle (side-tagged union + filtered collect_lists — collect_list
     skips nulls, so each side lands in its own array), then run the
-    greedy walk over MANY turns per Arrow batch in one mapInPandas.
+    greedy walk per packed row on ``sources.map_rows``, MANY turns per
+    Arrow batch.
 
     A naive cogroup.applyInPandas would invoke Python once per turn —
     page-sized groups mean millions of per-group calls at scale; this
@@ -252,23 +255,8 @@ def merge_greedy(spans: DataFrame, images: DataFrame) -> DataFrame:
         F.collect_list("s").alias("sp"), F.collect_list("i").alias("im")
     )
 
-    out_cols = [f.split(" ")[0] for f in MERGED_SCHEMA.split(", ")]
+    def walk(conv_id, turn_idx, sp_rows, im_rows):
+        for r in _greedy_lists(sp_rows, im_rows):
+            yield {"conv_id": conv_id, "turn_idx": turn_idx, **r}
 
-    def kernel(batches):
-        for pdf in batches:
-            cols = {c: [] for c in out_cols}
-            for conv_id, turn_idx, sp_rows, im_rows in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["sp"], pdf["im"]
-            ):
-                rows = _greedy_lists(
-                    sp_rows, im_rows if im_rows is not None else []
-                )
-                for r in rows:
-                    cols["conv_id"].append(conv_id)
-                    cols["turn_idx"].append(int(turn_idx))
-                    for k, v in r.items():
-                        cols[k].append(v)
-            if cols["conv_id"]:
-                yield pd.DataFrame(cols, columns=out_cols)
-
-    return packed.mapInPandas(kernel, schema=MERGED_SCHEMA)
+    return map_rows(packed, ["conv_id", "turn_idx", "sp", "im"], walk, MERGED_SCHEMA)

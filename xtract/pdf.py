@@ -41,7 +41,6 @@ import zlib
 from typing import Any, Iterator
 
 import pyspark.sql.functions as F
-import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from . import schema
@@ -605,42 +604,6 @@ def make_pdf(
 
 # ------------------------------------------------------------ Spark side
 
-PDF_TURNS = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-    ]
-)
-
-
-def gen_pdf_turns(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
-    """Deterministic PDF corpus: the same seeded layout payloads as
-    gen._payload_b, rendered to real PDF bytes (every 3rd compressed,
-    every 5th with per-line BT objects)."""
-    from . import gen
-
-    def emit(i: int) -> Iterator[dict]:
-        conv = f"pdfconv-{i // 4:05d}"
-        payload = json.loads(gen._payload_b(gen._rng(conv, i)))
-        yield {
-            "conv_id": conv,
-            "turn_idx": i,
-            "payload": make_pdf(
-                payload["blocks"],
-                payload["page"]["width"],
-                payload["page"]["height"],
-                compress=(i % 3 == 0),
-                bt_per_line=(i % 5 == 0),
-            ),
-        }
-
-    base = spark.range(n, numPartitions=partitions).select(
-        F.col("id").cast("int").alias("id")
-    )
-    return map_rows(base, ["id"], emit, PDF_TURNS)
-
-
 def pdf_to_transcripts(pdfs: DataFrame) -> DataFrame:
     """(conv_id, turn_idx, payload:binary) → transcripts-shaped rows
     whose ``text`` is the parsed schema.PAYLOAD JSON. Narrow
@@ -678,8 +641,8 @@ def extract_pdf_turns(pdfs: DataFrame) -> DataFrame:
 
 
 def read_pdfs(spark: SparkSession, path: str) -> DataFrame:
-    """Directory/glob of .pdf files → transcripts-shaped rows
-    (binaryFile source).
+    """Directory/glob of .pdf files (the extension in any case) →
+    transcripts-shaped rows (binaryFile source).
 
     Multi-page documents follow the ``<stem>_p<N>.pdf`` convention:
     such files share ``conv_id = <stem>`` with ``turn_idx = N``, so a
@@ -689,9 +652,10 @@ def read_pdfs(spark: SparkSession, path: str) -> DataFrame:
     fit an int, get their own single-turn conversation (conv_id = file
     name, turn_idx = 0)."""
     fname = F.col("name")
-    page_no = F.regexp_extract(fname, r"^(.+)_p(\d+)\.pdf$", 2).try_cast("int")
-    stem = F.regexp_extract(fname, r"^(.+)_p(\d+)\.pdf$", 1)
-    raw = read_files(spark, path, "*.pdf").select(
+    pattern = r"^(.+)_p(\d+)\.(?i:pdf)$"
+    page_no = F.regexp_extract(fname, pattern, 2).try_cast("int")
+    stem = F.regexp_extract(fname, pattern, 1)
+    raw = read_files(spark, path, "*.[pP][dD][fF]").select(
         F.when(page_no.isNotNull(), stem).otherwise(fname).alias("conv_id"),
         F.coalesce(page_no, F.lit(0)).alias("turn_idx"),
         F.col("content").alias("payload"),

@@ -13,11 +13,10 @@ the deterministic geometry shared with the oracle
 (config.RAW_PAGE_WIDTH / RAW_LINE_HEIGHT).
 
 ``map_rows`` owns the Arrow batch loop every per-row kernel (the fused
-extraction and analyzer kernels, the html, pdf and parity kernels, the
-synthetic generators) would otherwise restate: a row's output depends
-on that row alone, so the plan is one narrow ``mapInPandas`` with no
-exchange. The order-dependent folds (structure.conv_windows,
-structure.window_assignments), merge.merge_greedy's packed kernel and
+extraction and analyzer kernels, the html, pdf, parity and greedy-merge
+kernels, the synthetic generator) would otherwise restate: a row's
+output depends on that row alone, so the plan is one narrow
+``mapInPandas`` with no exchange. The order-dependent fold structure.conv_windows and
 fingerprint.fingerprints' numpy kernel batch their own way.
 """
 from __future__ import annotations

@@ -74,34 +74,42 @@ def _finalize(tb: DataFrame, spans_arr) -> DataFrame:
     )
 
 
+def _span_struct(span_ord, qnum, text, bb, split, source_id, conf):
+    """One element of a block's spans array (SPAN_COLS[3:])."""
+    return F.struct(
+        span_ord.cast("int").alias("span_ord"),
+        qnum.cast("int").alias("question_number"),
+        text.alias("span_text"),
+        bb.alias("bbox"),
+        split.alias("split_from_merged"),
+        source_id.cast("int").alias("source_block_id"),
+        conf.cast("double").alias("confidence"),
+    )
+
+
+def _text_blocks(blocks: DataFrame, detector):
+    """The text blocks with ``detector``'s matches, and the columns
+    both splits read: content ("" for NULL), bbox, block id, ``valid``
+    (non-empty text and a 4-number bbox), the match count and the bbox
+    corners."""
+    tb = with_matches(blocks.filter(F.col("block.block_label") == "text"), detector)
+    content = F.coalesce(F.col("block.block_content"), F.lit(""))
+    bbox = F.col("block.block_bbox")
+    valid = (F.length(content) > 0) & (F.size(bbox) == 4)
+    corners = tuple(bbox[i] for i in range(4))
+    return tb, content, bbox, F.col("block.block_id"), valid, F.size("matches"), corners
+
+
 def split_spans(blocks: DataFrame) -> DataFrame:
     """exploded text blocks (sources.exploded_blocks) → span rows (v1
     semantics; split_spans_v2 for v2)."""
-    tb = blocks.filter(F.col("block.block_label") == "text")
-    tb = with_matches(tb, detect_numbers_v1)
-
-    content = F.coalesce(F.col("block.block_content"), F.lit(""))
-    bbox = F.col("block.block_bbox")
-    block_id = F.col("block.block_id")
-    valid = (F.length(content) > 0) & (F.size(bbox) == 4)
-    n = F.size("matches")
-
-    x1, y1, x2, y2 = (bbox[i] for i in range(4))
+    tb, content, bbox, block_id, valid, n, (x1, y1, x2, y2) = _text_blocks(
+        blocks, detect_numbers_v1
+    )
     has_lines = F.size("own_lines") > 0
 
-    def span_struct(span_ord, qnum, text, bb, split, source_id, conf):
-        return F.struct(
-            span_ord.cast("int").alias("span_ord"),
-            qnum.cast("int").alias("question_number"),
-            text.alias("span_text"),
-            bb.alias("bbox"),
-            split.alias("split_from_merged"),
-            source_id.cast("int").alias("source_block_id"),
-            conf.cast("double").alias("confidence"),
-        )
-
     whole = F.array(
-        span_struct(
+        _span_struct(
             F.lit(0),
             F.when(valid & (n == 1), F.col("matches")[0]["number"]),
             F.col("block.block_content"),
@@ -177,7 +185,7 @@ def split_spans(blocks: DataFrame) -> DataFrame:
         bb = F.array(
             x1.cast("int"), s["top_y"].cast("int"), x2.cast("int"), bottom.cast("int")
         )
-        return span_struct(
+        return _span_struct(
             i, s["number"], piece, bb, F.lit(True), block_id, s["confidence"]
         )
 
@@ -190,15 +198,9 @@ def split_spans(blocks: DataFrame) -> DataFrame:
 def split_spans_v2(blocks: DataFrame) -> DataFrame:
     """v2 split; ``source_block_id`` carries the v2 id (parent*100+i
     for splits) — the group-assembly key of groups.py."""
-    tb = blocks.filter(F.col("block.block_label") == "text")
-    tb = with_matches(tb, detect_numbers_v2_arb)
-
-    content = F.coalesce(F.col("block.block_content"), F.lit(""))
-    bbox = F.col("block.block_bbox")
-    block_id = F.col("block.block_id")
-    valid = (F.length(content) > 0) & (F.size(bbox) == 4)
-    n = F.size("matches")
-    x1, y1, x2, y2 = (bbox[i] for i in range(4))
+    tb, content, bbox, block_id, valid, n, (x1, y1, x2, y2) = _text_blocks(
+        blocks, detect_numbers_v2_arb
+    )
 
     def line_top(m):
         num = m["number"].cast("string")
@@ -230,25 +232,15 @@ def split_spans_v2(blocks: DataFrame) -> DataFrame:
         "can_split", can_split
     )
 
-    def span_struct(span_ord, qnum, text, bb, split, source_id):
-        return F.struct(
-            span_ord.cast("int").alias("span_ord"),
-            qnum.cast("int").alias("question_number"),
-            text.alias("span_text"),
-            bb.alias("bbox"),
-            split.alias("split_from_merged"),
-            source_id.cast("int").alias("source_block_id"),
-            F.lit(1.0).alias("confidence"),
-        )
-
     whole = F.array(
-        span_struct(
+        _span_struct(
             F.lit(0),
             F.lit(None),
             F.col("block.block_content"),
             bbox,
             F.lit(False),
             block_id,
+            F.lit(1.0),
         )
     )
 
@@ -263,13 +255,14 @@ def split_spans_v2(blocks: DataFrame) -> DataFrame:
         bb = F.array(
             x1.cast("int"), top.cast("int"), x2.cast("int"), bottom.cast("int")
         )
-        return span_struct(
+        return _span_struct(
             i,
             s["matches"]["number"],
             piece,
             bb,
             F.lit(True),
             block_id * LIMITS.sub_id_factor + i,
+            F.lit(1.0),
         )
 
     spans_arr = F.when(~F.col("can_split"), whole).otherwise(

@@ -1,8 +1,8 @@
 """Structuring stage (SURVEY.md §2.3 R6-R8, §2.6 A2-A4, §2.7 W4).
 
-Everything here except the two greedy window folds (conv_windows,
-window_assignments) is native Spark SQL — when/rlike chains,
-regexp_extract, windows — so it stays inside whole-stage codegen.
+Everything here except the greedy window fold (conv_windows) is native
+Spark SQL — when/rlike chains, regexp_extract, windows — so it stays
+inside whole-stage codegen.
 """
 from __future__ import annotations
 
@@ -183,7 +183,7 @@ def token_count(text) -> F.Column:
     """The engine-wide token rule: the number of [a-z0-9]+ runs in a
     turn's text. A NULL text (a jsonl: line without the field) counts
     0 tokens: under ANSI, size(regexp_extract_all(NULL, ...)) is NULL,
-    which the window folds cannot convert and which breaks the
+    which the window fold cannot convert and which breaks the
     loss-mask tiling."""
     return F.size(
         F.regexp_extract_all(F.coalesce(text, F.lit("")), F.lit("[a-z0-9]+"), 0)
@@ -295,66 +295,4 @@ def loss_mask(turns: DataFrame) -> DataFrame:
         (F.coalesce(F.col("role"), F.lit("")) != F.lit("assistant")).alias(
             "masked"
         ),
-    )
-
-
-def window_assignments(turns: DataFrame) -> DataFrame:
-    """Per-TURN training-window assignment: the same greedy
-    capacitated fold conv_windows runs, but emitting one row per turn
-    (conv_id, turn_idx, window_id, toks, masked) instead of one row
-    per window. No program composes it; it is the second fold the
-    tests compare conv_windows against (aggregated by window, the two
-    must agree input-for-input), written as a separate loop so a bug
-    in one fold does not hide in the other. Same secondary-sort shape
-    as conv_windows: ONE conv_id exchange, in-partition sort, one
-    sequential pass with constant state."""
-    import pandas as pd
-
-    out_schema = (
-        "conv_id string, turn_idx long, window_id long, toks long,"
-        " masked boolean"
-    )
-    cols = ["conv_id", "turn_idx", "window_id", "toks", "masked"]
-
-    def assign(batches):
-        conv, win, cur = None, 1, 0
-        out = []
-        for pdf in batches:
-            for c, t_idx, toks, masked in zip(
-                pdf["conv_id"].to_numpy(),
-                pdf["turn_idx"].to_numpy(),
-                pdf["toks"].to_numpy(),
-                pdf["masked"].to_numpy(),
-            ):
-                t_idx, toks = int(t_idx), int(toks)
-                if c != conv:
-                    conv, win, cur = c, 1, 0
-                elif cur + toks > CONTEXT_BUDGET:
-                    # no cur>0 guard: conv_windows opens a new window
-                    # whenever adding the turn would overflow, even off
-                    # a zero-token turn after an oversized one — the
-                    # folds must agree input-for-input
-                    win, cur = win + 1, 0
-                cur += toks
-                out.append((conv, t_idx, win, toks, bool(masked)))
-            if out:
-                yield pd.DataFrame(out, columns=cols)
-                out = []
-
-    toks = token_count(F.col("text"))
-    return (
-        turns.select(
-            "conv_id",
-            "turn_idx",
-            toks.alias("toks"),
-            # same NULL-role coalesce as loss_mask: bool(None) is
-            # False in the fold, which would silently treat a
-            # null-role turn as loss-carrying
-            (F.coalesce(F.col("role"), F.lit("")) != F.lit("assistant")).alias(
-                "masked"
-            ),
-        )
-        .repartition("conv_id")
-        .sortWithinPartitions("conv_id", "turn_idx")
-        .mapInPandas(assign, schema=out_schema)
     )
